@@ -1,7 +1,8 @@
 """Bench harness: index-build throughput (turns/sec) + query latencies.
 
 Reads $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and runs on
-local[$SPARK_GRAFT_CPUS] (default 32).  Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: this host's CPU count).  Prints ONE
+JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 plus detail fields (build throughput, per-query p50, scaling hook).
 
@@ -30,6 +31,18 @@ import uuid
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def default_cpus() -> str:
+    """local[N] parallelism: $SPARK_GRAFT_CPUS, else this host's CPU count."""
+    return os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+
+
+def default_driver_mem() -> str:
+    """Driver heap: $QW_BENCH_DRIVER_MEM, else half of physical memory
+    (local mode runs executors and python workers beside it)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return os.environ.get("QW_BENCH_DRIVER_MEM", f"{max((phys // 2) >> 30, 1)}g")
+
+
 def get_spark(cpus: str):
     from pyspark.sql import SparkSession
 
@@ -43,7 +56,7 @@ def get_spark(cpus: str):
         .appName("quickwit-spark-bench")
         .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("QW_BENCH_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
@@ -328,7 +341,7 @@ def bench_documents(spark, sf_dir: str) -> dict:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     n_conv = int(os.environ.get("QW_BENCH_CONVS", "50000"))  # ~1M turns
 
     t_total = time.monotonic()

@@ -18,3 +18,10 @@ __version__ = "0.1.0"
 from quickwit_spark.mem import tune_allocator as _tune_allocator
 
 _tune_allocator()
+
+# Applied at import time for the same reason: stop every reused python
+# worker from re-reading its zip archives before each task — see
+# zipguard.py.
+from quickwit_spark.zipguard import install as _install_zipguard
+
+_install_zipguard()

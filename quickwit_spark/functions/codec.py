@@ -607,6 +607,10 @@ def decode_blocks(
     ``block_last_doc`` is the skip array produced at encode time; block b's
     delta chain re-anchors at block_last_doc[b-1].  This is the WAND /
     skip-pointer fast path: non-competitive blocks are never unpacked.
+
+    ``block_indices`` are deduplicated and decoded in ascending order
+    (``np.unique``): a repeated index yields its block once, and the
+    output follows block order, not the order the indices were given in.
     """
     n, nblocks, w_doc, w_tf, counts, doc_bytes, starts = _parse_header(blob)
     if n == 0 or len(block_indices) == 0:

@@ -634,11 +634,14 @@ def _split_chunked_positions(
     groups in the Spark merge writer) so a term lookup never drags chunk
     bytes along and a doc-range unit fetches only its chunks.
 
-    pos_bm payloads above the same byte target are chunked too — as
-    NEGATIVE-ord chunk rows (chunk_ord = -k carries bitmap chunk k-1 in
-    its pos_bm column; positive ords stay positions chunks).  The bitmap
-    layout is fixed-stride (16 B per posting rank), so chunks are pure
-    byte slices of ``bm_chunk_span`` posting blocks each; the span is
+    pos_bm payloads above QW_BM_CHUNK_BYTES (a threshold, independent of
+    the positions target) are chunked too — as NEGATIVE-ord chunk rows
+    (chunk_ord = -k carries bitmap chunk k-1 in its pos_bm column;
+    positive ords stay positions chunks).  The bitmap layout is
+    fixed-stride (16 B per posting rank), so chunks are pure byte slices
+    of ``bm_chunk_span`` posting blocks each — min(QW_POS_CHUNK_BYTES,
+    QW_BM_CHUNK_BYTES) bytes, or QW_BM_CHUNK_BYTES when positions
+    chunking is off (QW_POS_CHUNK_BYTES=0); the span is
     stored on the primary row (pos_bm = None there) and the reader maps
     candidate ranks -> chunk ords arithmetically.  This is what lets hot
     terms (df above the old 1M ceiling) carry bitmaps at the reference's
@@ -684,11 +687,14 @@ def _split_chunked_positions(
                 chunk_rows.append(row)
     if bm_target is None:
         bm_target = _bm_chunk_bytes()
-    if target > 0 and bm_target > 0 and "pos_bm" in pdf.columns and len(pdf):
+    if bm_target > 0 and "pos_bm" in pdf.columns and len(pdf):
         bmc = pdf["pos_bm"]
         bmi = pdf.columns.get_loc("pos_bm")
         si = pdf.columns.get_loc("bm_chunk_span")
-        span = max(target // BM_BLOCK_BYTES, 1)  # posting blocks per chunk
+        # posting blocks per chunk: no chunk above the bitmap threshold,
+        # and at most the positions target when that one is on
+        span_bytes = min(target, bm_target) if target > 0 else bm_target
+        span = max(span_bytes // BM_BLOCK_BYTES, 1)
         step = span * BM_BLOCK_BYTES
         for i in range(len(pdf)):
             bm = bmc.iat[i]

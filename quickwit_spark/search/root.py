@@ -96,6 +96,35 @@ from .leaf import (
 # root search
 # ---------------------------------------------------------------------------
 
+# applicationIds of the SparkContexts whose leaf worker pool is started
+_WARMED_APPS: set = set()
+
+
+def _hold_leaf_worker(it):
+    """Warm-up task body.  Unpickling it imports this module — the whole
+    engine, zipguard included — in the worker; holding the worker briefly
+    keeps the job's other tasks from reusing it, so every slot gets its own.
+    The input is drained: a task that leaves it unread loses its worker."""
+    for _ in it:
+        pass
+    time.sleep(0.1)
+    return iter(())
+
+
+def _warm_leaf_workers(sc) -> None:
+    """Start one python worker per slot before a SparkContext's first leaf
+    job.  Spark forks a worker whenever a task finds none idle, so without
+    this the fork, the engine imports and the zip reads of a fresh worker
+    (~0.7 s on a 4-vCPU local[4] host) land inside whichever query first
+    fans out wider than every leaf job before it — e.g. the first query
+    after a merge adds a split and with it a leaf bin.  Best effort: a
+    cluster that runs fewer tasks at once just starts fewer workers."""
+    if sc.applicationId in _WARMED_APPS:
+        return
+    _WARMED_APPS.add(sc.applicationId)
+    n = sc.defaultParallelism
+    sc.parallelize(range(n), n).mapPartitions(_hold_leaf_worker).collect()
+
 
 def _leaf_hits_df(
     spark: SparkSession,
@@ -242,9 +271,11 @@ def _leaf_hit_rows(
 
     est = _est_split_rows(ast, gstats, len(splits))
     # Tiny indexes + light queries: run the leaf in-process — the
-    # single-node-search analog (lib.rs:153-198).  A Spark job costs a
-    # ~0.2-0.4 s scheduling floor on this class of host; below the
-    # thresholds the per-split work (~5-10 ms warm) is cheaper done inline.
+    # single-node-search analog (lib.rs:153-198).  A Spark job has a floor:
+    # a trivial 1-4 task python job measured 0.14-0.21 s p50 on local[4]
+    # (4 vCPU; 0.32-0.45 s before zipguard stopped reused workers
+    # re-reading their zip archives per task); below the thresholds the
+    # per-split work (~5-10 ms warm) is cheaper done inline.
     # The row gate keeps a few-big-splits post-merge index (where one
     # split's heavy-query work alone is ~100 ms) on the parallel path.
     if len(sids) <= int(os.environ.get("QW_DRIVER_LEAF_MAX_SPLITS", "8")) and est * len(
@@ -254,6 +285,7 @@ def _leaf_hit_rows(
     else:
         sc = spark.sparkContext
         bins = _leaf_bins(splits, sc.defaultParallelism, est, _ranged_ok(ast, request))
+        _warm_leaf_workers(sc)
         rows = sc.parallelize(bins, len(bins)).flatMap(run).collect()
     agg: dict = {}
     for r in rows:
@@ -358,17 +390,21 @@ def _leaf_bins(
 
     The reference plans 1 cost-unit per split but BATCHES all of a node's
     jobs into one gRPC leaf request (root.rs:280-284, cluster_client.rs) —
-    the analog here is several splits per Spark task.  Measured on this
-    box: the per-task floor is ~15 ms while one split's light leaf work is
-    ~5-10 ms, so 1-split tasks make small-k queries floor-bound (p50 0.66 s
-    at 52 tasks vs 0.45 s at 13 tasks).  A heavy query inverts it — a
+    the analog here is several splits per Spark task.  Measured on a
+    4-vCPU local[4] host: each task past the first wave adds ~13-15 ms
+    of wall time (~50-60 ms of one slot) to a trivial python job, while
+    one split's light leaf work is ~5-10 ms, so 1-split tasks make small-k
+    queries floor-bound (an earlier 32-slot measurement: p50 0.66 s at
+    52 tasks vs 0.45 s at 13 tasks).  A heavy query inverts it — a
     phrase over 32 post-merge 32k-doc splits packed 4/task ran 1.76 s where
     single-split tasks run it at ~2x less — so above QW_LEAF_HEAVY_ROWS
     estimated decoded rows per split, parallelism wins.  The default
     (100k rows ~ 70-100 ms of per-split work at the measured ~0.7 us/row)
     is deliberately high: the RDD job dispatch floor grows with slice
-    count (~0.29 s at 32 slices on this box), so unpacking pays only when
-    per-split work clearly dominates it."""
+    count (a trivial job on local[4]: 0.14-0.16 s at 1 slice, 0.32-0.36 s
+    at 16, 0.55-0.64 s at 32; before zipguard 0.32-0.37 / 1.1-1.3 /
+    2.2-2.5 s), so unpacking pays only when per-split work clearly
+    dominates it."""
     per = int(os.environ.get("QW_LEAF_SPLITS_PER_TASK", "4"))
     heavy_rows = float(os.environ.get("QW_LEAF_HEAVY_ROWS", "100000"))
     range_docs = int(os.environ.get("QW_LEAF_RANGE_DOCS", "524288"))
@@ -441,11 +477,12 @@ def multi_search(
 ) -> list[SearchResponse]:
     """Batched root search: Q queries in ONE leaf job.
 
-    The per-query fixed cost of a Spark job (~0.3 s of task scheduling at
-    32 slices) dominates small-k search latency, so a query *stream* should
-    amortize it: each leaf task opens a split once, reads the UNION of all
-    queries' posting rows in one pruned pyarrow scan, and runs every
-    query's scorer against it; rows come back tagged with the query index.
+    The per-query fixed cost of a Spark job (0.14-0.21 s for a trivial
+    1-4 task job on local[4]) dominates small-k search latency, so a
+    query *stream* should amortize it: each leaf task opens a split once,
+    reads the UNION of all queries' posting rows in one pruned pyarrow
+    scan, and runs every query's scorer against it; rows come back tagged
+    with the query index.
     Throughput therefore approaches Q/(floor + sum(work)) instead of
     Q/(Q*floor + sum(work)).  Results are identical to Q independent
     ``search`` calls (verified by test); the reference has no batched
@@ -552,6 +589,7 @@ def multi_search(
             est,
             _ranged_ok([ast for _, ast, _ in plans], [req for req, _, _ in plans]),
         )
+        _warm_leaf_workers(sc)
         rows = sc.parallelize(bins, len(bins)).flatMap(run).collect()
     if any(r.get("__vanished__") for r in rows):
         # concurrent merge+GC replaced splits mid-batch: re-plan the whole

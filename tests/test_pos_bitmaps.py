@@ -9,6 +9,7 @@ import glob
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from quickwit_spark.config import transcripts_config
@@ -18,7 +19,11 @@ from quickwit_spark.functions.codec import (
     encode_position_bitmaps,
     encode_positions,
 )
-from quickwit_spark.index.builder import build_index
+from quickwit_spark.index.builder import (
+    BM_BLOCK_BYTES,
+    _split_chunked_positions,
+    build_index,
+)
 from quickwit_spark.index.merge import garbage_collect, run_merge_pipeline
 from quickwit_spark.search.executor import search
 from quickwit_spark.search.request import SearchRequest
@@ -259,6 +264,53 @@ def test_explain_reports_phrase_term_storage(spark, chunked_twin):
     assert all(e["path"] == "decode" for e in rep2["phrase_term_storage"])
     rep3 = explain(spark, chunked_twin["chunked"], SearchRequest("deploy"))
     assert rep3["phrase_term_storage"] == []
+
+
+@pytest.mark.parametrize(
+    "target, bm_target, n_blocks, span",
+    [
+        # positions chunking off must not turn bitmap chunking off
+        (0, 4 * BM_BLOCK_BYTES, 10, 4),
+        # a positions target above the bitmap threshold must not yield
+        # one chunk bigger than that threshold
+        (1 << 20, 4 * BM_BLOCK_BYTES, 10, 4),
+        (2 * BM_BLOCK_BYTES, 4 * BM_BLOCK_BYTES, 10, 2),
+        # default knobs: span = positions target (layout unchanged)
+        (1 << 20, 16 << 20, (16 << 20) // BM_BLOCK_BYTES + 1, 512),
+    ],
+)
+def test_bitmap_chunk_span(target, bm_target, n_blocks, span):
+    bm = (bytes(range(256)) * (n_blocks * BM_BLOCK_BYTES // 256 + 1))[
+        : n_blocks * BM_BLOCK_BYTES
+    ]
+    pdf = pd.DataFrame({
+        "split_id": ["s"], "bucket": [0], "field": ["text"], "term": ["the"],
+        "positions": [None], "block_tf_cum": [None], "pos_bm": [bm],
+    })
+    prim, chunks = _split_chunked_positions(pdf, target, bm_target)
+    assert prim["pos_bm"].iat[0] is None
+    assert prim["bm_chunk_span"].iat[0] == span
+    assert list(chunks["chunk_ord"]) == [-k - 1 for k in range(-(-n_blocks // span))]
+    assert all(len(b) <= min(span * BM_BLOCK_BYTES, bm_target) for b in chunks["pos_bm"])
+    assert b"".join(chunks["pos_bm"]) == bm
+
+
+def test_bitmaps_chunk_with_positions_chunking_off(spark, chunked_twin, tmp_path, monkeypatch):
+    """QW_POS_CHUNK_BYTES=0 keeps positions inline but must still chunk
+    bitmaps above QW_BM_CHUNK_BYTES, and phrase results stay identical."""
+    d = str(tmp_path / "bm_only")
+    monkeypatch.setenv("QW_POSBM_MIN_TOTAL_TF", "1")
+    monkeypatch.setenv("QW_POS_CHUNK_BYTES", "0")
+    monkeypatch.setenv("QW_BM_CHUNK_BYTES", "4096")
+    pdf = generate_transcripts(n_conversations=120, seed=9)
+    build_index(spark, spark.createDataFrame(pdf), CFG, d, n_splits=8)
+    p = _postings_pdf(d, ["chunk_ord"])
+    assert (p["chunk_ord"] < 0).any(), "no bitmap chunk rows written"
+    assert not (p["chunk_ord"] > 0).any(), "positions were chunked"
+    for req in QUERIES:
+        assert _key(search(spark, d, req)) == _key(
+            search(spark, chunked_twin["plain"], req)
+        ), req.query
 
 
 def test_chunked_bitmap_survives_merge(spark, chunked_twin):

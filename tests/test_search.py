@@ -309,6 +309,41 @@ def test_inline_and_distributed_leaf_agree(spark, built, monkeypatch):
         ] == [(h["split_id"], h["doc_id"], h["score"], h["sort_value"]) for h in b.hits]
 
 
+def test_leaf_worker_warm_up_once_per_context(spark, built, monkeypatch):
+    """A SparkContext's first job leaf is preceded by one warm-up job with
+    a task per slot (so no query later pays a fresh python worker); the
+    next job leaf runs alone."""
+    from quickwit_spark.search import root
+
+    index_dir, _, _ = built
+    sc = spark.sparkContext
+    monkeypatch.setattr(root, "_WARMED_APPS", set())
+    monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", "0")
+    slices, depth = [], [0]
+    real = sc.parallelize
+
+    def spy(data, numSlices=None):
+        if not depth[0]:  # parallelize(range) calls itself once more
+            slices.append(numSlices)
+        depth[0] += 1
+        try:
+            return real(data, numSlices)
+        finally:
+            depth[0] -= 1
+
+    monkeypatch.setattr(sc, "parallelize", spy)
+    req = SearchRequest("error", max_hits=5)
+    first = search(spark, index_dir, req)
+    warm, first_jobs = slices[0], slices[1:]
+    slices.clear()
+    second = search(spark, index_dir, req)
+    assert warm == sc.defaultParallelism
+    assert slices == first_jobs
+    assert [h["doc_id"] for h in first.hits] == [h["doc_id"] for h in second.hits]
+    it = iter(range(3))
+    assert list(root._hold_leaf_worker(it)) == [] and next(it, None) is None  # drained
+
+
 def test_offset_pagination_consistent(spark, built):
     """Offset rewrite (root.rs:286-301): page k..k+n equals the slice of the
     full result."""

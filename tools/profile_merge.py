@@ -12,9 +12,9 @@ os.environ["QW_MERGE_TIMING"] = "1"
 
 
 def main() -> None:
-    from bench import get_spark
+    from bench import default_cpus, get_spark
 
-    spark = get_spark(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark(default_cpus())
     from quickwit_spark.config import transcripts_config
     from quickwit_spark.index.builder import build_index
     from quickwit_spark.index.merge import run_merge_pipeline

@@ -5,7 +5,8 @@ for each bench query reports:
   prep_s    — parse + prune + gstats (cached after first)
   job_s     — the single leaf Spark job incl. collect
   cpu_s     — SAME work run serially in-process (sum over splits), i.e. the
-              pure-python lower bound; cpu_s/32 is the ideal parallel time.
+              pure-python lower bound; cpu_s/N is the ideal parallel time
+              on local[N].
 """
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import BENCH_QUERIES, ensure_corpus, get_spark  # noqa: E402
+from bench import BENCH_QUERIES, default_cpus, ensure_corpus, get_spark  # noqa: E402
 
 
 def main():
@@ -27,7 +28,8 @@ def main():
     from quickwit_spark.search.parser import collect_terms, parse_query
     from quickwit_spark.search.request import SearchRequest
 
-    spark = get_spark(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(default_cpus())
+    spark = get_spark(str(cpus))
     spark.sparkContext.setLogLevel("ERROR")
     corpus = ensure_corpus(int(os.environ.get("QW_BENCH_CONVS", "50000")))
     idx = "/tmp/qwspark_bench/idx-profile"
@@ -67,7 +69,7 @@ def main():
         cpu = time.monotonic() - t0
         print(
             f"{name:16s} prep={prep*1e3:7.1f}ms  job={job*1e3:7.1f}ms  "
-            f"cpu_serial={cpu*1e3:7.1f}ms  ideal32={cpu/32*1e3:6.1f}ms  rows={n}"
+            f"cpu_serial={cpu*1e3:7.1f}ms  ideal={cpu/cpus*1e3:6.1f}ms  rows={n}"
         )
 
 

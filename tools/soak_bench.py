@@ -28,6 +28,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import default_cpus  # noqa: E402
+
 SCRATCH = "/tmp/qwspark_bench"
 
 
@@ -35,7 +37,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--conversations", type=int, default=500_000)
     ap.add_argument("--runs", type=int, default=2)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(default_cpus()))
     ap.add_argument("--repeats", type=int, default=5)
     args = ap.parse_args()
 
