@@ -24,6 +24,8 @@ north rule ("vectorized pandas/Arrow UDFs (no per-row Python)").
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 
 BLOCK = 128
@@ -452,25 +454,69 @@ def merge_posting_groups(
 
     lens_flat, _ = decode_u32_many(lens_blobs)
 
+    g_s = np.asarray(group_starts, np.int64)
+    g_e = np.asarray(group_ends, np.int64)
     has_pos = np.fromiter((p is not None for p in positions), bool, n)
-    pos_slot = np.cumsum(has_pos) - 1
+    n_pos = np.concatenate(([0], np.cumsum(has_pos)))
+    g_npos = n_pos[g_e] - n_pos[g_s]
+    if ((g_npos != 0) & (g_npos != g_e - g_s)).any():
+        raise ValueError("mixed position presence within a term group")
+    g_pos = g_npos > 0
+    pos_slot = n_pos[1:] - 1
     if has_pos.any():
         deltas_flat, pos_counts, pos_ws = position_deltas_many(
             [p for p in positions if p is not None]
         )
         pos_off = np.concatenate(([0], np.cumsum(pos_counts)[:-1]))
 
-    out = []
-    for s, e in zip(group_starts, group_ends):
-        lo, hi = voff[s], voff[e - 1] + counts[e - 1]
+    g_lo = voff[g_s]
+    g_n = voff[g_e - 1] + counts[g_e - 1] - g_lo
+    single = g_n <= BLOCK
+    out: list = [None] * len(g_s)
+
+    # single-block groups (df <= BLOCK, the overwhelming majority) encode
+    # in one pack_segments pass per payload: per-term encode calls were
+    # most of a small merge's CPU.  Bit-identical to the per-term path.
+    si = np.flatnonzero(single)
+    if len(si):
+        take, c_start = _gather_ranges(g_lo[si], g_n[si])
+        cg, ct, cl = gaps[take], tfs[take], lens_flat[take]
+        max_tf = np.maximum.reduceat(ct, c_start)
+        min_len = np.minimum.reduceat(cl, c_start)
+        total_tf = np.add.reduceat(ct.astype(np.int64), c_start)
+        last_doc = np.add.reduceat(cg.astype(np.uint64), c_start).astype(np.uint32)
+        blobs, lens_b = encode_single_block_postings(
+            gaps, tfs, lens_flat, g_lo[si], g_n[si],
+            bit_widths(np.maximum.reduceat(cg, c_start)),
+            bit_widths(max_tf), bit_widths(np.maximum.reduceat(cl, c_start)),
+        )
+        pos_blobs: list = [None] * len(si)
+        sp = np.flatnonzero(g_pos[si])
+        if len(sp):
+            # merged position width = the widest input's (deltas unchanged)
+            ps, pe = pos_slot[g_s[si[sp]]], pos_slot[g_e[si[sp]] - 1]
+            slot_take, slot_start = _gather_ranges(ps, pe - ps + 1)
+            d_lo = pos_off[ps]
+            for j, blob in zip(sp, encode_position_deltas_many(
+                deltas_flat, d_lo, pos_off[pe] + pos_counts[pe] - d_lo,
+                np.maximum.reduceat(pos_ws[slot_take], slot_start),
+            )):
+                pos_blobs[j] = blob
+        for k, gi in enumerate(si):
+            out[gi] = (
+                int(g_n[gi]), int(total_tf[k]), blobs[k], pos_blobs[k], lens_b[k],
+                [int(last_doc[k])], [int(max_tf[k])], [int(min_len[k])], [0],
+            )
+
+    for gi in np.flatnonzero(~single):
+        s, e = g_s[gi], g_e[gi]
+        lo, hi = g_lo[gi], g_lo[gi] + g_n[gi]
         g_gaps = gaps[lo:hi]
         g_tfs = tfs[lo:hi]
         blob, last_doc, max_tf = encode_postings_from_gaps(g_gaps, g_tfs)
         ln = lens_flat[lo:hi]
         min_len = np.minimum.reduceat(ln, np.arange(0, hi - lo, BLOCK))
-        if has_pos[s]:
-            if not has_pos[s:e].all():
-                raise ValueError("mixed position presence within a term group")
+        if g_pos[gi]:
             ps, pe_ = pos_slot[s], pos_slot[e - 1]
             d_lo, d_hi = pos_off[ps], pos_off[pe_] + pos_counts[pe_]
             pos_blob = encode_positions_from_deltas(
@@ -478,20 +524,77 @@ def merge_posting_groups(
             )
         else:
             pos_blob = None
-        out.append(
-            (
-                int(hi - lo),
-                int(g_tfs.sum()),
-                blob,
-                pos_blob,
-                encode_u32_column(ln),
-                last_doc.astype(np.int64).tolist(),
-                max_tf.astype(np.int64).tolist(),
-                min_len.astype(np.int64).tolist(),
-                block_tf_cum(g_tfs).tolist(),
-            )
+        out[gi] = (
+            int(hi - lo),
+            int(g_tfs.sum()),
+            blob,
+            pos_blob,
+            encode_u32_column(ln),
+            last_doc.astype(np.int64).tolist(),
+            max_tf.astype(np.int64).tolist(),
+            min_len.astype(np.int64).tolist(),
+            block_tf_cum(g_tfs).tolist(),
         )
     return out
+
+
+def _gather_ranges(starts: np.ndarray, lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Index array selecting ``[starts[i], starts[i]+lens[i])`` for every i,
+    concatenated, plus each range's start within it (for ``reduceat``)."""
+    lens = np.asarray(lens, np.int64)
+    c_start = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    take = np.repeat(np.asarray(starts, np.int64) - c_start, lens) + np.arange(
+        int(lens.sum()), dtype=np.int64
+    )
+    return take, c_start
+
+
+def bit_widths(max_vals: np.ndarray) -> np.ndarray:
+    """Vectorized :func:`_bit_width` (float64 holds any uint32 exactly and
+    frexp's exponent is its bit_length)."""
+    return np.maximum(1, np.frexp(max_vals.astype(np.float64))[1]).astype(np.int64)
+
+
+def _packed_slices(vals, seg_off, seg_n, widths) -> tuple[bytes, list, list]:
+    """:func:`pack_segments` as (bytes, byte offsets, byte sizes) lists, for
+    cheap per-segment slicing in Python loops."""
+    buf, off, sz = pack_segments(vals, seg_off, seg_n, widths)
+    return buf.tobytes(), off.tolist(), sz.tolist()
+
+
+def encode_single_block_postings(gaps, tfs, lens, v_start, v_n, wd, wt, wl):
+    """Posting blobs and lens blobs of MANY single-block rows (v_n <= BLOCK)
+    at the given bit widths, each payload packed in ONE pack_segments pass:
+    per-row encode_postings / encode_u32_column calls are overhead-bound on
+    the typical df <= 128 row.  Row i's values are ``[v_start[i],
+    v_start[i] + v_n[i])`` of ``gaps`` (first one absolute), ``tfs`` and
+    ``lens``.  Bit-identical to the per-row encoders at minimal widths."""
+    gb, go, gz = _packed_slices(gaps, v_start, v_n, wd)
+    tb, to, tz = _packed_slices(tfs, v_start, v_n, wt)
+    lb, lo, lz = _packed_slices(lens, v_start, v_n, wl)
+    n, wd, wt, wl = (np.asarray(x).tolist() for x in (v_n, wd, wt, wl))
+    blobs = [
+        struct.pack("<IIBB", n[i], 1, wd[i], wt[i])
+        + gb[go[i] : go[i] + gz[i]] + tb[to[i] : to[i] + tz[i]]
+        for i in range(len(n))
+    ]
+    lens_blobs = [
+        struct.pack("<IB", n[i], wl[i]) + lb[lo[i] : lo[i] + lz[i]] for i in range(len(n))
+    ]
+    return blobs, lens_blobs
+
+
+def encode_position_deltas_many(deltas, p_start, p_n, widths) -> list[bytes]:
+    """Batched :func:`encode_positions_from_deltas`: row i packs
+    ``deltas[p_start[i] : p_start[i] + p_n[i]]`` at ``widths[i]``."""
+    pb, po, pz = _packed_slices(deltas, p_start, p_n, widths)
+    n, w = np.asarray(p_n).tolist(), np.asarray(widths).tolist()
+    return [
+        struct.pack("<IB", n[i], w[i]) + pb[po[i] : po[i] + pz[i]]
+        if n[i]
+        else struct.pack("<IB", 0, 1)
+        for i in range(len(n))
+    ]
 
 
 def encode_postings_from_gaps(

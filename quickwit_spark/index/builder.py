@@ -80,28 +80,16 @@ from ..config import IndexConfig
 from ..storage import storage_for
 from ..functions.codec import (
     BLOCK,
+    bit_widths,
     block_tf_cum,
+    encode_position_deltas_many,
     encode_positions,
     encode_postings,
+    encode_single_block_postings,
     encode_u32_column,
-    pack_segments,
 )
 from ..functions.tokenizer import tokenize_series
 from .catalog import PUBLISHED, Catalog, SplitMetadata
-
-# Final posting rows.  `lens` carries per-posting doc lengths (the exact
-# fieldnorm data tantivy co-locates with segments) so split merges can
-# re-derive block_min_len without re-reading the doc store.  `bucket` is the
-# stored term-hash bucket: queries prune their scan to the buckets of the
-# query terms via parquet min/max stats.
-POSTINGS_SCHEMA = (
-    "split_id string, bucket int, field string, term string, doc_freq long, "
-    "total_tf long, blob binary, positions binary, lens binary, "
-    "block_last_doc array<long>, block_max_tf array<long>, block_min_len array<long>, "
-    "block_tf_cum array<long>, chunk_ord int, pos_chunk_blocks array<long>, "
-    "pos_bm binary, bm_chunk_span int"
-)
-
 
 # High-tf terms additionally store per-doc 128-bit position BITSETS
 # (codec.encode_position_bitmaps): a stopword-led phrase then verifies
@@ -463,24 +451,18 @@ def _postings_from_flat(flat_terms, doc_rep, pos, lens_by_doc, base_doc, want_po
         yield term, pair_docs[s:e], tfs_all[s:e], positions, plens_all[s:e]
 
 
-def _bit_widths_arr(max_vals: np.ndarray) -> np.ndarray:
-    """Vectorized bit_length for positive ints (exact for uint32 range:
-    float64 represents them exactly and frexp's exponent is bit_length)."""
-    return np.maximum(1, np.frexp(max_vals.astype(np.float64))[1]).astype(np.int64)
-
-
 def _encode_flat_postings(
     flat_terms, doc_rep, pos, lens_by_doc, base_doc, want_positions
 ):
     """Encode EVERY term of a flat (term, doc, pos) chunk, batched.
 
     Same grouping as :func:`_postings_from_flat`, but terms with df <=
-    BLOCK (the overwhelming majority) encode through ONE
-    codec.pack_segments pass per payload (gaps / tfs / positions / lens)
-    instead of four numpy packs per term — per-term packing was measured
-    ~40% of fresh-build CPU.  Blobs are bit-identical to
-    :func:`_encode_term`'s.  Hot multi-block terms fall back per term
-    (their cost is bandwidth, not call overhead).
+    BLOCK (the overwhelming majority) encode through ONE pack_segments pass
+    per payload (codec.encode_single_block_postings /
+    encode_position_deltas_many) instead of four numpy packs per term —
+    per-term packing was measured ~40% of fresh-build CPU.  Blobs are
+    bit-identical to :func:`_encode_term`'s.  Hot multi-block terms fall
+    back per term (their cost is bandwidth, not call overhead).
     Yields (term, row_tail) like (term, *_encode_term(...)).
     """
     codes, uniques = pd.factorize(flat_terms, sort=True)
@@ -513,43 +495,31 @@ def _encode_flat_postings(
         gaps[0] = pair_docs[0]
         np.subtract(pair_docs[1:], pair_docs[:-1], out=gaps[1:])
         gaps[term_starts] = pair_docs[term_starts]
-    wd = _bit_widths_arr(np.maximum.reduceat(gaps, term_starts))
+    wd = bit_widths(np.maximum.reduceat(gaps, term_starts))
     max_tf_t = np.maximum.reduceat(tfs_all, term_starts)
-    wt = _bit_widths_arr(max_tf_t)
-    wl = _bit_widths_arr(np.maximum.reduceat(plens_all, term_starts))
+    wt = bit_widths(max_tf_t)
+    wl = bit_widths(np.maximum.reduceat(plens_all, term_starts))
     total_tf_t = np.add.reduceat(tfs_all.astype(np.int64), term_starts)
     min_len_t = np.minimum.reduceat(plens_all, term_starts)
 
     single = df_per_term <= BLOCK
     # pack only the single-block terms' segments (multi-block fall back)
     s_idx = np.flatnonzero(single)
-    s_starts = term_starts[s_idx]
-    s_n = df_per_term[s_idx]
-    gbuf, goff, _gsz = pack_segments(gaps, s_starts, s_n, wd[s_idx])
-    tbuf, toff, _tsz = pack_segments(tfs_all, s_starts, s_n, wt[s_idx])
-    lbuf, loff, _lsz = pack_segments(plens_all, s_starts, s_n, wl[s_idx])
-    gsz = np.concatenate((goff[1:], [len(gbuf)])) if len(s_idx) else goff
-    tsz = np.concatenate((toff[1:], [len(tbuf)])) if len(s_idx) else toff
-    lsz = np.concatenate((loff[1:], [len(lbuf)])) if len(s_idx) else loff
-
+    blobs, lens_blobs = encode_single_block_postings(
+        gaps, tfs_all, plens_all, term_starts[s_idx], df_per_term[s_idx],
+        wd[s_idx], wt[s_idx], wl[s_idx],
+    )
+    pos_blobs: list = [None] * len(s_idx)
     if want_positions:
         deltas = pos_s.copy()
         if len(deltas) > 1:
             deltas[1:] -= pos_s[:-1]
         deltas[pair_starts] = pos_s[pair_starts]
         occ_start_t = occ_bounds[term_starts]
-        occ_n_t = occ_bounds[term_ends] - occ_start_t
-        wp = _bit_widths_arr(np.maximum.reduceat(deltas, occ_start_t))
-        pbuf, poff, _psz = pack_segments(
-            deltas, occ_start_t[s_idx], occ_n_t[s_idx], wp[s_idx]
+        wp = bit_widths(np.maximum.reduceat(deltas, occ_start_t))
+        pos_blobs = encode_position_deltas_many(
+            deltas, occ_start_t[s_idx], (occ_bounds[term_ends] - occ_start_t)[s_idx], wp[s_idx]
         )
-        psz = np.concatenate((poff[1:], [len(pbuf)])) if len(s_idx) else poff
-
-    gb = gbuf.tobytes()
-    tb = tbuf.tobytes()
-    lb = lbuf.tobytes()
-    if want_positions:
-        pb = pbuf.tobytes()
     last_doc_s = pair_docs[term_ends - 1]
 
     k = 0  # index into the packed single-block tables
@@ -564,30 +534,11 @@ def _encode_flat_postings(
                 pair_docs[s:e], tfs_all[s:e], p_occ, plens_all[s:e]
             )
             continue
-        n = int(s_n[k])
-        blob = (
-            np.array([n, 1], dtype="<u4").tobytes()
-            + bytes((int(wd[ti]), int(wt[ti])))
-            + gb[goff[k] : gsz[k]]
-            + tb[toff[k] : tsz[k]]
+        yield (
+            term, int(df_per_term[ti]), int(total_tf_t[ti]), blobs[k], pos_blobs[k],
+            lens_blobs[k], [int(last_doc_s[ti])], [int(max_tf_t[ti])],
+            [int(min_len_t[ti])], [0],
         )
-        if want_positions:
-            total = int(occ_n_t[ti])
-            positions = (
-                np.array([total], dtype="<u4").tobytes()
-                + bytes([int(wp[ti])])
-                + pb[poff[k] : psz[k]]
-            )
-        else:
-            positions = None
-        lens_blob = (
-            np.array([n], dtype="<u4").tobytes()
-            + bytes([int(wl[ti])])
-            + lb[loff[k] : lsz[k]]
-        )
-        yield term, n, int(total_tf_t[ti]), blob, positions, lens_blob, [
-            int(last_doc_s[ti])
-        ], [int(max_tf_t[ti])], [int(min_len_t[ti])], [0]
         k += 1
 
 
@@ -759,6 +710,11 @@ def _pa_schemas(config: IndexConfig):
             ("ts_epoch", pa.int64()),
         ]
     )
+    # posting rows: `lens` carries per-posting doc lengths (the exact
+    # fieldnorm data tantivy co-locates with segments) so split merges can
+    # re-derive block_min_len without re-reading the doc store; `bucket` is
+    # the stored term-hash bucket: queries prune their scan to the buckets
+    # of the query terms via parquet min/max stats
     postings = pa.schema(
         [
             ("bucket", pa.int32()),

@@ -14,9 +14,10 @@ MergeExecutor + GarbageCollector analog (SURVEY.md §2.4).
   in split order; postings of the inputs are re-grouped per (field, term)
   and re-encoded (k-way concat — input doc_id ranges are disjoint and
   offset-ordered, so no sort is needed); fast-field segments are re-based.
-  All per-term work happens in one ``applyInPandas`` over the union of the
-  input splits' posting rows — a single shuffle keyed by (field, term) with
-  compressed payloads.
+  A round is ONE Spark job of merge units, Python tasks reading and writing
+  through the storage layer: a postings unit merges a term-bucket range of
+  one output split (inputs are bucket-sorted, so a bucket filter prunes its
+  reads), a docs/fastfields unit remaps ~8 MB of input.  No shuffle.
 
 * **Publish**: new split staged then ``replace_splits`` (atomic swap,
   publisher.rs:109-127).  **GC** deletes MarkedForDeletion split dirs
@@ -26,8 +27,8 @@ MergeExecutor + GarbageCollector analog (SURVEY.md §2.4).
 from __future__ import annotations
 
 import os
+import time
 import uuid
-from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable
 
@@ -37,11 +38,11 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
-from ..functions.codec import BLOCK, merge_posting_groups
-from ..storage import storage_for
+from ..functions.codec import merge_posting_groups
+from ..storage import BoundedParquetWriter, row_bytes, storage_for
 from .builder import (
-    POSTINGS_SCHEMA,
     _bm_chunk_bytes,
+    _pa_schemas,
     _paths,
     _pos_chunk_bytes,
     _posbm_max_df,
@@ -123,29 +124,9 @@ def build_merge_operations(
     return ops
 
 
-def _make_merge_bucket_group(
-    pos_chunk_bytes: int | None,
-    posbm_min_total_tf: int | None = None,
-    posbm_max_df: int | None = None,
-    bm_chunk_bytes: int | None = None,
-):
-    def merge_bucket_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _merge_bucket_group(
-            pdf, pos_chunk_bytes, posbm_min_total_tf, posbm_max_df,
-            bm_chunk_bytes,
-        )
-
-    return merge_bucket_group
-
-
-def _merge_bucket_group(
-    pdf: pd.DataFrame,
-    pos_chunk_bytes: int | None = None,
-    posbm_min_total_tf: int | None = None,
-    posbm_max_df: int | None = None,
-    bm_chunk_bytes: int | None = None,
-) -> pd.DataFrame:
-    """One term-hash bucket → merged rows for ALL its (field, term)s.
+def _merge_bucket_group(pdf: pd.DataFrame, settings: "_MergeSettings") -> tuple:
+    """Whole term-hash buckets → merged rows for ALL their (field, term)s,
+    as (primary rows sorted by (bucket, field, term), chunk rows).
 
     The k-way merge runs in GAP SPACE, never materializing absolute doc
     ids: adding a docID offset to a whole posting list leaves every delta
@@ -153,22 +134,16 @@ def _merge_bucket_group(
     with only each non-first row's FIRST value re-anchored to
     (first_doc+off) - (prev_last_doc+prev_off).  Likewise position runs
     are delta-encoded per doc, so their streams concatenate verbatim.
-    All decoding is batched across the bucket's rows via the segment
-    decoders (codec._decode_segments): per-blob numpy calls were measured
+    All decoding is batched across the rows via the segment decoders
+    (codec._decode_segments): per-blob numpy calls were measured
     overhead-dominated at ~70 µs each on the typical df<=128 blob."""
     pdf = _reassemble_chunked_positions(pdf)
-    pdf = pdf.sort_values(["field", "term", "ord"], kind="mergesort")
-    out_split = pdf["out_split"].iloc[0]
-    bucket = int(pdf["bucket"].iloc[0])
+    pdf = pdf.sort_values(["bucket", "field", "term", "ord"], kind="mergesort")
+    buckets = pdf["bucket"].to_numpy()
     fields = pdf["field"].to_numpy()
     terms = pdf["term"].to_numpy()
-    blobs = pdf["blob"].tolist()
-    pos_col = pdf["positions"].to_numpy()
-    offsets = pdf["offset"].to_numpy().astype(np.int64)
     last_docs = np.fromiter(
-        (int(np.asarray(x)[-1]) if len(x) else -1 for x in pdf["block_last_doc"]),
-        np.int64,
-        len(pdf),
+        (int(np.asarray(x)[-1]) if len(x) else -1 for x in pdf["block_last_doc"]), np.int64
     )
 
     n = len(pdf)
@@ -179,22 +154,13 @@ def _merge_bucket_group(
     g_ends = np.concatenate((g_starts[1:], [n]))
 
     tails = merge_posting_groups(
-        blobs,
-        list(pos_col),
-        pdf["lens"].tolist(),
-        offsets,
-        last_docs,
-        g_starts,
-        g_ends,
+        pdf["blob"].tolist(), pdf["positions"].tolist(), pdf["lens"].tolist(),
+        pdf["offset"].to_numpy().astype(np.int64), last_docs, g_starts, g_ends,
     )
-    rows = [
-        (out_split, bucket, fields[s], terms[s]) + tail
-        for s, tail in zip(g_starts, tails)
-    ]
     out_pdf = pd.DataFrame(
-        rows,
+        [(int(buckets[s]), fields[s], terms[s]) + tail for s, tail in zip(g_starts, tails)],
         columns=[
-            "split_id", "bucket", "field", "term", "doc_freq", "total_tf", "blob",
+            "bucket", "field", "term", "doc_freq", "total_tf", "blob",
             "positions", "lens", "block_last_doc", "block_max_tf", "block_min_len",
             "block_tf_cum",
         ],
@@ -202,25 +168,11 @@ def _merge_bucket_group(
     # merged payloads are where positions get BIG — derive the merged rows'
     # position bitmaps (from the reassembled inline payload, so mixed-
     # vintage inputs need no per-input bitmap bookkeeping), then re-chunk
-    # on the way out (the Spark writer's byte-bounded row groups isolate
-    # chunk rows)
-    from .builder import (
-        _attach_pos_bitmaps,
-        _posbm_min_total_tf,
-        _split_chunked_positions,
-    )
+    # on the way out (chunk rows go to their own file)
+    from .builder import _attach_pos_bitmaps, _split_chunked_positions
 
-    out_pdf = _attach_pos_bitmaps(
-        out_pdf,
-        posbm_min_total_tf
-        if posbm_min_total_tf is not None
-        else _posbm_min_total_tf(),
-        posbm_max_df,
-    )
-    primary, chunks = _split_chunked_positions(out_pdf, pos_chunk_bytes, bm_chunk_bytes)
-    return primary if not len(chunks) else pd.concat(
-        [primary, chunks], ignore_index=True
-    )
+    out_pdf = _attach_pos_bitmaps(out_pdf, settings.posbm_min_total_tf, settings.posbm_max_df)
+    return _split_chunked_positions(out_pdf, settings.pos_chunk_bytes, settings.bm_chunk_bytes)
 
 
 def _reassemble_chunked_positions(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -282,6 +234,215 @@ def _merge_tags(inputs: list[SplitMetadata], max_values: int) -> list[str]:
     return sorted(out)
 
 
+# input bytes per docs/fastfields unit (enough rows to amortize a task, few
+# enough that a big merge keeps its parallelism), and input payload per
+# kernel call of a postings unit (whole buckets: bounds the working set)
+_ROWS_UNIT_BYTES = 8 << 20
+_KERNEL_BATCH_BYTES = 32 << 20
+_POSTINGS_IN = ["bucket", "field", "term", "blob", "positions", "lens",
+                "block_last_doc", "chunk_ord", "pos_chunk_blocks"]  # no pos_bm
+
+
+@dataclass(frozen=True)
+class _MergeSettings:
+    """What a unit needs from the environment, captured DRIVER-side (worker
+    env is frozen at JVM start; see builder._pos_chunk_bytes)."""
+
+    paths: dict
+    block_bytes: dict  # table -> row-group payload bound
+    postings_schema: object
+    pos_chunk_bytes: int
+    posbm_min_total_tf: int
+    posbm_max_df: int
+    bm_chunk_bytes: int
+
+
+def _merge_settings(index_dir: str, config: IndexConfig) -> _MergeSettings:
+    # row groups bounded by payload BYTES: reads are point lookups (a few
+    # terms / offset+k docs), except fastfields, read whole per split
+    blk = int(os.environ.get("QW_MERGE_BLOCK_BYTES", str(512 << 10)))
+    return _MergeSettings(
+        _paths(index_dir), {"postings": blk, "docs": blk, "fastfields": 4 << 20},
+        _pa_schemas(config)[1], _pos_chunk_bytes(), _posbm_min_total_tf(),
+        _posbm_max_df(), _bm_chunk_bytes(),
+    )
+
+
+@dataclass(frozen=True)
+class _MergeUnit:
+    """One task of the merge job, writing files of one output split.
+    postings: ``inputs`` = (postings files, docID offset) per input split
+    in op order, merged over buckets [lo, hi) (None = unbounded).  rows:
+    ``inputs`` = (table, file, part, n_parts, docID offset) pieces in doc
+    order; part k of n_parts is the k-th byte slice of the file's row
+    groups."""
+
+    kind: str
+    out_split: str
+    index: int
+    inputs: tuple
+    lo: int | None = None
+    hi: int | None = None
+
+
+def _plan_merge_units(
+    storage, paths: dict, ops: list[MergeOperation], inputs_of: dict, n_buckets: int
+) -> list[_MergeUnit]:
+    """QW_MERGE_WRITE_FANOUT postings units per op — contiguous bucket
+    ranges, so output files keep disjoint bucket ranges; parquet encode is
+    single-threaded per writer, so one unit per split would serialize the
+    rewrite — then docs/fastfields units of ~_ROWS_UNIT_BYTES of input.
+    The heavy postings units go first; the small ones fill the tail."""
+    fanout = max(1, int(os.environ.get("QW_MERGE_WRITE_FANOUT", "8")))
+    postings, rows = [], []
+    for op in ops:
+        sids, out = op.split_ids, op.output_split_id
+        offs = np.cumsum([0] + [s.num_docs for s in inputs_of[out]]).tolist()
+        files = {
+            (sid, t): storage.list_file_sizes(os.path.join(paths[t], f"split_id={sid}"))
+            for sid in sids
+            for t in ("docs", "postings", "fastfields")
+        }
+        inputs = tuple(
+            (tuple(f for f, _ in files[(sid, "postings")]), off)
+            for sid, off in zip(sids, offs)
+        )
+        for u in range(fanout):
+            lo, hi = u * n_buckets // fanout, (u + 1) * n_buckets // fanout
+            if u == 0 or lo < hi:  # (more units than buckets: skip empties)
+                postings.append(_MergeUnit(
+                    "postings", out, u, inputs, lo if u else None,
+                    hi if u < fanout - 1 else None,
+                ))
+        pieces, acc = [], 0.0
+        for t in ("docs", "fastfields"):
+            for sid, off in zip(sids, offs):
+                for f, size in files[(sid, t)]:
+                    n_parts = max(1, -(-size // _ROWS_UNIT_BYTES))
+                    for part in range(n_parts):
+                        pieces.append((t, f, part, n_parts, off))
+                        acc += size / n_parts
+                        if acc >= _ROWS_UNIT_BYTES:
+                            rows.append(_MergeUnit("rows", out, len(rows), tuple(pieces)))
+                            pieces, acc = [], 0.0
+        if pieces:
+            rows.append(_MergeUnit("rows", out, len(rows), tuple(pieces)))
+    return postings + rows
+
+
+def _run_merge_unit(unit: _MergeUnit, settings: _MergeSettings) -> tuple[str, float]:
+    """Task body of the merge job; returns (kind, seconds).  Output names
+    are deterministic, so a retried task rewrites the same files (no
+    rename anywhere — object-store safe)."""
+    t0 = time.monotonic()
+    (_merge_postings_unit if unit.kind == "postings" else _rewrite_rows_unit)(unit, settings)
+    return unit.kind, time.monotonic() - t0
+
+
+def _merge_postings_unit(unit: _MergeUnit, settings: _MergeSettings) -> None:
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    storage = storage_for(settings.paths["postings"])
+    parts = []
+    for ord_, (files, off) in enumerate(unit.inputs):
+        if not files:
+            continue
+        ds = storage.dataset(list(files))
+        names = ds.schema.names
+        flt = pads.scalar(True)
+        if unit.lo is not None:
+            flt &= pads.field("bucket") >= unit.lo
+        if unit.hi is not None:
+            flt &= pads.field("bucket") < unit.hi
+        if "chunk_ord" in names:
+            # bitmap chunk rows (chunk_ord < 0) are never read: merged
+            # bitmaps re-derive from the merged positions (mixed-vintage
+            # safe), 10-20% of postings bytes on a hot-term-heavy corpus
+            flt &= (pads.field("chunk_ord") >= 0) | pads.field("chunk_ord").is_null()
+        t = ds.to_table(columns=[c for c in _POSTINGS_IN if c in names], filter=flt)
+        if n := t.num_rows:
+            t = t.append_column("offset", pa.array(np.full(n, off, np.int64)))
+            parts.append(t.append_column("ord", pa.array(np.full(n, ord_, np.int32))))
+    if not parts:
+        return
+    # older inputs lack the chunk columns: promotion fills them with nulls
+    t = pa.concat_tables(parts, promote_options="default")
+    t = t.take(pc.sort_indices(t, sort_keys=[("bucket", "ascending")]))
+    buckets, payload = t.column("bucket").to_numpy(), np.cumsum(row_bytes(t))
+    bounds = [0]
+    for i in np.flatnonzero(buckets[1:] != buckets[:-1]) + 1:
+        if payload[i - 1] - (payload[bounds[-1] - 1] if bounds[-1] else 0) >= _KERNEL_BATCH_BYTES:
+            bounds.append(int(i))
+    bounds.append(len(buckets))
+
+    d = os.path.join(settings.paths["postings"], f"split_id={unit.out_split}")
+    schema = settings.postings_schema
+    # chunk rows in their OWN file: a term lookup never drags chunk bytes
+    # along, and a doc-range leaf unit fetches only its chunks
+    main, chunks = (
+        BoundedParquetWriter(storage, os.path.join(d, f"{name}-{unit.index:05d}.parquet"),
+                             schema, settings.block_bytes["postings"])
+        for name in ("part", "chunks")
+    )
+    for a, b in zip(bounds[:-1], bounds[1:]):
+        primary, chunk_rows = _merge_bucket_group(t.slice(a, b - a).to_pandas(), settings)
+        main.write(pa.Table.from_pandas(primary, schema=schema, preserve_index=False))
+        chunks.write(pa.Table.from_pandas(chunk_rows, schema=schema, preserve_index=False))
+    main.close()
+    chunks.close()
+
+
+def _part_row_groups(md, part: int, n_parts: int) -> list[int]:
+    """Row groups of byte slice ``part`` of ``n_parts`` of one file: those
+    whose byte midpoint falls in it."""
+    sizes = np.array([md.row_group(i).total_byte_size for i in range(md.num_row_groups)])
+    mid = np.cumsum(sizes) - sizes / 2
+    owner = np.minimum((mid / max(sizes.sum(), 1) * n_parts).astype(int), n_parts - 1)
+    return np.flatnonzero(owner == part).tolist()
+
+
+def _rewrite_rows_unit(unit: _MergeUnit, settings: _MergeSettings) -> None:
+    """Add each input's docID offset to doc_id (docs) or base_doc
+    (fastfields).  seg_id := the re-based base_doc: unique in the output at
+    ANY merge generation and in doc order, as the reader's seg_id-sorted
+    concat needs (an ord*1_000_000 rebase collided on merged inputs).  Each
+    output file stays sorted on its key: a piece that would sort before the
+    file's last row (interleaved files of an older merged input) or has
+    another schema (mixed input vintages) starts the unit's next file."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    storage = storage_for(settings.paths["docs"])
+    writers: dict = {}  # table -> (writer, file number, last key written)
+    for table, f, part, n_parts, off in unit.inputs:
+        key = "doc_id" if table == "docs" else "base_doc"
+        with storage.fs.open_input_file(storage.fs_path(f)) as fh:
+            pf = pq.ParquetFile(fh)
+            rgs = _part_row_groups(pf.metadata, part, n_parts)
+            for batch in pf.iter_batches(row_groups=rgs) if rgs else ():
+                t = pa.Table.from_batches([batch])
+                col = pc.add(t.column(key), pa.scalar(off, pa.int64()))
+                t = t.set_column(t.schema.get_field_index(key), key, col)
+                if table == "fastfields":
+                    t = t.set_column(t.schema.get_field_index("seg_id"), "seg_id", col)
+                w, n, last = writers.get(table, (None, -1, None))
+                if w is None or not w.schema.equals(t.schema) or col[0].as_py() < last:
+                    if w is not None:
+                        w.close()
+                    n += 1
+                    w = BoundedParquetWriter(storage, os.path.join(
+                        settings.paths[table], f"split_id={unit.out_split}",
+                        f"part-{unit.index:05d}-{n:03d}.parquet",
+                    ), t.schema, settings.block_bytes[table])
+                w.write(t)
+                writers[table] = (w, n, col[-1].as_py())
+    for w, _, _ in writers.values():
+        w.close()
+
+
 def execute_merge_round(
     spark: SparkSession,
     index_dir: str,
@@ -291,195 +452,47 @@ def execute_merge_round(
 ) -> list[SplitMetadata]:
     """MergeExecutor::process_merge analog, vectorized over a whole planner
     round: ops touch disjoint splits, so ALL of them run as ONE Spark job
-    per table (docs remap, postings k-way merge, fastfields re-base) instead
-    of 3 jobs per op — at 17 ops that is 3 jobs instead of 51.  Output split
-    dirs are written to a temp base and moved into place, then each op's
-    replace publishes atomically."""
+    of merge units (_plan_merge_units) — no shuffle, no range-sampling job.
+    Units write straight into the new split dirs through the storage
+    layer; each op's replace then publishes atomically."""
     if not ops:
         return []
     cat = cat or Catalog(index_dir)
+    config = IndexConfig.from_dict(cat.config_dict)
     paths = _paths(index_dir)
     metas = {s.split_id: s for s in cat.splits([PUBLISHED])}
-
-    # per-input mapping: in split → (out split, docID offset, split ord)
-    # (additive offsets in split order, merge_executor.rs doc mapping)
-    rows: list[tuple[str, str, int, int]] = []
-    inputs_of: dict[str, list[SplitMetadata]] = {}
-    for op in ops:
-        inputs = [metas[sid] for sid in op.split_ids]
-        inputs_of[op.output_split_id] = inputs
-        acc = 0
-        for i, s in enumerate(inputs):
-            rows.append((s.split_id, op.output_split_id, acc, i))
-            acc += s.num_docs
-    in_sids = [r[0] for r in rows]
-    map_out = F.create_map(*[F.lit(x) for r in rows for x in (r[0], r[1])])
-    map_off = F.create_map(*[F.lit(x) for r in rows for x in (r[0], r[2])])
-    map_ord = F.create_map(*[F.lit(x) for r in rows for x in (r[0], r[3])])
-    n_out = len(ops)
-
+    inputs_of = {op.output_split_id: [metas[sid] for sid in op.split_ids] for op in ops}
     storage = storage_for(index_dir)
 
-    def read(table: str):
-        dirs = [
-            storage.spark_url(os.path.join(paths[table], f"split_id={sid}"))
-            for sid in in_sids
-        ]
-        reader = spark.read.option("basePath", storage.spark_url(paths[table]))
-        if table == "postings":
-            # mixed input vintages: mergeSchema guarantees the positions-
-            # chunk columns surface if ANY input file carries them (a
-            # first-file-only schema would read chunk rows as broken
-            # primary rows); absent entirely → add them as nulls
-            df = reader.option("mergeSchema", "true").parquet(*dirs)
-            for c, t in (
-                ("chunk_ord", "int"),
-                ("pos_chunk_blocks", "array<long>"),
-                ("pos_bm", "binary"),
-                ("bm_chunk_span", "int"),
-            ):
-                if c not in df.columns:
-                    df = df.withColumn(c, F.lit(None).cast(t))
-            # bitmap payloads are RE-DERIVED from the merged positions
-            # (mixed-vintage safe), so neither inline pos_bm bytes nor
-            # bitmap chunk rows (chunk_ord < 0) ride the shuffle — for a
-            # hot-term-heavy corpus that is 10-20% of postings bytes
-            df = df.filter(
-                (F.col("chunk_ord") >= 0) | F.col("chunk_ord").isNull()
-            ).withColumn("pos_bm", F.lit(None).cast("binary"))
-            return df
-        return reader.parquet(*dirs)
-
-    # Bounded row groups for the rewritten files: Spark's default writer
-    # makes ONE giant row group per split file, which silences the min/max
-    # stats the query path prunes with (bucket for postings, doc_id for the
-    # doc store) — a cold term read on a 10M-doc merged split would then
-    # decompress the whole postings file.  Access is point-lookup-shaped
-    # (a few terms / offset+k docs), so small groups win; the builder's
-    # equivalents are row_group_size=4096 (postings) / 8192 (docs).
-    _blk = int(os.environ.get("QW_MERGE_BLOCK_BYTES", str(512 << 10)))
-    _BLOCK_BYTES = {"postings": _blk, "docs": _blk, "fastfields": 4 << 20}
-
-    # Writer fan-out: sizes the postings range-repartition (n_out*fanout
-    # tasks — parquet encode is single-threaded per writer, so one task
-    # per output split would serialize the rewrite) and bounds files per
-    # split dir.
-    _fanout = max(1, int(os.environ.get("QW_MERGE_WRITE_FANOUT", "8")))
-
-    def write_moved(df, table: str, sort_cols: list[str]):
-        """Write each output split DIRECTLY to its final partition dir —
-        no temp dir, no directory rename (object-store-safe: output split
-        ids are new and unpublished, so readers cannot see partial data;
-        the catalog replace below is the only commit point).  Stale data
-        from a crashed earlier attempt is prefix-deleted first, so a
-        retried merge self-heals without touching live splits.
-
-        The caller provides the partitioning: map-only remaps read with
-        small scan partitions (encode parallelism from the scan, nothing
-        shuffled — file-level sort ranges can interleave when a scan task
-        bin-packs files of several input splits, but readers filter with
-        exact predicates and row-group stats, so only file-level pruning
-        tightness is at stake); the postings merge arrives range-
-        partitioned on (out_split, bucket), so its files keep contiguous
-        disjoint bucket ranges."""
-        for sid in [op.output_split_id for op in ops]:
-            storage.delete_dir(os.path.join(paths[table], f"split_id={sid}"))
-        (
-            df.sortWithinPartitions("split_id", *sort_cols)
-            .write.partitionBy("split_id")
-            .option("parquet.block.size", str(_BLOCK_BYTES[table]))
-            .mode("append")
-            .parquet(storage.spark_url(paths[table]))
-        )
-
-    off, out = map_off[F.col("split_id")], map_out[F.col("split_id")]
-
-    import time as _time
-
     _timing = os.environ.get("QW_MERGE_TIMING") == "1"
-    _t0 = _time.monotonic()
+    _t0 = time.monotonic()
 
     def _mark(stage: str) -> None:
         nonlocal _t0
         if _timing:
-            now = _time.monotonic()
+            now = time.monotonic()
             print(f"merge-stage {stage}: {now - _t0:.2f}s", flush=True)
             _t0 = now
 
-    @contextmanager
-    def small_scan_partitions(nbytes: int = 8 << 20):
-        """Map-only rewrites take their encode parallelism from the SCAN:
-        small file partitions instead of a full-data shuffle."""
-        prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(nbytes))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
-
-    # --- docs: remap doc_id into the out split's dense range ----------------
-    # Map-only: the remap is per-row and each input split's remapped doc
-    # range is disjoint (additive offsets), so nothing needs shuffling
-    # (docs is the biggest table; measured 8.8s -> 2.8s on a 1M-turn round)
-    with small_scan_partitions():
-        docs = read("docs")
-        write_moved(
-            docs.withColumn("doc_id", F.col("doc_id") + off).withColumn("split_id", out),
-            "docs",
-            ["doc_id"],
-        )
-    _mark("docs")
-
-    # --- postings: k-way merge per (out split, field, term) -----------------
-    postings = (
-        read("postings")
-        .withColumn("offset", off)
-        .withColumn("ord", map_ord[F.col("split_id")])
-        .withColumn("out_split", out)
+    # output split ids are new and unpublished, so readers cannot see
+    # partial data (the catalog replace below is the only commit point);
+    # stale data of a crashed earlier attempt is prefix-deleted first
+    for op in ops:
+        for table in ("docs", "postings", "fastfields"):
+            storage.delete_dir(os.path.join(paths[table], f"split_id={op.output_split_id}"))
+    settings = _merge_settings(index_dir, config)
+    units = _plan_merge_units(storage, paths, ops, inputs_of, config.term_merge_buckets)
+    _mark("plan")
+    done = (
+        spark.sparkContext.parallelize(units, len(units))
+        .map(lambda u: _run_merge_unit(u, settings))
+        .collect()
     )
-    # ONE shuffle, not two: explicitly RANGE-partition on the grouping keys
-    # — Catalyst's EnsureRequirements accepts RangePartitioning as
-    # satisfying the groupBy clustering, so applyInPandas reuses the
-    # exchange — and the merged output is written as-is.  Range (not hash)
-    # keeps each task's buckets CONTIGUOUS, so every output file covers a
-    # tight disjoint (split, bucket) range and file-level min/max pruning
-    # stays as sharp as the old two-shuffle fan-out (hash scatter here
-    # measurably wrecked cold merged-split reads at the 10M-turn soak).
-    merged = (
-        postings.repartitionByRange(n_out * _fanout, "out_split", "bucket")
-        .groupBy("out_split", "bucket")
-        .applyInPandas(
-            # chunk + bitmap thresholds captured DRIVER-side (worker env is
-            # frozen at JVM start; see builder._pos_chunk_bytes).  A named
-            # closure rather than functools.partial: pyspark's eval-type
-            # inference warns on partial objects
-            _make_merge_bucket_group(
-                _pos_chunk_bytes(), _posbm_min_total_tf(), _posbm_max_df(),
-                _bm_chunk_bytes(),
-            ),
-            POSTINGS_SCHEMA,
-        )
-    )
-    write_moved(merged, "postings", ["bucket", "field", "term", "chunk_ord"])
-    _mark("postings")
-
-    # --- fastfields: re-base segments (no repack needed) ---------------------
-    # map-only like docs.  The new seg_id IS the re-based base_doc: unique
-    # within the output split at ANY merge generation and ordered exactly
-    # like the docs, so the reader's sort_values("seg_id") concat stays in
-    # doc order.  (The previous ord*1_000_000 rebase collided when a merge
-    # op's inputs were themselves merged splits — second-generation merges
-    # silently scrambled segment order and with it BM25 fieldnorms.)
-    with small_scan_partitions():
-        ff = read("fastfields")
-        write_moved(
-            ff.withColumn("base_doc", F.col("base_doc") + off)
-            .withColumn("seg_id", F.col("base_doc"))
-            .withColumn("split_id", out),
-            "fastfields",
-            ["seg_id"],
-        )
-    _mark("fastfields")
+    for kind in ("postings", "rows") if _timing else ():
+        secs = [s for k, s in done if k == kind]
+        print(f"merge-stage {kind}-units: {len(secs)} tasks, {sum(secs):.2f}s "
+              f"task time, max {max(secs, default=0):.2f}s", flush=True)
+    _mark("units")
 
     # --- hotcache sidecars for the new splits (single-read cold open) -------
     # written BEFORE the failpoint/stage so a crash leaves the sidecar as
@@ -493,11 +506,7 @@ def execute_merge_round(
         from .hotcache import write_split_hotcache
 
         with ThreadPoolExecutor(max_workers=8) as pool:
-            list(
-                pool.map(
-                    lambda op: write_split_hotcache(paths, op.output_split_id), ops
-                )
-            )
+            list(pool.map(lambda op: write_split_hotcache(paths, op.output_split_id), ops))
         _mark("hotcache")
 
     # term-presence Bloom for each new split: the fold-OR of its inputs'
@@ -514,11 +523,9 @@ def execute_merge_round(
     # --- metadata + atomic replaces ------------------------------------------
     if failpoint is not None:  # 'before-merge-publish' injection point
         failpoint("before-publish")  # (merge_executor.rs:287,294 analog)
-    max_tag_vals = IndexConfig.from_dict(cat.config_dict).max_values_per_tag_field
     produced = []
     for op in ops:
         inputs = inputs_of[op.output_split_id]
-        tags = _merge_tags(inputs, max_tag_vals)
         len_sums: dict[str, int] = {}
         for s in inputs:
             for f_, v in s.field_len_sums.items():
@@ -526,20 +533,18 @@ def execute_merge_round(
         # field_ranges union: min of mins / max of maxes — only for fields
         # every input recorded (a legacy input without stats would make a
         # partial range claim pruning cannot trust)
-        ranges: dict[str, list] = {}
-        common = set.intersection(*(set(s.field_ranges) for s in inputs)) if inputs else set()
-        for f_ in common:
-            ranges[f_] = [
-                min(s.field_ranges[f_][0] for s in inputs),
-                max(s.field_ranges[f_][1] for s in inputs),
-            ]
+        ranges = {
+            f_: [min(s.field_ranges[f_][0] for s in inputs),
+                 max(s.field_ranges[f_][1] for s in inputs)]
+            for f_ in set.intersection(*(set(s.field_ranges) for s in inputs))
+        }
         produced.append(
             SplitMetadata(
                 split_id=op.output_split_id,
                 num_docs=sum(s.num_docs for s in inputs),
                 ts_min=min(s.ts_min for s in inputs),
                 ts_max=max(s.ts_max for s in inputs),
-                tags=tags,
+                tags=_merge_tags(inputs, config.max_values_per_tag_field),
                 num_merge_ops=max(s.num_merge_ops for s in inputs) + 1,
                 field_ranges=ranges,
                 field_len_sums=len_sums,
@@ -554,20 +559,14 @@ def execute_merge_round(
     cat.stage_splits(produced)
     for op in ops:
         cat.replace_splits([op.output_split_id], op.split_ids)
+    _mark("publish")
     return produced
-
-
-def execute_merge(
-    spark: SparkSession, index_dir: str, op: MergeOperation, cat: Catalog | None = None
-) -> SplitMetadata:
-    """Single-op merge (k splits → 1): one-element round."""
-    return execute_merge_round(spark, index_dir, [op], cat)[0]
 
 
 def run_merge_pipeline(spark: SparkSession, index_dir: str, max_rounds: int = 10) -> list[SplitMetadata]:
     """MergePlanner loop: plan → execute until no more candidates
-    (indexing_pipeline.rs:202-350 analog).  Each round executes as 3 Spark
-    jobs total regardless of op count (execute_merge_round).  Ends by
+    (indexing_pipeline.rs:202-350 analog).  Each round executes as ONE
+    Spark job regardless of op count (execute_merge_round).  Ends by
     compacting the term-stats LSM — merges don't change global df, but a
     long-running ingest accumulates one delta per publish and this is the
     natural compaction point."""

@@ -18,8 +18,10 @@ scheme, without the engine assuming POSIX semantics:
   "s3://bucket/idx"); `os.path.join` composes them, and Storage strips
   the scheme for pyarrow-native calls.
 * **Spark jobs see the same data** via `spark_url()` (s3:// → s3a:// for
-  Hadoop); schemes Spark cannot read raise, so merge — whose heavy I/O is
-  deliberately Spark-side — degrades loudly, not silently.
+  Hadoop); schemes Spark cannot read raise, so the paths that read split
+  tables with Spark SQL (demux, cluster-scale term-stats aggregation)
+  degrade loudly, not silently.  Build and merge tasks read and write
+  split files through this layer themselves.
 
 The `qwsim://` scheme is an object-store SIMULATOR for tests: a local-
 disk-backed pyarrow FileSystem whose handler hard-fails `move` and
@@ -32,6 +34,7 @@ from __future__ import annotations
 import os
 import uuid
 
+import numpy as np
 import pyarrow.fs as pafs
 
 
@@ -130,11 +133,11 @@ class Storage:
 
     def spark_url(self, logical: str) -> str:
         """URL Spark/Hadoop reads this path under; raises for schemes Spark
-        cannot see (the merge pipeline's heavy I/O is Spark-side)."""
+        cannot see (demux reads its inputs with Spark SQL)."""
         if self._spark_scheme is None:
             raise ValueError(
                 f"storage scheme {self.scheme!r} is not Spark-readable; "
-                "merge/demux need a Hadoop-visible index URI (file://, s3a://)"
+                "demux needs a Hadoop-visible index URI (file://, s3a://)"
             )
         p = self.fs_path(logical)
         return f"{self._spark_scheme}://{p}" if self._spark_scheme else p
@@ -187,12 +190,18 @@ class Storage:
     def list_files(self, logical_dir: str, suffix: str = ".parquet") -> list[str]:
         """Sorted logical paths of suffix-matching files directly under the
         dir (object-store prefix listing)."""
+        return [p for p, _ in self.list_file_sizes(logical_dir, suffix)]
+
+    def list_file_sizes(
+        self, logical_dir: str, suffix: str = ".parquet"
+    ) -> list[tuple[str, int]]:
+        """:meth:`list_files` with each file's byte size (same one LIST)."""
         sel = pafs.FileSelector(
             self.fs_path(logical_dir), allow_not_found=True, recursive=False
         )
         infos = self.fs.get_file_info(sel)
         return sorted(
-            self._logical(i.path)
+            (self._logical(i.path), int(i.size or 0))
             for i in infos
             if i.type == pafs.FileType.File and i.path.endswith(suffix)
         )
@@ -225,10 +234,17 @@ class Storage:
         import pyarrow.parquet as pq
 
         fsp = self.fs_path(logical)
+        stats = _stats_columns(table.schema)
         if self.is_local:
             os.makedirs(os.path.dirname(fsp), exist_ok=True)
             tmp = f"{fsp}.tmp-{os.getpid()}"
-            pq.write_table(table, tmp, compression="snappy", row_group_size=row_group_size)
+            pq.write_table(
+                table,
+                tmp,
+                compression="snappy",
+                row_group_size=row_group_size,
+                write_statistics=stats,
+            )
             size = os.path.getsize(tmp)
             os.replace(tmp, fsp)
             return size
@@ -237,6 +253,7 @@ class Storage:
             fsp,
             compression="snappy",
             row_group_size=row_group_size,
+            write_statistics=stats,
             filesystem=self.fs,
         )
         return self.size(logical)
@@ -248,12 +265,13 @@ class Storage:
         import pyarrow.parquet as pq
 
         fsp = self.fs_path(logical)
+        opts = {"compression": "snappy", "write_statistics": _stats_columns(schema)}
         if self.is_local:
             os.makedirs(os.path.dirname(fsp), exist_ok=True)
             tmp = f"{fsp}.tmp-{os.getpid()}"
-            writer = pq.ParquetWriter(tmp, schema, compression="snappy")
+            writer = pq.ParquetWriter(tmp, schema, **opts)
             return writer, lambda: os.replace(tmp, fsp)
-        writer = pq.ParquetWriter(fsp, schema, compression="snappy", filesystem=self.fs)
+        writer = pq.ParquetWriter(fsp, schema, filesystem=self.fs, **opts)
         return writer, lambda: None
 
     # -- conditional writes -------------------------------------------------
@@ -333,6 +351,67 @@ class Storage:
         else:
             src = [self.fs_path(p) for p in files_or_dir]
         return pads.dataset(src, format="parquet", filesystem=self.fs)
+
+
+def row_bytes(table) -> np.ndarray:
+    """Per-row payload bytes: binary/string value lengths, 8 B per list
+    element or scalar."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    out = np.zeros(table.num_rows, np.int64)
+    for col in table.columns:
+        t = col.type
+        if pa.types.is_binary(t) or pa.types.is_string(t):
+            out += pc.fill_null(pc.binary_length(col), 0).to_numpy()
+        elif pa.types.is_list(t):
+            out += 8 * pc.fill_null(pc.list_value_length(col), 0).to_numpy()
+        else:
+            out += 8
+    return out
+
+
+class BoundedParquetWriter:
+    """A streamed parquet object whose row groups close at ~``block_bytes``
+    of payload (readers prune on row-group min/max, so a file needs small
+    groups however long its rows are; a row count cannot promise that).
+    Opened on the first write: nothing written, no object."""
+
+    def __init__(self, storage: Storage, logical: str, schema, block_bytes: int):
+        self.storage, self.path, self.schema, self.blk = storage, logical, schema, block_bytes
+        self._w = self._finish = None
+
+    def write(self, table) -> None:
+        if not table.num_rows:
+            return
+        if self._w is None:
+            self._w, self._finish = self.storage.parquet_writer(self.path, self.schema)
+        csum = np.cumsum(row_bytes(table))
+        # a group ends with the row that crosses each block boundary
+        cuts = np.unique(np.searchsorted(csum, np.arange(self.blk, csum[-1], self.blk)) + 1)
+        for a, b in zip([0, *cuts.tolist()], [*cuts.tolist(), len(csum)]):
+            if b > a:
+                self._w.write_table(table.slice(a, b - a), row_group_size=b - a)
+
+    def close(self) -> None:
+        if self._w is not None:
+            self._w.close()
+            self._finish()
+
+
+def _stats_columns(schema) -> list[str]:
+    """Columns that get parquet min/max statistics: the scalar ones.
+    Readers prune on scalar keys only (bucket, field, term, chunk_ord,
+    doc_id, ...); min/max of a binary payload or a list column is never
+    read, yet pyarrow copies it into page headers and the footer (a
+    253-doc split: fastfields file -33%, postings -4%)."""
+    import pyarrow as pa
+
+    return [
+        f.name
+        for f in schema
+        if not (pa.types.is_binary(f.type) or pa.types.is_list(f.type))
+    ]
 
 
 _STORAGE_CACHE: dict[str, Storage] = {}

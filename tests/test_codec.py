@@ -300,3 +300,87 @@ def test_position_deltas_many_roundtrip(doclists):
         sl = deltas[k * len(flat) : (k + 1) * len(flat)]
         got = decode_positions(encode_positions_from_deltas(sl, int(ws[k])), tfs)
         np.testing.assert_array_equal(got, flat)
+
+
+def _merge_groups_per_term(blobs, positions, lens_blobs, offsets, g_starts, g_ends):
+    """Reference k-way merge: decode every row to absolute doc ids, concat
+    per group and encode each term with the per-term encoders."""
+    from quickwit_spark.functions.codec import (
+        block_tf_cum,
+        encode_positions_from_deltas,
+        position_deltas_many,
+    )
+
+    out = []
+    for s, e in zip(g_starts, g_ends):
+        docs, tfs, lens, deltas, widths = [], [], [], [], []
+        for j in range(s, e):
+            d, t = decode_postings(blobs[j])
+            docs.append(d.astype(np.int64) + offsets[j])
+            tfs.append(t)
+            lens.append(decode_u32_column(lens_blobs[j]))
+            if positions[j] is not None:
+                dl, _, w = position_deltas_many([positions[j]])
+                deltas.append(dl)
+                widths.append(int(w[0]))
+        docs, tfs, lens = np.concatenate(docs), np.concatenate(tfs), np.concatenate(lens)
+        blob, last_doc, max_tf = encode_postings(docs, tfs)
+        pos = (
+            encode_positions_from_deltas(np.concatenate(deltas), max(widths))
+            if widths
+            else None
+        )
+        out.append((
+            len(docs), int(tfs.sum()), blob, pos, encode_u32_column(lens),
+            last_doc.astype(np.int64).tolist(), max_tf.astype(np.int64).tolist(),
+            np.minimum.reduceat(lens, np.arange(0, len(docs), BLOCK)).astype(np.int64).tolist(),
+            block_tf_cum(tfs).tolist(),
+        ))
+    return out
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.integers(0, 2**31 - 1))
+def test_merge_posting_groups_batched_matches_per_term(seed):
+    """The batched single-block re-encode of merge_posting_groups gives
+    bit-identical row tails to per-term encoding, for random groups mixing
+    single- and multi-block results, positions on and off, and differing
+    input widths."""
+    from quickwit_spark.functions.codec import merge_posting_groups
+
+    rng = np.random.default_rng(seed)
+    blobs, poss, lenss, offsets, lasts, g_starts, g_ends = [], [], [], [], [], [], []
+    for _ in range(int(rng.integers(1, 40))):
+        with_pos = bool(rng.integers(0, 2))
+        g_starts.append(len(blobs))
+        base = int(rng.integers(0, 1000))
+        for _ in range(int(rng.integers(1, 5))):
+            # mostly tiny rows; sometimes big enough for a multi-block group
+            df = int(rng.integers(1, 200 if rng.random() < 0.15 else 40))
+            span = df + int(rng.integers(0, 1 << int(rng.integers(1, 16))))
+            docs = np.sort(rng.choice(span, df, replace=False)).astype(np.uint32)
+            tfs = rng.integers(1, 1 << int(rng.integers(1, 6)), df).astype(np.uint32)
+            blob, last, _ = encode_postings(docs, tfs)
+            blobs.append(blob)
+            lenss.append(encode_u32_column(rng.integers(1, 1 << int(rng.integers(1, 12)), df)))
+            offsets.append(base)
+            lasts.append(int(last[-1]))
+            base += span
+            if with_pos:
+                pb = int(rng.integers(0, 14))
+                flat = np.concatenate([
+                    np.sort(rng.choice(max(int(t), 1 << pb), int(t), replace=False))
+                    for t in tfs
+                ]).astype(np.uint32)
+                poss.append(encode_positions(flat, tfs))
+            else:
+                poss.append(None)
+        g_ends.append(len(blobs))
+    got = merge_posting_groups(
+        blobs, poss, lenss, np.asarray(offsets), np.asarray(lasts),
+        np.asarray(g_starts), np.asarray(g_ends),
+    )
+    want = _merge_groups_per_term(blobs, poss, lenss, offsets, g_starts, g_ends)
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert g == w

@@ -1,6 +1,8 @@
 """Merge pipeline tests: policy leveling, k-way merge with docID remap,
 atomic replace, GC — and rank-identity of search before/after merging."""
 
+from pathlib import Path
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +15,6 @@ from quickwit_spark.index.builder import build_index
 from quickwit_spark.index.catalog import MARKED_FOR_DELETION, PUBLISHED, Catalog, SplitMetadata
 from quickwit_spark.index.merge import (
     build_merge_operations,
-    execute_merge,
     garbage_collect,
     run_merge_pipeline,
     size_level,
@@ -537,3 +538,260 @@ def test_gc_sweeps_uncataloged_split_dirs(spark, tmp_index_dir, monkeypatch):
     cat = Catalog(tmp_index_dir)
     assert cat.splits()
     assert search(spark, tmp_index_dir, SearchRequest("the")).num_hits > 0
+
+
+def _built_ops(spark, idx, seed, n_splits):
+    """A fresh index of ``n_splits`` small immature splits and its ops."""
+    pdf = generate_transcripts(n_conversations=50, seed=seed)
+    cfg = transcripts_config(
+        split_num_docs_target=5000, segment_num_docs_target=64,
+        merge_factor=3, max_merge_factor=4,
+    )
+    build_index(spark, spark.createDataFrame(pdf), cfg, idx, n_splits=n_splits)
+    cat = Catalog(idx)
+    return cat, build_merge_operations(cat.splits([PUBLISHED]), cfg)
+
+
+def test_merge_round_is_one_spark_job(spark, tmp_path):
+    """A whole merge round (every op, docs + postings + fastfields) runs as
+    ONE Spark job of ONE stage: no range-sampling job, no shuffle."""
+    import uuid
+
+    from quickwit_spark.index.merge import execute_merge_round
+
+    idx = str(tmp_path / "idx")
+    cat, ops = _built_ops(spark, idx, seed=11, n_splits=8)
+    assert len(ops) == 2
+    n_in = {s.split_id: s.num_docs for s in cat.splits([PUBLISHED])}
+    sc = spark.sparkContext
+    group = f"merge-round-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "merge round")
+    try:
+        produced = execute_merge_round(spark, idx, ops, cat)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+    assert [m.num_docs for m in produced] == [
+        sum(n_in[sid] for sid in op.split_ids) for op in ops
+    ]
+
+
+def test_merge_unit_retry_rewrites_identical_files(spark, tmp_path):
+    """A retried merge task rewrites its files at the same names with the
+    same bytes and leaves nothing else behind (no temp names, no rename);
+    the split keeps the dense docID space and disjoint postings bucket
+    ranges test_merge_write_fanout checks."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from quickwit_spark.config import IndexConfig
+    from quickwit_spark.index import merge as mg
+    from quickwit_spark.storage import storage_for
+
+    idx = str(tmp_path / "idx")
+    cat, ops = _built_ops(spark, idx, seed=3, n_splits=6)
+    assert ops
+
+    def boom(site):
+        raise _MergeBoom(site)
+
+    with pytest.raises(_MergeBoom):  # written, never published
+        mg.execute_merge_round(spark, idx, ops, cat, failpoint=boom)
+    op = ops[0]
+    sid = op.output_split_id
+
+    def snapshot():
+        out = {}
+        for table in ("docs", "postings", "fastfields"):
+            d = f"{idx}/{table}/split_id={sid}"
+            for name in os.listdir(d):
+                with open(f"{d}/{name}", "rb") as f:
+                    out[f"{table}/{name}"] = f.read()
+        return out
+
+    before = snapshot()
+    config = IndexConfig.from_dict(cat.config_dict)
+    metas = {s.split_id: s for s in cat.splits([PUBLISHED])}
+    inputs_of = {o.output_split_id: [metas[s] for s in o.split_ids] for o in ops}
+    units = mg._plan_merge_units(
+        storage_for(idx), mg._paths(idx), ops, inputs_of, config.term_merge_buckets
+    )
+    pick = [
+        next(u for u in units if u.kind == kind and u.out_split == sid)
+        for kind in ("postings", "rows")
+    ]
+    settings = mg._merge_settings(idx, config)
+    for _ in range(2):
+        for u in pick:
+            mg._run_merge_unit(u, settings)
+        assert snapshot() == before
+
+    all_ids = []
+    for name in sorted(before):
+        path = f"{idx}/{name.split('/')[0]}/split_id={sid}/{name.split('/')[1]}"
+        if name.startswith("docs/"):
+            ids = pq.read_table(path, columns=["doc_id"])["doc_id"].to_pylist()
+            assert ids == sorted(ids), name
+            all_ids.extend(ids)
+    assert sorted(all_ids) == list(range(sum(s.num_docs for s in inputs_of[sid])))
+    ranges = []
+    for name in before:
+        if name.startswith("postings/part-"):
+            t = pq.read_table(f"{idx}/postings/split_id={sid}/{name[9:]}", columns=["bucket"])
+            ranges.append((min(t["bucket"].to_pylist()), max(t["bucket"].to_pylist())))
+    assert len(ranges) > 1
+    ranges.sort()
+    for (_, hi1), (lo2, _) in zip(ranges, ranges[1:]):
+        assert hi1 < lo2, ranges
+
+
+def test_merge_mixed_vintage_inputs_match_oracle(spark, tmp_path):
+    """A round-2 split (its postings lack chunk_ord, pos_chunk_blocks,
+    pos_bm, bm_chunk_span and block_tf_cum) merged with a fresh split: the
+    merge fills the missing columns and the merged split stays
+    rank-identical to the oracle."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from quickwit_spark.config import IndexConfig
+    from quickwit_spark.index.merge import MergeOperation, execute_merge_round
+
+    idx = str(tmp_path / "r2")
+    shutil.copytree(os.path.join(os.path.dirname(__file__), "golden", "compat_r2_index"), idx)
+    cfg = IndexConfig.from_dict(Catalog(idx).config_dict)
+    [old] = [s.split_id for s in Catalog(idx).splits([PUBLISHED])]
+    missing = {"chunk_ord", "pos_chunk_blocks", "pos_bm", "bm_chunk_span", "block_tf_cum"}
+    old_schema = pq.read_schema(f"{idx}/postings/split_id={old}/part-0.parquet")
+    assert not missing & set(old_schema.names)
+    pdf = generate_transcripts(n_conversations=4, seed=5)
+    build_index(spark, spark.createDataFrame(pdf), cfg, idx, build_id="fresh")
+    fresh = [s.split_id for s in Catalog(idx).splits([PUBLISHED]) if s.split_id != old]
+    assert fresh
+    execute_merge_round(spark, idx, [MergeOperation([old] + fresh, "m-mixed")])
+    garbage_collect(idx)
+    assert [s.split_id for s in Catalog(idx).splits([PUBLISHED])] == ["m-mixed"]
+    merged_schema = pq.read_schema(
+        sorted(Path(f"{idx}/postings/split_id=m-mixed").glob("part-*.parquet"))[0]
+    )
+    assert missing <= set(merged_schema.names)
+
+    docs = spark.read.parquet(f"{idx}/docs").toPandas()
+    oracle = OracleIndex(docs, cfg)
+    for q in ["deploy", '"the deploy"', "error OR timeout", "role:assistant error"]:
+        req = SearchRequest(q, max_hits=15)
+        resp = search(spark, idx, req)
+        exp = oracle.search(req)
+        assert resp.num_hits == exp["num_hits"], q
+        assert [(h["split_id"], h["doc_id"]) for h in resp.hits] == [
+            (h["split_id"], h["doc_id"]) for h in exp["hits"]
+        ], q
+        for g, w in zip(resp.hits, exp["hits"]):
+            assert g["score"] == pytest.approx(w["score"], rel=1e-6), q
+
+
+def test_merge_splits_big_inputs_into_row_group_units(spark, tmp_path, monkeypatch):
+    """Inputs bigger than a docs/fastfields unit are cut into byte slices
+    of their row groups, one unit each: every row lands exactly once, each
+    output file stays doc_id-sorted, and search stays oracle-identical."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from quickwit_spark.index import merge as mg
+
+    pdf = generate_transcripts(n_conversations=45, seed=7)
+    cfg = transcripts_config(split_num_docs_target=100, segment_num_docs_target=32)
+    idx = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(pdf), cfg, idx)
+    sids = sorted(s.split_id for s in Catalog(idx).splits([PUBLISHED]))[:9]
+    # first generation: small row groups, so the merged files have many
+    monkeypatch.setenv("QW_MERGE_BLOCK_BYTES", str(8 << 10))
+    gen1 = [
+        mg.MergeOperation(split_ids=sids[i : i + 3], output_split_id=f"g1-{i}")
+        for i in range(0, 9, 3)
+    ]
+    mg.execute_merge_round(spark, idx, gen1)
+    garbage_collect(idx)
+    monkeypatch.setattr(mg, "_ROWS_UNIT_BYTES", 16 << 10)
+    op = mg.MergeOperation(split_ids=[o.output_split_id for o in gen1], output_split_id="g2")
+    cat = Catalog(idx)
+    metas = {s.split_id: s for s in cat.splits([PUBLISHED])}
+    units = mg._plan_merge_units(
+        mg.storage_for(idx), mg._paths(idx), [op], {"g2": [metas[s] for s in op.split_ids]},
+        cfg.term_merge_buckets,
+    )
+    assert any(p[3] > 1 for u in units if u.kind == "rows" for p in u.inputs)
+    mg.execute_merge_round(spark, idx, [op])
+    garbage_collect(idx)
+
+    d = f"{idx}/docs/split_id=g2"
+    all_ids = []
+    for name in sorted(os.listdir(d)):
+        ids = pq.read_table(f"{d}/{name}", columns=["doc_id"])["doc_id"].to_pylist()
+        assert ids == sorted(ids), name
+        all_ids.extend(ids)
+    assert len(os.listdir(d)) > 1
+    assert sorted(all_ids) == list(range(sum(metas[s].num_docs for s in op.split_ids)))
+    docs = spark.read.parquet(f"{idx}/docs").toPandas()
+    oracle = OracleIndex(docs, cfg)
+    for q in ["error", '"the deploy"', "the OR deploy"]:
+        req = SearchRequest(q, max_hits=10)
+        resp = search(spark, idx, req)
+        exp = oracle.search(req)
+        assert resp.num_hits == exp["num_hits"], q
+        for g, w in zip(resp.hits, exp["hits"]):
+            assert g["score"] == pytest.approx(w["score"], rel=1e-6), q
+
+
+def test_merge_keeps_files_sorted_over_interleaved_inputs(spark, tmp_path):
+    """An input split whose docs files interleave in doc_id (each one sorted,
+    as the Spark writer of earlier merges left them) still merges into
+    files that are each doc_id-sorted, with the dense docID space and
+    oracle-identical results."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from quickwit_spark.config import IndexConfig
+    from quickwit_spark.index.merge import MergeOperation, execute_merge_round
+
+    idx = str(tmp_path / "idx")
+    cat, _ = _built_ops(spark, idx, seed=5, n_splits=3)
+    sids = sorted(s.split_id for s in cat.splits([PUBLISHED]))
+    d = f"{idx}/docs/split_id={sids[0]}"
+    tmp = str(tmp_path / "rewritten")
+    spark.read.parquet(d).repartition(3).sortWithinPartitions("doc_id").write.parquet(tmp)
+    shutil.rmtree(d)
+    os.makedirs(d)
+    for name in sorted(os.listdir(tmp)):
+        if name.endswith(".parquet"):
+            shutil.copy(f"{tmp}/{name}", f"{d}/{name}")
+    assert len(os.listdir(d)) == 3
+    execute_merge_round(spark, idx, [MergeOperation(sids, "m-interleaved")])
+    garbage_collect(idx)
+
+    out = f"{idx}/docs/split_id=m-interleaved"
+    all_ids = []
+    for name in sorted(os.listdir(out)):
+        ids = pq.read_table(f"{out}/{name}", columns=["doc_id"])["doc_id"].to_pylist()
+        assert ids == sorted(ids), name
+        all_ids.extend(ids)
+    assert len(os.listdir(out)) > 1  # the interleaved input forced new files
+    assert sorted(all_ids) == list(range(Catalog(idx).splits()[0].num_docs))
+    cfg = IndexConfig.from_dict(Catalog(idx).config_dict)
+    oracle = OracleIndex(spark.read.parquet(f"{idx}/docs").toPandas(), cfg)
+    for q in ["error", '"the deploy"', "role:assistant error"]:
+        req = SearchRequest(q, max_hits=10)
+        resp, exp = search(spark, idx, req), oracle.search(req)
+        assert resp.num_hits == exp["num_hits"], q
+        assert [(h["split_id"], h["doc_id"]) for h in resp.hits] == [
+            (h["split_id"], h["doc_id"]) for h in exp["hits"]
+        ], q

@@ -5,9 +5,8 @@ HARD-FAILS `move` and append — the two POSIX affordances S3-class object
 stores lack.  Running the full build → search → merge → GC → re-search
 cycle on it proves the engine's own publish/GC protocol never relies on
 rename: split files are written at final names and the catalog commit is
-the only publish point.  (Spark's internal parquet read/write during merge
-goes through its own Hadoop FS layer — on a real cluster that is s3a + a
-cloud committer, which is out of scope for the engine's protocol.)
+the only publish point.  Build and merge both read and write split files
+through the storage layer, so the cycle covers the merge's writes too.
 """
 
 from __future__ import annotations

@@ -1,4 +1,12 @@
-"""Profile the merge round's three stages at sf0.1 (set QW_MERGE_TIMING=1)."""
+"""Profile a merge round's stages at sf0.1 (sets QW_MERGE_TIMING=1).
+
+    python tools/profile_merge.py
+
+execute_merge_round then prints one ``merge-stage <name>: <s>`` line per
+stage: ``plan`` (list the inputs, plan the units), ``units`` (the one
+Spark job; preceded by ``postings-units`` / ``rows-units`` lines with each
+kind's task count, summed task seconds and slowest task), ``termbloom``,
+``publish``, and ``hotcache`` on object stores."""
 
 from __future__ import annotations
 
