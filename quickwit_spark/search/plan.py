@@ -13,6 +13,7 @@ imports are unchanged.  The architecture docstring lives in
 
 from __future__ import annotations
 
+import bisect
 import os
 import re
 import time
@@ -418,7 +419,11 @@ def expand_prefixes(spark: SparkSession, index_dir: str, cat: Catalog, ast):
     stats read, not two.  More than QW_PREFIX_MAX_EXPANSIONS (default 1024)
     distinct terms is a loud error — Lucene's too_many_clauses analog;
     predictable failure beats silently truncated results.  A prefix that
-    matches nothing becomes a match-nothing clause."""
+    matches nothing becomes a match-nothing clause.
+
+    ``ast`` may be a list of ASTs (multi_search): the specs of all of them
+    are looked up together — one dictionary read for the batch's uncached
+    ones — and the rewritten list comes back."""
     # ("p", field, prefix) | ("f", field, term, dist)
     # | ("w", field, pattern) | ("r", field, pattern)
     wanted: list[tuple] = []
@@ -436,7 +441,9 @@ def expand_prefixes(spark: SparkSession, index_dir: str, cat: Catalog, ast):
             for c in (*n.must, *n.should, *n.must_not):
                 find(c)
 
-    find(ast)
+    asts = ast if isinstance(ast, list) else [ast]
+    for a in asts:
+        find(a)
     if not wanted:
         return ast
     import pyarrow.dataset as pads
@@ -478,27 +485,33 @@ def expand_prefixes(spark: SparkSession, index_dir: str, cat: Catalog, ast):
                     c = c & (pads.field("term") < hi)
             cond = c if cond is None else (cond | c)
         pdf = _stats_table(index_dir, cat, ["field", "term", "doc_freq"], cond)
+        # field → (sorted terms, their summed doc_freqs): the LSM deltas
+        # repeat a term once per publish batch.  Summed once for the whole
+        # read, so each spec bisects its anchor range instead of scanning
+        # every row the batch's specs read
+        vocab: dict[str, tuple[list, list]] = {}
+        if len(pdf):
+            agg = pdf.groupby(["field", "term"], sort=True)["doc_freq"].sum()
+            for (f_, t_), d_ in zip(agg.index.tolist(), agg.tolist()):
+                if d_ > 0:
+                    ts_, ds_ = vocab.setdefault(f_, ([], []))
+                    ts_.append(t_)
+                    ds_.append(int(d_))
         for spec in missing:
             f_ = spec[1]
-            if len(pdf):
-                sub = pdf[(pdf["field"] == f_) & pdf["term"].str.startswith(_anchor(spec))]
-            else:
-                sub = pdf
-            if spec[0] == "f" and len(sub):
+            a = _anchor(spec)
+            ts_, ds_ = vocab.get(f_, ([], []))
+            i = bisect.bisect_left(ts_, a)
+            hi = _prefix_upper(a) if a else None
+            j = bisect.bisect_left(ts_, hi) if hi is not None else len(ts_)
+            cand = [(t, d) for t, d in zip(ts_[i:j], ds_[i:j]) if t.startswith(a)]
+            if spec[0] == "f":
                 t_, d_ = spec[2], spec[3]
-                keep = sub["term"].map(lambda x: _lev_within(x, t_, d_))
-                sub = sub[keep]
-            elif spec[0] == "w" and len(sub):
-                rx = wildcard_regex(spec[2])
-                sub = sub[sub["term"].map(lambda x: rx.fullmatch(x) is not None)]
-            elif spec[0] == "r" and len(sub):
-                rx = re.compile(spec[2])
-                sub = sub[sub["term"].map(lambda x: rx.fullmatch(x) is not None)]
-            if len(sub):
-                agg = sub.groupby("term")["doc_freq"].sum()
-                terms = tuple(sorted(t for t, d in agg.items() if int(d) > 0))
-            else:
-                agg, terms = {}, ()
+                cand = [(t, d) for t, d in cand if _lev_within(t, t_, d_)]
+            elif spec[0] in ("w", "r"):
+                rx = wildcard_regex(spec[2]) if spec[0] == "w" else re.compile(spec[2])
+                cand = [(t, d) for t, d in cand if rx.fullmatch(t) is not None]
+            terms = tuple(t for t, _ in cand)
             if len(terms) > cap:
                 what = {
                     "p": f"prefix '{f_}:{spec[2]}*'",
@@ -512,8 +525,8 @@ def expand_prefixes(spark: SparkSession, index_dir: str, cat: Catalog, ast):
                 )
             expansions[spec] = terms
             _GSTATS_CACHE[(index_dir, state, "expand", spec)] = terms
-            for t in terms:  # the LSM sums ARE the global doc_freqs
-                _GSTATS_CACHE[(index_dir, state, (f_, t))] = int(agg[t])
+            for t, d in cand:  # the LSM sums ARE the global doc_freqs
+                _GSTATS_CACHE[(index_dir, state, (f_, t))] = d
 
     def rw(n):
         if isinstance(n, (PrefixQuery, FuzzyQuery, WildcardQuery, RegexQuery)):
@@ -551,7 +564,7 @@ def expand_prefixes(spark: SparkSession, index_dir: str, cat: Catalog, ast):
             )
         return n
 
-    return rw(ast)
+    return [rw(a) for a in ast] if isinstance(ast, list) else rw(ast)
 
 
 def term_dictionary(

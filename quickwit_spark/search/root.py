@@ -28,7 +28,6 @@ from ..functions.codec import (
     decode_blocks,
     decode_positions_at,
     decode_postings,
-    decode_u32_column,
 )
 from ..index.catalog import Catalog, SplitMetadata
 from .parser import (
@@ -246,22 +245,22 @@ def _leaf_hit_rows(
         base = dict(ctr)
         for sid, u_lo, u_hi in it:
             try:
-                ff_pdf = _cached_fastfields(index_dir, sid)
-                if ff_pdf is None:  # GC raced us — root re-plans (see below)
+                ff = _cached_fastfields(index_dir, sid)
+                if ff is None:  # GC raced us — root re-plans (see below)
                     yield {"split_id": sid, "__vanished__": True}
                     continue
-                postings_pdf = _read_split_postings(
+                postings = _read_split_postings(
                     index_dir, sid, terms, buckets, need_positions=need_pos
                 )
-                out = scorer((sid,), postings_pdf, ff_pdf, u_lo, u_hi)
+                out = scorer((sid,), postings, ff, u_lo, u_hi)
             except (FileNotFoundError, SplitVanishedError):
                 # mid-read race (listed files deleted by a concurrent
                 # merge+GC): same protocol as a pre-read vanish
                 yield {"split_id": sid, "__vanished__": True}
                 continue
-            for rec in out.to_dict("records"):
-                rec["__lo"] = u_lo or 0  # root sums hits per disjoint range
-                yield rec
+            if out is not None:
+                # __lo: the root sums hits per disjoint range
+                yield from out.records(__lo=u_lo or 0)
         # phrase-path observability: one tiny record per task with the
         # counter DELTAS this task produced (zero for term queries — no
         # record, no cost); the root aggregates them
@@ -479,10 +478,14 @@ def multi_search(
 
     The per-query fixed cost of a Spark job (0.14-0.21 s for a trivial
     1-4 task job on local[4]) dominates small-k search latency, so a
-    query *stream* should amortize it: each leaf task opens a split once,
-    reads the UNION of all queries' posting rows in one pruned pyarrow
-    scan, and runs every query's scorer against it; rows come back tagged
-    with the query index.
+    query *stream* should amortize it: the driver expands the batch's
+    prefix/fuzzy/wildcard/regex clauses in one term-dictionary read, and
+    each leaf task opens a split once, builds ONE posting-record map of
+    the union of all queries' terms (one pruned pyarrow scan for the cold
+    ones) and runs every query's scorer against that map — a term several
+    queries share decodes once per split; rows come back tagged with the
+    query index (the reference opens a split once per leaf request and
+    runs every collector on it, leaf.rs:94-114).
     Throughput therefore approaches Q/(floor + sum(work)) instead of
     Q/(Q*floor + sum(work)).  Results are identical to Q independent
     ``search`` calls (verified by test); the reference has no batched
@@ -520,10 +523,13 @@ def multi_search(
     pre_plans = []
     all_terms: set[tuple[str, str]] = set()
     all_sids: dict[str, SplitMetadata] = {}
+    parsed = []
     for req in requests:
         ast = parse_query(req.query, config, req.search_fields)
         _validate_msm(ast, req)
-        ast = expand_prefixes(spark, index_dir, cat, ast)
+        parsed.append(ast)
+    # one dictionary read for every expanding clause of the batch
+    for req, ast in zip(requests, expand_prefixes(spark, index_dir, cat, parsed)):
         splits = prune_splits(cat, config, ast, req)
         all_terms |= collect_terms(ast)
         pre_plans.append((req, ast, splits))
@@ -552,26 +558,26 @@ def multi_search(
         _limit_arrow_threads()
         for sid, u_lo, u_hi in it:
             try:
-                ff_pdf = _cached_fastfields(index_dir, sid)
-                if ff_pdf is None:  # GC raced us — root re-plans (SplitVanishedError)
+                ff = _cached_fastfields(index_dir, sid)
+                if ff is None:  # GC raced us — root re-plans (SplitVanishedError)
                     yield {"split_id": sid, "__vanished__": True}
                     continue
-                postings_pdf = _read_split_postings(
+                # one record map per unit, shared by every scorer of the
+                # batch together with its whole-row decodes
+                postings = _read_split_postings(
                     index_dir, sid, terms_sorted, buckets, need_positions=need_pos
                 )
-                outs = []
-                for qi, scorer in enumerate(scorers):
-                    if sid not in wanted[qi]:
-                        continue
-                    outs.append((qi, scorer((sid,), postings_pdf, ff_pdf, u_lo, u_hi)))
+                outs = [
+                    (qi, scorer((sid,), postings, ff, u_lo, u_hi))
+                    for qi, scorer in enumerate(scorers)
+                    if sid in wanted[qi]
+                ]
             except (FileNotFoundError, SplitVanishedError):
                 yield {"split_id": sid, "__vanished__": True}
                 continue
             for qi, out in outs:
-                for rec in out.to_dict("records"):
-                    rec["__qi"] = qi
-                    rec["__lo"] = u_lo or 0
-                    yield rec
+                if out is not None:
+                    yield from out.records(__qi=qi, __lo=u_lo or 0)
 
     # per-split work here is the SUM over the batch's queries
     est = _est_split_rows([ast for _, ast, _ in plans], gstats, max(len(sids), 1))
@@ -604,8 +610,10 @@ def multi_search(
     # docs), so a per-query fetch re-decompresses the same row groups Q
     # times — the measured dominant serial driver cost of a batch
     pages: list[tuple[list[dict], int]] = []
-    for qi, (req, _, _) in enumerate(plans):
-        hit_rows = [r for r in rows if r["__qi"] == qi]
+    rows_of: list[list[dict]] = [[] for _ in plans]
+    for r in rows:
+        rows_of[r["__qi"]].append(r)
+    for (req, _, _), hit_rows in zip(plans, rows_of):
         per_unit_hits = {
             (r["split_id"], r.get("__lo", 0)): int(r["split_num_hits"]) for r in hit_rows
         }
@@ -651,18 +659,18 @@ def _make_leaf_runner(
         _limit_arrow_threads()
         for pdf in batches:
             for sid in pdf["split_id"]:
-                ff_pdf = _cached_fastfields(index_dir, sid)
-                if ff_pdf is None:
+                ff = _cached_fastfields(index_dir, sid)
+                if ff is None:
                     # no silent data loss on a GC race: fail the export job
                     # (the reference fails queries on failed splits,
                     # root.rs:179-188); the caller can rerun it
                     raise SplitVanishedError(f"split vanished during export: {sid}")
-                postings_pdf = _read_split_postings(
+                postings = _read_split_postings(
                     index_dir, sid, terms, buckets, need_positions=need_positions
                 )
-                out = scorer((sid,), postings_pdf, ff_pdf)
-                if len(out):
-                    yield out
+                out = scorer((sid,), postings, ff)
+                if out is not None:
+                    yield out.to_pandas()
 
     return run
 
@@ -1110,8 +1118,9 @@ def _attach_score_explain(
     BIT-exactly regardless of which strategy produced it (the same
     invariant exact-score search_after cursors rely on).
 
-    NOTE this deliberately mirrors score_split's field_lens decode and
-    per-term scoring body (make_split_scorer): any change to the leaf's
+    NOTE this deliberately mirrors score_split's per-term scoring body
+    (make_split_scorer; field lengths come from the same FastFields
+    decode): any change to the leaf's
     scoring math MUST be replicated here in the same float-op order —
     test_score_explain_bit_exact pins the equality across strategies and
     fails on drift."""
@@ -1132,29 +1141,17 @@ def _attach_score_explain(
     for h in hits:
         by_split.setdefault(h["split_id"], []).append(h)
     for sid, split_hits in by_split.items():
-        ff_pdf = _cached_fastfields(index_dir, sid)
-        if ff_pdf is None:
+        ff = _cached_fastfields(index_dir, sid)
+        if ff is None:
             raise SplitVanishedError(f"split vanished during explain: {sid}")
-        ff_pdf = ff_pdf.sort_values("seg_id")
         # tf/df probes only — score_explain never verifies positions
-        postings_pdf = _read_split_postings(
-            index_dir, sid, sorted(terms), buckets, need_positions=False
+        postings = _SplitPostings(
+            _read_split_postings(
+                index_dir, sid, sorted(terms), buckets, need_positions=False
+            ),
+            None, None, source=(index_dir, sid),
         )
-        postings = _SplitPostings(postings_pdf, None, None, source=(index_dir, sid))
-        lens_cache: dict[str, np.ndarray | None] = {}
-
-        def field_lens(field: str, _ff=ff_pdf, _c=lens_cache) -> np.ndarray | None:
-            if field not in _c:
-                col = "doc_lens" if field == "text" else f"doc_lens_{field}"
-                _c[field] = (
-                    np.concatenate(
-                        [decode_u32_column(b) for b in _ff[col]]
-                    ).astype(np.int64)
-                    if col in _ff.columns
-                    else None
-                )
-            return _c[field]
-
+        field_lens = ff.lens  # the leaf's own fieldnorm decode (FastFields)
         docs = np.array(sorted({h["doc_id"] for h in split_hits}), np.int64)
         # per (field, term): tf of each page doc (0 = term absent)
         contribs: dict[int, list] = {int(d): [] for d in docs}
@@ -1450,15 +1447,14 @@ def explain(spark: SparkSession, index_dir: str, request: SearchRequest) -> dict
     _collect_phrases(ast)
     if pterms and splits:
         sid = splits[0].split_id
-        ppdf = _read_split_postings(
+        recs = _read_split_postings(
             index_dir, sid, sorted(pterms), buckets, need_positions=True
         )
         for f_, t_ in sorted(pterms):
-            sub = ppdf[(ppdf["field"] == f_) & (ppdf["term"] == t_)] if len(ppdf) else ppdf
-            if not len(sub):
+            r = recs.get((f_, t_))
+            if r is None:
                 path, n_chunks = "absent", 0
             else:
-                r = sub.iloc[0]
                 span = r.get("bm_chunk_span")
                 bm = r.get("pos_bm")
                 if span is not None and not (isinstance(span, float) and np.isnan(span)):

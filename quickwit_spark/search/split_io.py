@@ -288,25 +288,65 @@ def _split_epoch(index_dir: str, table: str, split_id: str) -> float:
     return st.listing_fingerprint(path)
 
 
-def _cached_fastfields(index_dir: str, split_id: str) -> pd.DataFrame | None:
+class FastFields:
+    """One split's fast-field segments as a worker-cache entry: the
+    segment frame sorted by seg_id once, its per-segment scalars as
+    arrays, and a memo of whole-split column decodes (doc lengths, ts,
+    ff_* values) that lives exactly as long as the entry.  Decoding the
+    doc_lens column of a 5.1M-doc split takes ~113 ms, so a per-call
+    decode was the largest per-unit fixed cost at the few-huge-splits
+    shape."""
+
+    def __init__(self, pdf: pd.DataFrame):
+        if len(pdf) and not pdf["seg_id"].is_monotonic_increasing:
+            pdf = pdf.sort_values("seg_id", ignore_index=True)
+        self.pdf = pdf
+        self.memo: dict = {}
+        col = lambda c: pdf[c].to_numpy(np.int64)  # noqa: E731
+        self.base_doc, self.num_docs = col("base_doc"), col("num_docs")
+        self.ts_min, self.ts_max = col("ts_min"), col("ts_max")
+        self.ts_blobs = pdf["ts"].tolist()
+
+    def __len__(self) -> int:
+        return len(self.pdf)
+
+    def lens(self, field: str) -> np.ndarray | None:
+        """Exact per-doc lengths of ``field`` (the fieldnorm store; the
+        ``text`` field keeps the legacy doc_lens column), None when the
+        split has no length blob for it."""
+        col = "doc_lens" if field == "text" else f"doc_lens_{field}"
+        if col not in self.memo:
+            self.memo[col] = (
+                np.concatenate([decode_u32_column(b) for b in self.pdf[col]]).astype(np.int64)
+                if col in self.pdf.columns
+                else None
+            )
+        return self.memo[col]
+
+
+def _cached_fastfields(index_dir: str, split_id: str) -> FastFields | None:
     hc = _cached_hotcache(index_dir, split_id)
     if hc is not None:
-        # embedded in the hotcache sidecar: zero further storage reads
-        return hc.fastfields_pdf()
+        # embedded in the hotcache sidecar: zero further storage reads;
+        # the entry lives (and is evicted) with the sidecar
+        if hc.fastfields is None:
+            pdf = hc.fastfields_pdf()
+            hc.fastfields = FastFields(pdf) if pdf is not None else None
+        return hc.fastfields
     key = (index_dir, split_id, _split_epoch(index_dir, "fastfields", split_id))
     if key in _WORKER_FF_CACHE:
         return _WORKER_FF_CACHE[key]
     st = storage_for(index_dir)
     files = _split_files(index_dir, "fastfields", split_id)
     try:
-        pdf = st.dataset(files).to_table().to_pandas() if files else None
+        ff = FastFields(st.dataset(files).to_table().to_pandas()) if files else None
     except FileNotFoundError:
         # listed files deleted by a concurrent merge+GC before the read:
         # same contract as an already-gone split (caller yields vanished);
         # never cached — the next call sees the post-GC state
         return None
-    _lru_put(_WORKER_FF_CACHE, key, pdf, 256)
-    return pdf
+    _lru_put(_WORKER_FF_CACHE, key, ff, 256)
+    return ff
 
 
 def _cached_docs_dataset(index_dir: str, split_id: str):
@@ -367,7 +407,7 @@ def _read_split_postings_chunks(
         ck = (index_dir, split_id, epoch, field, term, "__pchunk__", o)
         hit = _WORKER_POSTINGS_CACHE.get(ck) if cap else None
         if hit is not None:
-            out[o] = hit[col].iloc[0]
+            out[o] = hit[col]
         else:
             missing.append(o)
     if missing:
@@ -412,7 +452,7 @@ def _read_split_postings_chunks(
             if cap:
                 _postings_cache_put(
                     (index_dir, split_id, epoch, field, term, "__pchunk__", o),
-                    sub[[col, "chunk_ord"]],
+                    {col: out[o]},
                     cap,
                 )
     return [out[o] for o in ords]
@@ -520,42 +560,73 @@ def _hotcache_read_postings(
     return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
 
 
-# Posting-row cache: (index_dir, split_id, field, term) → 0..n-row pdf.
+# Posting-row cache: (index_dir, split_id, epoch, field, term) → the
+# term's PostingRow, or _ABSENT.
 # The byte-range/hotcache analog (quickwit-storage/src/cache,
 # CachingDirectory): hot terms' posting blobs are read from parquet once per
 # worker, then served from memory across queries.  Bounded by payload bytes
 # (QW_POSTINGS_CACHE_MB per python worker, 0 disables); absent terms are
-# negatively cached as empty frames so they never re-scan.
+# negatively cached so they never re-scan.
 _WORKER_POSTINGS_CACHE: dict = {}
 _POSTINGS_CACHE_BYTES = [0]
+_ABSENT: dict = {}  # negative-cache entry: the split has no row for the term
+
+
+class PostingRecords(dict):
+    """(field, term) → PostingRow of one split, plus ``decoded``: the
+    whole-row (docs, tfs) decodes, keyed by term.  All scorers of a batch
+    take the same map for a split, so a term shared by several queries
+    decodes once (_SplitPostings._raw)."""
+
+    def __init__(self, *args):
+        super().__init__(*args)
+        self.decoded: dict = {}
+
+
+class PostingRow(dict):
+    """One posting row: column name → value, readable as attributes too
+    (``row.blob``, ``getattr(row, "pos_bm", None)``) like the itertuples
+    rows the scorer was written against.  A column the read projected away
+    (positions, pos_bm) is simply not a key."""
+
+    __slots__ = ()
+
+    def __getattr__(self, name):
+        try:
+            return self[name]
+        except KeyError:
+            raise AttributeError(name) from None
+
+
+def _posting_map(pdf: pd.DataFrame) -> PostingRecords:
+    """A postings frame as a record map (one column-wise pass; list
+    columns stay numpy arrays, nulls read None or NaN)."""
+    cols = list(pdf.columns)
+    rows = (PostingRow(zip(cols, vals)) for vals in zip(*(pdf[c].tolist() for c in cols)))
+    return PostingRecords(((r.field, r.term), r) for r in rows)
 
 
 def _postings_cache_cap() -> int:
     return int(os.environ.get("QW_POSTINGS_CACHE_MB", "128")) << 20
 
 
-def _postings_nbytes(pdf: pd.DataFrame) -> int:
-    n = 256 * max(1, len(pdf))  # per-row metadata floor
+def _postings_nbytes(rec: dict) -> int:
+    n = 256  # per-row metadata floor
     for col in ("blob", "positions", "pos_bm"):
-        if col in pdf.columns:
-            n += int(
-                sum(
-                    len(v)
-                    for v in pdf[col]
-                    if v is not None and not isinstance(v, float)
-                )
-            )
+        v = rec.get(col)
+        if v is not None and not isinstance(v, float):
+            n += len(v)
     return n
 
 
-def _postings_cache_put(key, pdf: pd.DataFrame, cap: int) -> None:
-    nb = _postings_nbytes(pdf)
+def _postings_cache_put(key, rec: dict, cap: int) -> None:
+    nb = _postings_nbytes(rec)
     if nb > cap:  # a single oversized entry would just thrash
         return
     old = _WORKER_POSTINGS_CACHE.pop(key, None)
     if old is not None:
         _POSTINGS_CACHE_BYTES[0] -= _postings_nbytes(old)
-    _WORKER_POSTINGS_CACHE[key] = pdf
+    _WORKER_POSTINGS_CACHE[key] = rec
     _POSTINGS_CACHE_BYTES[0] += nb
     while _POSTINGS_CACHE_BYTES[0] > cap and _WORKER_POSTINGS_CACHE:
         oldest = next(iter(_WORKER_POSTINGS_CACHE))
@@ -568,11 +639,12 @@ def _read_split_postings(
     terms: list[tuple[str, str]],
     buckets: list[int],
     need_positions: bool = True,
-) -> pd.DataFrame:
+) -> PostingRecords:
     """In-task warmup read (leaf.rs:125-193 analog): exactly the query
     terms' posting rows of one split, row-group pruned by the bucket column
-    (files are bucket-sorted in 4k-row groups); per-term rows are cached
-    worker-side (see _WORKER_POSTINGS_CACHE).
+    (files are bucket-sorted in 4k-row groups); per-term records are
+    cached worker-side (see _WORKER_POSTINGS_CACHE), so a warm read is one
+    dict lookup per term.
 
     ``need_positions=False`` (no phrase in the query) drops the
     ``positions`` AND ``pos_bm`` COLUMNS from the scan — 'read exactly
@@ -580,8 +652,8 @@ def _read_split_postings(
     decompresses every matched row group's position payloads just to
     ignore them (measured 21 -> 5 ms per merged 200k-doc split; hot
     terms' inline bitmap cells are the same class of dead weight).  A
-    cached positions-less row is upgraded (re-fetched in full, replaced)
-    the first time a phrase query needs the same term."""
+    cached positions-less record is upgraded (re-fetched in full,
+    replaced) the first time a phrase query needs the same term."""
     import pyarrow.dataset as pads
 
     cap = _postings_cache_cap()
@@ -593,12 +665,14 @@ def _read_split_postings(
         )
     else:
         epoch = 0.0
-    parts: list[pd.DataFrame] = []
+    out = PostingRecords()
     missing: list[tuple[str, str]] = []
     for key in terms:
         hit = _WORKER_POSTINGS_CACHE.get((index_dir, split_id, epoch, *key)) if cap else None
-        if hit is not None and (not need_positions or "positions" in hit.columns):
-            parts.append(hit)
+        if hit is _ABSENT:
+            continue
+        if hit is not None and (not need_positions or "positions" in hit):
+            out[key] = hit
         else:
             missing.append(key)
     if missing:
@@ -640,14 +714,18 @@ def _read_split_postings(
                     raise SplitVanishedError(
                         f"split vanished during postings read: {split_id}"
                     ) from e
+        found = _posting_map(pdf)
         for key in missing:
-            sub = pdf[(pdf["field"] == key[0]) & (pdf["term"] == key[1])] if len(pdf) else pdf
+            rec = found.get(key)
             if cap:
-                _postings_cache_put((index_dir, split_id, epoch, *key), sub, cap)
-            parts.append(sub)
-    if not parts:
-        return pd.DataFrame(columns=["field", "term"])
-    return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+                _postings_cache_put(
+                    (index_dir, split_id, epoch, *key),
+                    _ABSENT if rec is None else rec,
+                    cap,
+                )
+            if rec is not None:
+                out[key] = rec
+    return out
 
 
 # -- per-split term-presence pruning (termbloom.py sidecars) -----------------

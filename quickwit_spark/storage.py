@@ -258,14 +258,18 @@ class Storage:
         )
         return self.size(logical)
 
-    def parquet_writer(self, logical: str, schema):
+    def parquet_writer(self, logical: str, schema, plain_columns=()):
         """Streaming ParquetWriter to a logical path.  Returns
         (writer, finish) — call finish() after writer.close() to make the
-        object visible at its final name (local rename; remote no-op)."""
+        object visible at its final name (local rename; remote no-op).
+        ``plain_columns`` names top-level columns written without
+        dictionary encoding (see _dictionary_columns)."""
         import pyarrow.parquet as pq
 
         fsp = self.fs_path(logical)
         opts = {"compression": "snappy", "write_statistics": _stats_columns(schema)}
+        if plain_columns:
+            opts["use_dictionary"] = _dictionary_columns(schema, plain_columns)
         if self.is_local:
             os.makedirs(os.path.dirname(fsp), exist_ok=True)
             tmp = f"{fsp}.tmp-{os.getpid()}"
@@ -377,15 +381,20 @@ class BoundedParquetWriter:
     groups however long its rows are; a row count cannot promise that).
     Opened on the first write: nothing written, no object."""
 
-    def __init__(self, storage: Storage, logical: str, schema, block_bytes: int):
+    def __init__(
+        self, storage: Storage, logical: str, schema, block_bytes: int, plain_columns=()
+    ):
         self.storage, self.path, self.schema, self.blk = storage, logical, schema, block_bytes
+        self.plain_columns = plain_columns
         self._w = self._finish = None
 
     def write(self, table) -> None:
         if not table.num_rows:
             return
         if self._w is None:
-            self._w, self._finish = self.storage.parquet_writer(self.path, self.schema)
+            self._w, self._finish = self.storage.parquet_writer(
+                self.path, self.schema, self.plain_columns
+            )
         csum = np.cumsum(row_bytes(table))
         # a group ends with the row that crosses each block boundary
         cuts = np.unique(np.searchsorted(csum, np.arange(self.blk, csum[-1], self.blk)) + 1)
@@ -445,3 +454,35 @@ def storage_for(logical_path: str) -> Storage:
         st = Storage(fs, scheme, spark_scheme)
     _STORAGE_CACHE[key] = st
     return st
+
+
+def _dictionary_columns(schema, plain_columns) -> list[str]:
+    """Parquet leaf paths of every column except the ``plain_columns``
+    top-level ones — pyarrow's per-column ``use_dictionary`` takes leaf
+    paths (a list column ``x`` is ``x.list.element``) and turns the
+    dictionary off for every leaf it does not name.  A column of unique
+    values (doc ids, timestamps, free text) gains nothing from a
+    dictionary: every value lands in it once, and each row still pays an
+    index into it on top."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def leaves(t) -> int:
+        if pa.types.is_struct(t):
+            return sum(leaves(t.field(i).type) for i in range(t.num_fields))
+        if pa.types.is_map(t):
+            return leaves(t.key_type) + leaves(t.item_type)
+        if pa.types.is_list(t) or pa.types.is_large_list(t):
+            return leaves(t.value_type)
+        return 1
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(schema.empty_table(), buf)
+    md = pq.read_metadata(pa.BufferReader(buf.getvalue()))
+    paths = iter(md.schema.column(i).path for i in range(md.num_columns))
+    out = []
+    for f in schema:
+        mine = [next(paths) for _ in range(leaves(f.type))]
+        if f.name not in plain_columns:
+            out.extend(mine)
+    return out

@@ -795,3 +795,34 @@ def test_merge_keeps_files_sorted_over_interleaved_inputs(spark, tmp_path):
         assert [(h["split_id"], h["doc_id"]) for h in resp.hits] == [
             (h["split_id"], h["doc_id"]) for h in exp["hits"]
         ], q
+
+
+def test_docs_unique_columns_have_no_dictionary(spark, tmp_path):
+    """Built and merged docs files write the (nearly) unique columns —
+    doc id, timestamps, tokenized text — without dictionary pages; a
+    low-cardinality column (role) keeps its dictionary."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from quickwit_spark.index.merge import execute_merge_round
+
+    def dictionary_pages(split_id):
+        out = {}
+        for f in glob.glob(f"{idx}/docs/split_id={split_id}/*.parquet"):
+            md = pq.read_metadata(f)
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                for j in range(rg.num_columns):
+                    c = rg.column(j)
+                    out[c.path_in_schema] = out.get(c.path_in_schema, False) or c.has_dictionary_page
+        return out
+
+    idx = str(tmp_path / "idx")
+    cat, ops = _built_ops(spark, idx, seed=3, n_splits=3)
+    produced = execute_merge_round(spark, idx, ops, cat)
+    for sid in [s.split_id for s in cat.splits([PUBLISHED])] + [m.split_id for m in produced]:
+        pages = dictionary_pages(sid)
+        assert pages, sid
+        assert not any(pages[c] for c in ("doc_id", "ts", "ts_epoch", "text")), (sid, pages)
+        assert pages["role"], sid
