@@ -102,18 +102,6 @@ def _posbm_min_total_tf() -> int:
     return int(os.environ.get("QW_POSBM_MIN_TOTAL_TF", str(64 << 10)))
 
 
-# ...and an OPTIONAL df ceiling, default OFF.  Round 4 capped df at 1M
-# because a hot term on a multi-M-doc split stored a df*16-byte cell
-# (82 MB for "the" at a 5.1M-doc split) that every leaf task — and every
-# carved doc-range unit — fetched whole, which measured as worker OOM at
-# the few-huge-splits shape.  Bitmaps are now CHUNKED at posting-block
-# boundaries like positions (_split_chunked_positions), so a doc-range
-# unit fetches only its blocks' bitmap bytes and the ceiling is no
-# longer load-bearing; the knob stays for ops escape-hatch only.
-def _posbm_max_df() -> int:
-    return int(os.environ.get("QW_POSBM_MAX_DF", str(1 << 62)))
-
-
 # bytes per posting BLOCK of a pos_bm payload: 128 docs x 16 B/doc.  The
 # bitmap layout is fixed-stride (rank-addressed), so chunking needs no
 # re-encode — chunk k of span S blocks is the byte slice
@@ -135,29 +123,20 @@ def _bm_chunk_bytes() -> int:
     return int(os.environ.get("QW_BM_CHUNK_BYTES", str(16 << 20)))
 
 
-def _attach_pos_bitmaps(
-    pdf: pd.DataFrame, min_total_tf: int, max_df: int | None = None
-) -> pd.DataFrame:
+def _attach_pos_bitmaps(pdf: pd.DataFrame, min_total_tf: int) -> pd.DataFrame:
     """Derive the ``pos_bm`` column for qualifying PRIMARY rows (positions
     still inline — call BEFORE _split_chunked_positions).  Adds the column
     (None elsewhere) and returns the same frame."""
     from ..functions.codec import decode_postings, encode_position_bitmaps
 
-    if max_df is None:
-        max_df = _posbm_max_df()
     bms: list = [None] * len(pdf)
     if min_total_tf >= 0 and len(pdf):
         pos = pdf["positions"]
         ttf = pdf["total_tf"]
-        dfc = pdf["doc_freq"]
         blob = pdf["blob"]
         for i in range(len(pdf)):
             p = pos.iat[i]
-            if (
-                p is None
-                or int(ttf.iat[i]) < min_total_tf
-                or int(dfc.iat[i]) > max_df
-            ):
+            if p is None or int(ttf.iat[i]) < min_total_tf:
                 continue
             _, tfs = decode_postings(blob.iat[i])
             bms[i] = encode_position_bitmaps(p, tfs)
@@ -824,7 +803,6 @@ class _SplitAccumulator:
         write_termbloom: bool = True,
         embed_ff_max: int | None = None,
         posbm_min_total_tf: int | None = None,
-        posbm_max_df: int | None = None,
         bm_chunk_bytes: int | None = None,
     ):
         self.split_id = split_id
@@ -840,9 +818,6 @@ class _SplitAccumulator:
             posbm_min_total_tf
             if posbm_min_total_tf is not None
             else _posbm_min_total_tf()
-        )
-        self.posbm_max_df = (
-            posbm_max_df if posbm_max_df is not None else _posbm_max_df()
         )
         self.bm_chunk_bytes = (
             bm_chunk_bytes if bm_chunk_bytes is not None else _bm_chunk_bytes()
@@ -1015,7 +990,7 @@ class _SplitAccumulator:
 
         _, postings_schema, _ = _pa_schemas(self.config)
         pdf = self._acc_run_pdf()
-        pdf = _attach_pos_bitmaps(pdf, self.posbm_min_total_tf, self.posbm_max_df)
+        pdf = _attach_pos_bitmaps(pdf, self.posbm_min_total_tf)
         pdf, cpdf = _split_chunked_positions(pdf, self.pos_chunk_bytes, self.bm_chunk_bytes)
         table = pa.Table.from_pandas(pdf, schema=postings_schema, preserve_index=False)
         _atomic_write_table(table, self._split_file("postings"), row_group_size=4096)
@@ -1096,7 +1071,7 @@ class _SplitAccumulator:
             if not out:
                 return
             opdf = pd.DataFrame(out, columns=POSTINGS_COLUMNS)
-            opdf = _attach_pos_bitmaps(opdf, self.posbm_min_total_tf, self.posbm_max_df)
+            opdf = _attach_pos_bitmaps(opdf, self.posbm_min_total_tf)
             opdf, cpdf = _split_chunked_positions(opdf, self.pos_chunk_bytes, self.bm_chunk_bytes)
             pw.write_table(
                 pa.Table.from_pandas(opdf, schema=postings_schema, preserve_index=False),
@@ -1493,7 +1468,6 @@ def make_split_builder(
 
     embed_ff_max = _embed_ff_max()  # captured driver-side (env freeze)
     posbm_min_total_tf = _posbm_min_total_tf()  # same env-freeze capture
-    posbm_max_df = _posbm_max_df()
     bm_chunk_bytes = _bm_chunk_bytes()
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1550,7 +1524,6 @@ def make_split_builder(
                         write_termbloom=write_termbloom,
                         embed_ff_max=embed_ff_max,
                         posbm_min_total_tf=posbm_min_total_tf,
-                        posbm_max_df=posbm_max_df,
                         bm_chunk_bytes=bm_chunk_bytes,
                     )
                 cur.add(pdf.iloc[s:e])

@@ -45,7 +45,6 @@ from .builder import (
     _pa_schemas,
     _paths,
     _pos_chunk_bytes,
-    _posbm_max_df,
     _posbm_min_total_tf,
     docs_plain_columns,
 )
@@ -172,7 +171,7 @@ def _merge_bucket_group(pdf: pd.DataFrame, settings: "_MergeSettings") -> tuple:
     # on the way out (chunk rows go to their own file)
     from .builder import _attach_pos_bitmaps, _split_chunked_positions
 
-    out_pdf = _attach_pos_bitmaps(out_pdf, settings.posbm_min_total_tf, settings.posbm_max_df)
+    out_pdf = _attach_pos_bitmaps(out_pdf, settings.posbm_min_total_tf)
     return _split_chunked_positions(out_pdf, settings.pos_chunk_bytes, settings.bm_chunk_bytes)
 
 
@@ -254,7 +253,6 @@ class _MergeSettings:
     postings_schema: object
     pos_chunk_bytes: int
     posbm_min_total_tf: int
-    posbm_max_df: int
     bm_chunk_bytes: int
     docs_plain_columns: tuple  # docs columns written without a dictionary
 
@@ -266,7 +264,7 @@ def _merge_settings(index_dir: str, config: IndexConfig) -> _MergeSettings:
     return _MergeSettings(
         _paths(index_dir), {"postings": blk, "docs": blk, "fastfields": 4 << 20},
         _pa_schemas(config)[1], _pos_chunk_bytes(), _posbm_min_total_tf(),
-        _posbm_max_df(), _bm_chunk_bytes(), docs_plain_columns(config),
+        _bm_chunk_bytes(), docs_plain_columns(config),
     )
 
 

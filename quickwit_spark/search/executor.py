@@ -10,13 +10,18 @@ Plan shape (mirrors SURVEY.md §3.1; as built):
    from the catalog (N, avg_len) and the term-stats LSM (doc_freq —
    O(publish batches), not O(splits)).  No Spark job is launched.
 
-2. **Leaf search** (leaf.rs:237-285 / collector.rs): ONE plain-RDD
+2. **Leaf search** (leaf.rs:237-285 / collector.rs): one runner for
+   every top-k request — ``search`` is ``root._topk_batch`` over a batch
+   of one, ``multi_search`` over the whole batch.  It is ONE plain-RDD
    ``sc.parallelize(bins).flatMap`` job over LPT-balanced split bins (see
-   ``_leaf_bins``; the SearchJob list of root.rs:280-284).  Each task
-   opens its splits with worker-cached pyarrow handles, reads exactly the
-   query terms' posting rows (bucket + row-group pruned — the warmup
-   analog, leaf.rs:125-193) and the split's fast-field blobs, then runs
-   the vectorized numpy scorer: boolean set ops on decoded doc arrays
+   ``_leaf_bins``; the SearchJob list of root.rs:280-284), or the same
+   task body in the driver for tiny indexes and light queries
+   (``_leaf_runs_in_process``).  Each unit (``_score_unit``, shared with
+   the stream runner) opens its split with worker-cached pyarrow handles,
+   reads ONE map of the batch's terms' posting rows (bucket + row-group
+   pruned — the warmup analog, leaf.rs:125-193) and the split's
+   fast-field blobs, then runs each query's vectorized numpy scorer on
+   it: boolean set ops on decoded doc arrays
    (AND = sorted intersect with block skips, OR = union, NOT = setdiff),
    phrase verification via positions, per-doc timestamp filtering with
    whole-segment skips (filters.rs:64-66 analog), BM25 with *global*
@@ -160,7 +165,6 @@ from .root import (
     _hit_dict,
     _json_safe,
     _leaf_bins,
-    _leaf_hit_rows,
     _leaf_hits_df,
     _make_leaf_runner,
     _maybe_add_source,
@@ -169,6 +173,7 @@ from .root import (
     _search_rows,
     _sort_key,
     _term_bucket_of,
+    _topk_batch,
     _validate_stored_fields,
     explain,
     fetch_doc,

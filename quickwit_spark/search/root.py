@@ -10,46 +10,29 @@ change).  See ``executor.py`` for the architecture overview.
 from __future__ import annotations
 
 import os
-import re
 import time
-from dataclasses import dataclass, replace as _dc_replace
+from dataclasses import replace as _dc_replace
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import IndexConfig
-from ..storage import storage_for
 from ..functions.bm25 import idf as bm25_idf
 from ..functions.bm25 import tf_norm
-from ..functions.codec import (
-    BLOCK,
-    decode_blocks,
-    decode_positions_at,
-    decode_postings,
-)
+from ..functions.codec import BLOCK
 from ..index.catalog import Catalog, SplitMetadata
 from .parser import (
     AllQuery,
     BoolQuery,
     ExistsQuery,
-    FuzzyQuery,
-    PhrasePrefixQuery,
     PhraseQuery,
-    PrefixQuery,
-    RegexQuery,
     TermQuery,
-    WildcardQuery,
     collect_terms,
-    extract_tag_predicate,
     parse_query,
     positive_exists_weights,
     positive_term_weights,
     positive_terms,
-    regex_literal_prefix,
-    wildcard_literal_prefix,
-    wildcard_regex,
 )
 from .request import SearchRequest
 
@@ -135,7 +118,7 @@ def _leaf_hits_df(
     """Stream-mode leaf as a DataFrame (every matching doc, no top-k) —
     the data-scale path behind search_stream/export_stream.  Top-k search
     deliberately does NOT come through here: it is the separate RDD
-    _leaf_hit_rows job (see its docstring for why).  stream_fields adds
+    job of _topk_batch (see its docstring for why).  stream_fields adds
     one ``mf_<i> long`` column per resolved fast field; stream_scored
     fills the score column with full BM25 (field collapse)."""
     cat, config, ast, splits, terms, buckets, scorer, _gstats = _plan_leaf(
@@ -202,108 +185,55 @@ def _plan_leaf(
     return cat, config, ast, splits, sorted(terms), buckets, scorer, gstats
 
 
-def _leaf_hit_rows(
-    spark: SparkSession,
-    index_dir: str,
-    request: SearchRequest,
-    only_split_ids: set[str] | None = None,
-) -> list[dict]:
-    """Top-k leaf search as ONE plain-RDD mapPartitions job.
-
-    Deliberately an RDD, not a DataFrame: the job's input is the SearchJob
-    list (root.rs:280-284) — a few hundred split ids — and its output is at
-    most splits*(offset+k) already-top-k'd rows, both metadata-scale.  The
-    per-partition work is genuinely imperative (open split, decode postings,
-    run the collector), and the DataFrame/mapInPandas machinery adds a
-    measured ~300 ms of fixed per-query cost (Catalyst analysis + Arrow
-    python-runner setup) over `sc.parallelize(...).mapPartitions` at the
-    same slice count.  Data-scale paths (stream export) stay on DataFrames.
-    Slices are contiguous ranges of the split list — no hash partitioning,
-    so no balls-in-bins task skew.
-
-    Stored-field fetch happens DRIVER-side afterwards, for only the global
-    page (offset..offset+k): leaves fetching their local top-k would read
-    ~splits× more doc rows than the answer needs (the dominant per-split
-    cost at high split counts).  Exception: the 'global_key' tiebreak sorts
-    on doc fields, so those must come back from the leaves."""
-    fetch_in_leaf = request.tiebreak == "global_key"
-    _, _, ast, splits, terms, buckets, scorer, gstats = _plan_leaf(
-        spark, index_dir, request, "topk", fetch_in_leaf
+def _leaf_runs_in_process(n_splits: int, est_rows_per_split: float) -> bool:
+    """Run the top-k leaf in the driver instead of as a Spark job?  Tiny
+    indexes and light queries: the single-node-search analog
+    (lib.rs:153-198).  A Spark job has a floor: a trivial 1-4 task python
+    job measured 0.14-0.21 s p50 on local[4] (4 vCPU; 0.32-0.45 s before
+    zipguard stopped reused workers re-reading their zip archives per
+    task); below the thresholds the per-split work (~5-10 ms warm) is
+    cheaper done inline.  The row gate keeps a few-big-splits post-merge
+    index (where one split's heavy-query work alone is ~100 ms) on the
+    parallel path.  explain() reports the same decision."""
+    return n_splits <= int(os.environ.get("QW_DRIVER_LEAF_MAX_SPLITS", "8")) and (
+        est_rows_per_split * n_splits
+        <= float(os.environ.get("QW_DRIVER_LEAF_MAX_ROWS", "50000"))
     )
-    if only_split_ids is not None:
-        # the caller already answered the other splits from metadata
-        # (match-all count fast path) — the leaf touches only these
-        splits = [s for s in splits if s.split_id in only_split_ids]
-    if not splits:
-        return []
-    sids = [s.split_id for s in splits]
-    need_pos = _contains_phrase(ast)  # column-pruned postings scan otherwise
 
-    def run(it):
-        _limit_arrow_threads()
-        ctr = _phrase_ctr()  # live module dict (see _phrase_ctr docstring)
-        base = dict(ctr)
-        for sid, u_lo, u_hi in it:
-            try:
-                ff = _cached_fastfields(index_dir, sid)
-                if ff is None:  # GC raced us — root re-plans (see below)
-                    yield {"split_id": sid, "__vanished__": True}
-                    continue
-                postings = _read_split_postings(
-                    index_dir, sid, terms, buckets, need_positions=need_pos
-                )
-                out = scorer((sid,), postings, ff, u_lo, u_hi)
-            except (FileNotFoundError, SplitVanishedError):
-                # mid-read race (listed files deleted by a concurrent
-                # merge+GC): same protocol as a pre-read vanish
-                yield {"split_id": sid, "__vanished__": True}
-                continue
-            if out is not None:
-                # __lo: the root sums hits per disjoint range
-                yield from out.records(__lo=u_lo or 0)
-        # phrase-path observability: one tiny record per task with the
-        # counter DELTAS this task produced (zero for term queries — no
-        # record, no cost); the root aggregates them
-        delta = {k: ctr[k] - base[k] for k in ctr}
-        if any(delta.values()):
-            yield {"__counters__": delta}
 
-    est = _est_split_rows(ast, gstats, len(splits))
-    # Tiny indexes + light queries: run the leaf in-process — the
-    # single-node-search analog (lib.rs:153-198).  A Spark job has a floor:
-    # a trivial 1-4 task python job measured 0.14-0.21 s p50 on local[4]
-    # (4 vCPU; 0.32-0.45 s before zipguard stopped reused workers
-    # re-reading their zip archives per task); below the thresholds the
-    # per-split work (~5-10 ms warm) is cheaper done inline.
-    # The row gate keeps a few-big-splits post-merge index (where one
-    # split's heavy-query work alone is ~100 ms) on the parallel path.
-    if len(sids) <= int(os.environ.get("QW_DRIVER_LEAF_MAX_SPLITS", "8")) and est * len(
-        sids
-    ) <= float(os.environ.get("QW_DRIVER_LEAF_MAX_ROWS", "50000")):
-        rows = list(run([(s, None, None) for s in sids]))
-    else:
-        sc = spark.sparkContext
-        bins = _leaf_bins(splits, sc.defaultParallelism, est, _ranged_ok(ast, request))
-        _warm_leaf_workers(sc)
-        rows = sc.parallelize(bins, len(bins)).flatMap(run).collect()
-    agg: dict = {}
-    for r in rows:
-        if "__counters__" in r:
-            for k, v in r["__counters__"].items():
-                agg[k] = agg.get(k, 0) + v
-    LAST_PHRASE_COUNTERS.clear()
-    LAST_PHRASE_COUNTERS.update(agg)
-    rows = [r for r in rows if "__counters__" not in r]
-    gone = [r["split_id"] for r in rows if r.get("__vanished__")]
-    if gone:
-        raise SplitVanishedError(f"splits vanished during query: {sorted(gone)}")
-    return rows
+def _score_unit(
+    index_dir: str,
+    sid: str,
+    terms: list[tuple[str, str]],
+    buckets: list[int],
+    need_positions: bool,
+    scorers: list,
+    lo: int | None = None,
+    hi: int | None = None,
+) -> list | None:
+    """One leaf unit — the body of every top-k and stream leaf task: open
+    the split's fast fields, read ONE posting-record map of ``terms`` and
+    run each scorer on it, so a term several scorers share decodes once
+    per split (the reference opens a split once per leaf request and runs
+    every collector on it, leaf.rs:94-114).  Returns the scorers' outputs
+    in order, or None when the split is gone: deleted by a concurrent
+    merge + GC before or during the read."""
+    try:
+        ff = _cached_fastfields(index_dir, sid)
+        if ff is None:
+            return None
+        postings = _read_split_postings(
+            index_dir, sid, terms, buckets, need_positions=need_positions
+        )
+        return [scorer((sid,), postings, ff, lo, hi) for scorer in scorers]
+    except (FileNotFoundError, SplitVanishedError):
+        return None
 
 
 def _est_split_rows(asts, gstats, n_splits: int) -> float:
     """Expected decoded posting rows per split — the leaf cost model that
     picks the task fan-out.  Phrase terms count 3x (their position payloads
-    decode alongside docs+tfs); accepts one AST or a list (multi_search)."""
+    decode alongside docs+tfs); accepts one AST (explain) or a batch's list."""
     df_map = gstats["df"]
     total = 0.0
 
@@ -325,7 +255,7 @@ def _est_split_rows(asts, gstats, n_splits: int) -> float:
     return total / max(n_splits, 1)
 
 
-def _ranged_ok(asts, reqs) -> bool:
+def _ranged_ok(asts: list, reqs: list[SearchRequest]) -> bool:
     """May the planner carve doc-range units for this batch?  Yes for
     position-verifying queries (phrase work parallelizes; positions are
     chunk-fetched per unit) and for batches whose every query runs a
@@ -336,13 +266,11 @@ def _ranged_ok(asts, reqs) -> bool:
     adaptive rule in _leaf_bins still carves ONLY to fill idle cores, so
     this matters exactly at the few-huge-splits shape (e.g. 2x5M docs on
     32 cores: single-term p50 2.75 s uncarved)."""
-    reqs = reqs if isinstance(reqs, list) else [reqs]
-    asts_l = asts if isinstance(asts, list) else [asts]
-    if _contains_phrase(asts_l):
+    if _contains_phrase(asts):
         return True
     return all(
         select_strategy(a, r) in ("block_max_wand", "maxscore_union")
-        for a, r in zip(asts_l, reqs)
+        for a, r in zip(asts, reqs)
     )
 
 
@@ -468,13 +396,225 @@ def _leaf_bins(
     return [b for b in bins if b]
 
 
-def multi_search(
+# Synthetic split-id cursor bounds: "" sorts before every real split id and
+# "￿" after every real one (split ids are ASCII hex/uuid strings), so a
+# cursor carrying one expresses "all ties of this sort value" / "no tie of
+# this sort value" without naming a live split.  multi_index_search mints
+# them to project an index-qualified 4-tuple cursor onto the per-index
+# 3-tuple leaf comparison; _checked_request skips the cursor-split liveness
+# check for them (they never address a real split).
+CURSOR_SPLIT_MIN = ""
+CURSOR_SPLIT_MAX = "￿"
+
+
+def _checked_request(
+    request: SearchRequest, config: IndexConfig, cat: Catalog
+) -> SearchRequest:
+    """The user-input contract every top-k request passes before it runs:
+    a valid search_after cursor, then the sort-resolved request with its
+    stored_fields checked.  Returns the sort-resolved request."""
+    after = request.search_after
+    if after is not None:
+        if len(after) == 4:
+            raise ValueError(
+                "index-qualified search_after cursors (value, index_id, "
+                "split_id, doc_id) are for multi-index addressing — use "
+                "multi_index_search, or drop the index coordinate"
+            )
+        if request.start_offset:
+            raise ValueError("search_after and start_offset are mutually exclusive")
+        if request.tiebreak != "reference":
+            raise ValueError(
+                "search_after requires tiebreak='reference' (the cursor's "
+                "tie order is (split_id, doc_id))"
+            )
+        if after[1] not in (CURSOR_SPLIT_MIN, CURSOR_SPLIT_MAX) and after[1] not in {
+            s.split_id for s in cat.splits()
+        }:
+            # a merge/demux replaced the cursor's split: its tie key is
+            # meaningless against the new split ids — comparing anyway
+            # would silently duplicate the boundary doc or skip tie-group
+            # rows.  Loud failure; the client restarts pagination (ES
+            # solves the same problem with point-in-time contexts).
+            raise ValueError(
+                f"stale search_after cursor: split {after[1]!r} "
+                "no longer exists (replaced by a merge) — restart pagination"
+            )
+    request = resolve_sort(request, config)
+    _validate_stored_fields(config, request)
+    return request
+
+
+def _topk_batch(
     spark: SparkSession,
     index_dir: str,
     requests: list[SearchRequest],
-    _retry: bool = False,
+    only_split_ids: set[str] | None = None,
+) -> tuple[IndexConfig, list[tuple[SearchRequest, list[dict], int]]]:
+    """The top-k root: Q requests, ONE leaf pass.  search() runs it as a
+    batch of one, multi_search() with the whole batch.
+
+    Plan: per request parse, check, time/tag-prune, term-presence-prune
+    and build a scorer; once per batch expand every prefix / fuzzy /
+    wildcard / regex clause (one term-dictionary read) and look up the
+    global term stats of the union of the terms.  ``only_split_ids``
+    restricts the leaf to those splits (the match-all count shortcut has
+    answered the others from metadata).
+
+    Leaf: ONE plain-RDD flatMap job over the _leaf_bins of the union of
+    the requests' splits (or the same task body in-process, see
+    _leaf_runs_in_process).  Deliberately an RDD, not a DataFrame: the
+    job's input is the SearchJob list (root.rs:280-284) — a few hundred
+    split ids — and its output is at most splits*(offset+k) already-
+    top-k'd rows per request, both metadata-scale.  The per-unit work is
+    genuinely imperative (_score_unit: open split, read postings, run
+    the collectors), and the DataFrame/mapInPandas machinery adds a
+    measured ~300 ms of fixed per-query cost (Catalyst analysis + Arrow
+    python-runner setup) over ``sc.parallelize(...)`` at the same slice
+    count.  Rows come back tagged with the request index.  Each task also
+    returns its phrase-path counter deltas (take_phrase_counters).
+
+    Root: per request, sum the per-unit counts, sort the rows (merge_fruits
+    analog, root.rs:170-232) and page; then ONE stored-field fetch for
+    every page of the batch.  Leaves return ids only — fetching their
+    local top-k would read ~splits× more doc rows than the answer needs —
+    except under the 'global_key' tiebreak, which sorts on doc fields and
+    so fetches them in the leaf.  A split that vanishes (concurrent merge
+    + GC, during the leaf or the page fetch) re-plans the whole batch once
+    against the fresh catalog (retry/search.rs analog).
+
+    Returns the index config and, per request, the sort-resolved request,
+    its page rows and its exact hit count."""
+    for attempt in (0, 1):
+        try:
+            cat, config = open_index(spark, index_dir)
+            reqs = [_checked_request(r, config, cat) for r in requests]
+            parsed = []
+            for req in reqs:
+                parsed.append(parse_query(req.query, config, req.search_fields))
+                _validate_msm(parsed[-1], req)
+            asts = expand_prefixes(spark, index_dir, cat, parsed)
+            terms: set[tuple[str, str]] = set().union(*map(collect_terms, asts))
+            buckets = term_buckets(spark, terms, config.term_merge_buckets)
+            gstats = global_term_stats(spark, index_dir, cat, terms, buckets)
+            units: dict[str, SplitMetadata] = {}
+            wanted, scorers = [], []
+            for req, ast in zip(reqs, asts):
+                splits = prune_splits(cat, config, ast, req)
+                # per-query term-presence pruning — one query's rare term
+                # must not drag every split of the batch into its scorer
+                splits, _ = prune_splits_by_terms(index_dir, splits, ast, gstats)
+                if only_split_ids is not None:
+                    splits = [s for s in splits if s.split_id in only_split_ids]
+                wanted.append({s.split_id for s in splits})
+                units.update((s.split_id, s) for s in splits)
+                # index_dir turns on the in-leaf stored-field fetch;
+                # source_dir lets chunked position payloads resolve
+                fetch_dir = index_dir if req.tiebreak == "global_key" else None
+                scorers.append(
+                    make_split_scorer(
+                        config, gstats, ast, req, "topk", fetch_dir, source_dir=index_dir
+                    )
+                )
+            terms_sorted = sorted(terms)
+            need_pos = _contains_phrase(asts)  # column-pruned postings otherwise
+
+            def run(it):
+                _limit_arrow_threads()
+                ctr = _phrase_ctr()  # live module dict (see _phrase_ctr docstring)
+                base = dict(ctr)
+                for sid, lo, hi in it:
+                    qis = [qi for qi, w in enumerate(wanted) if sid in w]
+                    outs = _score_unit(
+                        index_dir, sid, terms_sorted, buckets, need_pos,
+                        [scorers[qi] for qi in qis], lo, hi,
+                    )
+                    if outs is None:  # the root re-plans (SplitVanishedError)
+                        yield {"split_id": sid, "__vanished__": True}
+                        continue
+                    for qi, out in zip(qis, outs):
+                        if out is not None:
+                            # __lo: the root sums hits per disjoint range
+                            yield from out.records(__qi=qi, __lo=lo or 0)
+                # one tiny record per task with the phrase counter DELTAS
+                # it produced (zero for term queries — no record, no cost)
+                delta = {k: ctr[k] - base[k] for k in ctr}
+                if any(delta.values()):
+                    yield {"__counters__": delta}
+
+            # per-split work is the SUM over the batch's queries
+            splits = list(units.values())
+            est = _est_split_rows(asts, gstats, max(len(splits), 1))
+            if not splits or _leaf_runs_in_process(len(splits), est):
+                rows = list(run([(s.split_id, None, None) for s in splits]))
+            else:
+                sc = spark.sparkContext
+                bins = _leaf_bins(
+                    splits, sc.defaultParallelism, est, _ranged_ok(asts, reqs)
+                )
+                _warm_leaf_workers(sc)
+                rows = sc.parallelize(bins, len(bins)).flatMap(run).collect()
+            rows_of: list[list[dict]] = [[] for _ in reqs]
+            counters: dict = {}
+            gone = set()
+            for r in rows:
+                if "__qi" in r:
+                    rows_of[r["__qi"]].append(r)
+                elif "__counters__" in r:
+                    for k, v in r["__counters__"].items():
+                        counters[k] = counters.get(k, 0) + v
+                else:
+                    gone.add(r["split_id"])
+            LAST_PHRASE_COUNTERS.clear()
+            LAST_PHRASE_COUNTERS.update(counters)
+            if gone:
+                raise SplitVanishedError(f"splits vanished during query: {sorted(gone)}")
+            answers = []
+            for req, hit_rows in zip(reqs, rows_of):
+                # keyed per (split, range): sub-split units report
+                # disjoint counts that SUM to the split's exact total
+                per_unit = {(r["split_id"], r["__lo"]): r["split_num_hits"] for r in hit_rows}
+                # count-only sentinel rows (doc_id=-1) carry split_num_hits
+                # for splits that contributed no page candidates (max_hits
+                # =0, or a search_after cursor past every row of the
+                # split) — they are counts, never hits
+                hit_rows = [r for r in hit_rows if r["doc_id"] >= 0]
+                hit_rows.sort(key=_sort_key(req))
+                page = hit_rows[req.start_offset : req.start_offset + req.max_hits]
+                answers.append((req, page, int(sum(per_unit.values()))))
+            # ONE grouped stored-field fetch for the batch: queries share
+            # splits (and under load, hot docs), so a per-query fetch
+            # re-decompresses the same row groups Q times — the measured
+            # dominant serial driver cost of a batch
+            by_fields: dict[tuple | None, list[dict]] = {}
+            for req, page, _ in answers:
+                if page and "conv_id" not in page[0]:  # not fetched in the leaf
+                    by_fields.setdefault(req.stored_fields, []).extend(page)
+            for only, union_page in by_fields.items():
+                _fetch_page_fields(index_dir, union_page, only)
+            return config, answers
+        except SplitVanishedError:
+            if attempt:
+                raise
+    raise AssertionError("unreachable")
+
+
+def _page_hits(
+    index_dir: str, config: IndexConfig, request: SearchRequest, page: list[dict]
+) -> list[dict]:
+    """A page's hits in their JSON shape (request is sort-resolved)."""
+    hits = [_hit_dict(config, r, request.stored_fields) for r in page]
+    if request.sort_by_field in config.extra_fast_float_fields:
+        for h in hits:  # wire carries monotonic int64 keys; hits show doubles
+            h["sort_value"] = sort_key_to_f64(h["sort_value"])
+    _maybe_add_source(index_dir, hits, page)
+    return hits
+
+
+def multi_search(
+    spark: SparkSession, index_dir: str, requests: list[SearchRequest]
 ) -> list[SearchResponse]:
-    """Batched root search: Q queries in ONE leaf job.
+    """Batched root search: Q queries in ONE leaf job (_topk_batch).
 
     The per-query fixed cost of a Spark job (0.14-0.21 s for a trivial
     1-4 task job on local[4]) dominates small-k search latency, so a
@@ -483,9 +623,7 @@ def multi_search(
     each leaf task opens a split once, builds ONE posting-record map of
     the union of all queries' terms (one pruned pyarrow scan for the cold
     ones) and runs every query's scorer against that map — a term several
-    queries share decodes once per split; rows come back tagged with the
-    query index (the reference opens a split once per leaf request and
-    runs every collector on it, leaf.rs:94-114).
+    queries share decodes once per split.
     Throughput therefore approaches Q/(floor + sum(work)) instead of
     Q/(Q*floor + sum(work)).  Results are identical to Q independent
     ``search`` calls (verified by test); the reference has no batched
@@ -497,151 +635,15 @@ def multi_search(
         raise ValueError(
             "score_explain is not supported in batched search — use search()"
         )
-    cat, config = open_index(spark, index_dir)
-    live_sids = {s.split_id for s in cat.splits()}
-    for r in requests:
-        # same user-input contract as the single-query path (_search_rows)
-        if r.search_after is not None:
-            if len(r.search_after) == 4:
-                raise ValueError(
-                    "index-qualified search_after cursors are for "
-                    "multi_index_search, not batched single-index search"
-                )
-            if r.start_offset:
-                raise ValueError(
-                    "search_after and start_offset are mutually exclusive"
-                )
-            if r.search_after[1] not in live_sids:
-                raise ValueError(
-                    f"stale search_after cursor: split {r.search_after[1]!r} "
-                    "no longer exists (replaced by a merge) — restart pagination"
-                )
-    requests = [resolve_sort(r, config) for r in requests]
-    for r in requests:
-        _validate_stored_fields(config, r)
-    plans = []
-    pre_plans = []
-    all_terms: set[tuple[str, str]] = set()
-    all_sids: dict[str, SplitMetadata] = {}
-    parsed = []
-    for req in requests:
-        ast = parse_query(req.query, config, req.search_fields)
-        _validate_msm(ast, req)
-        parsed.append(ast)
-    # one dictionary read for every expanding clause of the batch
-    for req, ast in zip(requests, expand_prefixes(spark, index_dir, cat, parsed)):
-        splits = prune_splits(cat, config, ast, req)
-        all_terms |= collect_terms(ast)
-        pre_plans.append((req, ast, splits))
-    buckets = term_buckets(spark, all_terms, config.term_merge_buckets)
-    gstats = global_term_stats(spark, index_dir, cat, all_terms, buckets)
-    for req, ast, splits in pre_plans:
-        # per-query term-presence pruning — one query's rare term must not
-        # drag every split of the batch into its scorer
-        splits, _ = prune_splits_by_terms(index_dir, splits, ast, gstats)
-        for s in splits:
-            all_sids.setdefault(s.split_id, s)
-        plans.append((req, ast, {s.split_id for s in splits}))
-    scorers = [
-        # index_dir=None keeps the in-task stored-field fetch OFF (the
-        # batched leaf returns ids only); source_dir still lets chunked
-        # position payloads resolve their split
-        make_split_scorer(config, gstats, ast, req, "topk", None, source_dir=index_dir)
-        for req, ast, _ in plans
+    config, answers = _topk_batch(spark, index_dir, requests)
+    return [
+        SearchResponse(
+            num_hits,
+            _page_hits(index_dir, config, req, page),
+            int((time.monotonic() - t0) * 1e6),
+        )
+        for req, page, num_hits in answers
     ]
-    wanted = [sid_set for _, _, sid_set in plans]
-    sids = list(all_sids)
-    terms_sorted = sorted(all_terms)
-    need_pos = _contains_phrase([ast for _, ast, _ in plans])
-
-    def run(it):
-        _limit_arrow_threads()
-        for sid, u_lo, u_hi in it:
-            try:
-                ff = _cached_fastfields(index_dir, sid)
-                if ff is None:  # GC raced us — root re-plans (SplitVanishedError)
-                    yield {"split_id": sid, "__vanished__": True}
-                    continue
-                # one record map per unit, shared by every scorer of the
-                # batch together with its whole-row decodes
-                postings = _read_split_postings(
-                    index_dir, sid, terms_sorted, buckets, need_positions=need_pos
-                )
-                outs = [
-                    (qi, scorer((sid,), postings, ff, u_lo, u_hi))
-                    for qi, scorer in enumerate(scorers)
-                    if sid in wanted[qi]
-                ]
-            except (FileNotFoundError, SplitVanishedError):
-                yield {"split_id": sid, "__vanished__": True}
-                continue
-            for qi, out in outs:
-                if out is not None:
-                    yield from out.records(__qi=qi, __lo=u_lo or 0)
-
-    # per-split work here is the SUM over the batch's queries
-    est = _est_split_rows([ast for _, ast, _ in plans], gstats, max(len(sids), 1))
-    if not sids:
-        rows = []
-    elif len(sids) <= int(os.environ.get("QW_DRIVER_LEAF_MAX_SPLITS", "8")) and est * len(
-        sids
-    ) <= float(os.environ.get("QW_DRIVER_LEAF_MAX_ROWS", "50000")):
-        rows = list(run([(s, None, None) for s in sids]))  # in-process leaf
-    else:
-        sc = spark.sparkContext
-        bins = _leaf_bins(
-            list(all_sids.values()),
-            sc.defaultParallelism,
-            est,
-            _ranged_ok([ast for _, ast, _ in plans], [req for req, _, _ in plans]),
-        )
-        _warm_leaf_workers(sc)
-        rows = sc.parallelize(bins, len(bins)).flatMap(run).collect()
-    if any(r.get("__vanished__") for r in rows):
-        # concurrent merge+GC replaced splits mid-batch: re-plan the whole
-        # batch once against the fresh catalog (retry/search.rs analog)
-        gone = sorted({r["split_id"] for r in rows if r.get("__vanished__")})
-        if _retry:
-            raise SplitVanishedError(f"splits vanished during query: {gone}")
-        return multi_search(spark, index_dir, requests, _retry=True)
-
-    # page + count per query first, then ONE grouped stored-field fetch
-    # for the whole batch: queries share splits (and under load, hot
-    # docs), so a per-query fetch re-decompresses the same row groups Q
-    # times — the measured dominant serial driver cost of a batch
-    pages: list[tuple[list[dict], int]] = []
-    rows_of: list[list[dict]] = [[] for _ in plans]
-    for r in rows:
-        rows_of[r["__qi"]].append(r)
-    for (req, _, _), hit_rows in zip(plans, rows_of):
-        per_unit_hits = {
-            (r["split_id"], r.get("__lo", 0)): int(r["split_num_hits"]) for r in hit_rows
-        }
-        num_hits = sum(per_unit_hits.values())
-        # drop count-only sentinels (doc_id=-1): under a search_after
-        # cursor a split can contribute its count but no page rows
-        hit_rows = [r for r in hit_rows if r["doc_id"] >= 0]
-        hit_rows.sort(key=_sort_key(req))
-        pages.append(
-            (hit_rows[req.start_offset : req.start_offset + req.max_hits], num_hits)
-        )
-    by_fields: dict[tuple | None, list[dict]] = {}
-    for (req, _, _), (page, _n) in zip(plans, pages):
-        if page and "conv_id" not in page[0]:
-            by_fields.setdefault(req.stored_fields, []).extend(page)
-    for only, union_page in by_fields.items():
-        _fetch_page_fields(index_dir, union_page, only)
-    responses = []
-    for (req, _, _), (page, num_hits) in zip(plans, pages):
-        hits = [_hit_dict(config, r, req.stored_fields) for r in page]
-        if req.sort_by_field in config.extra_fast_float_fields:
-            for h in hits:  # int64 sort keys → doubles for display
-                h["sort_value"] = sort_key_to_f64(h["sort_value"])
-        _maybe_add_source(index_dir, hits, page)
-        responses.append(
-            SearchResponse(num_hits, hits, int((time.monotonic() - t0) * 1e6))
-        )
-    return responses
 
 
 def _make_leaf_runner(
@@ -651,26 +653,22 @@ def _make_leaf_runner(
     buckets: list[int],
     need_positions: bool = True,
 ):
-    """mapInPandas wrapper: split-id batches → per-split scorer invocations
-    with in-task fastfield + postings reads (hot splits stay in the OS page
-    cache — the storage-cache analog, quickwit-storage/src/cache)."""
+    """mapInPandas wrapper: split-id batches → the top-k leaf's unit body
+    (_score_unit) per whole split (hot splits stay in the OS page cache —
+    the storage-cache analog, quickwit-storage/src/cache)."""
 
     def run(batches):
         _limit_arrow_threads()
         for pdf in batches:
             for sid in pdf["split_id"]:
-                ff = _cached_fastfields(index_dir, sid)
-                if ff is None:
+                outs = _score_unit(index_dir, sid, terms, buckets, need_positions, [scorer])
+                if outs is None:
                     # no silent data loss on a GC race: fail the export job
                     # (the reference fails queries on failed splits,
                     # root.rs:179-188); the caller can rerun it
                     raise SplitVanishedError(f"split vanished during export: {sid}")
-                postings = _read_split_postings(
-                    index_dir, sid, terms, buckets, need_positions=need_positions
-                )
-                out = scorer((sid,), postings, ff)
-                if out is not None:
-                    yield out.to_pandas()
+                if outs[0] is not None:
+                    yield outs[0].to_pandas()
 
     return run
 
@@ -813,65 +811,30 @@ def _sort_key(request: SearchRequest):
 def _search_rows(
     spark: SparkSession, index_dir: str, request: SearchRequest
 ) -> tuple[list[dict], int]:
-    """Shared root-search core: leaf top-k (one job, tiny result), driver
-    merge (sort of <= splits*(offset+k) rows), pruned doc fetch (one job).
+    """One request's page rows (stored fields fetched) and exact hit
+    count: the top-k core as a batch of one, behind the match-all count
+    shortcut.
 
-    The leaf task fetches its winners' stored fields itself (one Spark job
-    per query total); the driver merge (merge_fruits analog, root.rs:170-232)
-    then just sorts <= splits*(offset+k) fully-materialized rows and pages."""
-    if request.search_after is not None:
-        if len(request.search_after) == 4:
-            raise ValueError(
-                "index-qualified search_after cursors (value, index_id, "
-                "split_id, doc_id) are for multi-index addressing — use "
-                "multi_index_search, or drop the index coordinate"
-            )
-        if request.start_offset:
-            raise ValueError("search_after and start_offset are mutually exclusive")
-        if request.tiebreak != "reference":
-            raise ValueError(
-                "search_after requires tiebreak='reference' (the cursor's "
-                "tie order is (split_id, doc_id))"
-            )
+    Match-all count: every doc in a split counts, so any split FULLY
+    inside the time range (or any split at all when no range is given) is
+    answered from catalog metadata — zero Spark jobs, zero split reads.
+    Only time-range BOUNDARY splits run the leaf (the root-level twin of
+    the reference's whole-segment timestamp skip, filters.rs:64-66).  At
+    10^4 splits / 100 TB a total-count request costs one catalog read.
+    The leaf re-reads the catalog itself, so the catalog state token is
+    taken before the metadata count and re-checked after the leaf: a
+    concurrent merge commit between the two reads would otherwise count a
+    replaced boundary split in neither half."""
     for attempt in (0, 1):
-        cat, config = open_index(spark, index_dir)
-        req = resolve_sort(request, config)
-        _validate_stored_fields(config, req)
-        if (
-            req.search_after is not None
-            and req.search_after[1] not in (CURSOR_SPLIT_MIN, CURSOR_SPLIT_MAX)
-            and req.search_after[1] not in {s.split_id for s in cat.splits()}
-        ):
-            # a merge/demux replaced the cursor's split: its tie key is
-            # meaningless against the new split ids — comparing anyway
-            # would silently duplicate the boundary doc or skip tie-group
-            # rows.  Loud failure; the client restarts pagination (ES
-            # solves the same problem with point-in-time contexts).
-            raise ValueError(
-                f"stale search_after cursor: split {req.search_after[1]!r} "
-                "no longer exists (replaced by a merge) — restart pagination"
-            )
         only_split_ids: set[str] | None = None
         meta_count = 0
-        cat_token = None
-        if req.max_hits == 0 and req.start_offset == 0 and not req.numeric_filters:
+        if request.max_hits == 0 and request.start_offset == 0 and not request.numeric_filters:
+            cat_token = Catalog.state_token(index_dir)
+            cat, config = open_index(spark, index_dir)
+            req = _checked_request(request, config, cat)
             ast = parse_query(req.query, config, req.search_fields)
-            # the metadata-count shortcut must enforce the same user-input
-            # contract as the leaf path (_plan_leaf validates there)
             _validate_msm(ast, req)
             if isinstance(ast, AllQuery):
-                # match-all count: every doc in a split counts, so any split
-                # FULLY inside the time range (or any split at all when no
-                # range is given) is answered from catalog metadata — zero
-                # Spark jobs, zero split reads.  Only time-range BOUNDARY
-                # splits run the leaf (the root-level twin of the reference's
-                # whole-segment timestamp skip, filters.rs:64-66).  At 10^4
-                # splits / 100 TB a total-count request costs one catalog
-                # read.  Recomputed on every retry attempt and cross-checked
-                # against the catalog state token after the leaf: the leaf
-                # re-reads the catalog itself, so a concurrent merge commit
-                # between the two reads would otherwise count a replaced
-                # boundary split in neither half.
                 lo, hi = req.start_timestamp, req.end_timestamp
 
                 def fully_inside(s) -> bool:
@@ -883,44 +846,17 @@ def _search_rows(
                         hi is None or s.ts_max < hi
                     )
 
-                cat_token = Catalog.state_token(index_dir)
                 splits = prune_splits(cat, config, ast, req)
                 meta_count = sum(s.num_docs for s in splits if fully_inside(s))
                 only_split_ids = {s.split_id for s in splits if not fully_inside(s)}
                 if not only_split_ids:
                     # pure-metadata answer from ONE atomic catalog read
                     return [], meta_count
-        try:
-            hit_rows = _leaf_hit_rows(spark, index_dir, req, only_split_ids)
-            if cat_token is not None and Catalog.state_token(index_dir) != cat_token:
-                # catalog changed between the metadata count and the leaf
-                if attempt:
-                    raise SplitVanishedError(
-                        "catalog changed twice during a metadata-count query"
-                    )
-                continue
-            # keyed per (split, range): sub-split units report disjoint
-            # counts that SUM to the split's exact total
-            per_unit_hits: dict[tuple[str, int], int] = {}
-            for r in hit_rows:
-                per_unit_hits[(r["split_id"], r.get("__lo", 0))] = int(r["split_num_hits"])
-            num_hits = meta_count + sum(per_unit_hits.values())
-            # count-only sentinel rows (doc_id=-1) carry split_num_hits for
-            # splits that contributed no page candidates (max_hits=0, or a
-            # search_after cursor past every row of the split) — they are
-            # counts, never hits
-            hit_rows = [r for r in hit_rows if r["doc_id"] >= 0]
-            hit_rows.sort(key=_sort_key(req))
-            page = hit_rows[req.start_offset : req.start_offset + req.max_hits]
-            if page and "conv_id" not in page[0]:
-                _fetch_page_fields(index_dir, page, req.stored_fields)
-            return page, num_hits
-        except SplitVanishedError:
-            # concurrent merge+GC replaced splits mid-query (possibly
-            # between the leaf pass and the page fetch): re-plan once
-            # against the fresh catalog (retry/search.rs analog)
-            if attempt:
-                raise
+        _, [(_, page, num_hits)] = _topk_batch(spark, index_dir, [request], only_split_ids)
+        if only_split_ids is None or Catalog.state_token(index_dir) == cat_token:
+            return page, meta_count + num_hits
+        if attempt:  # the catalog changed between the count and the leaf
+            raise SplitVanishedError("catalog changed twice during a metadata-count query")
     raise AssertionError("unreachable")
 
 
@@ -1222,11 +1158,7 @@ def search(
     t0 = time.monotonic()
     page, num_hits = _search_rows(spark, index_dir, request)
     cat, config = open_index(spark, index_dir)
-    out = [_hit_dict(config, r, request.stored_fields) for r in page]
-    if resolve_sort(request, config).sort_by_field in config.extra_fast_float_fields:
-        for h in out:  # wire carries monotonic int64 keys; hits show doubles
-            h["sort_value"] = sort_key_to_f64(h["sort_value"])
-    _maybe_add_source(index_dir, out, page)
+    out = _page_hits(index_dir, config, resolve_sort(request, config), page)
     if request.snippet_fields:
         from .snippet import attach_snippets
 
@@ -1247,22 +1179,11 @@ def search(
             # a merge+GC landed between the page read and the explain
             # attach: the page's split addresses are stale, so re-run the
             # WHOLE search once against the fresh catalog (the same
-            # retry/search.rs protocol _search_rows applies internally)
+            # retry/search.rs protocol _topk_batch applies internally)
             if _retry:
                 raise
             return search(spark, index_dir, request, _retry=True)
     return SearchResponse(num_hits, out, int((time.monotonic() - t0) * 1e6))
-
-
-# Synthetic split-id cursor bounds: "" sorts before every real split id and
-# "￿" after every real one (split ids are ASCII hex/uuid strings), so a
-# cursor carrying one expresses "all ties of this sort value" / "no tie of
-# this sort value" without naming a live split.  multi_index_search mints
-# them to project an index-qualified 4-tuple cursor onto the per-index
-# 3-tuple leaf comparison; _search_rows skips the cursor-split liveness
-# check for them (they never address a real split).
-CURSOR_SPLIT_MIN = ""
-CURSOR_SPLIT_MAX = "￿"
 
 
 def multi_index_search(
@@ -1423,10 +1344,8 @@ def explain(spark: SparkSession, index_dir: str, request: SearchRequest) -> dict
         else 0
     )
     est = _est_split_rows(ast, gstats, len(splits))
-    in_process = strategy == "match_all_metadata_count" or (
-        len(splits) <= int(os.environ.get("QW_DRIVER_LEAF_MAX_SPLITS", "8"))
-        and est * len(splits)
-        <= float(os.environ.get("QW_DRIVER_LEAF_MAX_ROWS", "50000"))
+    in_process = strategy == "match_all_metadata_count" or _leaf_runs_in_process(
+        len(splits), est
     )
     # Phrase observability: probe the FIRST surviving split's posting rows
     # and report which verification path each phrase term would take there

@@ -139,14 +139,16 @@ _PHRASE_CTR = {
     "pos_chunk_fetches": 0,     # positions chunk rows fetched (cache misses)
 }
 
-# root-side aggregate of the last _leaf_hit_rows job's counter records
+# root-side aggregate of the last top-k leaf's counter records
+# (root._topk_batch, behind both search() and multi_search())
 LAST_PHRASE_COUNTERS: dict = {}
 
 
 def take_phrase_counters() -> dict:
-    """Aggregated phrase-path counters of the most recent top-k leaf job
-    (driver-side; bench reads this after each phrase query to assert
-    bitmap coverage instead of inferring it from latency)."""
+    """Aggregated phrase-path counters of the most recent top-k leaf —
+    one search() or one multi_search() batch (driver-side; bench reads
+    this after each phrase query to assert bitmap coverage instead of
+    inferring it from latency)."""
     return dict(LAST_PHRASE_COUNTERS)
 
 

@@ -126,6 +126,26 @@ def test_bitmap_survives_merge(spark, twin):
         assert _key(search(spark, bm_dir, req)) == before[req.query], req.query
 
 
+def test_multi_search_reports_its_phrase_counters(spark, twin):
+    """take_phrase_counters() reports the most recent top-k leaf, and a
+    multi_search batch is one: after a decode-path search() on the plain
+    twin, a batch holding a phrase on the bitmap layout reports the same
+    verification counts as that phrase's own search()."""
+    from quickwit_spark.search.executor import multi_search, take_phrase_counters
+
+    bm_dir, plain_dir = twin
+    req = SearchRequest('"the deploy"')
+    search(spark, bm_dir, req)
+    want = take_phrase_counters()
+    assert want.get("phrase_terms_bitmap", 0) > 0, want
+    search(spark, plain_dir, req)
+    assert take_phrase_counters().get("phrase_terms_bitmap", 0) == 0
+    multi_search(spark, bm_dir, [req, SearchRequest("deploy")])
+    got = take_phrase_counters()
+    for k in ("phrase_terms_bitmap", "phrase_terms_decode"):
+        assert got.get(k, 0) == want.get(k, 0), (k, got, want)
+
+
 def test_default_threshold_skips_low_tf_rows(spark, tmp_path):
     """At the default 64k floor a tiny index stores NO bitmaps (the delta
     payload is smaller and cheap there) and everything still works."""

@@ -289,7 +289,10 @@ def test_stream_generic_fast_field(spark, tmp_index_dir):
 
 def test_inline_and_distributed_leaf_agree(spark, built, monkeypatch):
     """The in-process leaf (small indexes) and the Spark-job leaf must be
-    result-identical — same rows, scores, order — for every query shape."""
+    result-identical — same rows, scores, order — for every query shape,
+    and so must search(req) and multi_search([req]) under either leaf."""
+    from quickwit_spark.search.executor import multi_search
+
     index_dir, _, _ = built
     reqs = [
         SearchRequest("error", max_hits=20),
@@ -298,15 +301,46 @@ def test_inline_and_distributed_leaf_agree(spark, built, monkeypatch):
         SearchRequest("error", max_hits=10, sort_by_field="ts"),
         SearchRequest("error NOT deploy", max_hits=10, start_offset=3),
     ]
+
+    def key(resp):
+        return resp.num_hits, [
+            (h["split_id"], h["doc_id"], h["score"], h["sort_value"]) for h in resp.hits
+        ]
+
     for req in reqs:
-        monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", "1000")
-        a = search(spark, index_dir, req)
-        monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", "0")
-        b = search(spark, index_dir, req)
-        assert a.num_hits == b.num_hits
-        assert [
-            (h["split_id"], h["doc_id"], h["score"], h["sort_value"]) for h in a.hits
-        ] == [(h["split_id"], h["doc_id"], h["score"], h["sort_value"]) for h in b.hits]
+        got = []
+        for max_splits in ("1000", "0"):
+            monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", max_splits)
+            got.append(key(search(spark, index_dir, req)))
+            got.append(key(multi_search(spark, index_dir, [req])[0]))
+        assert got[1:] == got[:1] * 3, req
+
+
+@pytest.mark.parametrize("max_splits", ["0", "1000"])
+def test_global_key_tiebreak_matches_oracle(spark, built, monkeypatch, max_splits):
+    """tiebreak='global_key' breaks score ties on (conv_id, turn_idx), doc
+    fields the leaf fetches for its own top-k — rank-identical to the
+    oracle under the Spark-job leaf and the in-process leaf alike."""
+    from quickwit_spark.search.executor import explain
+
+    index_dir, oracle, _ = built
+    monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", max_splits)
+    monkeypatch.setenv("QW_DRIVER_LEAF_MAX_ROWS", "1e12")
+    for req in [
+        SearchRequest("*", max_hits=15, tiebreak="global_key"),  # all tie at 1.0
+        SearchRequest("the", max_hits=20, tiebreak="global_key"),
+        SearchRequest("error OR deploy", max_hits=10, start_offset=5, tiebreak="global_key"),
+        SearchRequest('"the error"', tiebreak="global_key"),
+    ]:
+        leaf = "in_process" if max_splits == "1000" else "spark_job"
+        assert explain(spark, index_dir, req)["leaf"] == leaf
+        resp, want = search(spark, index_dir, req), oracle.search(req)
+        assert resp.num_hits == want["num_hits"], req
+        assert [(h["conv_id"], h["turn_idx"]) for h in resp.hits] == [
+            (h["conv_id"], h["turn_idx"]) for h in want["hits"]
+        ], req
+        for g, w in zip(resp.hits, want["hits"]):
+            assert g["score"] == pytest.approx(w["score"], rel=1e-6)
 
 
 def test_leaf_worker_warm_up_once_per_context(spark, built, monkeypatch):
@@ -741,15 +775,15 @@ def test_match_all_count_is_metadata_only(spark, built, monkeypatch):
     import quickwit_spark.search.executor as ex
 
     index_dir, oracle, docs = built
-    real_leaf = ex._leaf_hit_rows
+    real_leaf = ex._topk_batch
 
     def boom(*a, **k):
         raise AssertionError("leaf ran for a metadata-answerable count")
 
-    monkeypatch.setattr(ex.root, "_leaf_hit_rows", boom)
+    monkeypatch.setattr(ex.root, "_topk_batch", boom)
     resp = ex.search(spark, index_dir, SearchRequest("*", max_hits=0))
     assert resp.num_hits == len(docs) and resp.hits == []
-    monkeypatch.setattr(ex.root, "_leaf_hit_rows", real_leaf)
+    monkeypatch.setattr(ex.root, "_topk_batch", real_leaf)
 
     # a range that slices through split boundaries: metadata + boundary leaf
     ts0 = 1767225600 + 13 * 86400
