@@ -800,7 +800,6 @@ class _SplitAccumulator:
         chunk_docs: int,
         pos_chunk_bytes: int | None = None,
         write_hotcache: bool = True,
-        write_termbloom: bool = True,
         embed_ff_max: int | None = None,
         posbm_min_total_tf: int | None = None,
         bm_chunk_bytes: int | None = None,
@@ -812,7 +811,6 @@ class _SplitAccumulator:
             pos_chunk_bytes if pos_chunk_bytes is not None else _pos_chunk_bytes()
         )
         self.write_hotcache = write_hotcache
-        self.write_termbloom = write_termbloom
         self.embed_ff_max = embed_ff_max
         self.posbm_min_total_tf = (
             posbm_min_total_tf
@@ -1419,10 +1417,9 @@ class _SplitAccumulator:
             )
         # per-split term-presence Bloom (built from the termstats sidecar
         # just written) — the driver's FST-probe analog for split pruning
-        if self.write_termbloom:
-            from .termbloom import write_split_termbloom
+        from .termbloom import write_split_termbloom
 
-            write_split_termbloom(self.paths, self.split_id)
+        write_split_termbloom(self.paths, self.split_id)
         return self.split_id, json.dumps(meta)
 
 
@@ -1452,7 +1449,7 @@ def make_split_builder(
     # the driver's setting
     pos_chunk_bytes = _pos_chunk_bytes()
     # hotcache sidecars serve the OBJECT-STORE read path only (local reads
-    # keep mmap'd datasets; executor._hotcache_enabled) — don't pay the
+    # keep mmap'd datasets; split_io._hotcache_enabled) — don't pay the
     # per-split fastfields+footer re-read and duplicate bytes on local
     # filesystems unless the forced-read flag is on (captured driver-side,
     # same env-freeze reason as above)
@@ -1460,10 +1457,6 @@ def make_split_builder(
         not storage_for(paths["hotcache"]).is_local
         or os.environ.get("QW_FORCE_HOTCACHE") == "1"
     )
-    # term-presence blooms serve DRIVER-side pruning on every storage
-    # (local included — the probe is an in-memory bit test once loaded);
-    # captured driver-side for the same env-freeze reason
-    write_termbloom = os.environ.get("QW_WRITE_TERMBLOOM", "1") == "1"
     from .hotcache import _embed_ff_max
 
     embed_ff_max = _embed_ff_max()  # captured driver-side (env freeze)
@@ -1521,7 +1514,6 @@ def make_split_builder(
                         sid, config, paths, chunk_docs,
                         pos_chunk_bytes=pos_chunk_bytes,
                         write_hotcache=write_hotcache,
-                        write_termbloom=write_termbloom,
                         embed_ff_max=embed_ff_max,
                         posbm_min_total_tf=posbm_min_total_tf,
                         bm_chunk_bytes=bm_chunk_bytes,

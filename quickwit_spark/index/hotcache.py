@@ -60,7 +60,8 @@ def _embed_ff_max() -> int:
     sized' — the payload moves to a SIBLING object fetched once on first
     scoring use: the footer part a cold open always pays stays
     hotcache-sized (still 1 HEAD + 1 GET) and the big payload is one
-    further GET, cached with the sidecar."""
+    further GET when the split's fast fields are parsed (the parsed table
+    is cached, not the payload)."""
     return int(os.environ.get("QW_HOTCACHE_EMBED_FF_BYTES", str(8 << 20)))
 
 
@@ -194,49 +195,39 @@ class Hotcache:
         # splits are immutable, so this only changes on rebuild-in-place
         self.token = token
         self.nbytes = len(data)
-        # the search layer's parsed fast-field entry (split_io.FastFields):
-        # cached on this object so it is evicted with it
-        self.fastfields = None
-        self._ff_ext_data: bytes | None = None  # fetched sibling payload
         self._pq_files: dict = {}
 
     def files(self, table: str) -> list[tuple[str, int]]:
         return [(e["name"], e["size"]) for e in self.header["tables"][table]]
 
     def _blob(self, entry: dict) -> bytes:
-        if entry.get("kind") == "ext":
-            # BIG split: payload lives in the sibling hotcache-ff.bin,
-            # fetched whole on first use (ONE GET, worker-cached with
-            # this object) — the footer part stays small
-            if self._ff_ext_data is None:
-                from ..storage import storage_for
-
-                try:  # observability: the scored-open GET is counted
-                    from ..search.executor import _count_read
-
-                    _count_read("get")
-                except Exception:
-                    pass
-                st = storage_for(self.index_dir)
-                self._ff_ext_data = st.read_bytes(
-                    hotcache_ff_path(self.index_dir, self.split_id)
-                )
-                self.nbytes += len(self._ff_ext_data)
-            return self._ff_ext_data[entry["off"] : entry["off"] + entry["len"]]
         s = self._blob_base + entry["off"]
         return self._data[s : s + entry["len"]]
 
     def fastfields_pdf(self):
-        """The whole fastfields table, parsed from the embedded bytes (same
-        name-ordered concat as the dataset path; the caller caches the
-        parsed entry in ``fastfields``); 'ext' entries pull the sibling
-        payload object lazily."""
+        """The whole fastfields table (same name-ordered concat as the
+        dataset path).  'ext' entries slice the sibling payload, fetched
+        with ONE GET per call and not kept: the caller caches the parsed
+        table, not these bytes."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        entries = self.header["tables"]["fastfields"]
+        ext = None
+        if any(e.get("kind") == "ext" for e in entries):
+            from ..search.plan import _count_read
+            from ..storage import storage_for
+
+            _count_read("get")
+            ext = storage_for(self.index_dir).read_bytes(
+                hotcache_ff_path(self.index_dir, self.split_id)
+            )
         parts = [
-            pq.read_table(pa.BufferReader(self._blob(e)))
-            for e in self.header["tables"]["fastfields"]
+            pq.read_table(pa.BufferReader(
+                ext[e["off"] : e["off"] + e["len"]] if e.get("kind") == "ext"
+                else self._blob(e)
+            ))
+            for e in entries
         ]
         if not parts:
             return None
@@ -247,16 +238,14 @@ class Hotcache:
         )
 
     def close(self) -> None:
-        """Release parsed state and remote file handles (worker-cache
-        eviction calls this so evicted entries don't pin fds/memory)."""
+        """Release the per-part readers and their remote file handles
+        (cache eviction calls this so evicted entries don't pin fds)."""
         for pf in self._pq_files.values():
             try:
                 pf.close()
             except Exception:
                 pass
         self._pq_files.clear()
-        self.fastfields = None
-        self._ff_ext_data = None
 
     def parquet_file(self, storage, table: str, name: str):
         """Worker-cached pyarrow ParquetFile over one part, with the footer

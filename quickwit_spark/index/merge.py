@@ -514,12 +514,11 @@ def execute_merge_round(
     # blooms (termbloom.fold_or) — no rescan of the merged postings; an
     # input without one (pre-bloom vintage) just leaves the output
     # probe-less (never term-pruned, still exact)
-    if os.environ.get("QW_WRITE_TERMBLOOM", "1") == "1":
-        from .termbloom import derive_merged_termbloom
+    from .termbloom import derive_merged_termbloom
 
-        for op in ops:
-            derive_merged_termbloom(paths, list(op.split_ids), op.output_split_id)
-        _mark("termbloom")
+    for op in ops:
+        derive_merged_termbloom(paths, list(op.split_ids), op.output_split_id)
+    _mark("termbloom")
 
     # --- metadata + atomic replaces ------------------------------------------
     if failpoint is not None:  # 'before-merge-publish' injection point

@@ -62,7 +62,6 @@ from .plan import (
     HITS_SCHEMA,
     SearchResponse,
     SplitVanishedError,
-    _BUCKET_CACHE,
     _CATALOG_CACHE,
     _GSTATS_CACHE,
     _OPEN_READS,
@@ -89,36 +88,21 @@ from .plan import (
 )
 from .split_io import (
     LAST_PHRASE_COUNTERS,
-    _HOTCACHE_CACHE_BYTES,
-    _HOTCACHE_PROBE_MEMO,
-    _HOTCACHE_PROBE_TTL,
     _PHRASE_CTR,
-    _POSTINGS_CACHE_BYTES,
-    _TERMBLOOM_CACHE,
-    _TERMBLOOM_CACHE_BYTES,
-    _WORKER_DSET_CACHE,
-    _WORKER_FF_CACHE,
-    _WORKER_HOTCACHE_CACHE,
-    _WORKER_POSTINGS_CACHE,
     _ast_may_match,
-    _cached_docs_dataset,
+    _cached_dataset,
     _cached_fastfields,
     _cached_hotcache,
-    _cached_postings_dataset,
     _fetch_doc_fields,
     _hotcache_enabled,
     _hotcache_fetch_docs,
     _hotcache_read_postings,
     _limit_arrow_threads,
     _load_termblooms,
-    _lru_put,
     _phrase_ctr,
-    _postings_cache_cap,
-    _postings_cache_put,
     _postings_nbytes,
     _read_split_postings,
     _read_split_postings_chunks,
-    _split_epoch,
     _stat_minmax,
     _term_prunable,
     prune_splits_by_terms,
@@ -152,14 +136,9 @@ from .leaf import (
 from .root import (
     CURSOR_SPLIT_MAX,
     CURSOR_SPLIT_MIN,
-    _DOC_EPOCH_MEMO,
-    _DOC_ROW_CACHE,
-    _DOC_ROW_CACHE_BYTES,
     _attach_score_explain,
     _contains_phrase,
     _df_cols_and_schema,
-    _doc_cache_cap,
-    _doc_epoch,
     _est_split_rows,
     _fetch_page_fields,
     _hit_dict,

@@ -10,19 +10,13 @@ architecture overview.
 
 from __future__ import annotations
 
-import os
-import re
-import time
 from dataclasses import dataclass, field as _dc_field, replace as _dc_replace
 from itertools import repeat
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import IndexConfig
-from ..storage import storage_for
 from ..functions.bm25 import idf as bm25_idf
 from ..functions.bm25 import tf_norm
 from ..functions.codec import (
@@ -32,27 +26,15 @@ from ..functions.codec import (
     decode_postings,
     decode_u32_column,
 )
-from ..index.catalog import Catalog, SplitMetadata
 from .parser import (
     AllQuery,
     BoolQuery,
     ExistsQuery,
-    FuzzyQuery,
-    PhrasePrefixQuery,
     PhraseQuery,
-    PrefixQuery,
-    RegexQuery,
     TermQuery,
-    WildcardQuery,
-    collect_terms,
-    extract_tag_predicate,
-    parse_query,
     positive_exists_weights,
     positive_term_weights,
     positive_terms,
-    regex_literal_prefix,
-    wildcard_literal_prefix,
-    wildcard_regex,
 )
 from .request import SearchRequest
 
@@ -1410,7 +1392,6 @@ def _fast_field_values(
             vals = f64_sort_keys(np.concatenate([v.astype(np.float64) for v in vals_raw]))
         else:
             vals = np.concatenate([v.astype(np.int64) for v in vals_raw])
-    ff.memo[mkey] = vals
-    return vals[docs]
+    return ff.memoize(mkey, vals)[docs]
 
 

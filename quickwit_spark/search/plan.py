@@ -16,30 +16,16 @@ from __future__ import annotations
 import bisect
 import os
 import re
-import time
 from dataclasses import dataclass, replace as _dc_replace
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from ..config import IndexConfig
 from ..storage import storage_for
-from ..functions.bm25 import idf as bm25_idf
-from ..functions.bm25 import tf_norm
-from ..functions.codec import (
-    BLOCK,
-    decode_blocks,
-    decode_positions_at,
-    decode_postings,
-    decode_u32_column,
-)
 from ..index.catalog import Catalog, SplitMetadata
 from .parser import (
-    AllQuery,
     BoolQuery,
-    ExistsQuery,
     FuzzyQuery,
     PhrasePrefixQuery,
     PhraseQuery,
@@ -47,12 +33,7 @@ from .parser import (
     RegexQuery,
     TermQuery,
     WildcardQuery,
-    collect_terms,
     extract_tag_predicate,
-    parse_query,
-    positive_exists_weights,
-    positive_term_weights,
-    positive_terms,
     regex_literal_prefix,
     wildcard_literal_prefix,
     wildcard_regex,
@@ -214,7 +195,6 @@ def prune_splits(
     return [s for s in splits if pred(set(s.tags), bool(s.tags))]
 
 
-_BUCKET_CACHE: dict = {}
 _GSTATS_CACHE: dict = {}
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import replace as _dc_replace
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -50,19 +51,18 @@ from .plan import (
     resolve_sort,
     term_buckets,
 )
+from .cache import SPLIT_CACHE
 from .split_io import (
     LAST_PHRASE_COUNTERS,
-    _HOTCACHE_PROBE_TTL,
-    _cached_docs_dataset,
+    _cached_dataset,
     _cached_fastfields,
     _cached_hotcache,
     _fetch_doc_fields,
     _limit_arrow_threads,
-    _lru_put,
     _phrase_ctr,
     _read_split_postings,
-    _split_epoch,
     prune_splits_by_terms,
+    split_epoch,
 )
 from .leaf import (
     _SplitPostings,
@@ -445,12 +445,21 @@ def _checked_request(
     return request
 
 
+class _BatchPlan(NamedTuple):
+    """What a top-k batch planned, for the page attachers (snippets,
+    score_explain) to reuse instead of planning again."""
+
+    asts: list  # per request, the expanded query AST
+    buckets: list[int]  # term buckets of the batch's terms
+    gstats: dict  # global term stats of the batch's terms
+
+
 def _topk_batch(
     spark: SparkSession,
     index_dir: str,
     requests: list[SearchRequest],
     only_split_ids: set[str] | None = None,
-) -> tuple[IndexConfig, list[tuple[SearchRequest, list[dict], int]]]:
+) -> tuple[IndexConfig, list[tuple[SearchRequest, list[dict], int]], _BatchPlan]:
     """The top-k root: Q requests, ONE leaf pass.  search() runs it as a
     batch of one, multi_search() with the whole batch.
 
@@ -483,8 +492,8 @@ def _topk_batch(
     + GC, during the leaf or the page fetch) re-plans the whole batch once
     against the fresh catalog (retry/search.rs analog).
 
-    Returns the index config and, per request, the sort-resolved request,
-    its page rows and its exact hit count."""
+    Returns the index config, per request the sort-resolved request, its
+    page rows and its exact hit count, and the batch's plan."""
     for attempt in (0, 1):
         try:
             cat, config = open_index(spark, index_dir)
@@ -592,7 +601,7 @@ def _topk_batch(
                     by_fields.setdefault(req.stored_fields, []).extend(page)
             for only, union_page in by_fields.items():
                 _fetch_page_fields(index_dir, union_page, only)
-            return config, answers
+            return config, answers, _BatchPlan(asts, buckets, gstats)
         except SplitVanishedError:
             if attempt:
                 raise
@@ -635,7 +644,7 @@ def multi_search(
         raise ValueError(
             "score_explain is not supported in batched search — use search()"
         )
-    config, answers = _topk_batch(spark, index_dir, requests)
+    config, answers, _ = _topk_batch(spark, index_dir, requests)
     return [
         SearchResponse(
             num_hits,
@@ -810,10 +819,10 @@ def _sort_key(request: SearchRequest):
 
 def _search_rows(
     spark: SparkSession, index_dir: str, request: SearchRequest
-) -> tuple[list[dict], int]:
-    """One request's page rows (stored fields fetched) and exact hit
-    count: the top-k core as a batch of one, behind the match-all count
-    shortcut.
+) -> tuple[list[dict], int, _BatchPlan]:
+    """One request's page rows (stored fields fetched), exact hit count
+    and plan: the top-k core as a batch of one, behind the match-all
+    count shortcut.
 
     Match-all count: every doc in a split counts, so any split FULLY
     inside the time range (or any split at all when no range is given) is
@@ -851,47 +860,23 @@ def _search_rows(
                 only_split_ids = {s.split_id for s in splits if not fully_inside(s)}
                 if not only_split_ids:
                     # pure-metadata answer from ONE atomic catalog read
-                    return [], meta_count
-        _, [(_, page, num_hits)] = _topk_batch(spark, index_dir, [request], only_split_ids)
+                    return [], meta_count, _BatchPlan([ast], [], {})
+        _, [(_, page, num_hits)], plan = _topk_batch(
+            spark, index_dir, [request], only_split_ids
+        )
         if only_split_ids is None or Catalog.state_token(index_dir) == cat_token:
-            return page, meta_count + num_hits
+            return page, meta_count + num_hits, plan
         if attempt:  # the catalog changed between the count and the leaf
             raise SplitVanishedError("catalog changed twice during a metadata-count query")
     raise AssertionError("unreachable")
 
 
-# Driver-side stored-doc row cache (the reference's fetch-docs/doc-store
-# cache, quickwit-storage/src/cache + fetch_docs.rs): under load the same
-# hot page docs are re-fetched query after query, and each point fetch
-# decompresses whole 8k-row groups to extract a handful of rows — the
-# dominant serial driver cost of a batch (measured ~50% of a warm
-# multi_search batch).  Keyed on a TTL'd split epoch so a delete-and-
-# rebuild at the same path (the only way a published split's bytes can
-# change) invalidates within the TTL, like the worker-side caches.
-_DOC_ROW_CACHE: dict = {}
-_DOC_ROW_CACHE_BYTES = [0]
-_DOC_EPOCH_MEMO: dict = {}
-
-
-def _doc_cache_cap() -> int:
-    return int(os.environ.get("QW_DOC_CACHE_MB", "64")) << 20
-
-
-def _doc_epoch(index_dir: str, split_id: str):
-    """Change-detection token for the doc-row cache: the hotcache token
-    when one exists (object stores), else the docs dir mtime — memoized
-    for the same 2 s the hotcache probe uses."""
-    import time as _time
-
-    key = (index_dir, split_id)
-    memo = _DOC_EPOCH_MEMO.get(key)
-    now = _time.monotonic()
-    if memo is not None and now < memo[0]:
-        return memo[1]
-    hc = _cached_hotcache(index_dir, split_id)
-    epoch = hc.token if hc is not None else _split_epoch(index_dir, "docs", split_id)
-    _lru_put(_DOC_EPOCH_MEMO, key, (now + _HOTCACHE_PROBE_TTL, epoch), 4096)
-    return epoch
+# Driver-side stored-doc rows ("doc" entries of SPLIT_CACHE; the
+# reference's fetch-docs/doc-store cache, quickwit-storage/src/cache +
+# fetch_docs.rs): under load the same hot page docs are re-fetched query
+# after query, and each point fetch decompresses whole 8k-row groups to
+# extract a handful of rows — the dominant serial driver cost of a batch
+# (measured ~50% of a warm multi_search batch).
 
 
 def _fetch_page_fields(
@@ -907,7 +892,7 @@ def _fetch_page_fields(
     store_source index keeps the full fetch (the reserved _source field
     reconstructs from every stored column).
 
-    Hot rows come from the driver doc-row cache; misses are grouped per
+    Hot rows come from the cache ("doc" entries); misses are grouped per
     split and fetched CONCURRENTLY (pyarrow releases the GIL, so under
     concurrent clients one query's page fetch overlaps another's driver
     work instead of serializing behind it)."""
@@ -918,7 +903,6 @@ def _fetch_page_fields(
     if only is not None and not config.store_source:
         cols = ["doc_id"] + [c for c in cols if c != "doc_id" and c in only]
     colkey = tuple(cols)
-    cap = _doc_cache_cap()
     fills: dict[tuple[str, int], tuple] = {}
     by_split: dict[str, set[int]] = {}
     epochs: dict[str, object] = {}
@@ -926,14 +910,13 @@ def _fetch_page_fields(
         sid, did = r["split_id"], int(r["doc_id"])
         if (sid, did) in fills:
             continue
-        if cap:
-            if sid not in epochs:
-                epochs[sid] = _doc_epoch(index_dir, sid)
-            hit = _DOC_ROW_CACHE.get((index_dir, sid, epochs[sid], did, colkey))
-            if hit is not None:
-                fills[(sid, did)] = hit
-                continue
-        by_split.setdefault(sid, set()).add(did)
+        if sid not in epochs:
+            epochs[sid] = split_epoch(index_dir, sid)
+        hit = SPLIT_CACHE.get((index_dir, sid, epochs[sid], "doc", did, colkey))
+        if hit is not None:
+            fills[(sid, did)] = hit
+        else:
+            by_split.setdefault(sid, set()).add(did)
 
     def fetch_one(item):
         sid, ids = item
@@ -941,7 +924,7 @@ def _fetch_page_fields(
         # reads raise SplitVanishedError); only the listing path needs the
         # explicit dataset check
         if _cached_hotcache(index_dir, sid) is None and (
-            _cached_docs_dataset(index_dir, sid) is None
+            _cached_dataset(index_dir, "docs", sid) is None
         ):  # GC raced us
             raise SplitVanishedError(f"split vanished during fetch: {sid}")
         return sid, _fetch_doc_fields(index_dir, sid, sorted(ids), cols)
@@ -957,19 +940,10 @@ def _fetch_page_fields(
         for row in pdf.itertuples(index=False, name=None):
             did = int(row[did_i])
             fills[(sid, did)] = row
-            if cap:
-                nb = 128 + sum(
-                    len(v) if isinstance(v, (str, bytes)) else 16 for v in row
-                )
-                _DOC_ROW_CACHE[(index_dir, sid, epochs.get(sid), did, colkey)] = row
-                _DOC_ROW_CACHE_BYTES[0] += nb
-        while _DOC_ROW_CACHE_BYTES[0] > cap and _DOC_ROW_CACHE:
-            try:  # concurrent clients share this cache; a racing pop is fine
-                gone = _DOC_ROW_CACHE.pop(next(iter(_DOC_ROW_CACHE)))
-            except (KeyError, StopIteration, RuntimeError):
-                continue
-            _DOC_ROW_CACHE_BYTES[0] -= 128 + sum(
-                len(v) if isinstance(v, (str, bytes)) else 16 for v in gone
+            SPLIT_CACHE.put(
+                (index_dir, sid, epochs[sid], "doc", did, colkey),
+                row,
+                128 + sum(len(v) if isinstance(v, (str, bytes)) else 16 for v in row),
             )
     for r in page:
         row = fills.get((r["split_id"], int(r["doc_id"])))
@@ -1024,7 +998,7 @@ def search_df(spark: SparkSession, index_dir: str, request: SearchRequest) -> Da
             "column is int64) — use search()"
         )
     cols, schema = _df_cols_and_schema(config)
-    page, _ = _search_rows(spark, index_dir, request)
+    page, _, _ = _search_rows(spark, index_dir, request)
 
     def py(v):
         if isinstance(v, np.ndarray):
@@ -1038,7 +1012,8 @@ def search_df(spark: SparkSession, index_dir: str, request: SearchRequest) -> Da
 
 
 def _attach_score_explain(
-    spark: SparkSession, index_dir: str, request: SearchRequest, hits: list[dict]
+    index_dir: str, config: IndexConfig, ast, buckets: list[int], gstats: dict,
+    hits: list[dict],
 ) -> None:
     """Per-hit BM25 breakdown (the ES per-hit ``explain`` analog, beyond-
     reference): for each page hit, list every matching positive term's
@@ -1059,10 +1034,10 @@ def _attach_score_explain(
     decode): any change to the leaf's
     scoring math MUST be replicated here in the same float-op order —
     test_score_explain_bit_exact pins the equality across strategies and
-    fails on drift."""
-    cat, config = open_index(spark, index_dir)
-    ast = parse_query(request.query, config, request.search_fields)
-    ast = expand_prefixes(spark, index_dir, cat, ast)
+    fails on drift.
+
+    ``ast`` is the expanded query and ``buckets`` / ``gstats`` the term
+    buckets and global stats the search itself planned with."""
     if isinstance(ast, AllQuery):
         for h in hits:
             h["score_detail"] = {"score": 1.0, "constant": True, "terms": []}
@@ -1071,8 +1046,6 @@ def _attach_score_explain(
     exists_w = positive_exists_weights(ast)
     terms_sorted = sorted(positive_terms(ast))
     terms = collect_terms(ast)
-    buckets = term_buckets(spark, terms, config.term_merge_buckets)
-    gstats = global_term_stats(spark, index_dir, cat, terms, buckets)
     by_split: dict[str, list[dict]] = {}
     for h in hits:
         by_split.setdefault(h["split_id"], []).append(h)
@@ -1156,15 +1129,13 @@ def search(
     """single_node_search analog (lib.rs:153-198): returns collected hits +
     the total hit count (collector.rs:180-187)."""
     t0 = time.monotonic()
-    page, num_hits = _search_rows(spark, index_dir, request)
-    cat, config = open_index(spark, index_dir)
+    page, num_hits, plan = _search_rows(spark, index_dir, request)
+    _, config = open_index(spark, index_dir)
     out = _page_hits(index_dir, config, resolve_sort(request, config), page)
+    [ast] = plan.asts  # expanded: "depl*" highlights and explains as deploy
     if request.snippet_fields:
         from .snippet import attach_snippets
 
-        ast = parse_query(request.query, config, request.search_fields)
-        # expanded terms highlight like typed ones ("depl*" → <b>deploy</b>)
-        ast = expand_prefixes(spark, index_dir, cat, ast)
         attach_snippets(
             config,
             ast,
@@ -1174,7 +1145,7 @@ def search(
         )
     if request.score_explain and out:
         try:
-            _attach_score_explain(spark, index_dir, request, out)
+            _attach_score_explain(index_dir, config, ast, plan.buckets, plan.gstats, out)
         except SplitVanishedError:
             # a merge+GC landed between the page read and the explain
             # attach: the page's split addresses are stale, so re-run the

@@ -1,62 +1,28 @@
-"""Worker-side split I/O: hotcache-backed reads, per-worker caches,
+"""Split I/O: the split epoch, hotcache-backed and dataset reads,
 positions/bitmap chunk fetches, term-presence Bloom pruning, and the
 phrase-path observability counters.
 
-Split out of the monolithic ``executor.py`` in round 5 (no behavior
-change).  Everything here runs inside leaf tasks (or driver-leaf
-fallbacks) and is deliberately cache-heavy: published splits are
-immutable, so worker caches key on a cheap epoch and live for the
-process.  See ``executor.py`` for the architecture overview.
+Everything here runs inside leaf tasks (or in the driver: in-process
+leaves, page fetches, Bloom pruning) and is deliberately cache-heavy:
+published splits are immutable, so every read is cached in the process's
+one byte-budgeted LRU (``cache.SPLIT_CACHE``) under a key that carries
+the split's epoch, and lives for the process.  See ``executor.py`` for
+the architecture overview.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import time
-from dataclasses import dataclass, replace as _dc_replace
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..config import IndexConfig
 from ..storage import storage_for
-from ..functions.bm25 import idf as bm25_idf
-from ..functions.bm25 import tf_norm
-from ..functions.codec import (
-    BLOCK,
-    decode_blocks,
-    decode_positions_at,
-    decode_postings,
-    decode_u32_column,
-)
-from ..index.catalog import Catalog, SplitMetadata
-from .parser import (
-    AllQuery,
-    BoolQuery,
-    ExistsQuery,
-    FuzzyQuery,
-    PhrasePrefixQuery,
-    PhraseQuery,
-    PrefixQuery,
-    RegexQuery,
-    TermQuery,
-    WildcardQuery,
-    collect_terms,
-    extract_tag_predicate,
-    parse_query,
-    positive_exists_weights,
-    positive_term_weights,
-    positive_terms,
-    regex_literal_prefix,
-    wildcard_literal_prefix,
-    wildcard_regex,
-)
-from .request import SearchRequest
-
-
+from ..functions.codec import decode_u32_column
+from ..index.catalog import SplitMetadata
+from .cache import SPLIT_CACHE
+from .parser import BoolQuery, PhraseQuery, TermQuery
 from .plan import SplitVanishedError, _count_read, _split_files, open_index
 
 
@@ -72,7 +38,7 @@ def _fetch_doc_fields(
     hc = _cached_hotcache(index_dir, split_id)
     if hc is not None:
         return _hotcache_fetch_docs(hc, storage_for(index_dir), doc_ids, cols)
-    dset = _cached_docs_dataset(index_dir, split_id)
+    dset = _cached_dataset(index_dir, "docs", split_id)
     if dset is None:
         return pd.DataFrame(columns=cols)
     try:
@@ -175,20 +141,13 @@ def _limit_arrow_threads():
         pass
 
 
-# Worker-side caches, safe because split dirs are IMMUTABLE once published
-# (merge/demux create new split ids; GC only deletes dirs that are never
-# queried again).  Python workers are reused across Spark jobs, so these
-# persist across queries — the executor-local storage/fast-field cache
-# analog (quickwit-storage/src/cache, docs/design/querying.md:42-43).
-_WORKER_FF_CACHE: dict = {}
-_WORKER_DSET_CACHE: dict = {}
-
 # -- split-open storage-read accounting --------------------------------------
 # Counts the storage round trips a split open performs BEFORE the first
 # postings data byte (HEAD/GET/LIST/parquet-footer reads).  The hotcache
 # path costs exactly 2 per cold split (1 HEAD epoch probe + 1 hotcache
-# GET); the legacy listing path costs 2 LISTs + a footer GET per postings
-# part.  Tests and the BASELINE.md cold-open evidence read these.
+# GET); the listing path costs 1 epoch stat + 1 LIST per table + a footer
+# GET per postings part.  Tests and the BASELINE.md cold-open evidence
+# read these.
 def _hotcache_enabled(st) -> bool:
     """Hotcache serves the read path on object stores (where round trips
     dominate a cold open); local filesystems keep mmap'd pyarrow datasets.
@@ -196,113 +155,96 @@ def _hotcache_enabled(st) -> bool:
     return (not st.is_local) or os.environ.get("QW_FORCE_HOTCACHE") == "1"
 
 
-_WORKER_HOTCACHE_CACHE: dict = {}
-_HOTCACHE_CACHE_BYTES = [0]
-# (index_dir, split_id) → (probe_deadline, hc_or_None): within the TTL the
-# epoch HEAD is skipped entirely, so the fastfields and postings opens of
-# ONE query share a single probe (and a split with no sidecar — pre-
-# hotcache build — doesn't pay a HEAD per table).  2 s bounds staleness:
-# published splits are immutable, so only a delete-and-rebuild at the same
-# path could change the object, and the driver re-plans from the catalog
-# token on that event anyway.
-_HOTCACHE_PROBE_MEMO: dict = {}
-_HOTCACHE_PROBE_TTL = 2.0
+# Every split read below is cached in the process's one SPLIT_CACHE
+# (search/cache.py) under ``(index_dir, split_id, epoch, kind, ...)``:
+#   "epoch"  the memoized epoch itself (epoch slot None)
+#   "hc"     the parsed hotcache sidecar (object stores)
+#   "dset"   a pyarrow dataset handle per table (local disk)
+#   "ff"     the split's FastFields, decodes charged as they are memoized
+#   "post"   one term's posting row, or _ABSENT
+#   "chunk"  one positions / bitmap chunk payload
+#   "doc"    one stored-doc row of a page fetch (root._fetch_page_fields)
+#   "bloom"  the term-presence Bloom (epoch: the catalog's update_ts)
+EPOCH_TTL_S = 2.0  # a split's epoch is re-probed at most this often
+_EPOCH_BYTES = 128  # charge of one memoized epoch
+_HANDLE_BYTES = 16 << 10  # estimated parsed footer + listing per dataset file
+
+
+def split_epoch(index_dir: str, split_id: str, with_sidecar: bool = False):
+    """The split's change-detection token, folded into every cache key.
+    Published split dirs never mutate, but deterministic build ids mean a
+    delete-and-rebuild at the same path REUSES split ids.  With a hotcache
+    sidecar on the read path the token is the sidecar's (mtime_ns, size) —
+    one HEAD; otherwise one stat of the split's postings dir (local disk),
+    or on stores without directory mtimes one LIST (a fingerprint of the
+    listing).  Resolved once per split per EPOCH_TTL_S: the opens of one
+    query share one probe, and a rebuild in place shows within the TTL.
+    ``with_sidecar=True`` returns ``(epoch, has_sidecar)``."""
+    import pyarrow.fs as pafs
+
+    from ..index.hotcache import hotcache_path
+
+    key = (index_dir, split_id, None, "epoch")
+    now = time.monotonic()
+    memo = SPLIT_CACHE.get(key)
+    if memo is None or now >= memo[0]:
+        st = storage_for(index_dir)
+        epoch, sidecar = None, False
+        if _hotcache_enabled(st):
+            _count_read("head")
+            info = st.info(hotcache_path(index_dir, split_id))
+            if info.type == pafs.FileType.File:
+                epoch, sidecar = (info.mtime_ns, info.size), True
+        if epoch is None:
+            path = os.path.join(index_dir, "postings", f"split_id={split_id}")
+            if st.is_local:
+                _count_read("head")
+                epoch = st.mtime(path)
+            else:
+                _count_read("list")
+                epoch = st.listing_fingerprint(path)
+        memo = (now + EPOCH_TTL_S, epoch, sidecar)
+        SPLIT_CACHE.put(key, memo, _EPOCH_BYTES)
+    return (memo[1], memo[2]) if with_sidecar else memo[1]
 
 
 def _cached_hotcache(index_dir: str, split_id: str):
     """The split's parsed hotcache sidecar, or None (local storage, or a
     split written before hotcache existed → caller falls back to the
-    listing path).  Cold cost: ONE HEAD (the epoch token — rebuilds at the
-    same path must invalidate worker caches) + ONE GET."""
-    import time as _time
-
-    import pyarrow.fs as pafs
-
+    listing path).  Cold cost: ONE HEAD (the epoch) + ONE GET."""
     from ..index.hotcache import Hotcache, hotcache_path
 
-    st = storage_for(index_dir)
-    if not _hotcache_enabled(st):
+    epoch, sidecar = split_epoch(index_dir, split_id, with_sidecar=True)
+    if not sidecar:
         return None
-    memo_key = (index_dir, split_id)
-    memo = _HOTCACHE_PROBE_MEMO.get(memo_key)
-    now = _time.monotonic()
-    if memo is not None and now < memo[0]:
-        return memo[1]
-    path = hotcache_path(index_dir, split_id)
-    _count_read("head")
-    info = st.info(path)
-    if info.type != pafs.FileType.File:
-        _lru_put(_HOTCACHE_PROBE_MEMO, memo_key, (now + _HOTCACHE_PROBE_TTL, None), 4096)
-        return None
-    token = (info.mtime_ns, info.size)
-    key = (index_dir, split_id, token)
-    hc = _WORKER_HOTCACHE_CACHE.get(key)
-    if hc is not None:
-        _lru_put(_HOTCACHE_PROBE_MEMO, memo_key, (now + _HOTCACHE_PROBE_TTL, hc), 4096)
-        return hc
-    _count_read("get")
-    try:
-        hc = Hotcache(index_dir, split_id, st.read_bytes(path), token)
-    except (FileNotFoundError, OSError, ValueError):
-        return None  # vanished/foreign-version sidecar → listing fallback
-    cap = int(os.environ.get("QW_HOTCACHE_CACHE_MB", "512")) << 20
-    # charge 3x the raw sidecar bytes: a cached entry also pins the
-    # lazily-parsed fastfields DataFrame (typically 2-4x the snappy bytes)
-    # and per-part ParquetFile handles — raw-size accounting let real
-    # worker memory exceed the knob severalfold
-    charge = 3 * hc.nbytes
-    if charge <= cap:
-        old = _WORKER_HOTCACHE_CACHE.pop(key, None)
-        if old is not None:
-            _HOTCACHE_CACHE_BYTES[0] -= 3 * old.nbytes
-            old.close()
-        _WORKER_HOTCACHE_CACHE[key] = hc
-        _HOTCACHE_CACHE_BYTES[0] += charge
-        while _HOTCACHE_CACHE_BYTES[0] > cap and _WORKER_HOTCACHE_CACHE:
-            oldest = next(iter(_WORKER_HOTCACHE_CACHE))
-            gone = _WORKER_HOTCACHE_CACHE.pop(oldest)
-            _HOTCACHE_CACHE_BYTES[0] -= 3 * gone.nbytes
-            gone.close()  # release fds + parsed fastfields
-    _lru_put(_HOTCACHE_PROBE_MEMO, memo_key, (now + _HOTCACHE_PROBE_TTL, hc), 4096)
+    key = (index_dir, split_id, epoch, "hc")
+    hc = SPLIT_CACHE.get(key)
+    if hc is None:
+        _count_read("get")
+        try:
+            data = storage_for(index_dir).read_bytes(hotcache_path(index_dir, split_id))
+            hc = Hotcache(index_dir, split_id, data, epoch)
+        except (FileNotFoundError, OSError, ValueError):
+            return None  # vanished/foreign-version sidecar → listing fallback
+        SPLIT_CACHE.put(key, hc, hc.nbytes)
     return hc
 
 
-def _lru_put(cache: dict, key, value, cap: int):
-    cache[key] = value
-    while len(cache) > cap:
-        cache.pop(next(iter(cache)))
-
-
-def _split_epoch(index_dir: str, table: str, split_id: str) -> float:
-    """Change-detection token folded into every worker cache key.
-    Published split DIRS never mutate, but deterministic build ids mean a
-    delete-and-rebuild at the same path REUSES split ids.  Local disk: one
-    dir-mtime stat (~µs).  Object stores have no directory mtime, so hash
-    the file listing (name/size/mtime) instead — one LIST per probe (~ms),
-    the price of not serving stale postings from a long-lived server after
-    an index is rebuilt in place."""
-    st = storage_for(index_dir)
-    path = os.path.join(index_dir, table, f"split_id={split_id}")
-    if st.is_local:
-        _count_read("head")
-        return st.mtime(path)
-    _count_read("list")
-    return st.listing_fingerprint(path)
-
-
 class FastFields:
-    """One split's fast-field segments as a worker-cache entry: the
-    segment frame sorted by seg_id once, its per-segment scalars as
-    arrays, and a memo of whole-split column decodes (doc lengths, ts,
-    ff_* values) that lives exactly as long as the entry.  Decoding the
-    doc_lens column of a 5.1M-doc split takes ~113 ms, so a per-call
-    decode was the largest per-unit fixed cost at the few-huge-splits
-    shape."""
+    """One split's fast-field segments as a cache entry: the segment
+    frame sorted by seg_id once, its per-segment scalars as arrays, and a
+    memo of whole-split column decodes (doc lengths, ts, ff_* values) that
+    lives exactly as long as the entry.  Decoding the doc_lens column of a
+    5.1M-doc split takes ~113 ms, so a per-call decode was the largest
+    per-unit fixed cost at the few-huge-splits shape.  Each memoized
+    decode (up to ~40 MB at that shape) is charged to the entry."""
 
-    def __init__(self, pdf: pd.DataFrame):
+    def __init__(self, pdf: pd.DataFrame, key):
         if len(pdf) and not pdf["seg_id"].is_monotonic_increasing:
             pdf = pdf.sort_values("seg_id", ignore_index=True)
         self.pdf = pdf
+        self.key = key  # the SPLIT_CACHE entry holding this object
+        self.nbytes = int(pdf.memory_usage(deep=True).sum())
         self.memo: dict = {}
         col = lambda c: pdf[c].to_numpy(np.int64)  # noqa: E731
         self.base_doc, self.num_docs = col("base_doc"), col("num_docs")
@@ -312,67 +254,70 @@ class FastFields:
     def __len__(self) -> int:
         return len(self.pdf)
 
+    def memoize(self, name: str, arr):
+        """Keep one whole-split decode and charge it to the cache entry;
+        a decode raced in by another thread wins and is returned."""
+        kept = self.memo.setdefault(name, arr)
+        if kept is arr and arr is not None:
+            SPLIT_CACHE.grow(self.key, self, arr.nbytes)
+        return kept
+
     def lens(self, field: str) -> np.ndarray | None:
         """Exact per-doc lengths of ``field`` (the fieldnorm store; the
         ``text`` field keeps the legacy doc_lens column), None when the
         split has no length blob for it."""
         col = "doc_lens" if field == "text" else f"doc_lens_{field}"
-        if col not in self.memo:
-            self.memo[col] = (
-                np.concatenate([decode_u32_column(b) for b in self.pdf[col]]).astype(np.int64)
-                if col in self.pdf.columns
-                else None
-            )
-        return self.memo[col]
+        if col in self.memo:
+            return self.memo[col]
+        return self.memoize(col, (
+            np.concatenate([decode_u32_column(b) for b in self.pdf[col]]).astype(np.int64)
+            if col in self.pdf.columns
+            else None
+        ))
 
 
 def _cached_fastfields(index_dir: str, split_id: str) -> FastFields | None:
+    """The split's FastFields: parsed from the hotcache sidecar (object
+    stores: zero further reads, or one GET of a big split's external
+    payload) or read from the fastfields files (local disk)."""
+    key = (index_dir, split_id, split_epoch(index_dir, split_id), "ff")
+    ff = SPLIT_CACHE.get(key)
+    if ff is not None:
+        return ff
     hc = _cached_hotcache(index_dir, split_id)
     if hc is not None:
-        # embedded in the hotcache sidecar: zero further storage reads;
-        # the entry lives (and is evicted) with the sidecar
-        if hc.fastfields is None:
-            pdf = hc.fastfields_pdf()
-            hc.fastfields = FastFields(pdf) if pdf is not None else None
-        return hc.fastfields
-    key = (index_dir, split_id, _split_epoch(index_dir, "fastfields", split_id))
-    if key in _WORKER_FF_CACHE:
-        return _WORKER_FF_CACHE[key]
-    st = storage_for(index_dir)
-    files = _split_files(index_dir, "fastfields", split_id)
-    try:
-        ff = FastFields(st.dataset(files).to_table().to_pandas()) if files else None
-    except FileNotFoundError:
-        # listed files deleted by a concurrent merge+GC before the read:
-        # same contract as an already-gone split (caller yields vanished);
-        # never cached — the next call sees the post-GC state
+        pdf = hc.fastfields_pdf()
+    else:
+        files = _split_files(index_dir, "fastfields", split_id)
+        try:
+            dset = storage_for(index_dir).dataset(files) if files else None
+            pdf = dset.to_table().to_pandas() if dset is not None else None
+        except FileNotFoundError:
+            # listed files deleted by a concurrent merge+GC before the
+            # read: same contract as an already-gone split (caller yields
+            # vanished); never cached — the next call sees the post-GC state
+            return None
+    if pdf is None:
         return None
-    _lru_put(_WORKER_FF_CACHE, key, ff, 256)
+    ff = FastFields(pdf, key)
+    SPLIT_CACHE.put(key, ff, ff.nbytes)
     return ff
 
 
-def _cached_docs_dataset(index_dir: str, split_id: str):
-    key = (index_dir, "docs", split_id, _split_epoch(index_dir, "docs", split_id))
-    if key in _WORKER_DSET_CACHE:
-        return _WORKER_DSET_CACHE[key]
-    st = storage_for(index_dir)
-    files = _split_files(index_dir, "docs", split_id)
-    dset = st.dataset(files) if files else None
-    _lru_put(_WORKER_DSET_CACHE, key, dset, 256)
-    return dset
-
-
-def _cached_postings_dataset(index_dir: str, split_id: str):
-    """pyarrow dataset handle per split (file listing + parquet footers are
-    parsed once per worker, the split-footer-cache analog, leaf.rs:47-55)."""
-    key = (index_dir, split_id, _split_epoch(index_dir, "postings", split_id))
-    if key in _WORKER_DSET_CACHE:
-        return _WORKER_DSET_CACHE[key]
-    st = storage_for(index_dir)
-    files = _split_files(index_dir, "postings", split_id)
-    _count_read("footer", len(files))  # dataset open parses each part's footer
-    dset = st.dataset(files) if files else None
-    _lru_put(_WORKER_DSET_CACHE, key, dset, 256)
+def _cached_dataset(index_dir: str, table: str, split_id: str):
+    """pyarrow dataset handle per split and table (file listing + parquet
+    footers are parsed once per process, the split-footer-cache analog,
+    leaf.rs:47-55); None when the split has no files (not cached)."""
+    key = (index_dir, split_id, split_epoch(index_dir, split_id), "dset", table)
+    dset = SPLIT_CACHE.get(key)
+    if dset is None:
+        files = _split_files(index_dir, table, split_id)
+        if not files:
+            return None
+        if table == "postings":
+            _count_read("footer", len(files))  # the open parses each part's footer
+        dset = storage_for(index_dir).dataset(files)
+        SPLIT_CACHE.put(key, dset, _HANDLE_BYTES * len(files))
     return dset
 
 
@@ -397,22 +342,18 @@ def _read_split_postings_chunks(
     config/catalog round trip a recompute would cost in a worker)."""
     import pyarrow.dataset as pads
 
-    cap = _postings_cache_cap()
-    hc = _cached_hotcache(index_dir, split_id)
-    epoch = (
-        hc.token if hc is not None
-        else (_split_epoch(index_dir, "postings", split_id) if cap else 0.0)
-    )
+    epoch = split_epoch(index_dir, split_id)
+    key = lambda o: (index_dir, split_id, epoch, "chunk", field, term, o)  # noqa: E731
     out: dict[int, bytes] = {}
     missing = []
     for o in ords:
-        ck = (index_dir, split_id, epoch, field, term, "__pchunk__", o)
-        hit = _WORKER_POSTINGS_CACHE.get(ck) if cap else None
+        hit = SPLIT_CACHE.get(key(o))
         if hit is not None:
-            out[o] = hit[col]
+            out[o] = hit
         else:
             missing.append(o)
     if missing:
+        hc = _cached_hotcache(index_dir, split_id)
         _PHRASE_CTR["bm_chunk_fetches" if col == "pos_bm" else "pos_chunk_fetches"] += len(missing)
         if bucket is not None:
             bkt = int(bucket)
@@ -427,7 +368,7 @@ def _read_split_postings_chunks(
                 chunk_ords=missing, chunk_col=col,
             )
         else:
-            dset = _cached_postings_dataset(index_dir, split_id)
+            dset = _cached_dataset(index_dir, "postings", split_id)
             cond = (
                 (pads.field("field") == field)
                 & (pads.field("term") == term)
@@ -451,12 +392,7 @@ def _read_split_postings_chunks(
                     f"{col} chunk {field}:{term}#{o} missing in {split_id}"
                 )
             out[o] = sub[col].iloc[0]
-            if cap:
-                _postings_cache_put(
-                    (index_dir, split_id, epoch, field, term, "__pchunk__", o),
-                    {col: out[o]},
-                    cap,
-                )
+            SPLIT_CACHE.put(key(o), out[o], _ROW_BYTES + len(out[o]))
     return [out[o] for o in ords]
 
 
@@ -562,16 +498,13 @@ def _hotcache_read_postings(
     return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
 
 
-# Posting-row cache: (index_dir, split_id, epoch, field, term) → the
-# term's PostingRow, or _ABSENT.
+# Posting-row cache entries ("post"): the term's PostingRow, or _ABSENT.
 # The byte-range/hotcache analog (quickwit-storage/src/cache,
 # CachingDirectory): hot terms' posting blobs are read from parquet once per
-# worker, then served from memory across queries.  Bounded by payload bytes
-# (QW_POSTINGS_CACHE_MB per python worker, 0 disables); absent terms are
+# process, then served from memory across queries; absent terms are
 # negatively cached so they never re-scan.
-_WORKER_POSTINGS_CACHE: dict = {}
-_POSTINGS_CACHE_BYTES = [0]
 _ABSENT: dict = {}  # negative-cache entry: the split has no row for the term
+_ROW_BYTES = 256  # per-entry metadata floor of a posting row or chunk
 
 
 class PostingRecords(dict):
@@ -608,31 +541,13 @@ def _posting_map(pdf: pd.DataFrame) -> PostingRecords:
     return PostingRecords(((r.field, r.term), r) for r in rows)
 
 
-def _postings_cache_cap() -> int:
-    return int(os.environ.get("QW_POSTINGS_CACHE_MB", "128")) << 20
-
-
 def _postings_nbytes(rec: dict) -> int:
-    n = 256  # per-row metadata floor
+    n = _ROW_BYTES
     for col in ("blob", "positions", "pos_bm"):
         v = rec.get(col)
         if v is not None and not isinstance(v, float):
             n += len(v)
     return n
-
-
-def _postings_cache_put(key, rec: dict, cap: int) -> None:
-    nb = _postings_nbytes(rec)
-    if nb > cap:  # a single oversized entry would just thrash
-        return
-    old = _WORKER_POSTINGS_CACHE.pop(key, None)
-    if old is not None:
-        _POSTINGS_CACHE_BYTES[0] -= _postings_nbytes(old)
-    _WORKER_POSTINGS_CACHE[key] = rec
-    _POSTINGS_CACHE_BYTES[0] += nb
-    while _POSTINGS_CACHE_BYTES[0] > cap and _WORKER_POSTINGS_CACHE:
-        oldest = next(iter(_WORKER_POSTINGS_CACHE))
-        _POSTINGS_CACHE_BYTES[0] -= _postings_nbytes(_WORKER_POSTINGS_CACHE.pop(oldest))
 
 
 def _read_split_postings(
@@ -645,8 +560,8 @@ def _read_split_postings(
     """In-task warmup read (leaf.rs:125-193 analog): exactly the query
     terms' posting rows of one split, row-group pruned by the bucket column
     (files are bucket-sorted in 4k-row groups); per-term records are
-    cached worker-side (see _WORKER_POSTINGS_CACHE), so a warm read is one
-    dict lookup per term.
+    cached ("post" entries of SPLIT_CACHE), so a warm read is one cache
+    lookup per term.
 
     ``need_positions=False`` (no phrase in the query) drops the
     ``positions`` AND ``pos_bm`` COLUMNS from the scan — 'read exactly
@@ -658,19 +573,11 @@ def _read_split_postings(
     replaced) the first time a phrase query needs the same term."""
     import pyarrow.dataset as pads
 
-    cap = _postings_cache_cap()
-    hc = _cached_hotcache(index_dir, split_id)
-    if cap:
-        epoch = (
-            hc.token if hc is not None
-            else _split_epoch(index_dir, "postings", split_id)
-        )
-    else:
-        epoch = 0.0
+    epoch = split_epoch(index_dir, split_id)
     out = PostingRecords()
     missing: list[tuple[str, str]] = []
     for key in terms:
-        hit = _WORKER_POSTINGS_CACHE.get((index_dir, split_id, epoch, *key)) if cap else None
+        hit = SPLIT_CACHE.get((index_dir, split_id, epoch, "post", *key))
         if hit is _ABSENT:
             continue
         if hit is not None and (not need_positions or "positions" in hit):
@@ -678,13 +585,14 @@ def _read_split_postings(
         else:
             missing.append(key)
     if missing:
+        hc = _cached_hotcache(index_dir, split_id)
         if hc is not None:
             pdf = _hotcache_read_postings(
                 hc, storage_for(index_dir), buckets, missing,
                 need_positions=need_positions,
             )
         else:
-            dset = _cached_postings_dataset(index_dir, split_id)
+            dset = _cached_dataset(index_dir, "postings", split_id)
             cond = None
             for f_, t_ in missing:
                 c = (pads.field("field") == f_) & (pads.field("term") == t_)
@@ -718,14 +626,11 @@ def _read_split_postings(
                     ) from e
         found = _posting_map(pdf)
         for key in missing:
-            rec = found.get(key)
-            if cap:
-                _postings_cache_put(
-                    (index_dir, split_id, epoch, *key),
-                    _ABSENT if rec is None else rec,
-                    cap,
-                )
-            if rec is not None:
+            rec = found.get(key, _ABSENT)
+            SPLIT_CACHE.put(
+                (index_dir, split_id, epoch, "post", *key), rec, _postings_nbytes(rec)
+            )
+            if rec is not _ABSENT:
                 out[key] = rec
     return out
 
@@ -734,12 +639,10 @@ def _read_split_postings(
 # The reference pays ~one FST probe per split to learn a term is absent;
 # our per-split miss is a whole Spark task, so the root drops splits that
 # provably lack a required term BEFORE the leaf job is scheduled.  Blooms
-# are loaded once per split (immutable; byte-capped LRU keyed on the
-# split's update_ts) and probed in memory — a rare-term query over 10^4
-# splits schedules O(matching splits) tasks, not O(splits).
-
-_TERMBLOOM_CACHE: dict = {}
-_TERMBLOOM_CACHE_BYTES = [0]
+# are loaded once per split ("bloom" entries keyed on the split's catalog
+# update_ts, which the driver holds without a probe) and probed in memory
+# — a rare-term query over 10^4 splits schedules O(matching splits) tasks,
+# not O(splits).
 
 
 def _ast_may_match(node, probe) -> bool:
@@ -789,17 +692,15 @@ def _load_termblooms(index_dir: str, splits: list[SplitMetadata]) -> dict:
     from ..index.termbloom import TermBloom, bloom_path
 
     st = storage_for(index_dir)
-    cap = int(os.environ.get("QW_TERMBLOOM_CACHE_MB", "256")) << 20
+    key = lambda s: (index_dir, s.split_id, s.update_ts, "bloom")  # noqa: E731
     out: dict = {}
     missing = []
     for s in splits:
-        key = (index_dir, s.split_id, s.update_ts)
-        try:
-            hit = _TERMBLOOM_CACHE.pop(key)  # pop+reinsert = LRU touch
-            _TERMBLOOM_CACHE[key] = hit
-            out[s.split_id] = hit
-        except KeyError:  # absent, or a racing client evicted it
+        hit = SPLIT_CACHE.get(key(s), _ABSENT)
+        if hit is _ABSENT:
             missing.append(s)
+        else:
+            out[s.split_id] = hit
 
     def load(s):
         try:
@@ -807,22 +708,14 @@ def _load_termblooms(index_dir: str, splits: list[SplitMetadata]) -> dict:
         except (FileNotFoundError, OSError, ValueError):
             return s, None
 
-    if missing:
-        if len(missing) > 1:
-            with ThreadPoolExecutor(max_workers=min(32, len(missing))) as pool:
-                loaded = list(pool.map(load, missing))
-        else:
-            loaded = [load(missing[0])]
-        for s, tb in loaded:
-            out[s.split_id] = tb
-            _TERMBLOOM_CACHE[(index_dir, s.split_id, s.update_ts)] = tb
-            _TERMBLOOM_CACHE_BYTES[0] += tb.nbytes if tb is not None else 64
-        while _TERMBLOOM_CACHE_BYTES[0] > cap and _TERMBLOOM_CACHE:
-            try:  # concurrent clients share this cache; a racing pop is fine
-                gone = _TERMBLOOM_CACHE.pop(next(iter(_TERMBLOOM_CACHE)))
-            except (KeyError, StopIteration, RuntimeError):
-                continue
-            _TERMBLOOM_CACHE_BYTES[0] -= gone.nbytes if gone is not None else 64
+    if len(missing) > 1:
+        with ThreadPoolExecutor(max_workers=min(32, len(missing))) as pool:
+            loaded = list(pool.map(load, missing))
+    else:
+        loaded = [load(s) for s in missing]
+    for s, tb in loaded:
+        out[s.split_id] = tb
+        SPLIT_CACHE.put(key(s), tb, tb.nbytes if tb is not None else 64)
     return out
 
 
@@ -830,12 +723,12 @@ def prune_splits_by_terms(
     index_dir: str, splits: list[SplitMetadata], ast, gstats
 ) -> tuple[list[SplitMetadata], int]:
     """Drop splits that provably lack a required term.  Returns (kept,
-    n_pruned).  Three gates before any sidecar read: the kill switch, a
-    global-df zero check (a required term absent from the WHOLE index
-    answers the query with no splits at all), and the min-splits /
-    selectivity gates (below a handful of splits the leaf is in-process
-    and pruning can't pay; hot-term queries match everywhere)."""
-    if not splits or os.environ.get("QW_TERMPRUNE", "1") != "1":
+    n_pruned).  Two gates before any sidecar read: a global-df zero
+    check (a required term absent from the WHOLE index answers the query
+    with no splits at all), and the min-splits / selectivity gates (below
+    a handful of splits the leaf is in-process and pruning can't pay;
+    hot-term queries match everywhere)."""
+    if not splits:
         return splits, 0
     df_map = gstats["df"]
     if not _ast_may_match(ast, lambda key: df_map.get(key, 0) > 0):

@@ -23,6 +23,7 @@ from quickwit_spark.index.builder import build_index
 from quickwit_spark.index.catalog import PUBLISHED, Catalog
 from quickwit_spark.index.hotcache import hotcache_path
 from quickwit_spark.index.merge import garbage_collect, run_merge_pipeline
+from quickwit_spark.search.cache import SPLIT_CACHE
 from quickwit_spark.search.executor import search, split_open_read_counts
 from quickwit_spark.search.request import SearchRequest
 from quickwit_spark.storage import storage_for
@@ -47,16 +48,6 @@ def _hits_key(resp):
     return resp.num_hits, [
         (h["conv_id"], h["turn_idx"], round(h["score"], 9)) for h in resp.hits
     ]
-
-
-def _clear_worker_caches():
-    ex._WORKER_FF_CACHE.clear()
-    ex._WORKER_DSET_CACHE.clear()
-    ex._WORKER_POSTINGS_CACHE.clear()
-    ex._POSTINGS_CACHE_BYTES[0] = 0
-    ex._WORKER_HOTCACHE_CACHE.clear()
-    ex._HOTCACHE_CACHE_BYTES[0] = 0
-    ex._HOTCACHE_PROBE_MEMO.clear()
 
 
 @pytest.fixture(scope="module")
@@ -113,7 +104,7 @@ def test_cold_open_is_two_reads(spark, twin_indexes, monkeypatch):
     monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", "64")  # keep leaf in-process
     n_splits = len(Catalog(sim_dir).splits([PUBLISHED]))
     search(spark, sim_dir, SearchRequest("the deploy"))  # plan/catalog warm
-    _clear_worker_caches()
+    SPLIT_CACHE.clear()
     split_open_read_counts(reset=True)
     resp = search(spark, sim_dir, SearchRequest("the deploy"))
     assert resp.num_hits > 0
@@ -133,7 +124,7 @@ def test_hotcache_results_match_local_twin(spark, twin_indexes, monkeypatch):
     bit-identical to the mmap'd local path."""
     local_dir, sim_dir = twin_indexes
     monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", "64")
-    _clear_worker_caches()
+    SPLIT_CACHE.clear()
     for req in QUERIES:
         assert _hits_key(search(spark, sim_dir, req)) == _hits_key(
             search(spark, local_dir, req)
@@ -149,7 +140,7 @@ def test_missing_hotcache_falls_back_to_listing(spark, twin_indexes, monkeypatch
     st = storage_for(sim_dir)
     before = {req.query: _hits_key(search(spark, sim_dir, req)) for req in QUERIES}
     st.delete_dir(os.path.join(sim_dir, "hotcache"))
-    _clear_worker_caches()
+    SPLIT_CACHE.clear()
     split_open_read_counts(reset=True)
     for req in QUERIES:
         assert _hits_key(search(spark, sim_dir, req)) == before[req.query], req.query
@@ -169,10 +160,10 @@ def test_forced_hotcache_on_local(spark, tmp_path, monkeypatch):
         hotcache_path(idx, Catalog(idx).splits()[0].split_id)
     )
     monkeypatch.delenv("QW_FORCE_HOTCACHE")
-    _clear_worker_caches()
+    SPLIT_CACHE.clear()
     baseline = {req.query: _hits_key(search(spark, idx, req)) for req in QUERIES}
     monkeypatch.setenv("QW_FORCE_HOTCACHE", "1")
-    _clear_worker_caches()
+    SPLIT_CACHE.clear()
     for req in QUERIES:
         assert _hits_key(search(spark, idx, req)) == baseline[req.query], req.query
 
@@ -217,7 +208,7 @@ def test_big_sidecar_externalizes_fastfields(spark, tmp_path, monkeypatch):
     assert ff_total > 0
     # cold scored open: 1 HEAD + 1 GET (footer part) + 1 GET (payload)
     search(spark, sim_dir, SearchRequest("the deploy"))  # catalog/plan warm
-    _clear_worker_caches()
+    SPLIT_CACHE.clear()
     split_open_read_counts(reset=True)
     resp = search(spark, sim_dir, SearchRequest("the deploy"))
     assert resp.num_hits > 0
@@ -225,7 +216,7 @@ def test_big_sidecar_externalizes_fastfields(spark, tmp_path, monkeypatch):
     assert counts["list"] == 0 and counts["footer"] == 0, counts
     assert counts["head"] <= n_splits, counts
     assert counts["get"] <= 2 * n_splits, counts
-    # warm: zero further reads (payload cached with the sidecar)
+    # warm: zero further reads (the parsed fast fields are cached)
     split_open_read_counts(reset=True)
     search(spark, sim_dir, SearchRequest("the deploy"))
     counts = split_open_read_counts()
@@ -257,7 +248,7 @@ def test_hotcache_serves_chunked_bitmaps(spark, tmp_path_factory, monkeypatch):
     monkeypatch.delenv("QW_POS_CHUNK_BYTES")
     monkeypatch.delenv("QW_BM_CHUNK_BYTES")
     monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", "64")
-    _clear_worker_caches()
+    SPLIT_CACHE.clear()
     saw_chunked = False
     for req in (SearchRequest('"the deploy"'), SearchRequest('"the error"')):
         got = _hits_key(search(spark, sim_dir, req))

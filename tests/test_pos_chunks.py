@@ -27,6 +27,7 @@ from quickwit_spark.functions.codec import (
 )
 from quickwit_spark.index.builder import build_index
 from quickwit_spark.index.merge import garbage_collect, run_merge_pipeline
+from quickwit_spark.search.cache import SPLIT_CACHE
 from quickwit_spark.search.executor import search
 from quickwit_spark.search.request import SearchRequest
 from quickwit_spark.storage import storage_for
@@ -52,16 +53,6 @@ def _hits_key(resp):
     return resp.num_hits, [
         (h["conv_id"], h["turn_idx"], round(h["score"], 9)) for h in resp.hits
     ]
-
-
-def _clear_worker_caches():
-    ex._WORKER_FF_CACHE.clear()
-    ex._WORKER_DSET_CACHE.clear()
-    ex._WORKER_POSTINGS_CACHE.clear()
-    ex._POSTINGS_CACHE_BYTES[0] = 0
-    ex._WORKER_HOTCACHE_CACHE.clear()
-    ex._HOTCACHE_CACHE_BYTES[0] = 0
-    ex._HOTCACHE_PROBE_MEMO.clear()
 
 
 def test_chunk_roundtrip_property():
@@ -143,7 +134,7 @@ def test_chunk_rows_written(twin_builds):
 
 def test_chunked_results_identical(spark, twin_builds):
     plain, chunked, spilled, sim = twin_builds
-    _clear_worker_caches()
+    SPLIT_CACHE.clear()
     for req in QUERIES:
         want = _hits_key(search(spark, plain, req))
         assert _hits_key(search(spark, chunked, req)) == want, req.query
@@ -160,7 +151,7 @@ def test_chunked_ranged_units_identical(spark, twin_builds, monkeypatch):
     monkeypatch.setenv("QW_LEAF_HEAVY_ROWS", "0")
     monkeypatch.setenv("QW_LEAF_RANGE_DOCS", "64")
     monkeypatch.setattr(ex.root, "_contains_phrase", lambda asts: True)
-    _clear_worker_caches()
+    SPLIT_CACHE.clear()
     for req in QUERIES:
         assert _hits_key(search(spark, chunked, req)) == baseline[req.query], req.query
         assert _hits_key(search(spark, sim, req)) == baseline[req.query], req.query
@@ -180,7 +171,7 @@ def test_chunked_merge_pipeline_identical(spark, twin_builds):
             garbage_collect(d)
     finally:
         _os.environ.pop("QW_POS_CHUNK_BYTES", None)
-    _clear_worker_caches()
+    SPLIT_CACHE.clear()
     for req in QUERIES:
         assert _hits_key(search(spark, chunked, req)) == _hits_key(
             search(spark, plain, req)

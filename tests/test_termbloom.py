@@ -25,6 +25,7 @@ from quickwit_spark.index.termbloom import (
     build_bloom,
     fold_or,
 )
+from quickwit_spark.search import root
 from quickwit_spark.search.executor import (
     _ast_may_match,
     explain,
@@ -111,9 +112,9 @@ def test_rare_term_prunes_splits_and_results_exact(spark, built, monkeypatch):
     # results identical with pruning disabled
     for q in ("zzquuxneedle", "the zzquuxneedle", '"the error"', "deploy"):
         on = search(spark, index_dir, SearchRequest(q))
-        monkeypatch.setenv("QW_TERMPRUNE", "0")
-        off = search(spark, index_dir, SearchRequest(q))
-        monkeypatch.delenv("QW_TERMPRUNE")
+        with monkeypatch.context() as m:
+            m.setattr(root, "prune_splits_by_terms", lambda _d, splits, *_: (splits, 0))
+            off = search(spark, index_dir, SearchRequest(q))
         assert on.num_hits == off.num_hits, q
         assert [
             (h["split_id"], h["doc_id"], h["score"]) for h in on.hits

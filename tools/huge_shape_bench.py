@@ -41,13 +41,6 @@ def main() -> None:
     ap.add_argument("--conversations", type=int, default=500_000)
     args = ap.parse_args()
 
-    # hot-set cache sizing (must land BEFORE the JVM starts — python
-    # workers inherit its env): the two hot stopword terms' bitmap chunks
-    # alone are ~118 MB at this shape, so the default 128 MB postings
-    # cache thrashes and every query re-fetches ~260 chunk rows.  A real
-    # deployment sizes the worker cache to its hot set the same way.
-    os.environ.setdefault("QW_POSTINGS_CACHE_MB", "512")
-
     from bench import get_spark, probe_page_fault_gbps
     from quickwit_spark.config import transcripts_config
     from quickwit_spark.index.builder import build_index
