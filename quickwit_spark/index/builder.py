@@ -208,9 +208,9 @@ def _paths(index_dir: str) -> dict[str, str]:
         # material for the index-level term-stats deltas (see
         # _write_termstats_delta); GC'd with the split like any table
         "termstats": os.path.join(index_dir, "termstats"),
-        # single-read cold-open sidecar (file listing + parquet footer
-        # tails + full fastfields payload; hotcache.py); GC'd with the
-        # split like any table
+        # single-read cold-open sidecar on object stores (file listing +
+        # parquet footers + small fastfields payloads; hotcache.py); GC'd
+        # with the split like any table
         "hotcache": os.path.join(index_dir, "hotcache"),
         # per-split term-presence Bloom (termbloom.py) — driver-side split
         # pruning for selective queries; GC'd with the split
@@ -799,8 +799,6 @@ class _SplitAccumulator:
         paths: dict,
         chunk_docs: int,
         pos_chunk_bytes: int | None = None,
-        write_hotcache: bool = True,
-        embed_ff_max: int | None = None,
         posbm_min_total_tf: int | None = None,
         bm_chunk_bytes: int | None = None,
     ):
@@ -810,8 +808,6 @@ class _SplitAccumulator:
         self.pos_chunk_bytes = (
             pos_chunk_bytes if pos_chunk_bytes is not None else _pos_chunk_bytes()
         )
-        self.write_hotcache = write_hotcache
-        self.embed_ff_max = embed_ff_max
         self.posbm_min_total_tf = (
             posbm_min_total_tf
             if posbm_min_total_tf is not None
@@ -1408,13 +1404,13 @@ class _SplitAccumulator:
             ],
         }
         # single-read cold-open sidecar, written while this task still
-        # holds the split (split.rs:103-180 bundle-finalize analog)
-        if self.write_hotcache:
+        # holds the split (split.rs:103-180 bundle-finalize analog) — on
+        # object stores only: a local open from a listing costs syscalls,
+        # not round trips
+        if not storage_for(self.paths["hotcache"]).is_local:
             from .hotcache import write_split_hotcache
 
-            write_split_hotcache(
-                self.paths, self.split_id, embed_ff_max=self.embed_ff_max
-            )
+            write_split_hotcache(self.paths, self.split_id)
         # per-split term-presence Bloom (built from the termstats sidecar
         # just written) — the driver's FST-probe analog for split pruning
         from .termbloom import write_split_termbloom
@@ -1448,18 +1444,6 @@ def make_split_builder(
     # start-time env, so reading QW_POS_CHUNK_BYTES in-task would ignore
     # the driver's setting
     pos_chunk_bytes = _pos_chunk_bytes()
-    # hotcache sidecars serve the OBJECT-STORE read path only (local reads
-    # keep mmap'd datasets; split_io._hotcache_enabled) — don't pay the
-    # per-split fastfields+footer re-read and duplicate bytes on local
-    # filesystems unless the forced-read flag is on (captured driver-side,
-    # same env-freeze reason as above)
-    write_hotcache = (
-        not storage_for(paths["hotcache"]).is_local
-        or os.environ.get("QW_FORCE_HOTCACHE") == "1"
-    )
-    from .hotcache import _embed_ff_max
-
-    embed_ff_max = _embed_ff_max()  # captured driver-side (env freeze)
     posbm_min_total_tf = _posbm_min_total_tf()  # same env-freeze capture
     bm_chunk_bytes = _bm_chunk_bytes()
 
@@ -1513,8 +1497,6 @@ def make_split_builder(
                     cur = _SplitAccumulator(
                         sid, config, paths, chunk_docs,
                         pos_chunk_bytes=pos_chunk_bytes,
-                        write_hotcache=write_hotcache,
-                        embed_ff_max=embed_ff_max,
                         posbm_min_total_tf=posbm_min_total_tf,
                         bm_chunk_bytes=bm_chunk_bytes,
                     )

@@ -498,10 +498,9 @@ def execute_merge_round(
     # --- hotcache sidecars for the new splits (single-read cold open) -------
     # written BEFORE the failpoint/stage so a crash leaves the sidecar as
     # invisible garbage with the rest of the unpublished split dirs; a
-    # small thread pool amortizes the per-part tail GETs.  Skipped on
-    # local filesystems (the read path is object-store-only; see
-    # builder.make_split_builder's write_hotcache capture)
-    if not storage.is_local or os.environ.get("QW_FORCE_HOTCACHE") == "1":
+    # small thread pool amortizes the per-part footer reads.  Skipped on
+    # local filesystems, which open splits from a listing
+    if not storage.is_local:
         from concurrent.futures import ThreadPoolExecutor
 
         from .hotcache import write_split_hotcache

@@ -17,7 +17,7 @@ Plan shape (mirrors SURVEY.md §3.1; as built):
    ``_leaf_bins``; the SearchJob list of root.rs:280-284), or the same
    task body in the driver for tiny indexes and light queries
    (``_leaf_runs_in_process``).  Each unit (``_score_unit``, shared with
-   the stream runner) opens its split with worker-cached pyarrow handles,
+   the stream runner) opens its split through its worker-cached footers,
    reads ONE map of the batch's terms' posting rows (bucket + row-group
    pruned — the warmup analog, leaf.rs:125-193) and the split's
    fast-field blobs, then runs each query's vectorized numpy scorer on
@@ -90,20 +90,14 @@ from .split_io import (
     LAST_PHRASE_COUNTERS,
     _PHRASE_CTR,
     _ast_may_match,
-    _cached_dataset,
     _cached_fastfields,
-    _cached_hotcache,
     _fetch_doc_fields,
-    _hotcache_enabled,
-    _hotcache_fetch_docs,
-    _hotcache_read_postings,
     _limit_arrow_threads,
     _load_termblooms,
     _phrase_ctr,
     _postings_nbytes,
     _read_split_postings,
     _read_split_postings_chunks,
-    _stat_minmax,
     _term_prunable,
     prune_splits_by_terms,
     take_phrase_counters,

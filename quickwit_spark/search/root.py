@@ -54,9 +54,7 @@ from .plan import (
 from .cache import SPLIT_CACHE
 from .split_io import (
     LAST_PHRASE_COUNTERS,
-    _cached_dataset,
     _cached_fastfields,
-    _cached_hotcache,
     _fetch_doc_fields,
     _limit_arrow_threads,
     _phrase_ctr,
@@ -919,14 +917,7 @@ def _fetch_page_fields(
             by_split.setdefault(sid, set()).add(did)
 
     def fetch_one(item):
-        sid, ids = item
-        # hotcache presence doubles as the GC-race liveness probe (its own
-        # reads raise SplitVanishedError); only the listing path needs the
-        # explicit dataset check
-        if _cached_hotcache(index_dir, sid) is None and (
-            _cached_dataset(index_dir, "docs", sid) is None
-        ):  # GC raced us
-            raise SplitVanishedError(f"split vanished during fetch: {sid}")
+        sid, ids = item  # a split GC raced us to raises SplitVanishedError
         return sid, _fetch_doc_fields(index_dir, sid, sorted(ids), cols)
 
     items = list(by_split.items())

@@ -1,6 +1,8 @@
-"""Split I/O: the split epoch, hotcache-backed and dataset reads,
-positions/bitmap chunk fetches, term-presence Bloom pruning, and the
-phrase-path observability counters.
+"""Split I/O: the split epoch, the one split read path (``SplitFooters``:
+every postings, docs and fast-field read goes through a split's parsed
+parquet footers, whether they came from the hotcache sidecar or a
+listing), positions/bitmap chunk fetches, term-presence Bloom pruning,
+and the phrase-path observability counters.
 
 Everything here runs inside leaf tasks (or in the driver: in-process
 leaves, page fetches, Bloom pruning) and is deliberately cache-heavy:
@@ -17,79 +19,19 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from ..storage import storage_for
 from ..functions.codec import decode_u32_column
 from ..index.catalog import SplitMetadata
+from ..index.hotcache import hotcache_path, parse_hotcache
 from .cache import SPLIT_CACHE
 from .parser import BoolQuery, PhraseQuery, TermQuery
-from .plan import SplitVanishedError, _count_read, _split_files, open_index
+from .plan import SplitVanishedError, _count_read, open_index
 
 
-def _fetch_doc_fields(
-    index_dir: str, split_id: str, doc_ids, cols: list[str]
-) -> pd.DataFrame:
-    """Doc-store read of a split's winning docs (fetch_docs.rs analog):
-    pyarrow dataset over the split dir with a doc_id filter — docs files are
-    doc_id-sorted in 8k-row groups, so row-group statistics prune to a
-    handful of groups.  Dataset handles are cached per split (immutable)."""
-    import pyarrow.dataset as pads
-
-    hc = _cached_hotcache(index_dir, split_id)
-    if hc is not None:
-        return _hotcache_fetch_docs(hc, storage_for(index_dir), doc_ids, cols)
-    dset = _cached_dataset(index_dir, "docs", split_id)
-    if dset is None:
-        return pd.DataFrame(columns=cols)
-    try:
-        table = dset.to_table(
-            columns=cols,
-            filter=pads.field("doc_id").isin([int(x) for x in doc_ids]),
-        )
-    except FileNotFoundError as e:
-        # the dataset handle was built from a file listing that a
-        # concurrent merge-replace + GC has since deleted — surface the
-        # vanished-split protocol so the root re-plans (root.rs:179-188)
-        raise SplitVanishedError(
-            f"split vanished during doc fetch: {split_id}"
-        ) from e
-    return table.to_pandas()
-
-
-def _hotcache_fetch_docs(hc, st, doc_ids, cols: list[str]) -> pd.DataFrame:
-    """Doc-store fetch through the hotcache's cached footers: doc_id
-    row-group stats prune (files are doc_id-sorted in 8k-row groups), the
-    selected groups are ranged-read with column projection — zero LISTs
-    and zero footer GETs."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    ids = sorted({int(x) for x in doc_ids})
-    read_cols = cols if "doc_id" in cols else [*cols, "doc_id"]
-    parts = []
-    for name, _size in hc.files("docs"):
-        try:
-            pf = hc.parquet_file(st, "docs", name)
-            md = pf.metadata
-            idx = {md.schema.column(j).name: j for j in range(md.num_columns)}
-            groups = []
-            for g in range(md.num_row_groups):
-                mm = _stat_minmax(md.row_group(g).column(idx["doc_id"]).statistics)
-                if mm is not None and not any(mm[0] <= i <= mm[1] for i in ids):
-                    continue
-                groups.append(g)
-            if not groups:
-                continue
-            tbl = pf.read_row_groups(groups, columns=read_cols)
-        except (FileNotFoundError, OSError) as e:
-            raise SplitVanishedError(
-                f"split vanished during doc fetch: {hc.split_id}"
-            ) from e
-        tbl = tbl.filter(pc.is_in(tbl.column("doc_id"), value_set=pa.array(ids)))
-        parts.append(tbl.select(cols).to_pandas())
-    if not parts:
-        return pd.DataFrame(columns=cols)
-    return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
 # Per-worker phrase-path observability counters (judge-visible via the
 # __counters__ leaf records -> take_phrase_counters(), surfaced in bench
 # JSON): which verification path each phrase term took (index-time bitmap
@@ -143,46 +85,38 @@ def _limit_arrow_threads():
 
 # -- split-open storage-read accounting --------------------------------------
 # Counts the storage round trips a split open performs BEFORE the first
-# postings data byte (HEAD/GET/LIST/parquet-footer reads).  The hotcache
-# path costs exactly 2 per cold split (1 HEAD epoch probe + 1 hotcache
-# GET); the listing path costs 1 epoch stat + 1 LIST per table + a footer
-# GET per postings part.  Tests and the BASELINE.md cold-open evidence
-# read these.
-def _hotcache_enabled(st) -> bool:
-    """Hotcache serves the read path on object stores (where round trips
-    dominate a cold open); local filesystems keep mmap'd pyarrow datasets.
-    QW_FORCE_HOTCACHE=1 forces it on local paths (tests / A-B timing)."""
-    return (not st.is_local) or os.environ.get("QW_FORCE_HOTCACHE") == "1"
-
-
+# postings data byte (HEAD/GET/LIST/parquet-footer reads).  A sidecar open
+# costs exactly 2 per cold split (1 HEAD epoch probe + 1 hotcache GET); an
+# open from a listing costs 1 epoch probe + 1 LIST per table + 1 footer
+# read per part on first use; a fast-field part read from its own file
+# (not inline in the sidecar) adds 1 GET.  Tests and the BASELINE.md
+# cold-open evidence read these.
+#
 # Every split read below is cached in the process's one SPLIT_CACHE
 # (search/cache.py) under ``(index_dir, split_id, epoch, kind, ...)``:
-#   "epoch"  the memoized epoch itself (epoch slot None)
-#   "hc"     the parsed hotcache sidecar (object stores)
-#   "dset"   a pyarrow dataset handle per table (local disk)
-#   "ff"     the split's FastFields, decodes charged as they are memoized
-#   "post"   one term's posting row, or _ABSENT
-#   "chunk"  one positions / bitmap chunk payload
-#   "doc"    one stored-doc row of a page fetch (root._fetch_page_fields)
-#   "bloom"  the term-presence Bloom (epoch: the catalog's update_ts)
+#   "epoch"   the memoized epoch itself (epoch slot None)
+#   "footers" the split's SplitFooters, parsed footers charged as they load
+#   "ff"      the split's FastFields, decodes charged as they are memoized
+#   "post"    one term's posting row, or _ABSENT
+#   "chunk"   one positions / bitmap chunk payload
+#   "doc"     one stored-doc row of a page fetch (root._fetch_page_fields)
+#   "bloom"   the term-presence Bloom (epoch: the catalog's update_ts)
 EPOCH_TTL_S = 2.0  # a split's epoch is re-probed at most this often
 _EPOCH_BYTES = 128  # charge of one memoized epoch
-_HANDLE_BYTES = 16 << 10  # estimated parsed footer + listing per dataset file
+_PART_BYTES = 256  # charge floor of one listed part
 
 
 def split_epoch(index_dir: str, split_id: str, with_sidecar: bool = False):
     """The split's change-detection token, folded into every cache key.
     Published split dirs never mutate, but deterministic build ids mean a
-    delete-and-rebuild at the same path REUSES split ids.  With a hotcache
-    sidecar on the read path the token is the sidecar's (mtime_ns, size) —
-    one HEAD; otherwise one stat of the split's postings dir (local disk),
-    or on stores without directory mtimes one LIST (a fingerprint of the
+    delete-and-rebuild at the same path REUSES split ids.  On object
+    stores the token is the hotcache sidecar's (mtime_ns, size) — one
+    HEAD; otherwise one stat of the split's postings dir (local disk), or
+    on stores without directory mtimes one LIST (a fingerprint of the
     listing).  Resolved once per split per EPOCH_TTL_S: the opens of one
     query share one probe, and a rebuild in place shows within the TTL.
     ``with_sidecar=True`` returns ``(epoch, has_sidecar)``."""
     import pyarrow.fs as pafs
-
-    from ..index.hotcache import hotcache_path
 
     key = (index_dir, split_id, None, "epoch")
     now = time.monotonic()
@@ -190,7 +124,7 @@ def split_epoch(index_dir: str, split_id: str, with_sidecar: bool = False):
     if memo is None or now >= memo[0]:
         st = storage_for(index_dir)
         epoch, sidecar = None, False
-        if _hotcache_enabled(st):
+        if not st.is_local:  # local builds write no sidecar
             _count_read("head")
             info = st.info(hotcache_path(index_dir, split_id))
             if info.type == pafs.FileType.File:
@@ -208,26 +142,203 @@ def split_epoch(index_dir: str, split_id: str, with_sidecar: bool = False):
     return (memo[1], memo[2]) if with_sidecar else memo[1]
 
 
-def _cached_hotcache(index_dir: str, split_id: str):
-    """The split's parsed hotcache sidecar, or None (local storage, or a
-    split written before hotcache existed → caller falls back to the
-    listing path).  Cold cost: ONE HEAD (the epoch) + ONE GET."""
-    from ..index.hotcache import Hotcache, hotcache_path
+# Row-group statistics of these columns are what reads prune with
+_KEY_COLUMNS = ("bucket", "field", "term", "chunk_ord", "doc_id")
 
+
+def _row_group_stats(md) -> dict:
+    """key column → (mins, maxs, has_min_max) arrays over the part's row
+    groups.  Footers never change, so this walk of
+    ``md.row_group(g).column(i).statistics`` (~35 µs per row group) runs
+    once per part, and every read prunes with array compares."""
+    idx = {md.schema.column(j).path: j for j in range(md.num_columns)}
+    n = md.num_row_groups
+    out = {}
+    for col in _KEY_COLUMNS:
+        if col not in idx:
+            continue
+        lo, hi, has = [None] * n, [None] * n, np.zeros(n, bool)
+        for g in range(n):
+            s = md.row_group(g).column(idx[col]).statistics
+            if s is not None and s.has_min_max:
+                lo[g], hi[g], has[g] = s.min, s.max, True
+        if not has.any():
+            continue  # nothing to prune with
+        fill = lo[int(np.argmax(has))]
+        out[col] = (
+            np.array([fill if v is None else v for v in lo]),
+            np.array([fill if v is None else v for v in hi]),
+            has,
+        )
+    return out
+
+
+def _may_hold(stats, values) -> np.ndarray:
+    """Per row group: may it hold one of ``values`` (some value within
+    [min, max], or no statistics)?"""
+    lo, hi, has = stats
+    v = np.unique(list(values))
+    if not len(v):
+        return ~has
+    i = np.searchsorted(v, lo)
+    hit = i < len(v)
+    hit[hit] = v[i[hit]] <= hi[hit]
+    return hit | ~has
+
+
+class SplitPart:
+    """One parquet file of a split: its path, its footer (bytes from the
+    sidecar, or read from the file on first use) and the footer's
+    key-column statistics."""
+
+    def __init__(self, path: str, footer: bytes | None = None):
+        self.path = path
+        self._footer = footer
+        self.names: list[str] = []  # top-level arrow column names
+        self.stats: dict = {}
+        self.md = None
+        self.file = None  # object stores: the open remote file, kept
+
+    def load(self, st) -> int:
+        """Parse the footer (reading it first when the sidecar did not
+        carry it); returns the bytes the part now holds."""
+        if self._footer is None:
+            _count_read("footer")
+            with st.fs.open_input_file(st.fs_path(self.path)) as f:
+                md = pq.read_metadata(f)
+        else:
+            md = pq.read_metadata(pa.BufferReader(self._footer))
+        self.names = md.schema.to_arrow_schema().names
+        self.stats = _row_group_stats(md)
+        self.md, self._footer = md, None
+        return 2 * md.serialized_size + sum(
+            a.nbytes for arrs in self.stats.values() for a in arrs
+        )
+
+
+class SplitFooters:
+    """One split's parquet parts with their footers — the object every
+    split read goes through (hot_directory.rs's role).  Reads prune row
+    groups by the footers' statistics, read the kept groups with
+    ``ParquetFile.read_row_groups`` and leave the exact row filter to the
+    caller.  Two sources: the hotcache sidecar (object stores: its one
+    GET carries every footer, small fast fields inline) or a listing
+    (local disk, splits without a sidecar: one LIST per table, then one
+    footer read per part on first use)."""
+
+    def __init__(self, index_dir: str, split_id: str, key, parts: dict, inline: list):
+        self.split_id, self.key = split_id, key
+        self.parts = parts  # table → [SplitPart], name order
+        self.inline = inline  # whole fastfields parts carried by the sidecar
+        self.st = storage_for(index_dir)
+        self.nbytes = sum(len(b) for b in inline) + sum(
+            _PART_BYTES + len(p._footer or b"") for ps in parts.values() for p in ps
+        )
+
+    @classmethod
+    def from_sidecar(cls, index_dir: str, split_id: str, key, data: bytes):
+        parts: dict = {}
+        inline = []
+        for table, entries in parse_hotcache(data).items():
+            parts[table] = []
+            for name, _size, kind, blob in entries:
+                if kind == "full":
+                    inline.append(blob)
+                else:  # 'tail': its footer; 'ext': the part's own file
+                    path = os.path.join(index_dir, table, f"split_id={split_id}", name)
+                    parts[table].append(SplitPart(path, blob or None))
+        return cls(index_dir, split_id, key, parts, inline)
+
+    @classmethod
+    def from_listing(cls, index_dir: str, split_id: str, key):
+        st = storage_for(index_dir)
+        parts = {}
+        # docs are listed LAST: GC deletes a split's docs dir before its
+        # other tables, so a docs part still listed proves the earlier
+        # listings were whole; none left means the split is gone
+        for table in ("postings", "fastfields", "docs"):
+            _count_read("list")
+            d = os.path.join(index_dir, table, f"split_id={split_id}")
+            parts[table] = [SplitPart(p) for p in st.list_files(d)]
+        if not parts["docs"]:
+            raise SplitVanishedError(f"split vanished: {split_id} has no files")
+        return cls(index_dir, split_id, key, parts, [])
+
+    def scan(self, table: str, want: dict, columns=None, drop=()):
+        """Yield, per part of ``table``, its row groups that may hold
+        ``want`` (column → values; None prunes nothing), read with the
+        projection ``columns`` (None: all) minus ``drop``.  A part deleted
+        under the read raises SplitVanishedError."""
+        for part in self.parts.get(table, ()):
+            try:
+                if part.md is None:
+                    SPLIT_CACHE.grow(self.key, self, part.load(self.st))
+                keep = np.ones(part.md.num_row_groups, bool)
+                for col, values in want.items():
+                    if values is not None and col in part.stats:
+                        keep &= _may_hold(part.stats[col], values)
+                if not keep.any():
+                    continue
+                tbl = self._read(part, np.flatnonzero(keep).tolist(), [
+                    c for c in columns or part.names if c in part.names and c not in drop
+                ])
+            except OSError as e:  # FileNotFoundError included
+                raise SplitVanishedError(
+                    f"split vanished during {table} read: {self.split_id}"
+                ) from e
+            yield tbl
+
+    def _read(self, part: SplitPart, groups: list[int], columns: list[str]):
+        if self.st.is_local:  # a local open is a syscall: one per read
+            with self.st.fs.open_input_file(self.st.fs_path(part.path)) as f:
+                pf = pq.ParquetFile(f, metadata=part.md, pre_buffer=True)
+                return pf.read_row_groups(groups, columns=columns)
+        f = part.file
+        if f is None:  # an object-store open is a HEAD: keep the file
+            f = part.file = self.st.fs.open_input_file(self.st.fs_path(part.path))
+        pf = pq.ParquetFile(f, metadata=part.md, pre_buffer=True)
+        return pf.read_row_groups(groups, columns=columns)
+
+    def close(self) -> None:
+        """Close the kept object-store files (cache eviction calls this)."""
+        for ps in self.parts.values():
+            for p in ps:
+                if p.file is not None:
+                    p.file.close()
+                    p.file = None
+
+    def fastfields(self):
+        """The whole fastfields table (None without parts): inline parts
+        from the sidecar, the others read from their own files."""
+        _count_read("get", len(self.parts.get("fastfields", ())))
+        tables = [pq.ParquetFile(pa.BufferReader(b)).read() for b in self.inline]
+        tables += self.scan("fastfields", {})
+        if not tables:
+            return None
+        return pa.concat_tables(tables) if len(tables) > 1 else tables[0]
+
+
+def _split_footers(index_dir: str, split_id: str) -> SplitFooters:
+    """The split's SplitFooters, cached per epoch.  Cold cost: 1 HEAD +
+    1 GET with a sidecar; otherwise an open from the listing — also when
+    the sidecar is unreadable (truncated, foreign, from the future), and
+    that object is cached under the same key, so a bad sidecar costs one
+    GET per epoch, not one per read."""
     epoch, sidecar = split_epoch(index_dir, split_id, with_sidecar=True)
-    if not sidecar:
-        return None
-    key = (index_dir, split_id, epoch, "hc")
-    hc = SPLIT_CACHE.get(key)
-    if hc is None:
-        _count_read("get")
-        try:
-            data = storage_for(index_dir).read_bytes(hotcache_path(index_dir, split_id))
-            hc = Hotcache(index_dir, split_id, data, epoch)
-        except (FileNotFoundError, OSError, ValueError):
-            return None  # vanished/foreign-version sidecar → listing fallback
-        SPLIT_CACHE.put(key, hc, hc.nbytes)
-    return hc
+    key = (index_dir, split_id, epoch, "footers")
+    fo = SPLIT_CACHE.get(key)
+    if fo is None:
+        if sidecar:
+            _count_read("get")
+            try:
+                data = storage_for(index_dir).read_bytes(hotcache_path(index_dir, split_id))
+                fo = SplitFooters.from_sidecar(index_dir, split_id, key, data)
+            except (OSError, ValueError):
+                pass  # vanished or unreadable sidecar: the listing decides
+        if fo is None:
+            fo = SplitFooters.from_listing(index_dir, split_id, key)
+        SPLIT_CACHE.put(key, fo, fo.nbytes)
+    return fo
 
 
 class FastFields:
@@ -277,201 +388,67 @@ class FastFields:
 
 
 def _cached_fastfields(index_dir: str, split_id: str) -> FastFields | None:
-    """The split's FastFields: parsed from the hotcache sidecar (object
-    stores: zero further reads, or one GET of a big split's external
-    payload) or read from the fastfields files (local disk)."""
+    """The split's FastFields (None when it has no fast-field part), read
+    through its SplitFooters: zero further reads when the sidecar carries
+    them inline, one read per part otherwise.  A split deleted under the
+    read raises SplitVanishedError."""
     key = (index_dir, split_id, split_epoch(index_dir, split_id), "ff")
     ff = SPLIT_CACHE.get(key)
     if ff is not None:
         return ff
-    hc = _cached_hotcache(index_dir, split_id)
-    if hc is not None:
-        pdf = hc.fastfields_pdf()
-    else:
-        files = _split_files(index_dir, "fastfields", split_id)
-        try:
-            dset = storage_for(index_dir).dataset(files) if files else None
-            pdf = dset.to_table().to_pandas() if dset is not None else None
-        except FileNotFoundError:
-            # listed files deleted by a concurrent merge+GC before the
-            # read: same contract as an already-gone split (caller yields
-            # vanished); never cached — the next call sees the post-GC state
-            return None
-    if pdf is None:
+    tbl = _split_footers(index_dir, split_id).fastfields()
+    if tbl is None:
         return None
-    ff = FastFields(pdf, key)
+    ff = FastFields(tbl.to_pandas(), key)
     SPLIT_CACHE.put(key, ff, ff.nbytes)
     return ff
 
 
-def _cached_dataset(index_dir: str, table: str, split_id: str):
-    """pyarrow dataset handle per split and table (file listing + parquet
-    footers are parsed once per process, the split-footer-cache analog,
-    leaf.rs:47-55); None when the split has no files (not cached)."""
-    key = (index_dir, split_id, split_epoch(index_dir, split_id), "dset", table)
-    dset = SPLIT_CACHE.get(key)
-    if dset is None:
-        files = _split_files(index_dir, table, split_id)
-        if not files:
-            return None
-        if table == "postings":
-            _count_read("footer", len(files))  # the open parses each part's footer
-        dset = storage_for(index_dir).dataset(files)
-        SPLIT_CACHE.put(key, dset, _HANDLE_BYTES * len(files))
-    return dset
+def _fetch_doc_fields(
+    index_dir: str, split_id: str, doc_ids, cols: list[str]
+) -> pd.DataFrame:
+    """Doc-store read of a split's winning docs (fetch_docs.rs analog):
+    docs files are doc_id-sorted in 8k-row groups, so the footers' doc_id
+    statistics prune to a handful of groups, read with column projection
+    and filtered exactly."""
+    ids = sorted({int(x) for x in doc_ids})
+    read_cols = cols if "doc_id" in cols else [*cols, "doc_id"]
+    parts = []
+    for tbl in _split_footers(index_dir, split_id).scan("docs", {"doc_id": ids}, read_cols):
+        tbl = tbl.filter(pc.is_in(tbl.column("doc_id"), value_set=pa.array(ids)))
+        parts.append(tbl.select(cols).to_pandas())
+    if not parts:
+        return pd.DataFrame(columns=cols)
+    return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
 
 
-def _stat_minmax(col_stats):
-    if col_stats is None or not col_stats.has_min_max:
-        return None
-    return col_stats.min, col_stats.max
-
-
-def _read_split_postings_chunks(
-    index_dir: str, split_id: str, field: str, term: str, ords: list[int],
-    bucket: int | None = None,
-    col: str = "positions",
-) -> list[bytes]:
-    """Fetch specific CHUNK rows of one term — positions chunks
-    (chunk_ord >= 1, ``col='positions'``) or position-bitmap chunks
-    (chunk_ord <= -1, ``col='pos_bm'``) — worker-cached like posting
-    rows; row-group pruning on (bucket, field, term, chunk_ord) keeps the
-    read to the asked chunks, and the column projection keeps it to the
-    asked PAYLOAD (bitmap fetches never drag positions bytes).
-    ``bucket`` is the primary row's stored bucket value (saves the
-    config/catalog round trip a recompute would cost in a worker)."""
-    import pyarrow.dataset as pads
-
-    epoch = split_epoch(index_dir, split_id)
-    key = lambda o: (index_dir, split_id, epoch, "chunk", field, term, o)  # noqa: E731
-    out: dict[int, bytes] = {}
-    missing = []
-    for o in ords:
-        hit = SPLIT_CACHE.get(key(o))
-        if hit is not None:
-            out[o] = hit
-        else:
-            missing.append(o)
-    if missing:
-        hc = _cached_hotcache(index_dir, split_id)
-        _PHRASE_CTR["bm_chunk_fetches" if col == "pos_bm" else "pos_chunk_fetches"] += len(missing)
-        if bucket is not None:
-            bkt = int(bucket)
-        else:
-            from ..functions.codec import term_bucket
-
-            _, config = open_index(None, index_dir)
-            bkt = term_bucket(field, term, config.term_merge_buckets)
-        if hc is not None:
-            pdf = _hotcache_read_postings(
-                hc, storage_for(index_dir), [bkt], [(field, term)],
-                chunk_ords=missing, chunk_col=col,
-            )
-        else:
-            dset = _cached_dataset(index_dir, "postings", split_id)
-            cond = (
-                (pads.field("field") == field)
-                & (pads.field("term") == term)
-                & pads.field("chunk_ord").isin(missing)
-                & pads.field("bucket").isin([bkt])
-            )
-            cols = [
-                c for c in ("field", "term", "chunk_ord", col)
-                if c in dset.schema.names
-            ]
-            try:
-                pdf = dset.to_table(filter=cond, columns=cols).to_pandas()
-            except FileNotFoundError as e:
-                raise SplitVanishedError(
-                    f"split vanished during positions-chunk read: {split_id}"
-                ) from e
-        for o in missing:
-            sub = pdf[pdf["chunk_ord"] == o]
-            if len(sub) != 1:
-                raise SplitVanishedError(
-                    f"{col} chunk {field}:{term}#{o} missing in {split_id}"
-                )
-            out[o] = sub[col].iloc[0]
-            SPLIT_CACHE.put(key(o), out[o], _ROW_BYTES + len(out[o]))
-    return [out[o] for o in ords]
-
-
-def _hotcache_read_postings(
-    hc, st, buckets: list[int], terms: list[tuple[str, str]],
+def _read_postings(
+    index_dir: str, split_id: str, buckets: list[int], terms: list[tuple[str, str]],
     chunk_ords: list[int] | None = None,
     need_positions: bool = True,
     chunk_col: str = "positions",
 ) -> pd.DataFrame:
-    """Postings rows for ``terms`` via the hotcache: row groups are pruned
-    with the FOOTER-CACHED statistics (bucket ∧ field ∧ term min/max — the
-    same superset the dataset filter path prunes with), selected groups are
-    fetched as coalesced ranged reads, and rows are filtered exactly.
-    Zero LISTs, zero footer GETs.  ``need_positions=False`` skips the
-    positions AND pos_bm COLUMN chunks entirely (column projection on the
-    ranged reads — the object-store byte saving is the point at scale: a
-    term query never pays for phrase-only payloads).  Chunk-row fetches
-    (``chunk_ords``) project down to ``chunk_col`` — positions chunks
-    (ords > 0) never drag neighboring bitmap-chunk bytes and vice versa."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    want_fields = sorted({f_ for f_, _ in terms})
-    want_terms = sorted({t_ for _, t_ in terms})
-    bucket_set = set(buckets or [])
+    """Postings rows for ``terms``: row groups are pruned by the footers'
+    bucket ∧ field ∧ term ∧ chunk_ord statistics, the kept groups read,
+    and rows filtered exactly.  ``need_positions=False`` skips the
+    positions AND pos_bm COLUMN chunks entirely (a term query never pays
+    for phrase-only payloads).  Chunk-row fetches (``chunk_ords``) project
+    down to ``chunk_col`` — positions chunks (ords > 0) never drag
+    neighboring bitmap-chunk bytes and vice versa; without them only
+    primary rows (chunk_ord 0 or null) are read."""
+    want = {
+        "bucket": buckets or None,
+        "field": {f_ for f_, _ in terms},
+        "term": {t_ for _, t_ in terms},
+        "chunk_ord": [0] if chunk_ords is None else chunk_ords,
+    }
+    columns = ["field", "term", "chunk_ord", chunk_col] if chunk_ords is not None else None
+    drop = ("positions", "pos_bm") if chunk_ords is None and not need_positions else ()
     parts: list[pd.DataFrame] = []
-    for name, _size in hc.files("postings"):
-        try:
-            pf = hc.parquet_file(st, "postings", name)
-            md = pf.metadata
-            idx = {md.schema.column(j).name: j for j in range(md.num_columns)}
-            has_chunk_col = "chunk_ord" in idx
-            if chunk_ords and not has_chunk_col:
-                continue  # pre-chunking file: no chunk rows to find
-            groups = []
-            for g in range(md.num_row_groups):
-                rg = md.row_group(g)
-                bk = _stat_minmax(rg.column(idx["bucket"]).statistics)
-                if bucket_set and bk is not None and not any(
-                    bk[0] <= b <= bk[1] for b in bucket_set
-                ):
-                    continue
-                fd = _stat_minmax(rg.column(idx["field"]).statistics)
-                if fd is not None and not any(fd[0] <= f_ <= fd[1] for f_ in want_fields):
-                    continue
-                tm = _stat_minmax(rg.column(idx["term"]).statistics)
-                if tm is not None and not any(tm[0] <= t_ <= tm[1] for t_ in want_terms):
-                    continue
-                if has_chunk_col:
-                    co = _stat_minmax(rg.column(idx["chunk_ord"]).statistics)
-                    if co is not None:
-                        if chunk_ords is None:
-                            # pure chunk-row group: all-positive (positions
-                            # chunks) or all-negative (bitmap chunks)
-                            if co[0] > 0 or co[1] < 0:
-                                continue
-                        elif co[1] < min(chunk_ords) or co[0] > max(chunk_ords):
-                            continue
-                groups.append(g)
-            if not groups:
-                continue
-            # TOP-LEVEL arrow names — md.schema flattens list columns
-            # into leaf paths, which read_row_groups would not match
-            names = pf.schema_arrow.names
-            read_cols = None
-            if chunk_ords is not None:
-                read_cols = [
-                    c for c in ("field", "term", "chunk_ord", chunk_col)
-                    if c in names
-                ]
-            elif not need_positions:
-                read_cols = [
-                    c for c in names if c not in ("positions", "pos_bm")
-                ] or None
-            tbl = pf.read_row_groups(groups, columns=read_cols)
-        except (FileNotFoundError, OSError) as e:
-            raise SplitVanishedError(
-                f"split vanished during postings read: {hc.split_id}"
-            ) from e
+    for tbl in _split_footers(index_dir, split_id).scan("postings", want, columns, drop):
+        has_chunk_col = "chunk_ord" in tbl.column_names
+        if chunk_ords and not has_chunk_col:
+            continue  # pre-chunking file: no chunk rows to find
         mask = None
         for f_, t_ in terms:
             c = pc.and_(
@@ -496,6 +473,52 @@ def _hotcache_read_postings(
     if not parts:
         return pd.DataFrame(columns=["field", "term"])
     return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+
+
+def _read_split_postings_chunks(
+    index_dir: str, split_id: str, field: str, term: str, ords: list[int],
+    bucket: int | None = None,
+    col: str = "positions",
+) -> list[bytes]:
+    """Fetch specific CHUNK rows of one term — positions chunks
+    (chunk_ord >= 1, ``col='positions'``) or position-bitmap chunks
+    (chunk_ord <= -1, ``col='pos_bm'``) — worker-cached like posting
+    rows; row-group pruning on (bucket, field, term, chunk_ord) keeps the
+    read to the asked chunks, and the column projection keeps it to the
+    asked PAYLOAD (bitmap fetches never drag positions bytes).
+    ``bucket`` is the primary row's stored bucket value (saves the
+    config/catalog round trip a recompute would cost in a worker)."""
+    epoch = split_epoch(index_dir, split_id)
+    key = lambda o: (index_dir, split_id, epoch, "chunk", field, term, o)  # noqa: E731
+    out: dict[int, bytes] = {}
+    missing = []
+    for o in ords:
+        hit = SPLIT_CACHE.get(key(o))
+        if hit is not None:
+            out[o] = hit
+        else:
+            missing.append(o)
+    if missing:
+        _PHRASE_CTR["bm_chunk_fetches" if col == "pos_bm" else "pos_chunk_fetches"] += len(missing)
+        if bucket is not None:
+            bkt = int(bucket)
+        else:
+            from ..functions.codec import term_bucket
+
+            _, config = open_index(None, index_dir)
+            bkt = term_bucket(field, term, config.term_merge_buckets)
+        pdf = _read_postings(
+            index_dir, split_id, [bkt], [(field, term)], chunk_ords=missing, chunk_col=col
+        )
+        for o in missing:
+            sub = pdf[pdf["chunk_ord"] == o]
+            if len(sub) != 1:
+                raise SplitVanishedError(
+                    f"{col} chunk {field}:{term}#{o} missing in {split_id}"
+                )
+            out[o] = sub[col].iloc[0]
+            SPLIT_CACHE.put(key(o), out[o], _ROW_BYTES + len(out[o]))
+    return [out[o] for o in ords]
 
 
 # Posting-row cache entries ("post"): the term's PostingRow, or _ABSENT.
@@ -571,8 +594,6 @@ def _read_split_postings(
     terms' inline bitmap cells are the same class of dead weight).  A
     cached positions-less record is upgraded (re-fetched in full,
     replaced) the first time a phrase query needs the same term."""
-    import pyarrow.dataset as pads
-
     epoch = split_epoch(index_dir, split_id)
     out = PostingRecords()
     missing: list[tuple[str, str]] = []
@@ -585,45 +606,9 @@ def _read_split_postings(
         else:
             missing.append(key)
     if missing:
-        hc = _cached_hotcache(index_dir, split_id)
-        if hc is not None:
-            pdf = _hotcache_read_postings(
-                hc, storage_for(index_dir), buckets, missing,
-                need_positions=need_positions,
-            )
-        else:
-            dset = _cached_dataset(index_dir, "postings", split_id)
-            cond = None
-            for f_, t_ in missing:
-                c = (pads.field("field") == f_) & (pads.field("term") == t_)
-                cond = c if cond is None else (cond | c)
-            if dset is None:
-                pdf = pd.DataFrame(columns=["field", "term"])
-            else:
-                if buckets:
-                    # superset of the missing terms' buckets — pruning only
-                    cond = pads.field("bucket").isin(buckets) & cond
-                if "chunk_ord" in dset.schema.names:
-                    # positions-CHUNK rows are fetched separately on demand
-                    # (_read_split_postings_chunks), never in the term scan
-                    cond = cond & (
-                        (pads.field("chunk_ord") == 0)
-                        | pads.field("chunk_ord").is_null()
-                    )
-                cols = None
-                if not need_positions:
-                    cols = [
-                        c for c in dset.schema.names
-                        if c not in ("positions", "pos_bm")
-                    ]
-                try:
-                    pdf = dset.to_table(filter=cond, columns=cols).to_pandas()
-                except FileNotFoundError as e:
-                    # listing→read race with a concurrent merge+GC: vanished-
-                    # split protocol (the leaf runner yields __vanished__)
-                    raise SplitVanishedError(
-                        f"split vanished during postings read: {split_id}"
-                    ) from e
+        pdf = _read_postings(
+            index_dir, split_id, buckets, missing, need_positions=need_positions
+        )
         found = _posting_map(pdf)
         for key in missing:
             rec = found.get(key, _ABSENT)

@@ -2,6 +2,8 @@
 (reference merge_executor.rs:337-487; bin packing merge_executor.rs:651-772
 with proptest invariants at merge_executor.rs:1111-1151)."""
 
+import dataclasses
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -13,7 +15,12 @@ from quickwit_spark.config import transcripts_config
 from quickwit_spark.fixtures.transcripts import generate_transcripts
 from quickwit_spark.index.builder import build_index
 from quickwit_spark.index.catalog import Catalog, PUBLISHED
-from quickwit_spark.index.merge import demux_bin_packing, execute_demux, garbage_collect
+from quickwit_spark.index.merge import (
+    build_merge_operations,
+    demux_bin_packing,
+    execute_demux,
+    garbage_collect,
+)
 from quickwit_spark.search.executor import search
 from quickwit_spark.search.request import SearchRequest
 
@@ -60,6 +67,21 @@ def test_demux_clusters_by_tool(spark, tmp_path_factory):
     pub = cat.splits([PUBLISHED])
     assert sorted(s.split_id for s in pub) == sorted(s.split_id for s in new_metas)
     assert sum(s.num_docs for s in pub) == total_docs
+
+    # demux lineage: each output is demuxed once, which makes it
+    # merge-mature below the doc target — the policy's young-split filter
+    # skips it, where the same splits without lineage would merge
+    assert [s.demux_num_ops for s in pub] == [1] * len(pub)
+    assert all(s.num_docs < CFG.split_num_docs_target for s in pub)
+    eager = transcripts_config(
+        split_num_docs_target=10_000, segment_num_docs_target=128,
+        merge_factor=2, max_merge_factor=len(pub),
+    )
+    one_level = eager.split_num_docs_target  # every output in one size level
+    assert build_merge_operations(pub, eager, one_level) == []
+    assert build_merge_operations(
+        [dataclasses.replace(s, demux_num_ops=0) for s in pub], eager, one_level
+    )
 
     # demux locality: distinct conv-level tool values per split must be far
     # below the global distinct count (each bin owns a contiguous value range)

@@ -4,15 +4,19 @@ The reference packs footer+hotcache into one split bundle so a cold open
 is one ranged GET (quickwit-storage/src/split.rs:103-180,
 quickwit-directories/src/hot_directory.rs:35-123).  Our analog is the
 per-split ``hotcache/split_id=<sid>/hotcache.bin`` sidecar (file listing
-+ postings/docs footer tails + full fastfields payload): a cold leaf
++ every part's parquet footer + small fastfields payloads): a cold leaf
 open on an object store is exactly TWO storage reads — one HEAD (epoch
 token) + one GET — before the first postings byte, counted by
-``split_open_read_counts``.
+``split_open_read_counts``.  Without a sidecar (local disk, older
+splits) the same read path opens the split from a listing.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import struct
+import time
 
 import pytest
 
@@ -21,8 +25,11 @@ from quickwit_spark.config import transcripts_config
 from quickwit_spark.fixtures.transcripts import generate_transcripts
 from quickwit_spark.index.builder import build_index
 from quickwit_spark.index.catalog import PUBLISHED, Catalog
-from quickwit_spark.index.hotcache import hotcache_path
+from quickwit_spark.index import hotcache
+from quickwit_spark.index.builder import _paths
+from quickwit_spark.index.hotcache import hotcache_path, parse_hotcache
 from quickwit_spark.index.merge import garbage_collect, run_merge_pipeline
+from quickwit_spark.search import split_io
 from quickwit_spark.search.cache import SPLIT_CACHE
 from quickwit_spark.search.executor import search, split_open_read_counts
 from quickwit_spark.search.request import SearchRequest
@@ -121,7 +128,7 @@ def test_cold_open_is_two_reads(spark, twin_indexes, monkeypatch):
 
 def test_hotcache_results_match_local_twin(spark, twin_indexes, monkeypatch):
     """Hotcache-served scoring (incl. phrase positions, sort keys) is
-    bit-identical to the mmap'd local path."""
+    bit-identical to the local path, which opens splits from a listing."""
     local_dir, sim_dir = twin_indexes
     monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", "64")
     SPLIT_CACHE.clear()
@@ -129,6 +136,91 @@ def test_hotcache_results_match_local_twin(spark, twin_indexes, monkeypatch):
         assert _hits_key(search(spark, sim_dir, req)) == _hits_key(
             search(spark, local_dir, req)
         ), req.query
+
+
+def _sidecar_bytes(version: int, tables: dict) -> bytes:
+    """A sidecar in the on-disk format from table → [(name, size, kind, blob)]."""
+    header, blobs, off = {}, [], 0
+    for table, entries in tables.items():
+        header[table] = []
+        for name, size, kind, blob in entries:
+            header[table].append({"name": name, "size": size, "kind": kind,
+                                  "off": off, "len": len(blob)})
+            blobs.append(blob)
+            off += len(blob)
+    h = json.dumps({"version": version, "tables": header}).encode()
+    return b"".join([hotcache.MAGIC, struct.pack("<II", version, len(h)), h, *blobs])
+
+
+def test_legacy_sidecar_entries_open_unchanged(spark, twin_indexes, monkeypatch):
+    """Older sidecars still open with identical results: postings/docs
+    entries that carry a long tail (a footer with the part's preceding
+    bytes in front, as version 1 wrote them) and version-2 'ext'
+    fast-field entries, read as references to the part's own file."""
+    local_dir, sim_dir = twin_indexes
+    monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", "64")
+    st = storage_for(sim_dir)
+    saved = {}
+    for s in Catalog(sim_dir).splits([PUBLISHED]):
+        path = hotcache_path(sim_dir, s.split_id)
+        saved[path] = st.read_bytes(path)
+        tables = parse_hotcache(saved[path])
+        for table in ("postings", "docs"):
+            padded = []
+            for name, size, kind, footer in tables[table]:
+                with st.fs.open_input_file(st.fs_path(os.path.join(
+                    sim_dir, table, f"split_id={s.split_id}", name
+                ))) as f:
+                    n = min(size, len(footer) + 4096)
+                    tail = f.read_at(n, size - n)
+                assert tail.endswith(footer)
+                padded.append((name, size, kind, tail))
+            tables[table] = padded
+        tables["fastfields"] = [(n, size, "ext", b"") for n, size, _, _ in tables["fastfields"]]
+        st.write_bytes(path, _sidecar_bytes(2, tables))
+    try:
+        SPLIT_CACHE.clear()
+        split_open_read_counts(reset=True)
+        got = [_hits_key(search(spark, sim_dir, req)) for req in QUERIES]
+        counts = split_open_read_counts()
+        assert counts["list"] == 0 and counts["footer"] > 0, counts  # 'ext' footers
+        assert got == [_hits_key(search(spark, local_dir, req)) for req in QUERIES]
+    finally:
+        for path, data in saved.items():
+            st.write_bytes(path, data)
+        SPLIT_CACHE.clear()
+
+
+def test_unreadable_sidecar_costs_one_get_per_epoch(spark, twin_indexes, monkeypatch):
+    """A truncated sidecar opens the split from its listing, and that
+    object is cached under the sidecar's epoch: repeated reads cost no
+    further GET of the bad sidecar, and results are unchanged."""
+    local_dir, sim_dir = twin_indexes
+    monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", "64")
+    st = storage_for(sim_dir)
+    sid = Catalog(sim_dir).splits([PUBLISHED])[0].split_id
+    path = hotcache_path(sim_dir, sid)
+    good = st.read_bytes(path)
+    st.write_bytes(path, good[: len(good) // 2])
+    try:
+        SPLIT_CACHE.clear()
+        split_open_read_counts(reset=True)
+        assert split_io._cached_fastfields(sim_dir, sid) is not None
+        for _ in range(2):
+            assert len(split_io._fetch_doc_fields(sim_dir, sid, [0], ["doc_id"])) == 1
+        time.sleep(split_io.EPOCH_TTL_S + 0.1)  # re-probed: the same epoch
+        assert len(split_io._fetch_doc_fields(sim_dir, sid, [1], ["doc_id"])) == 1
+        counts = split_open_read_counts()
+        n_ff = len(st.list_files(os.path.join(sim_dir, "fastfields", f"split_id={sid}")))
+        assert counts["head"] == 2, counts
+        assert counts["get"] == 1 + n_ff and counts["list"] == 3, counts
+        for req in QUERIES:
+            assert _hits_key(search(spark, sim_dir, req)) == _hits_key(
+                search(spark, local_dir, req)
+            ), req.query
+    finally:
+        st.write_bytes(path, good)
+        SPLIT_CACHE.clear()
 
 
 def test_missing_hotcache_falls_back_to_listing(spark, twin_indexes, monkeypatch):
@@ -149,64 +241,39 @@ def test_missing_hotcache_falls_back_to_listing(spark, twin_indexes, monkeypatch
     assert _hits_key(search(spark, local_dir, QUERIES[0])) == before[QUERIES[0].query]
 
 
-def test_forced_hotcache_on_local(spark, tmp_path, monkeypatch):
-    """QW_FORCE_HOTCACHE=1 writes AND reads the sidecar on a plain local
-    index (the A/B switch); results match the default mmap path."""
-    idx = str(tmp_path / "idx")
-    pdf = generate_transcripts(n_conversations=15, seed=3)
-    monkeypatch.setenv("QW_FORCE_HOTCACHE", "1")  # build writes sidecars
-    build_index(spark, spark.createDataFrame(pdf), CFG, idx, build_id="b0")
-    assert storage_for(idx).exists(
-        hotcache_path(idx, Catalog(idx).splits()[0].split_id)
-    )
-    monkeypatch.delenv("QW_FORCE_HOTCACHE")
-    SPLIT_CACHE.clear()
-    baseline = {req.query: _hits_key(search(spark, idx, req)) for req in QUERIES}
-    monkeypatch.setenv("QW_FORCE_HOTCACHE", "1")
-    SPLIT_CACHE.clear()
-    for req in QUERIES:
-        assert _hits_key(search(spark, idx, req)) == baseline[req.query], req.query
+def _rewrite_sidecars(index_dir):
+    """Re-write every published split's sidecar in this process, so a
+    monkeypatched ``hotcache`` constant applies (merge writes them the
+    same way, driver-side)."""
+    for s in Catalog(index_dir).splits([PUBLISHED]):
+        hotcache.write_split_hotcache(_paths(index_dir), s.split_id)
 
 
-def test_big_sidecar_externalizes_fastfields(spark, tmp_path, monkeypatch):
-    """Sidecar economics at merge scale (round-3 ask #5): above the embed
-    threshold the fastfields payload moves to the sibling hotcache-ff.bin.
-    The footer part a cold open always pays stays hotcache-sized (1 HEAD +
-    1 GET per split), scoring adds exactly ONE further GET per split, and
-    results stay bit-identical to the embedded layout."""
-    from quickwit_spark.index.hotcache import hotcache_ff_path
-
-    base = str(tmp_path)
-    sim_dir = f"qwsim://{base}/sim_ext"
+def test_big_sidecar_references_fastfields(spark, tmp_path, monkeypatch):
+    """Sidecar economics at merge scale: above FF_EMBED_MAX a split's
+    fast-field parts are stored by footer, not copied — no sibling object
+    and no fast-field payload bytes in the sidecar.  A cold open stays
+    1 HEAD + 1 GET per split, scoring adds exactly ONE GET per split (its
+    fast-field part, read from its own file), and results stay
+    bit-identical to a local twin."""
+    sim_dir = f"qwsim://{tmp_path}/sim_ref"
     pdf = generate_transcripts(n_conversations=30, seed=7)
-    monkeypatch.setenv("QW_HOTCACHE_EMBED_FF_BYTES", "1")  # force ext
     build_index(spark, spark.createDataFrame(pdf), CFG, sim_dir, build_id="b0")
-    monkeypatch.delenv("QW_HOTCACHE_EMBED_FF_BYTES")
+    monkeypatch.setattr(hotcache, "FF_EMBED_MAX", 1)
+    _rewrite_sidecars(sim_dir)
     monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", "64")
     st = storage_for(sim_dir)
-    cat = Catalog(sim_dir)
-    splits = cat.splits([PUBLISHED])
-    n_splits = len(splits)
-    import pyarrow.fs as pafs
-
-    # embedded twin (default threshold) on the same corpus: the ext
-    # layout's footer part must be exactly the embedded sidecar minus the
-    # payload bytes it externalized
-    emb_dir = f"qwsim://{base}/sim_emb"
-    build_index(spark, spark.createDataFrame(pdf), CFG, emb_dir, build_id="b0")
-    ff_total = 0
+    splits = Catalog(sim_dir).splits([PUBLISHED])
     for s in splits:
-        main = st.info(hotcache_path(sim_dir, s.split_id))
-        sib = st.info(hotcache_ff_path(sim_dir, s.split_id))
-        assert main.type == pafs.FileType.File and sib.type == pafs.FileType.File
-        emb = st.info(hotcache_path(emb_dir, s.split_id))
-        assert main.size < emb.size, (main.size, emb.size)
-        assert abs((main.size + sib.size) - emb.size) < 4096, (
-            main.size, sib.size, emb.size,
-        )
-        ff_total += sib.size
-    assert ff_total > 0
-    # cold scored open: 1 HEAD + 1 GET (footer part) + 1 GET (payload)
+        sidecar_dir = os.path.dirname(hotcache_path(sim_dir, s.split_id))
+        assert [os.path.basename(p) for p in st.list_files(sidecar_dir, "")] == ["hotcache.bin"]
+        entries = parse_hotcache(st.read_bytes(hotcache_path(sim_dir, s.split_id)))["fastfields"]
+        ff_dir = os.path.join(sim_dir, "fastfields", f"split_id={s.split_id}")
+        assert [(n, size) for n, size, _, _ in entries] == [
+            (os.path.basename(p), size) for p, size in st.list_file_sizes(ff_dir)
+        ]
+        for _, size, kind, footer in entries:
+            assert kind == "tail" and len(footer) < size
     search(spark, sim_dir, SearchRequest("the deploy"))  # catalog/plan warm
     SPLIT_CACHE.clear()
     split_open_read_counts(reset=True)
@@ -214,20 +281,49 @@ def test_big_sidecar_externalizes_fastfields(spark, tmp_path, monkeypatch):
     assert resp.num_hits > 0
     counts = split_open_read_counts()
     assert counts["list"] == 0 and counts["footer"] == 0, counts
-    assert counts["head"] <= n_splits, counts
-    assert counts["get"] <= 2 * n_splits, counts
+    assert 0 < counts["head"] <= len(splits), counts
+    assert counts["get"] == 2 * counts["head"], counts
     # warm: zero further reads (the parsed fast fields are cached)
     split_open_read_counts(reset=True)
     search(spark, sim_dir, SearchRequest("the deploy"))
     counts = split_open_read_counts()
     assert sum(counts.values()) == 0, counts
-    # identical results vs a local (mmap) twin of the same corpus
     local_dir = str(tmp_path / "local_twin")
     build_index(spark, spark.createDataFrame(pdf), CFG, local_dir, build_id="b0")
     for req in QUERIES:
         assert _hits_key(search(spark, sim_dir, req)) == _hits_key(
             search(spark, local_dir, req)
         ), req.query
+
+
+def _split_parts(st, index_dir, sid) -> int:
+    return sum(
+        len(st.list_files(os.path.join(index_dir, t, f"split_id={sid}")))
+        for t in ("postings", "docs", "fastfields")
+    )
+
+
+def test_local_cold_open_reads_footers_from_a_listing(spark, twin_indexes):
+    """A local split has no sidecar: its cold open is at most one LIST per
+    table plus exactly one footer read per part it uses, and a second
+    read within the epoch costs nothing."""
+    local_dir, _ = twin_indexes
+    st = storage_for(local_dir)
+    assert not st.exists(os.path.join(local_dir, "hotcache"))
+    cfg = ex.open_index(spark, local_dir)[1]
+    terms = [("text", "deploy"), ("text", "the")]
+    buckets = ex.term_buckets(spark, set(terms), cfg.term_merge_buckets)
+    for s in Catalog(local_dir).splits([PUBLISHED]):
+        SPLIT_CACHE.clear()
+        split_open_read_counts(reset=True)
+        for _ in range(2):
+            ff = split_io._cached_fastfields(local_dir, s.split_id)
+            recs = split_io._read_split_postings(local_dir, s.split_id, terms, buckets)
+            docs = split_io._fetch_doc_fields(local_dir, s.split_id, [0, 1], ["doc_id", "text"])
+        assert len(ff) and recs and len(docs) == 2
+        counts = split_open_read_counts()
+        assert counts["list"] <= 3, counts
+        assert counts["footer"] == _split_parts(st, local_dir, s.split_id), counts
 
 
 def test_hotcache_serves_chunked_bitmaps(spark, tmp_path_factory, monkeypatch):

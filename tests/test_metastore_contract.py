@@ -305,13 +305,20 @@ def test_processes_racing_publish_merge_gc(tmp_path, metastore):
     ]
     janitor = mp.Process(target=_race_gc, args=(index_dir, stop))
     janitor.start()
-    for p in writers:
-        p.start()
-    for p in writers:
-        p.join(timeout=120)
-        assert p.exitcode == 0, "writer crashed (lost race / contract violation)"
-    stop.set()
-    janitor.join(timeout=60)
+    try:
+        for p in writers:
+            p.start()
+        for p in writers:
+            p.join(timeout=120)
+            assert p.exitcode == 0, "writer crashed (lost race / contract violation)"
+    finally:
+        # a failed writer must not leave the janitor (or a hung writer)
+        # running: pytest would wait for it at exit
+        stop.set()
+        janitor.join(timeout=60)
+        for p in [*writers, janitor]:
+            if p.is_alive():
+                p.terminate()
     assert janitor.exitcode == 0
 
     from quickwit_spark.index.merge import garbage_collect

@@ -21,7 +21,8 @@ from quickwit_spark.fixtures.transcripts import (
 )
 from quickwit_spark.index.builder import build_index
 from quickwit_spark.index.catalog import Catalog
-from quickwit_spark.index.hotcache import Hotcache
+from quickwit_spark.index import hotcache
+from quickwit_spark.index.builder import _paths
 from quickwit_spark.search import root, split_io
 from quickwit_spark.search.cache import SPLIT_CACHE, SplitCache
 from quickwit_spark.search.executor import search
@@ -102,16 +103,17 @@ def test_concurrent_use_keeps_the_total_exact():
 
 
 def test_budget_holds_with_external_fastfields(spark, tmp_path, monkeypatch):
-    """A big split's external fast-field payload and its FastFields
-    decodes are charged as they load: every FastFields entry is charged at
-    least its frame plus its memoized decodes, a sidecar entry keeps no
-    uncharged payload, and the total stays within a budget smaller than
-    the hot set."""
+    """A big split's fast fields, read from their own files, and their
+    FastFields decodes are charged as they load: every FastFields entry is
+    charged at least its frame plus its memoized decodes, a split's
+    footers entry holds no fast-field payload, and the total stays within
+    a budget smaller than the hot set."""
     sim_dir = f"qwsim://{tmp_path}/sim_ext"
     pdf = generate_transcripts(n_conversations=30, seed=7)
-    monkeypatch.setenv("QW_HOTCACHE_EMBED_FF_BYTES", "1")  # every split 'ext'
     build_index(spark, spark.createDataFrame(pdf), CFG, sim_dir, build_id="b0")
-    monkeypatch.delenv("QW_HOTCACHE_EMBED_FF_BYTES")
+    monkeypatch.setattr(hotcache, "FF_EMBED_MAX", 1)  # every split by reference
+    for s in Catalog(sim_dir).splits():
+        hotcache.write_split_hotcache(_paths(sim_dir), s.split_id)
     monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", "64")  # driver's cache
     reqs = [
         SearchRequest("the deploy", max_hits=20, sort_by_field="ts"),
@@ -132,12 +134,12 @@ def test_budget_holds_with_external_fastfields(spark, tmp_path, monkeypatch):
                 decodes += len(memo)
                 held = int(v.pdf.memory_usage(deep=True).sum()) + sum(a.nbytes for a in memo)
                 assert nb >= held, (key, nb, held)
-            elif isinstance(v, Hotcache):
-                assert nb == len(v._data) and not hasattr(v, "_ff_ext_data")
+            elif isinstance(v, split_io.SplitFooters):
+                assert not v.inline and nb >= v.nbytes, (key, nb)
         return charged, decodes
 
     hot, decodes = run()
-    assert decodes and {"ff", "hc"} <= {k[3] for k in hot}
+    assert decodes and {"ff", "footers"} <= {k[3] for k in hot}
     hot_bytes = sum(hot.values())
     budget_mb = hot_bytes / 2 / (1 << 20)
     monkeypatch.setenv("QW_CACHE_MB", repr(budget_mb))
