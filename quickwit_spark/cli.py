@@ -242,154 +242,44 @@ def cmd_bench_queries(args) -> dict:
 
 
 def cmd_search(args) -> dict:
-    from quickwit_spark.search.executor import explain, search
-    from quickwit_spark.search.request import (
-        SearchRequest,
-        parse_numeric_filters,
-        parse_search_after,
-        parse_sort_by_dsl,
-    )
+    from quickwit_spark.search.dispatch import run_search
+    from quickwit_spark.search.request import cli_values, parse_search_params
 
+    index_dirs = args.index_dir.split(",")  # --index-dir a,b: multi-index
+    params = parse_search_params(
+        cli_values(vars(args)), route="cli", multi_index=len(index_dirs) > 1
+    )
     spark = _get_spark("qw-search", args.local_cpus, args.shuffle_partitions)
     spark.sparkContext.setLogLevel("ERROR")
-    sort_field, sort_asc = parse_sort_by_dsl(args.sort_by)
-    req = SearchRequest(
-        query=args.query,
-        max_hits=args.max_hits,
-        start_offset=args.start_offset,
-        start_timestamp=args.start_timestamp,
-        end_timestamp=args.end_timestamp,
-        search_fields=(
-            tuple(args.search_fields.split(",")) if getattr(args, "search_fields", None) else None
-        ),
-        sort_by_field=sort_field,
-        sort_asc=sort_asc,
-        search_after=parse_search_after(getattr(args, "search_after", None)),
-        snippet_fields=(
-            tuple(args.snippet_fields.split(","))
-            if getattr(args, "snippet_fields", None)
-            else None
-        ),
-        snippet_max_chars=getattr(args, "snippet_max_chars", None) or 150,
-        stored_fields=(
-            tuple(args.stored_fields.split(","))
-            if getattr(args, "stored_fields", None)
-            else None
-        ),
-        numeric_filters=parse_numeric_filters(
-            getattr(args, "numeric_filter", None)
-        ),
-        score_explain=getattr(args, "score_explain", False),
-        min_should_match=getattr(args, "min_should_match", None) or 1,
-    )
-    if "," in args.index_dir and (
-        getattr(args, "explain", False) or getattr(args, "collapse_field", None)
-    ):
-        return {
-            "cmd": "search",
-            "error": "multi-index search does not support --explain/--collapse-field",
-        }
-    if getattr(args, "explain", False):
-        # plan-only: which splits survive pruning, which leaf strategy
-        # runs, per-term df — no leaf execution
-        return {"cmd": "search", "explain": explain(spark, args.index_dir, req)}
-    if getattr(args, "collapse_field", None):
-        # field collapse: one hit per distinct field value (its own
-        # response shape — no snippets/aggs)
-        from quickwit_spark.search.executor import search_collapse_rows
-
-        rows, n_groups, n_docs = search_collapse_rows(
-            spark,
-            args.index_dir,
-            req,
-            args.collapse_field,
-            getattr(args, "collapse_tie_field", None),
-        )
+    # --explain prints the plan (which splits survive pruning, which leaf
+    # strategy runs, per-term df) without executing the search
+    res = run_search(spark, index_dirs, params, plan_only=True)
+    if params.explain:
+        return {"cmd": "search", "explain": res.plan}
+    if res.collapse is not None:
+        rows, n_groups, n_docs = res.collapse
         return {
             "cmd": "search",
             "num_hits": n_docs,
-            "collapse": {"field": args.collapse_field, "num_groups": n_groups},
+            "collapse": {"field": params.collapse[0], "num_groups": n_groups},
             "hits": rows,
         }
-    if "," in args.index_dir:
-        # ES-style multi-index addressing: --index-dir a,b merges pages
-        # across indexes (plain search only — explain/collapse/aggs are
-        # single-index concepts and return above / are rejected below)
-        from quickwit_spark.search.executor import multi_index_search
-
-        for bad in ("agg_terms", "agg_histogram_interval", "agg_stats",
-                    "agg_percentiles", "agg_cardinality", "agg_significant",
-                    "agg_filters"):
-            if getattr(args, bad, None):
-                return {"cmd": "search", "error": f"multi-index search does not support --{bad.replace('_','-')}"}
-        resp = multi_index_search(spark, args.index_dir.split(","), req)
-    else:
-        resp = search(spark, args.index_dir, req)
     out = {
         "cmd": "search",
-        "num_hits": resp.num_hits,
-        "hits": resp.hits,
-        "elapsed_time_micros": resp.elapsed_time_micros,
+        "num_hits": res.response.num_hits,
+        "hits": res.response.hits,
+        "elapsed_time_micros": res.response.elapsed_time_micros,
     }
-    # search-side aggregations (agg-only runs pass --max-hits 0); every
-    # requested aggregation shares ONE stream leaf (search_agg_multi)
-    agg_interval = getattr(args, "agg_histogram_interval", None)
-    agg_calendar = getattr(args, "agg_calendar", None)
-    agg_terms = getattr(args, "agg_terms", None)
-    agg_terms_metric = getattr(args, "agg_terms_metric", None)
-    agg_stats = getattr(args, "agg_stats", None)
-    agg_pcts = getattr(args, "agg_percentiles", None)
-    agg_card = getattr(args, "agg_cardinality", None)
-    agg_sig = getattr(args, "agg_significant", None)
-    if any(
-        a is not None
-        for a in (
-            agg_interval, agg_calendar, agg_terms, agg_terms_metric,
-            agg_stats, agg_pcts, agg_card, agg_sig,
-        )
-    ):
-        from quickwit_spark.search.executor import search_agg_multi
-
-        multi = search_agg_multi(
-            spark,
-            args.index_dir,
-            req,
-            histogram_interval=agg_interval,
-            histogram_calendar=agg_calendar,
-            terms_field=agg_terms,
-            terms_size=getattr(args, "agg_terms_size", 10),
-            terms_metric_field=agg_terms_metric,
-            stats_field=agg_stats,
-            percentiles_field=agg_pcts,
-            cardinality_field=agg_card,
-            significant_field=agg_sig,
-            significant_size=getattr(args, "agg_significant_size", 10),
-        )
-        if "histogram" in multi:
-            out["agg_histogram"] = {b: n for b, n in multi["histogram"]}
-        if "terms" in multi:
-            out["agg_terms"] = [
-                {"key": v, "doc_count": n} for v, n in multi["terms"]
-            ]
-        if "terms_stats" in multi:
-            out["agg_terms_stats"] = multi["terms_stats"]
-        if "stats" in multi:
-            out["agg_stats"] = multi["stats"]
-        if "percentiles" in multi:
-            out["agg_percentiles"] = multi["percentiles"]
-        if "cardinality" in multi:
-            out["agg_cardinality"] = multi["cardinality"]
-        if "significant_terms" in multi:
-            out["agg_significant_terms"] = multi["significant_terms"]
-    agg_filters = getattr(args, "agg_filters", None)
-    if agg_filters is not None:
-        import json as _json
-
-        from quickwit_spark.search.executor import search_agg_filters
-
-        flt = _json.loads(agg_filters)
-        rows = search_agg_filters(spark, args.index_dir, req, flt).collect()
-        out["agg_filters"] = {r["key"]: int(r["doc_count"]) for r in rows}
+    aggs = res.aggs
+    if "histogram" in aggs:
+        out["agg_histogram"] = dict(aggs["histogram"])
+    if "terms" in aggs:
+        out["agg_terms"] = [{"key": v, "doc_count": n} for v, n in aggs["terms"]]
+    for key in ("terms_stats", "stats", "percentiles", "cardinality", "significant_terms"):
+        if key in aggs:
+            out[f"agg_{key}"] = aggs[key]
+    if params.agg_filters is not None:
+        out["agg_filters"] = dict(res.filters)
     return out
 
 
@@ -873,7 +763,7 @@ def cmd_serve(args) -> dict:
     return {"cmd": "serve", "stopped": True}
 
 
-def main(argv=None):
+def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="quickwit_spark")
     p.add_argument("--local-cpus", default=None, help="force local[N] master (bench only)")
     p.add_argument("--shuffle-partitions", type=int, default=None)
@@ -928,116 +818,20 @@ def main(argv=None):
     bq.set_defaults(fn=cmd_bench_queries)
 
     s = sub.add_parser("search")
-    s.add_argument("--index-dir", required=True)
-    s.add_argument("--query", required=True)
-    s.add_argument("--max-hits", type=int, default=10)
-    s.add_argument("--start-offset", type=int, default=0)
-    s.add_argument("--start-timestamp", type=int, default=None)
-    s.add_argument("--end-timestamp", type=int, default=None)
-    s.add_argument(
-        "--sort-by",
-        default=None,
-        help="fast field to sort by: '+field' asc, '-field' desc, bare asc "
-        "(the REST sortByField mini-DSL, sort_by.rs:64-75); use the "
-        "--sort-by=-field form — a separate '-field' token parses as a flag",
-    )
-    s.add_argument(
-        "--search-fields", default=None,
-        help="comma-separated default fields for unscoped clauses (overrides config)",
-    )
-    s.add_argument(
-        "--numeric-filter", action="append", default=None,
-        help="fast-field range filter 'field:lo..hi' (half-open; repeatable; "
-        "either bound may be empty)",
-    )
-    s.add_argument(
-        "--stored-fields", default=None,
-        help="comma-separated subset of stored columns to return per hit "
-        "(default: all; the page fetch column-prunes to this set)",
-    )
-    s.add_argument(
-        "--snippet-fields", default=None,
-        help="comma-separated tokenized text fields to return highlighted "
-        "fragments for (hit['snippets'])",
-    )
-    s.add_argument("--snippet-max-chars", type=int, default=150)
-    s.add_argument(
-        "--collapse-field", default=None,
-        help="field collapse: return one hit per distinct value of this "
-        "field (the group's best-BM25 doc), groups ranked by that score",
-    )
-    s.add_argument(
-        "--collapse-tie-field", default=None,
-        help="fast field used as the global tie key for collapse ordering "
-        "(default: split_id, doc_id)",
-    )
-    s.add_argument(
-        "--search-after", default=None,
-        help="cursor pagination: '<sortValueOrScore>,<split_id>,<doc_id>' of "
-        "the previous page's last hit — O(k) deep paging (vs --start-offset's "
-        "O(offset)); mutually exclusive with --start-offset",
-    )
-    s.add_argument(
-        "--explain", action="store_true",
-        help="print the query plan (split pruning, leaf strategy, per-term "
-        "df, in-process vs spark-job leaf) without executing the search",
-    )
-    s.add_argument(
-        "--min-should-match", type=int, default=1,
-        help="ES bool minimum_should_match over the top-level OR clauses: "
-        "a doc matches only if at least this many clauses match (scoring "
-        "still sums every matching clause)",
-    )
-    s.add_argument(
-        "--score-explain", action="store_true",
-        help="attach a per-hit BM25 breakdown (hit['score_detail']: each "
-        "matching term's tf/df/idf/doc_len/weight/contribution; the "
-        "contributions sum to the hit score bit-exactly)",
-    )
-    s.add_argument(
-        "--agg-histogram-interval", type=int, default=None,
-        help="date-histogram aggregation over every match (bucket seconds)",
-    )
-    s.add_argument(
-        "--agg-calendar", default=None,
-        help="calendar-interval date histogram (minute/hour/day/week/"
-        "month/quarter/year — ES calendar_interval; buckets are "
-        "date_trunc'd in UTC)",
-    )
-    s.add_argument(
-        "--agg-terms", default=None,
-        help="terms facet over every match's fast/stored field",
-    )
-    s.add_argument("--agg-terms-size", type=int, default=10)
-    s.add_argument(
-        "--agg-terms-metric", default=None,
-        help="nested stats (min/max/sum/avg of this fast i64 field) inside "
-        "each --agg-terms bucket (ES sub-aggregation)",
-    )
-    s.add_argument(
-        "--agg-stats", default=None,
-        help="stats aggregation (count/min/max/sum/avg) over a fast i64 field",
-    )
-    s.add_argument(
-        "--agg-percentiles", default=None,
-        help="EXACT p50/p90/p99 percentiles over a fast i64 field",
-    )
-    s.add_argument(
-        "--agg-cardinality", default=None,
-        help="EXACT distinct-value count over a fast or stored field",
-    )
-    s.add_argument(
-        "--agg-significant", default=None,
-        help="significant_terms over a default-tokenized text field "
-        "(foreground = matches, background = term-stats LSM; JLH score)",
-    )
-    s.add_argument("--agg-significant-size", type=int, default=10)
-    s.add_argument(
-        "--agg-filters", default=None,
-        help='JSON object of named sub-queries counted within the base '
-        'query, e.g. \'{"errors": "error OR failure"}\' — all in one '
-        "batched leaf pass",
-    )
+    s.add_argument("--index-dir", required=True, help="index dir, or a,b for several")
+    # every other flag is a search-parameter table entry (search/request.py)
+    from quickwit_spark.search.request import SEARCH_PARAMS
+
+    for prm in SEARCH_PARAMS:
+        if prm.flag is None:
+            continue
+        if prm.switch:
+            s.add_argument(prm.flag, action="store_true", help=prm.help)
+        else:
+            s.add_argument(
+                prm.flag, action="append" if prm.repeat else "store",
+                required=prm.required, help=prm.help,
+            )
     s.set_defaults(fn=cmd_search)
 
     m = sub.add_parser("merge")
@@ -1183,7 +977,11 @@ def main(argv=None):
     sv.add_argument("--port", type=int, default=7280)  # the reference's REST default
     sv.set_defaults(fn=cmd_serve)
 
-    args = p.parse_args(argv)
+    return p
+
+
+def main(argv=None):
+    args = build_parser().parse_args(argv)
     try:
         out = args.fn(args)
     except ValueError as e:

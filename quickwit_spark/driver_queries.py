@@ -282,7 +282,7 @@ def ft_regex(spark, sf_dir):
 def ft_fuzzy(spark, sf_dir):
     """'merge~1' — fuzzy term query: the planner expands to every
     dictionary term within classic Levenshtein distance 1 (anchored to the
-    first QW_FUZZY_PREFIX_LEN=1 chars), scoring_boolean like prefix
+    first FUZZY_PREFIX_LEN=1 chars), scoring_boolean like prefix
     expansion.  The DuckDB twin uses its built-in levenshtein() — classic
     edit distance on both sides, so the expansion set matches exactly."""
     return _ft(spark, sf_dir, "merge~1")
@@ -986,57 +986,11 @@ def mm_real_decode(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    # Insertion order matters: a contract check that samples a prefix of
+    # this dict sees the corpus entries (dd_/tx_/sim_/mm_) that earlier
+    # prefixes never reached first, then fourteen ft_ canaries (top-k,
+    # phrase, collapse, the aggregations); everything else follows.
     return {
-        "ft_topk_single": ft_topk_single,
-        "ft_rare_term": ft_rare_term,
-        "ft_collapse": ft_collapse,
-        "ft_topk_and": ft_topk_and,
-        "ft_topk_or": ft_topk_or,
-        "ft_topk_not": ft_topk_not,
-        "ft_hot_term": ft_hot_term,
-        "ft_offset": ft_offset,
-        "ft_zero_hits": ft_zero_hits,
-        "ft_phrase": ft_phrase,
-        "ft_phrase_slop": ft_phrase_slop,
-        "ft_field_scoped": ft_field_scoped,
-        "ft_timerange": ft_timerange,
-        "ft_sort_by_ts": ft_sort_by_ts,
-        "ft_sort_by_turn_idx": ft_sort_by_turn_idx,
-        "ft_boost": ft_boost,
-        "ft_prefix": ft_prefix,
-        "ft_wildcard": ft_wildcard,
-        "ft_regex": ft_regex,
-        "ft_phrase_prefix": ft_phrase_prefix,
-        "ft_fuzzy": ft_fuzzy,
-        "ft_exists": ft_exists,
-        "ft_min_should_match": ft_min_should_match,
-        "ft_numeric_filter": ft_numeric_filter,
-        "ft_match_all": ft_match_all,
-        "ft_search_after": ft_search_after,
-        "ft_count": ft_count,
-        "ft_stream_export": ft_stream_export,
-        "ft_stream_export_multi": ft_stream_export_multi,
-        "ft_search_after_multi": ft_search_after_multi,
-        "ft_agg_histogram": ft_agg_histogram,
-        "ft_agg_calendar": ft_agg_calendar,
-        "ft_agg_terms": ft_agg_terms,
-        "ft_agg_terms_multi": ft_agg_terms_multi,
-        "ft_agg_stats": ft_agg_stats,
-        "ft_agg_extended_stats": ft_agg_extended_stats,
-        "ft_agg_percentiles": ft_agg_percentiles,
-        "ft_agg_cardinality": ft_agg_cardinality,
-        "ft_agg_terms_stats": ft_agg_terms_stats,
-        "ft_agg_range": ft_agg_range,
-        "ft_agg_top_hits": ft_agg_top_hits,
-        "ft_agg_significant": ft_agg_significant,
-        "ft_agg_filters": ft_agg_filters,
-        "ft_termdict": ft_termdict,
-        "ft_postings_roundtrip": ft_postings_roundtrip,
-        "ft_generic_nested": ft_generic_nested,
-        "ft_generic_typed": ft_generic_typed,
-        "dd_exact": dd_exact,
-        "dd_keep_best": dd_keep_best,
-        "dd_ngram_jaccard": dd_ngram_jaccard,
         "dd_minhash_lsh": dd_minhash_lsh,
         "dd_simhash": dd_simhash,
         "dd_components": dd_components,
@@ -1073,6 +1027,56 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sim_semdedup": sim_semdedup,
         "mm_features": mm_features,
         "mm_real_decode": mm_real_decode,
+        "ft_topk_single": ft_topk_single,
+        "ft_phrase": ft_phrase,
+        "ft_collapse": ft_collapse,
+        "ft_agg_histogram": ft_agg_histogram,
+        "ft_agg_calendar": ft_agg_calendar,
+        "ft_agg_terms": ft_agg_terms,
+        "ft_agg_terms_multi": ft_agg_terms_multi,
+        "ft_agg_stats": ft_agg_stats,
+        "ft_agg_extended_stats": ft_agg_extended_stats,
+        "ft_agg_percentiles": ft_agg_percentiles,
+        "ft_agg_cardinality": ft_agg_cardinality,
+        "ft_agg_terms_stats": ft_agg_terms_stats,
+        "ft_agg_range": ft_agg_range,
+        "ft_agg_top_hits": ft_agg_top_hits,
+        "ft_rare_term": ft_rare_term,
+        "ft_topk_and": ft_topk_and,
+        "ft_topk_or": ft_topk_or,
+        "ft_topk_not": ft_topk_not,
+        "ft_hot_term": ft_hot_term,
+        "ft_offset": ft_offset,
+        "ft_zero_hits": ft_zero_hits,
+        "ft_phrase_slop": ft_phrase_slop,
+        "ft_field_scoped": ft_field_scoped,
+        "ft_timerange": ft_timerange,
+        "ft_sort_by_ts": ft_sort_by_ts,
+        "ft_sort_by_turn_idx": ft_sort_by_turn_idx,
+        "ft_boost": ft_boost,
+        "ft_prefix": ft_prefix,
+        "ft_wildcard": ft_wildcard,
+        "ft_regex": ft_regex,
+        "ft_phrase_prefix": ft_phrase_prefix,
+        "ft_fuzzy": ft_fuzzy,
+        "ft_exists": ft_exists,
+        "ft_min_should_match": ft_min_should_match,
+        "ft_numeric_filter": ft_numeric_filter,
+        "ft_match_all": ft_match_all,
+        "ft_search_after": ft_search_after,
+        "ft_count": ft_count,
+        "ft_stream_export": ft_stream_export,
+        "ft_stream_export_multi": ft_stream_export_multi,
+        "ft_search_after_multi": ft_search_after_multi,
+        "ft_agg_significant": ft_agg_significant,
+        "ft_agg_filters": ft_agg_filters,
+        "ft_termdict": ft_termdict,
+        "ft_postings_roundtrip": ft_postings_roundtrip,
+        "ft_generic_nested": ft_generic_nested,
+        "ft_generic_typed": ft_generic_typed,
+        "dd_exact": dd_exact,
+        "dd_keep_best": dd_keep_best,
+        "dd_ngram_jaccard": dd_ngram_jaccard,
     }
 
 

@@ -123,7 +123,17 @@ class CasObjectBackend:
     def _commit(self, make_state: Callable[[dict | None], dict]) -> dict:
         """CAS loop: read latest gen G, build the next state, put-if-absent
         gen G+1.  Lost race → reload and retry with fresh state, so racing
-        writers serialize without locks and nobody's update is lost."""
+        writers serialize without locks and nobody's update is lost.
+
+        A committer stalled between the read and the put while more than
+        KEEP_GENERATIONS commits land can WIN the put on a G+1 that _prune
+        already freed — readers take the highest generation and would never
+        see it.  So after a win the log is LISTed again: a generation above
+        G+1 with G itself gone is that stale win (_prune deletes in
+        ascending order, so a freed G+1 means G went first), and the
+        object is dropped and the commit retried like any lost race.  A
+        higher generation with G still present is a successor that read
+        this commit — retrying then would apply the update twice."""
         import random
         import time
 
@@ -132,8 +142,14 @@ class CasObjectBackend:
             state = make_state(persisted)
             data = json.dumps(state).encode("utf-8")
             if self.storage.put_if_absent(self._gen_path(gen + 1), data):
-                self._prune(gen + 1)
-                return state
+                if (
+                    gen == 0
+                    or self._list_gens()[-1] == gen + 1
+                    or self.storage.exists(self._gen_path(gen))
+                ):
+                    self._prune(gen + 1)
+                    return state
+                self.storage.delete_file(self._gen_path(gen + 1))
             # exponential backoff with jitter so N racing committers fan out
             time.sleep(
                 min(0.1, 0.002 * (2 ** min(attempt, 5))) * (0.5 + random.random())

@@ -23,8 +23,8 @@ from any other, and a hash mismatch would be a silent FALSE NEGATIVE
 (wrong query results), the one failure mode a Bloom must never have.
 
 Sizing: m = next power of two >= BITS_PER_TERM * n_terms (k=6 probes,
-false-positive rate ~2% at 10 bits/term), capped at QW_TERMBLOOM_MAX_BITS
-(default 2^25 bits = 4 MiB) — a cap overflow only raises the FP rate
+false-positive rate ~2% at 10 bits/term), capped at MAX_BITS
+(2^25 bits = 4 MiB) — a cap overflow only raises the FP rate
 (less pruning), never correctness.  A merged 10M-doc transcript split
 (~1-2M terms) stays under the cap at ~10 bits/term.
 """
@@ -44,10 +44,7 @@ TERMBLOOM_DIRNAME = "termbloom"
 K_PROBES = 6
 BITS_PER_TERM = 10
 MIN_BITS = 1 << 13  # 1 KiB floor — header dominates below this
-
-
-def _max_bits() -> int:
-    return int(os.environ.get("QW_TERMBLOOM_MAX_BITS", str(1 << 25)))
+MAX_BITS = 1 << 25  # 4 MiB cap per split filter
 
 
 def bloom_path(index_dir: str, split_id: str) -> str:
@@ -68,7 +65,7 @@ def _hash_pair(field: str, term: str) -> tuple[int, int]:
 def _pick_bits(n_terms: int) -> int:
     m = MIN_BITS
     want = max(1, n_terms) * BITS_PER_TERM
-    cap = _max_bits()
+    cap = MAX_BITS
     while m < want and m < cap:
         m <<= 1
     return m

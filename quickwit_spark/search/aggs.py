@@ -1065,6 +1065,8 @@ def multi_index_agg(
     percentiles_field: str | None = None,
     percentiles: tuple = (0.5, 0.9, 0.99),
     cardinality_field: str | None = None,
+    significant_field: str | None = None,
+    significant_size: int | None = 10,
 ) -> dict:
     """Aggregations over SEVERAL indexes (the ES ``/a,b/_search`` agg
     shape; round-2 rejected multi-index for aggs).  Each index runs its
@@ -1081,11 +1083,26 @@ def multi_index_agg(
     union the results — split ids are only unique within one index, so a
     cross-index join keyed on (split_id, doc_id) alone would collide.
 
+    A one-dir list is search_agg_multi on that index.
     ``significant_terms`` is per-index by construction (its background
-    frequencies come from one index's term-stats LSM) and is rejected
-    here, matching the serve layer's documented surface."""
+    frequencies come from one index's term-stats LSM), so it is rejected
+    for several indexes."""
     if len(set(index_dirs)) != len(index_dirs) or not index_dirs:
         raise ValueError("index_dirs must be a non-empty list of distinct indexes")
+    if len(index_dirs) == 1:
+        return search_agg_multi(
+            spark, index_dirs[0], request,
+            histogram_interval=histogram_interval,
+            histogram_calendar=histogram_calendar,
+            terms_field=terms_field, terms_size=terms_size,
+            terms_metric_field=terms_metric_field,
+            stats_field=stats_field, stats_extended=stats_extended,
+            percentiles_field=percentiles_field, percentiles=percentiles,
+            cardinality_field=cardinality_field,
+            significant_field=significant_field, significant_size=significant_size,
+        )
+    if significant_field is not None:
+        raise ValueError("significant_terms is per-index — not supported across indexes")
     if histogram_interval is not None and histogram_calendar is not None:
         raise ValueError("pass either histogram_interval or histogram_calendar")
     if histogram_interval is not None and histogram_interval <= 0:

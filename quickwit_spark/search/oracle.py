@@ -20,6 +20,7 @@ from .parser import (
     AllQuery,
     BoolQuery,
     ExistsQuery,
+    FUZZY_PREFIX_LEN,
     FuzzyQuery,
     PhrasePrefixQuery,
     PhraseQuery,
@@ -250,8 +251,7 @@ class OracleIndex:
         ):
             cap = int(os.environ.get("QW_PREFIX_MAX_EXPANSIONS", "1024"))
             if isinstance(node, FuzzyQuery):
-                plen = max(0, int(os.environ.get("QW_FUZZY_PREFIX_LEN", "1")))
-                anchor = node.term[: min(plen, len(node.term))]
+                anchor = node.term[:FUZZY_PREFIX_LEN]
                 terms = sorted(
                     t
                     for (f, t) in self.postings

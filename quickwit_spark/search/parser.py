@@ -76,6 +76,11 @@ class PrefixQuery:
     boost: float = 1.0
 
 
+# fuzzy terms expand over dictionary terms sharing this many leading
+# characters (the engine's expansion and the oracle's agree through it)
+FUZZY_PREFIX_LEN = 1
+
+
 @dataclass(frozen=True)
 class FuzzyQuery:
     """``term~`` / ``term~2`` — matches every document holding a dictionary
@@ -85,9 +90,9 @@ class FuzzyQuery:
     what every SQL engine's levenshtein() computes, so the oracle twin is
     exact).  Expanded at plan time like PrefixQuery (scoring_boolean, same
     cap); the dictionary scan is range-pruned to terms sharing the first
-    QW_FUZZY_PREFIX_LEN (default 1) characters — at a 10^8-term dictionary
-    an unanchored fuzzy scan is a full-vocabulary pass, so the anchored
-    default is the scale-safe behavior (set the env to 0 to disable)."""
+    FUZZY_PREFIX_LEN (1) characters — at a 10^8-term dictionary an
+    unanchored fuzzy scan is a full-vocabulary pass, so anchoring is the
+    scale-safe behavior."""
 
     field: str
     term: str

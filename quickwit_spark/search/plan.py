@@ -26,6 +26,7 @@ from ..storage import storage_for
 from ..index.catalog import Catalog, SplitMetadata
 from .parser import (
     BoolQuery,
+    FUZZY_PREFIX_LEN,
     FuzzyQuery,
     PhrasePrefixQuery,
     PhraseQuery,
@@ -429,7 +430,6 @@ def expand_prefixes(spark: SparkSession, index_dir: str, cat: Catalog, ast):
     import pyarrow.dataset as pads
 
     cap = int(os.environ.get("QW_PREFIX_MAX_EXPANSIONS", "1024"))
-    plen = max(0, int(os.environ.get("QW_FUZZY_PREFIX_LEN", "1")))
     state = Catalog.state_token(index_dir)
     expansions: dict[tuple, tuple[str, ...]] = {}
     missing: list[tuple] = []
@@ -442,7 +442,7 @@ def expand_prefixes(spark: SparkSession, index_dir: str, cat: Catalog, ast):
 
     def _anchor(spec) -> str:
         """Dictionary-scan range anchor: the whole prefix for 'p' specs,
-        the first QW_FUZZY_PREFIX_LEN chars for 'f' specs, the pattern's
+        the first FUZZY_PREFIX_LEN chars for 'f' specs, the pattern's
         extractable literal prefix for 'w'/'r' specs ('' = full
         field-vocabulary scan)."""
         if spec[0] == "p":
@@ -451,7 +451,7 @@ def expand_prefixes(spark: SparkSession, index_dir: str, cat: Catalog, ast):
             return wildcard_literal_prefix(spec[2])
         if spec[0] == "r":
             return regex_literal_prefix(spec[2])
-        return spec[2][: min(plen, len(spec[2]))]
+        return spec[2][:FUZZY_PREFIX_LEN]
 
     if missing:
         cond = None

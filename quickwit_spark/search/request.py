@@ -1,10 +1,15 @@
 """SearchRequest — the engine's analog of the reference SearchRequest proto
-(quickwit-proto/src/quickwit.rs:6-37; REST params docs/reference/rest-api.md:47-57).
+(quickwit-proto/src/quickwit.rs:6-37; REST params docs/reference/rest-api.md:47-57)
+— and SEARCH_PARAMS, the one table of user-facing search parameters that
+REST GET /search, the REST batch body and the CLI ``search`` subcommand
+parse (parse_search_params) and run (search.dispatch.run_search).
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
 
 @dataclass(frozen=True)
@@ -174,3 +179,312 @@ def parse_numeric_filters(entries) -> tuple[tuple, ...] | None:
             raise ValueError(f"numericFilter needs at least one bound: {s!r}")
         out.append((field, lo, hi))
     return tuple(out)
+
+
+# ---------------------------------------------------------------------------
+# The search-parameter table: ONE contract for REST ``GET /search``, the
+# ``POST /search/batch`` body and the CLI ``search`` subcommand.  The
+# reference parses REST into the same SearchRequest proto the CLI builds,
+# from one query-string struct with serde(deny_unknown_fields)
+# (rest.rs:124-127): an unknown name is an error, never a silent default,
+# and a parameter the route cannot honour is an error, never dropped.
+
+
+def _str(v) -> str:
+    if not isinstance(v, str):
+        raise TypeError("expected a string")
+    return v
+
+
+def _csv(v) -> tuple[str, ...]:
+    return tuple(_str(v).split(","))
+
+
+def _flag(v) -> bool:
+    return v if isinstance(v, bool) else str(v).lower() in ("true", "1")
+
+
+def _format(v) -> str:
+    if v not in ("json", "prettyjson"):
+        raise ValueError(f"unsupported format {v!r}")
+    return v
+
+
+def _json_object(v) -> dict:
+    obj = json.loads(_str(v))
+    if not isinstance(obj, dict):
+        raise ValueError("must be a JSON object")
+    return obj
+
+
+@dataclass(frozen=True)
+class Param:
+    """One search parameter.  ``rest`` is its query-string and batch-body
+    name; ``flag`` its CLI flag (None: REST-only).  ``parse`` turns a raw
+    value (query-string text, JSON value or argparse value) into the typed
+    one, and ``target``/``field`` say where it goes: a SearchRequest field
+    (a tuple of fields when ``parse`` returns one value per field), a
+    multi_index_agg argument (``filters`` runs search_agg_filters), the
+    collapse field/tie key, explain, or the response format.  ``requires``
+    names the parameter it only makes sense with; ``repeat`` marks a list
+    value (a repeated query-string key, an appending CLI flag, a JSON list
+    in the batch body)."""
+
+    rest: str
+    flag: str | None
+    parse: Callable
+    target: str
+    field: str | tuple[str, ...] = ""
+    requires: str | None = None
+    repeat: bool = False
+    required: bool = False
+    help: str | None = None
+
+    @property
+    def dest(self) -> str | None:
+        """The argparse attribute of the CLI flag."""
+        return self.flag[2:].replace("-", "_") if self.flag else None
+
+    @property
+    def switch(self) -> bool:
+        """A true/false parameter: a CLI store_true flag."""
+        return self.parse is _flag
+
+
+SEARCH_PARAMS: tuple[Param, ...] = (
+    Param("query", "--query", _str, "request", "query", required=True),
+    Param(
+        "searchField", "--search-fields", _csv, "request", "search_fields",
+        help="comma-separated default fields for unscoped clauses (overrides config)",
+    ),
+    Param("startTimestamp", "--start-timestamp", int, "request", "start_timestamp"),
+    Param("endTimestamp", "--end-timestamp", int, "request", "end_timestamp"),
+    Param("maxHits", "--max-hits", int, "request", "max_hits"),
+    Param("startOffset", "--start-offset", int, "request", "start_offset"),
+    Param(
+        "sortByField", "--sort-by", parse_sort_by_dsl, "request",
+        ("sort_by_field", "sort_asc"),
+        help="fast field to sort by: '+field' asc, '-field' desc, bare asc "
+        "(the REST sortByField mini-DSL, sort_by.rs:64-75); use the "
+        "--sort-by=-field form — a separate '-field' token parses as a flag",
+    ),
+    Param(
+        "searchAfter", "--search-after", parse_search_after, "request", "search_after",
+        help="cursor pagination: '<sortValueOrScore>,<split_id>,<doc_id>' of "
+        "the previous page's last hit — O(k) deep paging (vs --start-offset's "
+        "O(offset)); mutually exclusive with --start-offset",
+    ),
+    Param(
+        "snippetFields", "--snippet-fields", _csv, "request", "snippet_fields",
+        help="comma-separated tokenized text fields to return highlighted "
+        "fragments for (hit['snippets'])",
+    ),
+    Param(
+        "snippetMaxChars", "--snippet-max-chars", int, "request",
+        "snippet_max_chars", requires="snippetFields",
+    ),
+    Param(
+        "storedFields", "--stored-fields", _csv, "request", "stored_fields",
+        help="comma-separated subset of stored columns to return per hit "
+        "(default: all; the page fetch column-prunes to this set)",
+    ),
+    Param(
+        "numericFilter", "--numeric-filter", parse_numeric_filters, "request",
+        "numeric_filters", repeat=True,
+        help="fast-field range filter 'field:lo..hi' (half-open; repeatable; "
+        "either bound may be empty)",
+    ),
+    Param(
+        "minShouldMatch", "--min-should-match", int, "request", "min_should_match",
+        help="ES bool minimum_should_match over the top-level OR clauses: "
+        "a doc matches only if at least this many clauses match (scoring "
+        "still sums every matching clause)",
+    ),
+    Param(
+        "scoreExplain", "--score-explain", _flag, "request", "score_explain",
+        help="attach a per-hit BM25 breakdown (hit['score_detail']: each "
+        "matching term's tf/df/idf/doc_len/weight/contribution; the "
+        "contributions sum to the hit score bit-exactly)",
+    ),
+    Param(
+        "explain", "--explain", _flag, "explain",
+        help="print the query plan (split pruning, leaf strategy, per-term "
+        "df, in-process vs spark-job leaf) without executing the search",
+    ),
+    Param("format", None, _format, "format"),
+    Param(
+        "aggHistogramInterval", "--agg-histogram-interval", int, "agg",
+        "histogram_interval",
+        help="date-histogram aggregation over every match (bucket seconds)",
+    ),
+    Param(
+        "aggHistogramCalendar", "--agg-calendar", _str, "agg", "histogram_calendar",
+        help="calendar-interval date histogram (minute/hour/day/week/"
+        "month/quarter/year — ES calendar_interval; buckets are "
+        "date_trunc'd in UTC)",
+    ),
+    Param(
+        "aggTermsField", "--agg-terms", _str, "agg", "terms_field",
+        help="terms facet over every match's fast/stored field",
+    ),
+    Param(
+        "aggTermsSize", "--agg-terms-size", int, "agg", "terms_size",
+        requires="aggTermsField",
+    ),
+    Param(
+        "aggTermsMetricField", "--agg-terms-metric", _str, "agg",
+        "terms_metric_field", requires="aggTermsField",
+        help="nested stats (min/max/sum/avg of this fast i64 field) inside "
+        "each --agg-terms bucket (ES sub-aggregation)",
+    ),
+    Param(
+        "aggStatsField", "--agg-stats", _str, "agg", "stats_field",
+        help="stats aggregation (count/min/max/sum/avg) over a fast i64 field",
+    ),
+    Param(
+        "aggStatsExtended", None, _flag, "agg", "stats_extended",
+        requires="aggStatsField",
+    ),
+    Param(
+        "aggPercentilesField", "--agg-percentiles", _str, "agg", "percentiles_field",
+        help="EXACT p50/p90/p99 percentiles over a fast i64 field",
+    ),
+    Param(
+        "aggCardinalityField", "--agg-cardinality", _str, "agg", "cardinality_field",
+        help="EXACT distinct-value count over a fast or stored field",
+    ),
+    Param(
+        "aggSignificantField", "--agg-significant", _str, "agg", "significant_field",
+        help="significant_terms over a default-tokenized text field "
+        "(foreground = matches, background = term-stats LSM; JLH score)",
+    ),
+    Param(
+        "aggSignificantSize", "--agg-significant-size", int, "agg",
+        "significant_size", requires="aggSignificantField",
+    ),
+    Param(
+        "aggFilters", "--agg-filters", _json_object, "agg", "filters",
+        help='JSON object of named sub-queries counted within the base '
+        'query, e.g. \'{"errors": "error OR failure"}\' — all in one '
+        "batched leaf pass",
+    ),
+    Param(
+        "collapseField", "--collapse-field", _str, "collapse", "field",
+        help="field collapse: return one hit per distinct value of this "
+        "field (the group's best-BM25 doc), groups ranked by that score",
+    ),
+    Param(
+        "collapseTieField", "--collapse-tie-field", _str, "collapse", "tie_field",
+        requires="collapseField",
+        help="fast field used as the global tie key for collapse ordering "
+        "(default: split_id, doc_id)",
+    ),
+)
+_BY_REST = {p.rest: p for p in SEARCH_PARAMS}
+_AGG_NAMES = tuple(p.rest for p in SEARCH_PARAMS if p.target == "agg")
+
+
+class SearchParams(NamedTuple):
+    """A parsed search: the request plus what rides along with it."""
+
+    request: SearchRequest
+    aggs: dict  # multi_index_agg keyword arguments; empty = no aggregation
+    agg_filters: dict | None  # name → sub-query (search_agg_filters)
+    collapse: tuple[str, str | None] | None  # (field, tie field)
+    explain: bool
+    format: str
+
+
+def query_string_values(qs: dict[str, list[str]]) -> dict:
+    """``parse_qs`` output → the parser's name → raw-value mapping: a
+    repeatable parameter keeps every value, any other its first."""
+    return {
+        k: v if k in _BY_REST and _BY_REST[k].repeat else v[0] for k, v in qs.items()
+    }
+
+
+def cli_values(args: dict) -> dict:
+    """argparse ``vars(args)`` → the parser's mapping: every table flag the
+    command line set (an unset flag is None, an unset switch False)."""
+    out = {}
+    for p in SEARCH_PARAMS:
+        v = args.get(p.dest) if p.flag else None
+        if v is not None and v is not False:
+            out[p.rest] = v
+    return out
+
+
+def parse_search_params(
+    raw: dict, *, route: str = "get", multi_index: bool = False
+) -> SearchParams:
+    """Name → raw-value mapping (REST names; see query_string_values /
+    cli_values) → SearchParams, with every conflict rule checked here
+    once.  ``route`` is ``get`` (REST search), ``batch`` (one query of a
+    multi_search batch: request fields only, no score_explain) or ``cli``
+    (errors name the CLI flags; --explain prints the plan only, so it
+    takes no aggregation).  ``multi_index`` rejects what needs one
+    index's plan or background statistics.  Raises ValueError."""
+    unknown = sorted(set(raw) - set(_BY_REST))
+    if unknown:
+        raise ValueError(f"unknown query parameter(s): {', '.join(unknown)}")
+    if "query" not in raw:
+        raise ValueError("missing required param 'query'")
+
+    def label(name: str) -> str:
+        flag = _BY_REST[name].flag
+        return flag if route == "cli" and flag else name
+
+    got: dict = {}  # a false switch is an absent one
+    for name, v in raw.items():
+        p = _BY_REST[name]
+        try:
+            if p.repeat and not isinstance(v, (list, tuple)):
+                raise TypeError("expected a list")
+            val = p.parse(v)
+        except (TypeError, ValueError) as e:
+            raise ValueError(f"invalid {label(name)} {v!r}: {e}") from None
+        if val is not None and val is not False:
+            got[name] = val
+
+    def reject(names, why: str) -> None:
+        bad = [label(n) for n in names if n in got]
+        if bad:
+            raise ValueError(f"{why}: {', '.join(bad)}")
+
+    for name in got:
+        need = _BY_REST[name].requires
+        if need is not None and need not in got:
+            raise ValueError(f"{label(name)} requires {label(need)}")
+    if "collapseField" in got:
+        reject(("snippetFields", "explain", *_AGG_NAMES), "collapseField cannot combine with")
+    if multi_index:
+        reject(
+            ("explain", "aggSignificantField", "aggFilters"),
+            "multi-index search does not support",
+        )
+    if route == "batch":
+        reject(
+            [n for n in got if _BY_REST[n].target != "request"] + ["scoreExplain"],
+            "batch search does not support",
+        )
+    if route == "cli" and "explain" in got:
+        reject(_AGG_NAMES, "--explain prints the plan only; it cannot combine with")
+
+    fields: dict = {}
+    groups: dict[str, dict] = {"agg": {}, "collapse": {}}
+    for name, val in got.items():
+        p = _BY_REST[name]
+        if p.target == "request":
+            fields.update(zip(p.field, val) if isinstance(p.field, tuple) else [(p.field, val)])
+        elif p.target in groups:
+            groups[p.target][p.field] = val
+    aggs, collapse = groups["agg"], groups["collapse"]
+    filters = aggs.pop("filters", None)
+    return SearchParams(
+        SearchRequest(**fields),
+        aggs,
+        filters,
+        (collapse["field"], collapse.get("tie_field")) if collapse else None,
+        got.get("explain", False),
+        got.get("format", "prettyjson"),
+    )

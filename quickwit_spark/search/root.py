@@ -607,14 +607,23 @@ def _topk_batch(
 
 
 def _page_hits(
-    index_dir: str, config: IndexConfig, request: SearchRequest, page: list[dict]
+    index_dir: str, config: IndexConfig, request: SearchRequest, page: list[dict], ast
 ) -> list[dict]:
-    """A page's hits in their JSON shape (request is sort-resolved)."""
+    """A page's hits in their JSON shape, with their snippets (request is
+    sort-resolved; ``ast`` is its expanded query, so "depl*" highlights
+    as deploy)."""
     hits = [_hit_dict(config, r, request.stored_fields) for r in page]
     if request.sort_by_field in config.extra_fast_float_fields:
         for h in hits:  # wire carries monotonic int64 keys; hits show doubles
             h["sort_value"] = sort_key_to_f64(h["sort_value"])
     _maybe_add_source(index_dir, hits, page)
+    if request.snippet_fields:
+        from .snippet import attach_snippets
+
+        attach_snippets(
+            config, ast, hits, tuple(request.snippet_fields),
+            max_chars=request.snippet_max_chars,
+        )
     return hits
 
 
@@ -642,14 +651,14 @@ def multi_search(
         raise ValueError(
             "score_explain is not supported in batched search — use search()"
         )
-    config, answers, _ = _topk_batch(spark, index_dir, requests)
+    config, answers, plan = _topk_batch(spark, index_dir, requests)
     return [
         SearchResponse(
             num_hits,
-            _page_hits(index_dir, config, req, page),
+            _page_hits(index_dir, config, req, page, ast),
             int((time.monotonic() - t0) * 1e6),
         )
-        for req, page, num_hits in answers
+        for (req, page, num_hits), ast in zip(answers, plan.asts)
     ]
 
 
@@ -1122,18 +1131,8 @@ def search(
     t0 = time.monotonic()
     page, num_hits, plan = _search_rows(spark, index_dir, request)
     _, config = open_index(spark, index_dir)
-    out = _page_hits(index_dir, config, resolve_sort(request, config), page)
     [ast] = plan.asts  # expanded: "depl*" highlights and explains as deploy
-    if request.snippet_fields:
-        from .snippet import attach_snippets
-
-        attach_snippets(
-            config,
-            ast,
-            out,
-            tuple(request.snippet_fields),
-            max_chars=request.snippet_max_chars,
-        )
+    out = _page_hits(index_dir, config, resolve_sort(request, config), page, ast)
     if request.score_explain and out:
         try:
             _attach_score_explain(index_dir, config, ast, plan.buckets, plan.gstats, out)

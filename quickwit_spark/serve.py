@@ -5,10 +5,11 @@ Endpoints (same shapes as docs/reference/rest-api.md):
 * ``GET /health`` — liveness probe (rest.rs's /health analog).
 * ``GET /metrics`` — Prometheus text exposition of the request counters
   (rest.rs:52-54 metrics_service; quickwit-common/src/metrics.rs).
-* ``GET /api/v1/{index_id}/search`` — params ``query`` (required),
+* ``GET /api/v1/{index_id}/search`` — the parameters of the
+  ``search.request.SEARCH_PARAMS`` table (``query`` required,
   ``startTimestamp``, ``endTimestamp``, ``startOffset``, ``maxHits``,
-  ``searchField`` (comma-separated), ``sortByField`` →
-  ``{"numHits": N, "hits": [...], "elapsedTimeMicros": T}``
+  ``searchField``, ``sortByField``, ... plus snippets, explain, agg* and
+  collapse) → ``{"numHits": N, "hits": [...], "elapsedTimeMicros": T}``
   (rest-api.md:47-69; SearchRequest proto quickwit-proto/src/quickwit.rs:6-37).
 * ``GET /api/v1/{index_id}/search/stream`` — params ``query``,
   ``fastField`` (required), ``outputFormat`` = ``csv`` |
@@ -19,7 +20,9 @@ Endpoints (same shapes as docs/reference/rest-api.md):
   ``sortByField`` uses the reference mini-DSL everywhere: ``+f`` asc,
   ``-f`` desc, bare asc (rest.rs:361-371, sort_by.rs:64-75).
 * ``POST /api/v1/{index_id}/search/batch`` — body ``{"queries": [{...
-  search params per query...}]}`` → ``{"responses": [...]}`` — Q queries
+  search params per query...}]}`` → ``{"responses": [...]}``.  A query's
+  keys are the GET names with JSON values (``numericFilter`` a list);
+  explain, format, scoreExplain, agg* and collapse are 400s.  Q queries
   in ONE Spark leaf job (multi_search; no reference analog — the
   amortized-job-floor throughput path, ~2.6x at Q=8).
 
@@ -43,9 +46,7 @@ from urllib.parse import parse_qs, urlparse
 
 from quickwit_spark import metrics
 from quickwit_spark.index.catalog import Catalog
-from quickwit_spark.search.request import parse_numeric_filters as _parse_numeric_filters
-from quickwit_spark.search.request import parse_search_after as _parse_search_after
-from quickwit_spark.search.request import parse_sort_by_dsl as _sort_by_mini_dsl
+from quickwit_spark.search.request import parse_search_params, query_string_values
 
 # quickwit-serve/src/counters.rs:24-36 registers rest_api:search:num_requests
 # and bumps it per search request (rest.rs:50); the extra families below
@@ -73,39 +74,15 @@ COUNTERS = {
 }
 
 
-def _int_or_none(qs: dict, key: str):
-    v = qs.get(key, [None])[0]
-    return int(v) if v is not None else None
-
-
-# The reference derives its query-string structs with
-# serde(deny_unknown_fields) (rest.rs:124-127, 224-227): an unrecognized
-# parameter is a 400, never a silent default. Same contract here, with
-# our extensions (searchAfter / snippets / explain / agg*) in the search
-# set; the stream set is exactly the reference's
-# SearchStreamRequestQueryString fields.
-_SEARCH_PARAMS = frozenset(
-    {
-        "query", "searchField", "startTimestamp", "endTimestamp",
-        "maxHits", "startOffset", "format", "sortByField",
-        "searchAfter", "snippetFields", "snippetMaxChars", "storedFields",
-        "numericFilter", "explain", "scoreExplain", "minShouldMatch",
-        "aggHistogramInterval", "aggHistogramCalendar", "aggTermsField", "aggTermsSize",
-        "aggTermsMetricField", "aggStatsField", "aggStatsExtended",
-        "aggPercentilesField",
-        "aggCardinalityField", "aggSignificantField",
-        "aggSignificantSize", "aggFilters",
-        "collapseField", "collapseTieField",
-    }
-)
-_STREAM_PARAMS = frozenset(
-    {
-        "query", "searchField", "startTimestamp", "endTimestamp",
-        "fastField", "outputFormat", "partitionByField",
-    }
-)
-
-
+# The search parameters (GET /search and each batch query) are the
+# request.SEARCH_PARAMS table.  The stream set is exactly the reference's
+# SearchStreamRequestQueryString fields: four table parameters plus the
+# stream's own.
+_STREAM_ONLY = frozenset({"fastField", "outputFormat", "partitionByField"})
+_STREAM_PARAMS = _STREAM_ONLY | {"query", "searchField", "startTimestamp", "endTimestamp"}
+# rest-api.md:47-57: a REST search returns 20 hits unless maxHits says
+# otherwise (maxHits=0 is the count-only request)
+_REST_DEFAULTS = {"maxHits": 20}
 
 
 def _bad_index_id(index_id: str) -> bool:
@@ -159,7 +136,6 @@ class _Handler(BaseHTTPRequestHandler):
 
     def do_POST(self):  # noqa: N802 (stdlib handler naming)
         from quickwit_spark.search.executor import multi_search
-        from quickwit_spark.search.request import SearchRequest
 
         url = urlparse(self.path)
         parts = [p for p in url.path.split("/") if p]
@@ -178,37 +154,17 @@ class _Handler(BaseHTTPRequestHandler):
         try:
             n = int(self.headers.get("Content-Length", 0))
             body = json.loads(self.rfile.read(n) or b"{}")
-            reqs = []
-            for q in body.get("queries", []):
-                sf, s_asc = _sort_by_mini_dsl(q.get("sortByField"))
-                reqs.append(
-                    SearchRequest(
-                        query=q["query"],
-                        max_hits=int(q.get("maxHits", 20)),
-                        start_offset=int(q.get("startOffset", 0)),
-                        start_timestamp=q.get("startTimestamp"),
-                        end_timestamp=q.get("endTimestamp"),
-                        search_fields=(
-                            tuple(q["searchField"].split(",")) if "searchField" in q else None
-                        ),
-                        sort_by_field=sf,
-                        sort_asc=s_asc,
-                        search_after=_parse_search_after(q.get("searchAfter")),
-                        stored_fields=(
-                            tuple(q["storedFields"].split(","))
-                            if "storedFields" in q
-                            else None
-                        ),
-                        numeric_filters=_parse_numeric_filters(
-                            q.get("numericFilters")
-                        ),
-                    )
-                )
-            if not reqs:
-                return self._err(400, "body must contain a non-empty 'queries' list")
+            queries = body.get("queries") if isinstance(body, dict) else None
+            if not (isinstance(queries, list) and queries and all(isinstance(q, dict) for q in queries)):
+                return self._err(400, "body must contain a non-empty 'queries' list of objects")
+            # batch keys are the GET names, with JSON values
+            reqs = [
+                parse_search_params({**_REST_DEFAULTS, **q}, route="batch").request
+                for q in queries
+            ]
             with self.lock:
                 resps = multi_search(self.spark, index_dir, reqs)
-        except (ValueError, KeyError, json.JSONDecodeError) as e:
+        except ValueError as e:  # json.JSONDecodeError is a ValueError
             return self._err(400, str(e))
         out = {
             "responses": [
@@ -223,8 +179,7 @@ class _Handler(BaseHTTPRequestHandler):
         return self._reply(200, json.dumps(out).encode())
 
     def do_GET(self):  # noqa: N802 (stdlib handler naming)
-        from quickwit_spark.search.executor import search, search_stream
-        from quickwit_spark.search.request import SearchRequest
+        from quickwit_spark.search.dispatch import run_search
 
         url = urlparse(self.path)
         parts = [p for p in url.path.split("/") if p]
@@ -257,34 +212,23 @@ class _Handler(BaseHTTPRequestHandler):
             return self._err(404, f"no route for {url.path}")
         index_id = parts[2]
         # ES-style multi-index addressing: /api/v1/a,b/search fans the
-        # request over several indexes and merges pages (plain search
-        # only; stream/termdict/agg/collapse/explain stay single-index)
-        multi_ids = (
-            [i for i in index_id.split(",") if i] if "," in index_id else None
-        )
-        if multi_ids is not None:
-            if len(set(multi_ids)) != len(multi_ids) or len(multi_ids) < 2:
-                return self._err(400, f"bad multi-index list {index_id!r}")
-            for i in multi_ids:
-                if _bad_index_id(i) or not Catalog.exists(
-                    os.path.join(self.index_root, i)
-                ):
-                    return self._err(404, f"index {i!r} not found")
-            index_dir = None  # every use below must branch on multi_ids
-            if parts[3] != "search" or len(parts) not in (4, 5) or (
-                len(parts) == 5 and parts[4] != "stream"
-            ):
-                return self._err(
-                    400,
-                    "multi-index addressing supports only /search and "
-                    "/search/stream",
-                )
-        else:
-            if _bad_index_id(index_id):
-                return self._err(404, f"index {index_id!r} not found")
-            index_dir = os.path.join(self.index_root, index_id)
-            if not Catalog.exists(index_dir):
-                return self._err(404, f"index {index_id!r} not found")
+        # request over several indexes and merges pages (search and
+        # search/stream only; doc/termdict stay single-index)
+        ids = [i for i in index_id.split(",") if i] if "," in index_id else [index_id]
+        if "," in index_id and (len(set(ids)) != len(ids) or len(ids) < 2):
+            return self._err(400, f"bad multi-index list {index_id!r}")
+        for i in ids:
+            if _bad_index_id(i) or not Catalog.exists(os.path.join(self.index_root, i)):
+                return self._err(404, f"index {i!r} not found")
+        index_dirs = [os.path.join(self.index_root, i) for i in ids]
+        multi = len(index_dirs) > 1
+        if multi and (
+            parts[3] != "search" or parts[4:] not in ([], ["stream"])
+        ):
+            return self._err(
+                400, "multi-index addressing supports only /search and /search/stream"
+            )
+        index_dir = index_dirs[0]
         if parts[3] == "doc":
             # single-document GET by (split_id, doc_id) address (the ES
             # GET /index/_doc analog): one row-group-pruned doc-store read
@@ -339,488 +283,234 @@ class _Handler(BaseHTTPRequestHandler):
             out = {"field": fieldname, "terms": terms}
             return self._reply(200, json.dumps(out).encode())
         qs = parse_qs(url.query)
-        if "query" not in qs:
-            return self._err(400, "missing required param 'query'")
-        is_stream = len(parts) == 5 and parts[4] == "stream"
+        if parts[4:] == ["stream"]:
+            return self._search_stream(qs, index_dirs)
+        COUNTERS["search"].inc()  # rest.rs:50
+        try:
+            params = parse_search_params(
+                {**_REST_DEFAULTS, **query_string_values(qs)}, multi_index=multi
+            )
+            with self.lock:
+                res = run_search(self.spark, index_dirs, params)
+        except ValueError as e:  # parameter or parser rejection (bad query / field)
+            return self._err(400, str(e))
+        if res.collapse is not None:
+            rows, n_groups, n_docs = res.collapse
+            out = {
+                "numHits": n_docs,
+                "collapse": {"field": params.collapse[0], "numGroups": n_groups},
+                "hits": rows,
+            }
+        else:
+            out = {
+                "numHits": res.response.num_hits,
+                "hits": res.response.hits,
+                "elapsedTimeMicros": res.response.elapsed_time_micros,
+            }
+            aggs = _format_aggs(res.aggs, params.aggs)
+            if res.filters:
+                aggs["filters"] = {
+                    "buckets": [{"key": k, "docCount": n} for k, n in res.filters]
+                }
+            if aggs:
+                out["aggregations"] = aggs
+            if res.plan is not None:
+                out["explain"] = res.plan
+        # format=json|prettyjson (reference rest-api.md: default prettyjson)
+        body = json.dumps(out, indent=2 if params.format == "prettyjson" else None)
+        return self._reply(200, body.encode())
+
+    def _search_stream(self, qs: dict, index_dirs: list[str]):
+        """``/search/stream``: every matching doc's fast-field value."""
+        from quickwit_spark.search.executor import search_stream
+
         # serde(deny_unknown_fields) parity (rest.rs:124,225): a typo'd
         # param must 400, not silently fall back to its default
-        allowed = _STREAM_PARAMS if is_stream else _SEARCH_PARAMS
-        unknown = sorted(set(qs) - allowed)
+        unknown = sorted(set(qs) - _STREAM_PARAMS)
         if unknown:
             return self._err(
                 400, f"unknown query parameter(s): {', '.join(unknown)}"
             )
-        COUNTERS["stream" if is_stream else "search"].inc()  # rest.rs:50
+        COUNTERS["stream"].inc()  # rest.rs:50
+        index_dir = index_dirs[0]
+        multi = len(index_dirs) > 1
         try:
-            sf, s_asc = _sort_by_mini_dsl(qs.get("sortByField", [None])[0])
-            req = SearchRequest(
-                query=qs["query"][0],
-                # `x if x is not None` not `or`: maxHits=0 is the COUNT
-                # request (count collector) and must not fall back to 20
-                max_hits=(
-                    mh if (mh := _int_or_none(qs, "maxHits")) is not None else 20
-                ),
-                start_offset=_int_or_none(qs, "startOffset") or 0,
-                start_timestamp=_int_or_none(qs, "startTimestamp"),
-                end_timestamp=_int_or_none(qs, "endTimestamp"),
-                search_fields=(
-                    tuple(qs["searchField"][0].split(",")) if "searchField" in qs else None
-                ),
-                sort_by_field=sf,
-                sort_asc=s_asc,
-                search_after=_parse_search_after(qs.get("searchAfter", [None])[0]),
-                snippet_fields=(
-                    tuple(qs["snippetFields"][0].split(","))
-                    if "snippetFields" in qs
-                    else None
-                ),
-                snippet_max_chars=_int_or_none(qs, "snippetMaxChars") or 150,
-                stored_fields=(
-                    tuple(qs["storedFields"][0].split(","))
-                    if "storedFields" in qs
-                    else None
-                ),
-                numeric_filters=_parse_numeric_filters(qs.get("numericFilter")),
-                score_explain=qs.get("scoreExplain", ["false"])[0].lower()
-                in ("true", "1"),
-                min_should_match=_int_or_none(qs, "minShouldMatch") or 1,
-            )
-            if is_stream:
-                fast_field = qs.get("fastField", [None])[0]
-                if fast_field is None:
-                    return self._err(400, "missing required param 'fastField'")
-                if not fast_field:
-                    # rest.rs deserialize_not_empty_string: empty is a 400,
-                    # not a field named ""
-                    return self._err(400, "fastField must not be empty")
-                if req.search_after is not None:
-                    # the stream leaf exports EVERY matching doc (no top-k
-                    # order), so a cursor has no meaning — reject rather
-                    # than silently re-export everything
+            searched = {k: v for k, v in qs.items() if k not in _STREAM_ONLY}
+            req = parse_search_params(
+                {**_REST_DEFAULTS, **query_string_values(searched)}
+            ).request
+            fast_field = qs.get("fastField", [None])[0]
+            if fast_field is None:
+                return self._err(400, "missing required param 'fastField'")
+            if not fast_field:
+                # rest.rs deserialize_not_empty_string: empty is a 400,
+                # not a field named ""
+                return self._err(400, "fastField must not be empty")
+            fmt = qs.get("outputFormat", ["csv"])[0]
+            if fmt not in ("csv", "clickHouseRowBinary"):
+                return self._err(400, f"unsupported outputFormat {fmt!r}")
+            partition_by = qs.get("partitionByField", [None])[0]
+            if partition_by is not None:
+                # leaf.rs:140-145: partitioned export requires the
+                # RowBinary format; CSV + partitionBy is a 400
+                if fmt != "clickHouseRowBinary":
                     return self._err(
-                        400, "searchAfter is not supported on /search/stream"
+                        400,
+                        "partitionByField requires "
+                        "outputFormat=clickHouseRowBinary",
                     )
-                fmt = qs.get("outputFormat", ["csv"])[0]
-                if fmt not in ("csv", "clickHouseRowBinary"):
-                    return self._err(400, f"unsupported outputFormat {fmt!r}")
-                partition_by = qs.get("partitionByField", [None])[0]
-                if partition_by is not None:
-                    # leaf.rs:140-145: partitioned export requires the
-                    # RowBinary format; CSV + partitionBy is a 400
-                    if fmt != "clickHouseRowBinary":
+                import struct
+                from itertools import islice
+
+                from quickwit_spark.search.executor import (
+                    export_stream,
+                    multi_index_export_stream,
+                )
+
+                with self.lock:
+                    if multi:
+                        # partition keys merge across indexes (exact
+                        # union-reduce — multi_index_agg contract)
+                        df = multi_index_export_stream(
+                            self.spark,
+                            index_dirs,
+                            req, fast_field,
+                            output_format="rowbinary",
+                            partition_by=partition_by,
+                        )
+                    else:
+                        df = export_stream(
+                            self.spark, index_dir, req, fast_field,
+                            output_format="rowbinary",
+                            partition_by=partition_by,
+                        )
+                    # reference contract (leaf.rs:346-357): the
+                    # partition field must be numeric — reject BEFORE
+                    # the chunked reply starts (a mid-stream error
+                    # would only truncate the body)
+                    ptype = df.schema[0].dataType.simpleString()
+                    if ptype not in ("bigint", "int", "smallint", "tinyint", "long"):
                         return self._err(
                             400,
-                            "partitionByField requires "
-                            "outputFormat=clickHouseRowBinary",
+                            f"partitionByField {partition_by!r} must be "
+                            f"an integer column (got {ptype})",
                         )
-                    import struct
-                    from itertools import islice
+                    rows_it = df.toLocalIterator(prefetchPartitions=True)
 
+                # reference wire format (search_stream/mod.rs:50-69):
+                # per partition, partition value (8B LE) + payload
+                # byte size (8B LE) + the i64 values
+                def part_chunks():
+                    while True:
+                        with self.lock:
+                            rows = list(islice(rows_it, 64))
+                        if not rows:
+                            return
+                        out = []
+                        for r in rows:
+                            payload = r["payload"]
+                            out.append(
+                                struct.pack(
+                                    "<qQ", int(r[partition_by]), len(payload)
+                                )
+                                + payload
+                            )
+                        yield b"".join(out)
+
+                return self._reply_chunked(
+                    part_chunks(), "application/octet-stream"
+                )
+            # toLocalIterator: partitions stream to the driver one at a
+            # time — memory stays bounded no matter how many docs match
+            # (collect() of a hot query's export could be index-sized).
+            # The driver lock is held only around Spark access (the plan
+            # build and each iterator pull), NEVER across the client
+            # socket write — a slow or stalled client must not block
+            # every other query on the server for the whole transfer.
+            from itertools import islice
+
+            import numpy as np
+
+            with self.lock:
+                if multi:
                     from quickwit_spark.search.executor import (
-                        export_stream,
                         multi_index_export_stream,
                     )
 
-                    with self.lock:
-                        if multi_ids is not None:
-                            # partition keys merge across indexes (exact
-                            # union-reduce — multi_index_agg contract)
-                            df = multi_index_export_stream(
-                                self.spark,
-                                [os.path.join(self.index_root, i) for i in multi_ids],
-                                req, fast_field,
-                                output_format="rowbinary",
-                                partition_by=partition_by,
-                            )
-                        else:
-                            df = export_stream(
-                                self.spark, index_dir, req, fast_field,
-                                output_format="rowbinary",
-                                partition_by=partition_by,
-                            )
-                        # reference contract (leaf.rs:346-357): the
-                        # partition field must be numeric — reject BEFORE
-                        # the chunked reply starts (a mid-stream error
-                        # would only truncate the body)
-                        ptype = df.schema[0].dataType.simpleString()
-                        if ptype not in ("bigint", "int", "smallint", "tinyint", "long"):
-                            return self._err(
-                                400,
-                                f"partitionByField {partition_by!r} must be "
-                                f"an integer column (got {ptype})",
-                            )
-                        rows_it = df.toLocalIterator(prefetchPartitions=True)
-
-                    # reference wire format (search_stream/mod.rs:50-69):
-                    # per partition, partition value (8B LE) + payload
-                    # byte size (8B LE) + the i64 values
-                    def part_chunks():
-                        while True:
-                            with self.lock:
-                                rows = list(islice(rows_it, 64))
-                            if not rows:
-                                return
-                            out = []
-                            for r in rows:
-                                payload = r["payload"]
-                                out.append(
-                                    struct.pack(
-                                        "<qQ", int(r[partition_by]), len(payload)
-                                    )
-                                    + payload
-                                )
-                            yield b"".join(out)
-
-                    return self._reply_chunked(
-                        part_chunks(), "application/octet-stream"
+                    # union of the per-index streams; the wire format
+                    # stays one value per line/8 bytes (reference
+                    # parity) — index identity is a DataFrame-API
+                    # concern, not a wire one
+                    stream_df = multi_index_export_stream(
+                        self.spark,
+                        index_dirs,
+                        req, fast_field, output_format="csv",
                     )
-                # toLocalIterator: partitions stream to the driver one at a
-                # time — memory stays bounded no matter how many docs match
-                # (collect() of a hot query's export could be index-sized).
-                # The driver lock is held only around Spark access (the plan
-                # build and each iterator pull), NEVER across the client
-                # socket write — a slow or stalled client must not block
-                # every other query on the server for the whole transfer.
-                from itertools import islice
+                else:
+                    stream_df = search_stream(
+                        self.spark, index_dir, req, fast_field
+                    )
+                it = stream_df.toLocalIterator(prefetchPartitions=True)
 
-                import numpy as np
+            def batches(size=8192):
+                while True:
+                    with self.lock:
+                        rows = list(islice(it, size))
+                    if not rows:
+                        return
+                    yield rows
 
-                with self.lock:
-                    if multi_ids is not None:
-                        from quickwit_spark.search.executor import (
-                            multi_index_export_stream,
-                        )
-
-                        # union of the per-index streams; the wire format
-                        # stays one value per line/8 bytes (reference
-                        # parity) — index identity is a DataFrame-API
-                        # concern, not a wire one
-                        stream_df = multi_index_export_stream(
-                            self.spark,
-                            [os.path.join(self.index_root, i) for i in multi_ids],
-                            req, fast_field, output_format="csv",
-                        )
-                    else:
-                        stream_df = search_stream(
-                            self.spark, index_dir, req, fast_field
-                        )
-                    it = stream_df.toLocalIterator(prefetchPartitions=True)
-
-                def batches(size=8192):
-                    while True:
-                        with self.lock:
-                            rows = list(islice(it, size))
-                        if not rows:
-                            return
-                        yield rows
-
-                if fmt == "csv":
-                    def csv_chunks():
-                        for rows in batches():
-                            yield ("\n".join(str(r[fast_field]) for r in rows) + "\n").encode()
-
-                    return self._reply_chunked(csv_chunks(), "text/csv")
-
-                # ClickHouse RowBinary: little-endian i64 per value
-                # (docs/reference/rest-api.md:70-114, search_stream/leaf.rs)
-                def bin_chunks():
+            if fmt == "csv":
+                def csv_chunks():
                     for rows in batches():
-                        yield np.asarray([r[fast_field] for r in rows], dtype="<i8").tobytes()
+                        yield ("\n".join(str(r[fast_field]) for r in rows) + "\n").encode()
 
-                return self._reply_chunked(bin_chunks(), "application/octet-stream")
-            # field collapse (beyond-reference, ES `collapse`): one hit per
-            # distinct field value; its own response shape, so it composes
-            if multi_ids is not None:
-                # multi-index: search + aggregations (exact union-reduce
-                # merge, executor.multi_index_agg).  Still single-index
-                # only: collapse/explain (per-index plans), significant
-                # terms (per-index background stats), filters.
-                single_only = [
-                    p
-                    for p in (
-                        "explain",
-                        "aggSignificantField", "aggFilters",
-                    )
-                    if qs.get(p, [None])[0] is not None
-                ]
-                if single_only:
-                    return self._err(
-                        400,
-                        "multi-index search does not support: "
-                        + ", ".join(single_only),
-                    )
-                from quickwit_spark.search.executor import (
-                    multi_index_agg,
-                    multi_index_collapse_rows,
-                    multi_index_search,
-                )
+                return self._reply_chunked(csv_chunks(), "text/csv")
 
-                dirs_mi = [os.path.join(self.index_root, i) for i in multi_ids]
-                collapse_field = qs.get("collapseField", [None])[0]
-                if collapse_field is not None:
-                    # same conflict contract as the single-index collapse
-                    # branch below
-                    if req.snippet_fields is not None:
-                        return self._err(
-                            400, "collapseField cannot combine with snippetFields"
-                        )
-                    if any(
-                        qs.get(p, [None])[0] is not None
-                        for p in (
-                            "aggHistogramInterval", "aggHistogramCalendar",
-                            "aggTermsField", "aggTermsMetricField",
-                            "aggStatsField", "aggStatsExtended",
-                            "aggPercentilesField",
-                            "aggCardinalityField",
-                        )
-                    ):
-                        return self._err(
-                            400, "collapseField cannot combine with agg* params"
-                        )
-                    with self.lock:
-                        rows, n_groups, n_docs = multi_index_collapse_rows(
-                            self.spark,
-                            dirs_mi,
-                            req,
-                            collapse_field,
-                            qs.get("collapseTieField", [None])[0],
-                        )
-                    out = {
-                        "numHits": n_docs,
-                        "collapse": {"field": collapse_field, "numGroups": n_groups},
-                        "hits": rows,
-                    }
-                    fmt = qs.get("format", ["prettyjson"])[0]
-                    if fmt not in ("json", "prettyjson"):
-                        return self._err(400, f"unsupported format {fmt!r}")
-                    body = json.dumps(out, indent=2 if fmt == "prettyjson" else None)
-                    return self._reply(200, body.encode())
+            # ClickHouse RowBinary: little-endian i64 per value
+            # (docs/reference/rest-api.md:70-114, search_stream/leaf.rs)
+            def bin_chunks():
+                for rows in batches():
+                    yield np.asarray([r[fast_field] for r in rows], dtype="<i8").tobytes()
 
-                agg_interval = _int_or_none(qs, "aggHistogramInterval")
-                agg_calendar = qs.get("aggHistogramCalendar", [None])[0]
-                agg_terms = qs.get("aggTermsField", [None])[0]
-                agg_terms_metric = qs.get("aggTermsMetricField", [None])[0]
-                agg_stats = qs.get("aggStatsField", [None])[0]
-                agg_stats_ext = qs.get("aggStatsExtended", ["false"])[0] in ("true", "1")
-                if agg_stats_ext and agg_stats is None:
-                    return self._err(400, "aggStatsExtended requires aggStatsField")
-                agg_pcts = qs.get("aggPercentilesField", [None])[0]
-                agg_card = qs.get("aggCardinalityField", [None])[0]
-                dirs = dirs_mi
-                aggs = {}
-                with self.lock:
-                    resp = multi_index_search(self.spark, dirs, req)
-                    if any(
-                        a is not None
-                        for a in (
-                            agg_interval, agg_calendar, agg_terms,
-                            agg_terms_metric, agg_stats, agg_pcts, agg_card,
-                        )
-                    ):
-                        size = _int_or_none(qs, "aggTermsSize") or 10
-                        multi = multi_index_agg(
-                            self.spark,
-                            dirs,
-                            req,
-                            histogram_interval=agg_interval,
-                            histogram_calendar=agg_calendar,
-                            terms_field=agg_terms,
-                            terms_size=size,
-                            terms_metric_field=agg_terms_metric,
-                            stats_field=agg_stats,
-                            stats_extended=agg_stats_ext,
-                            percentiles_field=agg_pcts,
-                            cardinality_field=agg_card,
-                        )
-                        aggs = _format_aggs(
-                            multi, agg_interval, agg_terms, agg_terms_metric,
-                            agg_stats, agg_pcts, agg_card, None,
-                        )
-                out = {
-                    "numHits": resp.num_hits,
-                    "hits": resp.hits,
-                    "elapsedTimeMicros": resp.elapsed_time_micros,
-                }
-                if aggs:
-                    out["aggregations"] = aggs
-                fmt = qs.get("format", ["prettyjson"])[0]
-                if fmt not in ("json", "prettyjson"):
-                    return self._err(400, f"unsupported format {fmt!r}")
-                body = json.dumps(out, indent=2 if fmt == "prettyjson" else None)
-                return self._reply(200, body.encode())
-            # with neither snippets nor aggregations
-            collapse_field = qs.get("collapseField", [None])[0]
-            if collapse_field is not None:
-                if req.snippet_fields is not None:
-                    return self._err(
-                        400, "collapseField cannot combine with snippetFields"
-                    )
-                if any(
-                    qs.get(p, [None])[0] is not None
-                    for p in (
-                        "aggHistogramInterval", "aggHistogramCalendar",
-                        "aggTermsField",
-                        "aggTermsMetricField", "aggStatsField",
-                        "aggStatsExtended",
-                        "aggPercentilesField", "aggCardinalityField",
-                        "aggSignificantField", "aggFilters",
-                    )
-                ):
-                    return self._err(
-                        400, "collapseField cannot combine with agg* params"
-                    )
-                from quickwit_spark.search.executor import search_collapse_rows
-
-                with self.lock:
-                    rows, n_groups, n_docs = search_collapse_rows(
-                        self.spark,
-                        index_dir,
-                        req,
-                        collapse_field,
-                        qs.get("collapseTieField", [None])[0],
-                    )
-                out = {
-                    "numHits": n_docs,
-                    "collapse": {"field": collapse_field, "numGroups": n_groups},
-                    "hits": rows,
-                }
-                fmt = qs.get("format", ["prettyjson"])[0]
-                if fmt not in ("json", "prettyjson"):
-                    return self._err(400, f"unsupported format {fmt!r}")
-                body = json.dumps(out, indent=2 if fmt == "prettyjson" else None)
-                return self._reply(200, body.encode())
-            # search-side aggregations (beyond-reference; agg-only clients
-            # pass maxHits=0, which takes the count-only fast path)
-            agg_interval = _int_or_none(qs, "aggHistogramInterval")
-            agg_calendar = qs.get("aggHistogramCalendar", [None])[0]
-            agg_terms = qs.get("aggTermsField", [None])[0]
-            agg_terms_metric = qs.get("aggTermsMetricField", [None])[0]
-            agg_stats = qs.get("aggStatsField", [None])[0]
-            agg_stats_ext = qs.get("aggStatsExtended", ["false"])[0] in ("true", "1")
-            if agg_stats_ext and agg_stats is None:
-                return self._err(400, "aggStatsExtended requires aggStatsField")
-            agg_pcts = qs.get("aggPercentilesField", [None])[0]
-            agg_card = qs.get("aggCardinalityField", [None])[0]
-            agg_sig = qs.get("aggSignificantField", [None])[0]
-            aggs = {}
-            want_explain = qs.get("explain", ["false"])[0] in ("true", "1")
-            plan = None
-            with self.lock:
-                if want_explain:
-                    from quickwit_spark.search.executor import explain
-
-                    plan = explain(self.spark, index_dir, req)
-                resp = search(self.spark, index_dir, req)
-                if any(
-                    a is not None
-                    for a in (
-                        agg_interval, agg_calendar, agg_terms, agg_terms_metric,
-                        agg_stats, agg_pcts, agg_card, agg_sig,
-                    )
-                ):
-                    # ALL requested aggregations share one stream leaf:
-                    # the match set is evaluated once, not once per agg
-                    from quickwit_spark.search.executor import search_agg_multi
-
-                    size = _int_or_none(qs, "aggTermsSize") or 10  # ES default
-                    multi = search_agg_multi(
-                        self.spark,
-                        index_dir,
-                        req,
-                        histogram_interval=agg_interval,
-                        histogram_calendar=agg_calendar,
-                        terms_field=agg_terms,
-                        terms_size=size,
-                        terms_metric_field=agg_terms_metric,
-                        stats_field=agg_stats,
-                        stats_extended=agg_stats_ext,
-                        percentiles_field=agg_pcts,
-                        cardinality_field=agg_card,
-                        significant_field=agg_sig,
-                        significant_size=(
-                            _int_or_none(qs, "aggSignificantSize") or 10
-                        ),
-                    )
-                    aggs.update(
-                        _format_aggs(
-                            multi, agg_interval, agg_terms, agg_terms_metric,
-                            agg_stats, agg_pcts, agg_card, agg_sig,
-                        )
-                    )
-                agg_filters = qs.get("aggFilters", [None])[0]
-                if agg_filters is not None:
-                    from quickwit_spark.search.executor import search_agg_filters
-
-                    try:
-                        flt = json.loads(agg_filters)
-                    except json.JSONDecodeError as e:
-                        raise ValueError(f"aggFilters is not valid JSON: {e}")
-                    if not isinstance(flt, dict):
-                        raise ValueError("aggFilters must be a JSON object")
-                    rows = search_agg_filters(
-                        self.spark, index_dir, req, flt
-                    ).collect()
-                    aggs["filters"] = {
-                        "buckets": [
-                            {"key": r["key"], "docCount": int(r["doc_count"])}
-                            for r in rows
-                        ]
-                    }
-        except ValueError as e:  # parser rejection (bad query / field)
+            return self._reply_chunked(bin_chunks(), "application/octet-stream")
+        except ValueError as e:  # parameter or parser rejection
             return self._err(400, str(e))
-        out = {
-            "numHits": resp.num_hits,
-            "hits": resp.hits,
-            "elapsedTimeMicros": resp.elapsed_time_micros,
-        }
-        if aggs:
-            out["aggregations"] = aggs
-        if plan is not None:
-            out["explain"] = plan
-        # format=json|prettyjson (reference rest-api.md: default prettyjson)
-        fmt = qs.get("format", ["prettyjson"])[0]
-        if fmt not in ("json", "prettyjson"):
-            return self._err(400, f"unsupported format {fmt!r}")
-        body = json.dumps(out, indent=2 if fmt == "prettyjson" else None)
-        return self._reply(200, body.encode())
 
 
-def _format_aggs(
-    multi: dict, agg_interval, agg_terms, agg_terms_metric,
-    agg_stats, agg_pcts, agg_card, agg_sig,
-) -> dict:
-    """Engine agg result dict → REST response shape (shared by the
-    single-index and multi-index search endpoints)."""
+def _format_aggs(multi: dict, asked: dict) -> dict:
+    """Engine agg result dict → REST response shape; ``asked`` is the
+    multi_index_agg arguments that produced it (for the field names)."""
     aggs: dict = {}
     if "histogram" in multi:
         aggs["histogram"] = {
-            "interval": agg_interval,
+            "interval": asked.get("histogram_interval"),
             "buckets": [
                 {"key": b, "docCount": n} for b, n in multi["histogram"]
             ],
         }
     if "terms" in multi:
         aggs["terms"] = {
-            "field": agg_terms,
+            "field": asked["terms_field"],
             "buckets": [
                 {"key": v, "docCount": n} for v, n in multi["terms"]
             ],
         }
     if "terms_stats" in multi:
         aggs["termsStats"] = {
-            "field": agg_terms,
-            "metricField": agg_terms_metric,
+            "field": asked["terms_field"],
+            "metricField": asked["terms_metric_field"],
             "buckets": multi["terms_stats"],
         }
     if "stats" in multi:
-        aggs["stats"] = {"field": agg_stats, **multi["stats"]}
+        aggs["stats"] = {"field": asked["stats_field"], **multi["stats"]}
     if "percentiles" in multi:
-        aggs["percentiles"] = {"field": agg_pcts, **multi["percentiles"]}
+        aggs["percentiles"] = {"field": asked["percentiles_field"], **multi["percentiles"]}
     if "cardinality" in multi:
-        aggs["cardinality"] = {"field": agg_card, **multi["cardinality"]}
+        aggs["cardinality"] = {"field": asked["cardinality_field"], **multi["cardinality"]}
     if "significant_terms" in multi:
         aggs["significantTerms"] = {
-            "field": agg_sig,
+            "field": asked["significant_field"],
             "buckets": multi["significant_terms"],
         }
     return aggs

@@ -338,3 +338,62 @@ def test_processes_racing_publish_merge_gc(tmp_path, metastore):
         mine = [s for s in cat.splits() if s.split_id.startswith(f"w{w}-")]
         marked = sum(1 for r in range(rounds) if r % 3 == 2)
         assert sum(s.num_docs for s in mine) == rounds - marked
+
+
+def _cas_pair(tmp_path, where):
+    from quickwit_spark.index.metastore import CasObjectBackend
+    from quickwit_spark.storage import storage_for
+
+    index_dir = f"qwsim://{tmp_path}/idx" if where == "qwsim" else str(tmp_path / "idx")
+    a, b = (CasObjectBackend(index_dir, storage_for(index_dir)) for _ in "ab")
+    a.put({"entries": []})  # generation 1
+    return a, b
+
+
+def _append(name):
+    return lambda state: state["entries"].append(name)
+
+
+@pytest.mark.parametrize("where", ["local", "qwsim"])
+def test_cas_stalled_committer_update_survives_prune(tmp_path, where):
+    """Writer A reads generation 1 and stalls in its state function while
+    writer B lands KEEP_GENERATIONS + 2 commits (pruning generation 2's
+    name): A's put on the freed name must not count as a commit — its
+    entry ends in the final state, exactly once."""
+    a, b = _cas_pair(tmp_path, where)
+    n_b = a.KEEP_GENERATIONS + 2
+    stalled = []
+
+    def a_update(state):
+        if not stalled:
+            stalled.append(True)
+            for i in range(n_b):
+                b.rmw(_append(f"b{i}"), {})
+        state["entries"].append("a")
+
+    a.rmw(a_update, {})
+    final = b.load()["entries"]
+    assert sorted(final) == sorted(["a"] + [f"b{i}" for i in range(n_b)])
+
+
+@pytest.mark.parametrize("where", ["local", "qwsim"])
+def test_cas_successor_of_a_won_commit_is_not_reapplied(tmp_path, where):
+    """A commit whose successor lands between its winning put and its
+    post-put LIST is a real commit: it must not retry and apply twice."""
+    a, b = _cas_pair(tmp_path, where)
+    real_put = a.storage.put_if_absent
+    fired = []
+
+    def put_then_successor(path, data):
+        won = real_put(path, data)
+        if won and not fired:
+            fired.append(True)
+            b.rmw(_append("b"), {})
+        return won
+
+    a.storage.put_if_absent = put_then_successor
+    try:
+        a.rmw(_append("a"), {})
+    finally:
+        del a.storage.put_if_absent
+    assert b.load()["entries"] == ["a", "b"]
