@@ -456,7 +456,10 @@ def parse_search_params(
         if need is not None and need not in got:
             raise ValueError(f"{label(name)} requires {label(need)}")
     if "collapseField" in got:
-        reject(("snippetFields", "explain", *_AGG_NAMES), "collapseField cannot combine with")
+        reject(
+            ("snippetFields", "explain", *_AGG_NAMES),
+            f"{label('collapseField')} cannot combine with",
+        )
     if multi_index:
         reject(
             ("explain", "aggSignificantField", "aggFilters"),
