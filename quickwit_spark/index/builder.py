@@ -15,7 +15,9 @@ second pass, no separate stats job.
    keeps a conversation in one split and is a pure function of the data —
    never of task scheduling.  ``repartition(P, part_key)`` with the
    slot-key trick (``_slot_keys``) places EXACTLY one split per partition —
-   no balls-in-bins stacking, no straggler tail — then
+   no balls-in-bins stacking, no straggler tail; the keys come from a
+   driver-side port of Spark's int hash, so planning the shuffle runs no
+   job — then
    ``sortWithinPartitions(conv_id, turn_idx)`` fixes the doc order.  AQE
    never coalesces an explicit repartition, so parallelism == split count
    even when the data is small.
@@ -131,15 +133,15 @@ def _attach_pos_bitmaps(pdf: pd.DataFrame, min_total_tf: int) -> pd.DataFrame:
 
     bms: list = [None] * len(pdf)
     if min_total_tf >= 0 and len(pdf):
-        pos = pdf["positions"]
-        ttf = pdf["total_tf"]
-        blob = pdf["blob"]
-        for i in range(len(pdf)):
-            p = pos.iat[i]
-            if p is None or int(ttf.iat[i]) < min_total_tf:
-                continue
-            _, tfs = decode_postings(blob.iat[i])
-            bms[i] = encode_position_bitmaps(p, tfs)
+        # candidates first (most finalize flushes have none): Python runs
+        # only for the rows that clear the floor
+        hot = (pdf["total_tf"].to_numpy() >= min_total_tf) & pdf["positions"].notna().to_numpy()
+        if hot.any():
+            pos = pdf["positions"].to_numpy()
+            blob = pdf["blob"].to_numpy()
+            for i in np.flatnonzero(hot):
+                _, tfs = decode_postings(blob[i])
+                bms[i] = encode_position_bitmaps(pos[i], tfs)
     pdf = pdf.copy()
     pdf["pos_bm"] = bms
     return pdf
@@ -181,7 +183,9 @@ _TIMING = os.environ.get("QW_BUILD_TIMING", "") == "1"
 
 
 class _Timer:
-    """Opt-in stage timing (QW_BUILD_TIMING=1) written to stderr."""
+    """Opt-in stage timing (QW_BUILD_TIMING=1) written to stderr: ``plan``,
+    then per wave ``dataframe`` (building the wave's DataFrame), ``job``
+    (the split-build Spark job) and ``publish``."""
 
     def __init__(self):
         self.t = time.monotonic()
@@ -257,7 +261,8 @@ def _write_termstats_delta(
     rewrite the same docs, so global df is invariant under them — the
     zero-sum property that makes this an insert-only LSM.
 
-    Small batches aggregate driver-side (pyarrow+pandas); above
+    Small batches aggregate driver-side in Arrow (one hash group-by and
+    one sort over the concatenated files, no pandas round trip); above
     QW_TERMSTATS_DRIVER_MAX_MB of sidecar bytes the aggregation runs as a
     Spark groupBy (cluster-scale publishes: 100 splits × millions of terms
     never pass through the driver)."""
@@ -271,16 +276,18 @@ def _write_termstats_delta(
     out_path = os.path.join(index_dir, rel)
     max_mb = int(os.environ.get("QW_TERMSTATS_DRIVER_MAX_MB", "256"))
     if sum(storage.size(f) for f in files) <= max_mb * (1 << 20):
-        pdf = (
+        keys = ["bucket", "field", "term"]
+        folded = (
             storage.dataset(files)
             .to_table()
-            .to_pandas()
-            .groupby(["bucket", "field", "term"], as_index=False)["doc_freq"]
-            .sum()
-            .sort_values(["bucket", "field", "term"], kind="mergesort")
+            .group_by(keys)
+            .aggregate([("doc_freq", "sum")])
+            .sort_by([(k, "ascending") for k in keys])
         )
         storage.write_table(
-            pa.Table.from_pandas(pdf, schema=_termstats_schema(), preserve_index=False),
+            pa.table(
+                {k: folded[k] for k in keys} | {"doc_freq": folded["doc_freq_sum"]}
+            ).cast(_termstats_schema()),
             out_path,
             row_group_size=4096,
         )
@@ -549,6 +556,15 @@ POSTINGS_COLUMNS = [
     "block_tf_cum",
 ]
 
+def _cell_lens(col: pd.Series) -> np.ndarray:
+    """Byte length of every payload cell; 0 for a null cell (None, or NaN
+    after a pandas concat)."""
+    return np.fromiter(
+        (0 if v is None or isinstance(v, float) else len(v) for v in col.to_numpy()),
+        np.int64, len(col),
+    )
+
+
 def _split_chunked_positions(
     pdf: pd.DataFrame, target: int | None = None, bm_target: int | None = None
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
@@ -595,10 +611,8 @@ def _split_chunked_positions(
         pos = pdf["positions"]
         pi = pdf.columns.get_loc("positions")
         bi = pdf.columns.get_loc("pos_chunk_blocks")
-        for i in range(len(pdf)):
+        for i in np.flatnonzero(_cell_lens(pos) > target):
             p = pos.iat[i]
-            if p is None or len(p) <= target:
-                continue
             r = pdf.iloc[i]
             chunks = chunk_positions(
                 p, np.asarray(r["block_tf_cum"], np.int64), target
@@ -626,10 +640,8 @@ def _split_chunked_positions(
         span_bytes = min(target, bm_target) if target > 0 else bm_target
         span = max(span_bytes // BM_BLOCK_BYTES, 1)
         step = span * BM_BLOCK_BYTES
-        for i in range(len(pdf)):
+        for i in np.flatnonzero(_cell_lens(bmc) > bm_target):
             bm = bmc.iat[i]
-            if bm is None or isinstance(bm, float) or len(bm) <= bm_target:
-                continue
             r = pdf.iloc[i]
             pdf.iat[i, bmi] = None
             pdf.iat[i, si] = span
@@ -1627,31 +1639,45 @@ def _approx_input_rows(df: DataFrame) -> int | None:
     return total
 
 
-def _slot_keys(spark: SparkSession, p: int) -> list[int]:
-    """Integers k_0..k_{p-1} with ``pmod(murmur3(k_i), p) == i`` — found by a
-    tiny Spark job over a counter range (murmur3 with seed 42 is exactly what
-    ``repartition(p, col)`` applies, so repartitioning on such a key places
-    slot i's rows in partition i).  This makes split→partition an IDENTITY:
-    exactly one split per task, no balls-in-bins stacking (hash
-    co-location was measured straggler-bound: a partition that draws 3
-    splits takes 3x the median and owns the stage tail)."""
-    out: dict[int, int] = {}
+def _spark_hash_int(k: np.ndarray) -> np.ndarray:
+    """Spark's ``hash`` of an int column, vectorized: Murmur3_x86_32
+    ``hashInt(k, seed=42)`` (the function ``repartition(p, col)`` applies
+    before ``pmod``), as int32.  uint32 array arithmetic wraps like Java's."""
+
+    def rotl(x, r):
+        return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+    k1 = np.asarray(k, np.int32).view(np.uint32) * np.uint32(0xCC9E2D51)
+    k1 = rotl(k1, 15) * np.uint32(0x1B873593)
+    h = rotl(np.uint32(42) ^ k1, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+    h ^= np.uint32(4)  # fmix: the input length in bytes
+    h ^= h >> np.uint32(16)
+    h *= np.uint32(0x85EBCA6B)
+    h ^= h >> np.uint32(13)
+    h *= np.uint32(0xC2B2AE35)
+    h ^= h >> np.uint32(16)
+    return h.view(np.int32)
+
+
+def _slot_keys(p: int) -> list[int]:
+    """The smallest integers k_0..k_{p-1} with ``pmod(hash(k_i), p) == i``,
+    computed driver-side with Spark's own int hash (_spark_hash_int), so
+    repartitioning on such a key places slot i's rows in partition i.  This
+    makes split→partition an IDENTITY: exactly one split per task, no
+    balls-in-bins stacking (hash co-location was measured straggler-bound:
+    a partition that draws 3 splits takes 3x the median and owns the stage
+    tail)."""
+    out = np.full(p, -1, np.int64)
     start = 0
-    while len(out) < p:
-        batch = (
-            spark.range(start, start + 30 * p)
-            .select(
-                F.col("id").cast("int").alias("k"),
-                F.pmod(F.hash(F.col("id").cast("int")), F.lit(p)).alias("slot"),
-            )
-            .groupBy("slot")
-            .agg(F.min("k").alias("k"))
-            .collect()
+    while (out < 0).any():
+        k = np.arange(start, start + 30 * p, dtype=np.int64)
+        slots, first = np.unique(
+            _spark_hash_int(k).astype(np.int64) % p, return_index=True
         )
-        for r in batch:
-            out.setdefault(int(r["slot"]), int(r["k"]))
+        new = out[slots] < 0
+        out[slots[new]] = k[first[new]]
         start += 30 * p
-    return [out[i] for i in range(p)]
+    return out.tolist()
 
 
 def _split_sort_cols(config: IndexConfig) -> list:
@@ -1682,7 +1708,7 @@ def _partition_one_split_per_task(
     (possible only with a custom split_ord_expr) rides the wave containing
     ord 0 for counting and is dropped before numbering."""
     p = len(wave_ords)
-    keys = _slot_keys(spark, p)
+    keys = _slot_keys(p)
     if p <= 1024:  # pure-expression lookup, no join
         mapping = F.create_map(
             *[F.lit(int(x)) for ord_, k in zip(wave_ords, keys) for x in (ord_, k)]
@@ -1824,10 +1850,10 @@ def build_index(
         # struct access — rename dotted leaves (nested-object fields) to a
         # sentinel; the build task restores them on each pandas batch
         docs = docs.toDF(*[c.replace(".", DOT_SENTINEL) for c in docs.columns])
-        stat_rows = docs.mapInPandas(
-            make_split_builder(config, build_fn_paths), STATS_SCHEMA
-        ).collect()
-        tm.lap("build")
+        built = docs.mapInPandas(make_split_builder(config, build_fn_paths), STATS_SCHEMA)
+        tm.lap("dataframe")  # plan analysis only: no Spark job before the collect
+        stat_rows = built.collect()
+        tm.lap("job")
 
         import json as _json
 

@@ -286,14 +286,19 @@ class _MergeUnit:
 
 
 def _plan_merge_units(
-    storage, paths: dict, ops: list[MergeOperation], inputs_of: dict, n_buckets: int
+    storage, paths: dict, ops: list[MergeOperation], inputs_of: dict, n_buckets: int,
+    slots: int,
 ) -> list[_MergeUnit]:
-    """QW_MERGE_WRITE_FANOUT postings units per op — contiguous bucket
-    ranges, so output files keep disjoint bucket ranges; parquet encode is
-    single-threaded per writer, so one unit per split would serialize the
-    rewrite — then docs/fastfields units of ~_ROWS_UNIT_BYTES of input.
-    The heavy postings units go first; the small ones fill the tail."""
-    fanout = max(1, int(os.environ.get("QW_MERGE_WRITE_FANOUT", "8")))
+    """Postings units first — per op, contiguous bucket ranges, so output
+    files keep disjoint bucket ranges — then docs/fastfields units of
+    ~_ROWS_UNIT_BYTES of input, which fill the tail.  Parquet encode is
+    single-threaded per writer, so the ops share the job's ``slots`` task
+    slots: ``slots // len(ops)`` postings units each (1 to 8), one wave of
+    them.  More units than slots queue a second wave of tasks that each
+    pay a fixed cost (one op on 4 slots, perfbench ingest cycles: the
+    ``units`` stage read 0.24-0.28 s with 8 units, 0.17-0.21 s with 4;
+    BASELINE.md "Ingest without fixed costs"); fewer leave slots idle."""
+    fanout = max(1, min(8, slots // len(ops)))
     postings, rows = [], []
     for op in ops:
         sids, out = op.split_ids, op.output_split_id
@@ -482,7 +487,10 @@ def execute_merge_round(
         for table in ("docs", "postings", "fastfields"):
             storage.delete_dir(os.path.join(paths[table], f"split_id={op.output_split_id}"))
     settings = _merge_settings(index_dir, config)
-    units = _plan_merge_units(storage, paths, ops, inputs_of, config.term_merge_buckets)
+    units = _plan_merge_units(
+        storage, paths, ops, inputs_of, config.term_merge_buckets,
+        spark.sparkContext.defaultParallelism,
+    )
     _mark("plan")
     done = (
         spark.sparkContext.parallelize(units, len(units))

@@ -39,6 +39,7 @@ Run: ``python -m quickwit_spark.serve --index-root DIR [--port P]``.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -47,6 +48,8 @@ from urllib.parse import parse_qs, urlparse
 from quickwit_spark import metrics
 from quickwit_spark.index.catalog import Catalog
 from quickwit_spark.search.request import parse_search_params, query_string_values
+
+log = logging.getLogger(__name__)
 
 # quickwit-serve/src/counters.rs:24-36 registers rest_api:search:num_requests
 # and bumps it per search request (rest.rs:50); the extra families below
@@ -121,18 +124,46 @@ class _Handler(BaseHTTPRequestHandler):
         self._reply(code, json.dumps({"error": msg}).encode())
 
     def _reply_chunked(self, chunks, ctype: str) -> None:
-        """Stream an iterator of byte chunks with chunked transfer encoding —
+        """Stream a generator of byte chunks with chunked transfer encoding —
         the search-stream path is every-matching-doc-sized, so the driver
         must never hold the whole payload (the reference streams per split
-        too, search_stream/leaf.rs:47-62)."""
+        too, search_stream/leaf.rs:47-62).  A client that disconnects
+        mid-stream ends the reply with one log line; the generator is
+        closed either way, which releases its export iterator."""
         self.send_response(200)
         self.send_header("Content-Type", ctype)
         self.send_header("Transfer-Encoding", "chunked")
         self.end_headers()
-        for chunk in chunks:
-            if chunk:
-                self.wfile.write(f"{len(chunk):X}\r\n".encode() + chunk + b"\r\n")
-        self.wfile.write(b"0\r\n\r\n")
+        try:
+            for chunk in chunks:
+                if chunk:
+                    self.wfile.write(f"{len(chunk):X}\r\n".encode() + chunk + b"\r\n")
+            self.wfile.write(b"0\r\n\r\n")
+        except (ConnectionResetError, BrokenPipeError) as e:
+            self.close_connection = True
+            log.warning("stream client %s disconnected: %s", self.client_address[0], e)
+        finally:
+            chunks.close()
+
+    def _row_chunks(self, rows_it, encode, size: int):
+        """Chunk generator over a Spark ``toLocalIterator``: ``encode`` turns
+        each pull of up to ``size`` rows into bytes.  The driver lock is held
+        only around each pull, NEVER across the client socket write — a slow
+        or stalled client must not block every other query on the server
+        for the whole transfer.  Closing the generator closes the iterator,
+        which tells the JVM to stop serving partitions."""
+        from itertools import islice
+
+        try:
+            while True:
+                with self.lock:
+                    rows = list(islice(rows_it, size))
+                if not rows:
+                    return
+                yield encode(rows)
+        finally:
+            with self.lock:
+                rows_it.close()
 
     def do_POST(self):  # noqa: N802 (stdlib handler naming)
         from quickwit_spark.search.executor import multi_search
@@ -360,7 +391,6 @@ class _Handler(BaseHTTPRequestHandler):
                         "outputFormat=clickHouseRowBinary",
                     )
                 import struct
-                from itertools import islice
 
                 from quickwit_spark.search.executor import (
                     export_stream,
@@ -400,35 +430,22 @@ class _Handler(BaseHTTPRequestHandler):
                 # reference wire format (search_stream/mod.rs:50-69):
                 # per partition, partition value (8B LE) + payload
                 # byte size (8B LE) + the i64 values
-                def part_chunks():
-                    while True:
-                        with self.lock:
-                            rows = list(islice(rows_it, 64))
-                        if not rows:
-                            return
-                        out = []
-                        for r in rows:
-                            payload = r["payload"]
-                            out.append(
-                                struct.pack(
-                                    "<qQ", int(r[partition_by]), len(payload)
-                                )
-                                + payload
-                            )
-                        yield b"".join(out)
+                def encode_parts(rows):
+                    return b"".join(
+                        struct.pack("<qQ", int(r[partition_by]), len(r["payload"]))
+                        + r["payload"]
+                        for r in rows
+                    )
 
                 return self._reply_chunked(
-                    part_chunks(), "application/octet-stream"
+                    self._row_chunks(rows_it, encode_parts, 64),
+                    "application/octet-stream",
                 )
             # toLocalIterator: partitions stream to the driver one at a
             # time — memory stays bounded no matter how many docs match
             # (collect() of a hot query's export could be index-sized).
             # The driver lock is held only around Spark access (the plan
-            # build and each iterator pull), NEVER across the client
-            # socket write — a slow or stalled client must not block
-            # every other query on the server for the whole transfer.
-            from itertools import islice
-
+            # build and each iterator pull; see _row_chunks).
             import numpy as np
 
             with self.lock:
@@ -452,28 +469,20 @@ class _Handler(BaseHTTPRequestHandler):
                     )
                 it = stream_df.toLocalIterator(prefetchPartitions=True)
 
-            def batches(size=8192):
-                while True:
-                    with self.lock:
-                        rows = list(islice(it, size))
-                    if not rows:
-                        return
-                    yield rows
-
             if fmt == "csv":
-                def csv_chunks():
-                    for rows in batches():
-                        yield ("\n".join(str(r[fast_field]) for r in rows) + "\n").encode()
+                def encode_csv(rows):
+                    return ("\n".join(str(r[fast_field]) for r in rows) + "\n").encode()
 
-                return self._reply_chunked(csv_chunks(), "text/csv")
+                return self._reply_chunked(self._row_chunks(it, encode_csv, 8192), "text/csv")
 
             # ClickHouse RowBinary: little-endian i64 per value
             # (docs/reference/rest-api.md:70-114, search_stream/leaf.rs)
-            def bin_chunks():
-                for rows in batches():
-                    yield np.asarray([r[fast_field] for r in rows], dtype="<i8").tobytes()
+            def encode_bin(rows):
+                return np.asarray([r[fast_field] for r in rows], dtype="<i8").tobytes()
 
-            return self._reply_chunked(bin_chunks(), "application/octet-stream")
+            return self._reply_chunked(
+                self._row_chunks(it, encode_bin, 8192), "application/octet-stream"
+            )
         except ValueError as e:  # parameter or parser rejection
             return self._err(400, str(e))
 

@@ -413,3 +413,71 @@ def test_duplicate_doc_keys_build_deterministically(spark, tmp_path_factory):
             .reset_index(drop=True)
         )
     pd.testing.assert_frame_equal(frames[0], frames[1])
+
+
+def test_spark_hash_int_matches_spark(spark):
+    """The numpy port of Spark's int hash (Murmur3_x86_32.hashInt, seed 42)
+    equals ``F.hash`` on int32 edge values and random ints."""
+    from quickwit_spark.index.builder import _spark_hash_int
+
+    rng = np.random.default_rng(3)
+    ks = [0, 1, -1, 2, -2, 2**31 - 1, -(2**31), 2**31 - 2, -(2**31) + 1, 42]
+    ks += rng.integers(-(2**31), 2**31, size=10_000, dtype=np.int64).tolist()
+    df = spark.createDataFrame(pd.DataFrame({"k": np.asarray(ks, np.int32)}))
+    want = [r["h"] for r in df.select(F.hash("k").alias("h")).collect()]
+    got = _spark_hash_int(np.asarray(ks, np.int64)).tolist()
+    assert got == want
+
+
+def test_slot_keys_match_spark_partitioning(spark):
+    """``_slot_keys(p)`` is the smallest k per slot of Spark-evaluated
+    ``pmod(hash(k), p)`` — the map a ``repartition(p, key)`` applies — for
+    every p in 1..300 and two larger counts."""
+    from quickwit_spark.index.builder import _slot_keys
+
+    ps = list(range(1, 301)) + [1024, 4099]
+    keys = {p: _slot_keys(p) for p in ps}
+    assert all(len(keys[p]) == p for p in ps)
+    # every k below each count's largest key, so Spark finds the minimum
+    bounds = spark.createDataFrame([(p, max(keys[p])) for p in ps], "p int, kmax int")
+    rows = (
+        bounds.select("p", F.explode(F.sequence(F.lit(0), "kmax")).alias("k"))
+        .select("p", "k", F.pmod(F.hash("k"), F.col("p")).alias("slot"))
+        .groupBy("p", "slot")
+        .agg(F.min("k").alias("k"))
+        .collect()
+    )
+    want = {p: [None] * p for p in ps}
+    for r in rows:
+        want[r["p"]][r["slot"]] = r["k"]
+    assert want == keys
+
+
+def test_build_runs_only_the_split_build_job(spark, small_corpus, tmp_path):
+    """A build with ``n_splits`` over a parquet source plans without a
+    Spark job: its job group holds only the split-build mapInPandas job
+    (two jobs under AQE: the shuffle's map stage, then the build stage)."""
+    import uuid
+
+    src = str(tmp_path / "src.parquet")
+    spark.createDataFrame(small_corpus).write.parquet(src)
+    source = spark.read.parquet(src)
+    cfg = transcripts_config(split_num_docs_target=300, segment_num_docs_target=64)
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "build")
+    try:
+        report = build_index(spark, source, cfg, str(tmp_path / "idx"), n_splits=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert report.total_docs == len(small_corpus)
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    assert 1 <= len(jobs) <= 2, jobs
+    sites = {
+        tracker.getStageInfo(st).name
+        for j in jobs
+        for st in tracker.getJobInfo(j).stageIds
+    }
+    assert len(sites) == 1, sites  # every stage is the one collect of the build

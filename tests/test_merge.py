@@ -245,11 +245,15 @@ def test_merged_files_keep_bounded_row_groups(spark, tmp_path_factory, monkeypat
 
     from quickwit_spark.search import executor as ex
 
+    from quickwit_spark.index import merge as mg
+
     monkeypatch.setenv("QW_MERGE_BLOCK_BYTES", str(16 << 10))  # force tiny groups
-    # one writer task per output split: this test asserts the row-group
-    # bound within a single file, so don't spread the tiny corpus over the
-    # default 8-task write fan-out (test_merge_write_fanout covers that)
-    monkeypatch.setenv("QW_MERGE_WRITE_FANOUT", "1")
+    # one postings writer per output split (planned as if on one slot):
+    # this test asserts the row-group bound within a single file, so don't
+    # spread the tiny corpus over several units (test_merge_write_fanout
+    # covers that)
+    plan = mg._plan_merge_units
+    monkeypatch.setattr(mg, "_plan_merge_units", lambda *a: plan(*a[:-1], 1))
     pdf = generate_transcripts(n_conversations=50, seed=3)
     idx = str(tmp_path_factory.mktemp("rg-idx"))
     cfg = transcripts_config(
@@ -277,7 +281,13 @@ def test_merge_write_fanout(spark, tmp_path_factory, monkeypatch):
 
     from quickwit_spark.search import executor as ex
 
-    monkeypatch.setenv("QW_MERGE_WRITE_FANOUT", "4")
+    from quickwit_spark.index import merge as mg
+
+    # four postings units per op, whatever the op count of the round
+    plan = mg._plan_merge_units
+    monkeypatch.setattr(
+        mg, "_plan_merge_units", lambda *a: plan(*a[:-1], 4 * len(a[2]))
+    )
     pdf = generate_transcripts(n_conversations=50, seed=3)
     idx = str(tmp_path_factory.mktemp("fanout-idx"))
     cfg = transcripts_config(
@@ -580,6 +590,40 @@ def test_merge_round_is_one_spark_job(spark, tmp_path):
     ]
 
 
+class _ListingStorage:
+    """Planner stand-in for the storage layer: one small file per dir."""
+
+    def list_file_sizes(self, d):
+        return [(f"{d}/part-0.parquet", 4096)]
+
+
+@pytest.mark.parametrize("n_ops, slots, per_op", [(1, 4, 4), (10, 4, 1), (2, 4, 2), (1, 64, 8)])
+def test_plan_merge_units_fill_one_wave_of_slots(n_ops, slots, per_op):
+    """The round's task slots are shared by its ops: 1 op on 4 slots gets 4
+    postings units, 10 ops get 1 each, and no op gets more than 8.  Each
+    op's postings units cover every bucket in disjoint contiguous ranges;
+    a small op adds one docs/fastfields unit."""
+    from quickwit_spark.index import merge as mg
+
+    n_buckets = 256
+    ops = [mg.MergeOperation([f"s{i}a", f"s{i}b"], f"m{i}") for i in range(n_ops)]
+    inputs_of = {
+        op.output_split_id: [SplitMetadata(split_id=sid, num_docs=10) for sid in op.split_ids]
+        for op in ops
+    }
+    paths = {t: f"/idx/{t}" for t in ("docs", "postings", "fastfields")}
+    units = mg._plan_merge_units(_ListingStorage(), paths, ops, inputs_of, n_buckets, slots)
+    kinds = [u.kind for u in units]
+    assert kinds == ["postings"] * (n_ops * per_op) + ["rows"] * n_ops
+    for op in ops:
+        mine = [u for u in units if u.kind == "postings" and u.out_split == op.output_split_id]
+        assert [u.index for u in mine] == list(range(per_op))
+        bounds = [(0 if u.lo is None else u.lo, n_buckets if u.hi is None else u.hi) for u in mine]
+        assert bounds[0][0] == 0 and bounds[-1][1] == n_buckets
+        assert all(lo < hi for lo, hi in bounds)
+        assert all(a[1] == b[0] for a, b in zip(bounds, bounds[1:]))
+
+
 def test_merge_unit_retry_rewrites_identical_files(spark, tmp_path):
     """A retried merge task rewrites its files at the same names with the
     same bytes and leaves nothing else behind (no temp names, no rename);
@@ -618,8 +662,10 @@ def test_merge_unit_retry_rewrites_identical_files(spark, tmp_path):
     config = IndexConfig.from_dict(cat.config_dict)
     metas = {s.split_id: s for s in cat.splits([PUBLISHED])}
     inputs_of = {o.output_split_id: [metas[s] for s in o.split_ids] for o in ops}
+    # re-plan with the slot count the round planned with
     units = mg._plan_merge_units(
-        storage_for(idx), mg._paths(idx), ops, inputs_of, config.term_merge_buckets
+        storage_for(idx), mg._paths(idx), ops, inputs_of, config.term_merge_buckets,
+        spark.sparkContext.defaultParallelism,
     )
     pick = [
         next(u for u in units if u.kind == kind and u.out_split == sid)
@@ -725,7 +771,7 @@ def test_merge_splits_big_inputs_into_row_group_units(spark, tmp_path, monkeypat
     metas = {s.split_id: s for s in cat.splits([PUBLISHED])}
     units = mg._plan_merge_units(
         mg.storage_for(idx), mg._paths(idx), [op], {"g2": [metas[s] for s in op.split_ids]},
-        cfg.term_merge_buckets,
+        cfg.term_merge_buckets, spark.sparkContext.defaultParallelism,
     )
     assert any(p[3] > 1 for u in units if u.kind == "rows" for p in u.inputs)
     mg.execute_merge_round(spark, idx, [op])

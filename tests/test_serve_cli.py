@@ -463,28 +463,95 @@ def test_dangling_operator_is_400_not_500(server):
         assert "error" in json.loads(body)
 
 
-def test_slow_stream_client_does_not_block_other_queries(server):
+def test_slow_stream_client_does_not_block_other_queries(spark, index_root):
     """The driver lock must be released between stream batches: a client
-    that stalls mid-transfer cannot hold every other query hostage."""
+    that stalls mid-transfer cannot hold every other query hostage.  When
+    the stalled client then goes away, its handler raises nothing."""
     import socket
+    import sys
     import time
 
-    host, port = server.split("//")[1].split(":")
-    s = socket.create_connection((host, int(port)))
-    s.sendall(
-        b"GET /api/v1/conv/search/stream?query=the&fastField=ts&outputFormat=csv"
-        b" HTTP/1.1\r\nHost: x\r\n\r\n"
-    )
-    s.recv(256)  # headers+first bytes arrived; now stall WITHOUT reading more
+    srv = make_server(spark, index_root, port=0)
+    errors, finished = [], []
+    srv.handle_error = lambda request, addr: errors.append(sys.exc_info()[1])
+    serve_one = srv.process_request_thread
+
+    def tracked(request, addr):
+        try:
+            serve_one(request, addr)
+        finally:
+            finished.append(addr)
+
+    srv.process_request_thread = tracked
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    server = f"http://127.0.0.1:{srv.server_address[1]}"
+    s = socket.create_connection(srv.server_address)
+    stream_addr = s.getsockname()
     try:
-        t0 = time.monotonic()
-        code, body, _ = _get(f"{server}/api/v1/conv/search?query=deploy&maxHits=1")
-        elapsed = time.monotonic() - t0
-        assert code == 200 and json.loads(body)["numHits"] > 0
-        # generous bound: a held lock would block until the stream times out
-        assert elapsed < 30
+        s.sendall(
+            b"GET /api/v1/conv/search/stream?query=the&fastField=ts&outputFormat=csv"
+            b" HTTP/1.1\r\nHost: x\r\n\r\n"
+        )
+        s.recv(256)  # headers+first bytes arrived; now stall WITHOUT reading more
+        try:
+            t0 = time.monotonic()
+            code, body, _ = _get(f"{server}/api/v1/conv/search?query=deploy&maxHits=1")
+            elapsed = time.monotonic() - t0
+            assert code == 200 and json.loads(body)["numHits"] > 0
+            # generous bound: a held lock would block until the stream times out
+            assert elapsed < 30
+        finally:
+            s.close()
+        deadline = time.monotonic() + 60
+        while stream_addr not in finished and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert stream_addr in finished
+        assert errors == []
     finally:
-        s.close()
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_stream_reply_survives_client_disconnect(caplog):
+    """A client that drops the connection mid-stream ends the chunked reply
+    with one log line: no exception leaves the handler, and the chunk
+    generator is closed (its cleanup releases the export iterator)."""
+    import logging
+
+    from quickwit_spark.serve import _Handler
+
+    class DroppedSocket:
+        def __init__(self):
+            self.writes = 0
+
+        def write(self, data):
+            self.writes += 1
+            if self.writes > 2:  # headers and one chunk, then the peer is gone
+                raise ConnectionResetError(104, "Connection reset by peer")
+
+    closed = []
+
+    def chunks():
+        try:
+            for _ in range(100):
+                yield b"x" * 10
+        finally:
+            closed.append(True)
+
+    h = _Handler.__new__(_Handler)
+    h.wfile = DroppedSocket()
+    h.request_version = "HTTP/1.1"
+    h.requestline = "GET /api/v1/conv/search/stream HTTP/1.1"
+    h.client_address = ("127.0.0.1", 40000)
+    h.close_connection = False
+    with caplog.at_level(logging.WARNING, logger="quickwit_spark.serve"):
+        h._reply_chunked(chunks(), "text/csv")
+    assert closed == [True]
+    assert h.close_connection
+    assert h.wfile.writes == 3
+    assert [r.getMessage() for r in caplog.records] == [
+        "stream client 127.0.0.1 disconnected: [Errno 104] Connection reset by peer"
+    ]
 
 
 def test_search_endpoint_calendar_histogram(spark, server, index_root):
