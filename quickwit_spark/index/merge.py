@@ -293,21 +293,35 @@ def _plan_merge_units(
     files keep disjoint bucket ranges — then docs/fastfields units of
     ~_ROWS_UNIT_BYTES of input, which fill the tail.  Parquet encode is
     single-threaded per writer, so the ops share the job's ``slots`` task
-    slots: ``slots // len(ops)`` postings units each (1 to 8), one wave of
-    them.  More units than slots queue a second wave of tasks that each
-    pay a fixed cost (one op on 4 slots, perfbench ingest cycles: the
-    ``units`` stage read 0.24-0.28 s with 8 units, 0.17-0.21 s with 4;
-    BASELINE.md "Ingest without fixed costs"); fewer leave slots idle."""
-    fanout = max(1, min(8, slots // len(ops)))
+    slots in proportion to their postings input bytes: ``slots * bytes /
+    total`` postings units each, rounded (1 to 8), about one wave of them.  More units
+    than slots queue a second wave of tasks that each pay a fixed cost
+    (one op on 4 slots, perfbench ingest cycles: the ``units`` stage read
+    0.24-0.28 s with 8 units, 0.17-0.21 s with 4).  An even split would
+    leave a big op's few writers running long after the small ops' slots
+    went idle (one 60k-doc and one 5k-doc op on 4 slots: a 1.33 s round
+    with 2 units each, 0.88 s with 4 + 1; BASELINE.md "Ingest without
+    fixed costs")."""
+    files_of = {
+        op.output_split_id: {
+            (sid, t): storage.list_file_sizes(os.path.join(paths[t], f"split_id={sid}"))
+            for sid in op.split_ids
+            for t in ("docs", "postings", "fastfields")
+        }
+        for op in ops
+    }
+    weight = {
+        out: sum(size for (_, t), fs in files.items() if t == "postings" for _, size in fs)
+        for out, files in files_of.items()
+    }
+    total = sum(weight.values())
     postings, rows = [], []
     for op in ops:
         sids, out = op.split_ids, op.output_split_id
         offs = np.cumsum([0] + [s.num_docs for s in inputs_of[out]]).tolist()
-        files = {
-            (sid, t): storage.list_file_sizes(os.path.join(paths[t], f"split_id={sid}"))
-            for sid in sids
-            for t in ("docs", "postings", "fastfields")
-        }
+        files = files_of[out]
+        share = round(slots * weight[out] / total) if total else slots // len(ops)
+        fanout = max(1, min(8, share))
         inputs = tuple(
             (tuple(f for f, _ in files[(sid, "postings")]), off)
             for sid, off in zip(sids, offs)

@@ -151,7 +151,11 @@ class _Handler(BaseHTTPRequestHandler):
         only around each pull, NEVER across the client socket write — a slow
         or stalled client must not block every other query on the server
         for the whole transfer.  Closing the generator closes the iterator,
-        which tells the JVM to stop serving partitions."""
+        which tells the JVM to stop serving partitions.  That close drains
+        the rest of the current partition from the iterator's own socket
+        and makes no py4j call, so it runs OUTSIDE the lock: under it, a
+        client that disconnects would stall every other query for up to a
+        whole partition."""
         from itertools import islice
 
         try:
@@ -162,8 +166,7 @@ class _Handler(BaseHTTPRequestHandler):
                     return
                 yield encode(rows)
         finally:
-            with self.lock:
-                rows_it.close()
+            rows_it.close()
 
     def do_POST(self):  # noqa: N802 (stdlib handler naming)
         from quickwit_spark.search.executor import multi_search

@@ -283,7 +283,8 @@ def test_merge_write_fanout(spark, tmp_path_factory, monkeypatch):
 
     from quickwit_spark.index import merge as mg
 
-    # four postings units per op, whatever the op count of the round
+    # four task slots per op: the round's biggest op gets at least four
+    # postings units, whatever the op count of the round
     plan = mg._plan_merge_units
     monkeypatch.setattr(
         mg, "_plan_merge_units", lambda *a: plan(*a[:-1], 4 * len(a[2]))
@@ -591,33 +592,52 @@ def test_merge_round_is_one_spark_job(spark, tmp_path):
 
 
 class _ListingStorage:
-    """Planner stand-in for the storage layer: one small file per dir."""
+    """Planner stand-in for the storage layer: one file per dir, of
+    ``postings_bytes[split_id]`` bytes in a postings dir (4096 elsewhere)."""
+
+    def __init__(self, postings_bytes):
+        self.postings_bytes = postings_bytes
 
     def list_file_sizes(self, d):
-        return [(f"{d}/part-0.parquet", 4096)]
+        sid = d.rsplit("split_id=", 1)[1]
+        size = self.postings_bytes[sid] if "/postings/" in d else 4096
+        return [(f"{d}/part-0.parquet", size)]
 
 
-@pytest.mark.parametrize("n_ops, slots, per_op", [(1, 4, 4), (10, 4, 1), (2, 4, 2), (1, 64, 8)])
-def test_plan_merge_units_fill_one_wave_of_slots(n_ops, slots, per_op):
-    """The round's task slots are shared by its ops: 1 op on 4 slots gets 4
-    postings units, 10 ops get 1 each, and no op gets more than 8.  Each
+@pytest.mark.parametrize("op_bytes, slots, per_op", [
+    ([4096], 4, [4]),
+    ([4096] * 10, 4, [1] * 10),
+    ([4096] * 2, 4, [2, 2]),
+    ([4096], 64, [8]),
+    ([3 << 20, 1 << 20], 4, [3, 1]),
+    ([15 << 20, 1 << 20], 8, [8, 1]),
+    ([19 << 20, 21 << 20], 4, [2, 2]),
+    ([50 << 20, 1 << 20, 1 << 20, 1 << 20], 4, [4, 1, 1, 1]),
+    ([0, 0], 4, [2, 2]),
+])
+def test_plan_merge_units_fill_one_wave_of_slots(op_bytes, slots, per_op):
+    """The round's task slots are shared by its ops in proportion to their
+    postings input bytes, each op at least one postings unit and at most 8:
+    1 op on 4 slots gets 4, 10 equal ops get 1 each, and a big op is not
+    cut down to an even share while the small ops' writers sit idle.  Each
     op's postings units cover every bucket in disjoint contiguous ranges;
     a small op adds one docs/fastfields unit."""
     from quickwit_spark.index import merge as mg
 
     n_buckets = 256
-    ops = [mg.MergeOperation([f"s{i}a", f"s{i}b"], f"m{i}") for i in range(n_ops)]
+    ops = [mg.MergeOperation([f"s{i}a", f"s{i}b"], f"m{i}") for i in range(len(op_bytes))]
     inputs_of = {
         op.output_split_id: [SplitMetadata(split_id=sid, num_docs=10) for sid in op.split_ids]
         for op in ops
     }
+    sizes = {sid: b // 2 for op, b in zip(ops, op_bytes) for sid in op.split_ids}
     paths = {t: f"/idx/{t}" for t in ("docs", "postings", "fastfields")}
-    units = mg._plan_merge_units(_ListingStorage(), paths, ops, inputs_of, n_buckets, slots)
+    units = mg._plan_merge_units(_ListingStorage(sizes), paths, ops, inputs_of, n_buckets, slots)
     kinds = [u.kind for u in units]
-    assert kinds == ["postings"] * (n_ops * per_op) + ["rows"] * n_ops
-    for op in ops:
+    assert kinds == ["postings"] * sum(per_op) + ["rows"] * len(ops)
+    for op, n in zip(ops, per_op):
         mine = [u for u in units if u.kind == "postings" and u.out_split == op.output_split_id]
-        assert [u.index for u in mine] == list(range(per_op))
+        assert [u.index for u in mine] == list(range(n))
         bounds = [(0 if u.lo is None else u.lo, n_buckets if u.hi is None else u.hi) for u in mine]
         assert bounds[0][0] == 0 and bounds[-1][1] == n_buckets
         assert all(lo < hi for lo, hi in bounds)

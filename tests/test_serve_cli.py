@@ -502,6 +502,12 @@ def test_slow_stream_client_does_not_block_other_queries(spark, index_root):
             assert elapsed < 30
         finally:
             s.close()
+        # the gone client's handler now closes its export iterator; a query
+        # sent meanwhile is not held up behind that close
+        t0 = time.monotonic()
+        code, body, _ = _get(f"{server}/api/v1/conv/search?query=deploy&maxHits=1")
+        assert code == 200 and json.loads(body)["numHits"] > 0
+        assert time.monotonic() - t0 < 30
         deadline = time.monotonic() + 60
         while stream_addr not in finished and time.monotonic() < deadline:
             time.sleep(0.05)
@@ -552,6 +558,32 @@ def test_stream_reply_survives_client_disconnect(caplog):
     assert [r.getMessage() for r in caplog.records] == [
         "stream client 127.0.0.1 disconnected: [Errno 104] Connection reset by peer"
     ]
+
+
+def test_stream_iterator_closes_outside_the_driver_lock():
+    """Closing an abandoned export iterator drains the rest of its current
+    partition from the iterator's own socket; it must not hold the driver
+    lock while it does, or every other query waits behind it."""
+    from quickwit_spark.serve import _Handler
+
+    h = _Handler.__new__(_Handler)
+    h.lock = threading.Lock()
+    held_at_close = []
+
+    class Rows:
+        def __iter__(self):
+            return self
+
+        def __next__(self):
+            return {"ts": 1}
+
+        def close(self):
+            held_at_close.append(h.lock.locked())
+
+    chunks = h._row_chunks(Rows(), lambda rows: b"x" * len(rows), 4)
+    assert next(chunks) == b"xxxx"
+    chunks.close()
+    assert held_at_close == [False]
 
 
 def test_search_endpoint_calendar_histogram(spark, server, index_root):
