@@ -784,6 +784,17 @@ def encode_positions(positions: np.ndarray, tfs: np.ndarray) -> bytes:
     return np.array([total], dtype="<u4").tobytes() + bytes([w]) + _pack(deltas, w)
 
 
+def positions_may_fit_bitmaps(positions_blob: bytes) -> bool:
+    """Can every position of this payload be < 128 (the bitset range of
+    :func:`encode_position_bitmaps`)?  Answered from the header alone:
+    byte 4 is the packed delta width, the least width that holds the
+    payload's largest delta (the merge path packs at the max input width,
+    which is one input's least width).  A delta >= 128 needs 8 bits and a
+    position is at least its own delta, so width >= 8 rules the payload
+    out; below it the decoded positions still decide."""
+    return positions_blob[4] < 8
+
+
 def encode_position_bitmaps(positions_blob: bytes, tfs: np.ndarray) -> bytes | None:
     """Per-doc 128-bit position BITSETS of one posting list — the
     bit-parallel phrase representation (Bitap/shift-AND): doc d's set bits
@@ -794,6 +805,8 @@ def encode_position_bitmaps(positions_blob: bytes, tfs: np.ndarray) -> bytes | N
     caller keeps the delta-coded payload as the only representation) or
     the list is empty.  Derived losslessly from the positions payload, so
     merge/rebuild paths can always recompute it."""
+    if not positions_may_fit_bitmaps(positions_blob):
+        return None
     t64 = np.asarray(tfs, np.int64)
     ps = decode_positions(positions_blob, t64)
     if len(ps) == 0 or int(ps.max()) >= 128:

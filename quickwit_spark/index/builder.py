@@ -129,7 +129,11 @@ def _attach_pos_bitmaps(pdf: pd.DataFrame, min_total_tf: int) -> pd.DataFrame:
     """Derive the ``pos_bm`` column for qualifying PRIMARY rows (positions
     still inline — call BEFORE _split_chunked_positions).  Adds the column
     (None elsewhere) and returns the same frame."""
-    from ..functions.codec import decode_postings, encode_position_bitmaps
+    from ..functions.codec import (
+        decode_postings,
+        encode_position_bitmaps,
+        positions_may_fit_bitmaps,
+    )
 
     bms: list = [None] * len(pdf)
     if min_total_tf >= 0 and len(pdf):
@@ -140,8 +144,9 @@ def _attach_pos_bitmaps(pdf: pd.DataFrame, min_total_tf: int) -> pd.DataFrame:
             pos = pdf["positions"].to_numpy()
             blob = pdf["blob"].to_numpy()
             for i in np.flatnonzero(hot):
-                _, tfs = decode_postings(blob[i])
-                bms[i] = encode_position_bitmaps(pos[i], tfs)
+                if positions_may_fit_bitmaps(pos[i]):  # no decode otherwise
+                    _, tfs = decode_postings(blob[i])
+                    bms[i] = encode_position_bitmaps(pos[i], tfs)
     pdf = pdf.copy()
     pdf["pos_bm"] = bms
     return pdf

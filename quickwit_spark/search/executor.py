@@ -10,9 +10,10 @@ Plan shape (mirrors SURVEY.md §3.1; as built):
    from the catalog (N, avg_len) and the term-stats LSM (doc_freq —
    O(publish batches), not O(splits)).  No Spark job is launched.
 
-2. **Leaf search** (leaf.rs:237-285 / collector.rs): one runner for
-   every top-k request — ``search`` is ``root._topk_batch`` over a batch
-   of one, ``multi_search`` over the whole batch.  It is ONE plain-RDD
+2. **Leaf search** (leaf.rs:237-285 / collector.rs): one planner
+   (``root._plan_batch``) and one runner (``root._topk_batch``) for every
+   top-k request — ``search`` is ``multi_search`` over a batch of one,
+   and ``explain`` is a plan-only run of the same plan.  It is ONE plain-RDD
    ``sc.parallelize(bins).flatMap`` job over LPT-balanced split bins (see
    ``_leaf_bins``; the SearchJob list of root.rs:280-284), or the same
    task body in the driver for tiny indexes and light queries
@@ -143,9 +144,7 @@ from .root import (
     _maybe_add_source,
     _plan_leaf,
     _ranged_ok,
-    _search_rows,
     _sort_key,
-    _term_bucket_of,
     _topk_batch,
     _validate_stored_fields,
     explain,

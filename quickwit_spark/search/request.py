@@ -420,7 +420,7 @@ def parse_search_params(
     """Name → raw-value mapping (REST names; see query_string_values /
     cli_values) → SearchParams, with every conflict rule checked here
     once.  ``route`` is ``get`` (REST search), ``batch`` (one query of a
-    multi_search batch: request fields only, no score_explain) or ``cli``
+    multi_search batch: request fields only) or ``cli``
     (errors name the CLI flags; --explain prints the plan only, so it
     takes no aggregation).  ``multi_index`` rejects what needs one
     index's plan or background statistics.  Raises ValueError."""
@@ -467,7 +467,7 @@ def parse_search_params(
         )
     if route == "batch":
         reject(
-            [n for n in got if _BY_REST[n].target != "request"] + ["scoreExplain"],
+            [n for n in got if _BY_REST[n].target != "request"],
             "batch search does not support",
         )
     if route == "cli" and "explain" in got:

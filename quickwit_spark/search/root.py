@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..config import IndexConfig
 from ..functions.bm25 import idf as bm25_idf
 from ..functions.bm25 import tf_norm
-from ..functions.codec import BLOCK
+from ..functions.codec import BLOCK, term_bucket
 from ..index.catalog import Catalog, SplitMetadata
 from .parser import (
     AllQuery,
@@ -149,6 +149,95 @@ def _leaf_hits_df(
     return hits, splits, ast, config
 
 
+class _Plan(NamedTuple):
+    """A planned batch of requests (_plan_batch): what the top-k root, the
+    stream leaf and explain() all run from."""
+
+    cat: Catalog  # the ONE catalog snapshot the batch planned against
+    config: IndexConfig
+    reqs: list  # per request: checked + sort-resolved (topk) or as given (stream)
+    asts: list  # per request: the expanded query AST
+    splits: list  # per request: the splits its leaf runs
+    counted: list  # per request: the splits catalog metadata answered
+    pruned: list  # per request: (n pruned by time/tag/numeric, n by terms)
+    terms: list[tuple[str, str]]  # the batch's terms, sorted
+    buckets: list[int]  # their term buckets
+    gstats: dict  # their global term stats
+
+
+def _metadata_countable(ast, request: SearchRequest) -> bool:
+    """A '*' count: every doc of a split wholly inside the time range
+    counts, so catalog num_docs answers it without reading the split."""
+    return (
+        isinstance(ast, AllQuery)
+        and request.max_hits == 0
+        and request.start_offset == 0
+        and not request.numeric_filters
+    )
+
+
+def _split_inside_range(s: SplitMetadata, request: SearchRequest) -> bool:
+    """Does the split lie wholly inside the request's time range (every
+    split does when there is none)?"""
+    lo, hi = request.start_timestamp, request.end_timestamp
+    if lo is None and hi is None:
+        return True
+    if s.ts_min is None or s.ts_max is None:
+        return False
+    return (lo is None or s.ts_min >= lo) and (hi is None or s.ts_max < hi)
+
+
+def _plan_batch(
+    spark: SparkSession, index_dir: str, requests: list[SearchRequest], mode: str
+) -> _Plan:
+    """The one query planner (the root's list_relevant_splits, lib.rs:
+    129-149): ONE catalog snapshot; per request check (topk mode only —
+    stream mode keeps the request as given), parse, time/tag/numeric
+    pruning and term-presence pruning; once for the batch, expand every
+    prefix / fuzzy / wildcard / regex clause (one term-dictionary read)
+    and look up the global stats of the union of the terms.
+
+    Match-all count (topk mode): a '*' count's splits that lie wholly
+    inside its time range (all of them when there is none) are answered
+    from catalog metadata — zero split reads, zero Spark jobs; only
+    time-range BOUNDARY splits stay for the leaf (the root-level twin of
+    the reference's whole-segment timestamp skip, filters.rs:64-66).  At
+    10^4 splits / 100 TB a total count costs one catalog read.  Both
+    halves come from the same snapshot, so a concurrent merge commit can
+    only make a boundary split vanish — which the leaf reports and the
+    top-k root re-plans."""
+    cat, config = open_index(spark, index_dir)
+    if mode == "topk":
+        requests = [_checked_request(r, config, cat) for r in requests]
+    parsed = []
+    for req in requests:
+        parsed.append(parse_query(req.query, config, req.search_fields))
+        _validate_msm(parsed[-1], req)
+    asts = expand_prefixes(spark, index_dir, cat, parsed)
+    terms: set[tuple[str, str]] = set().union(*map(collect_terms, asts))
+    buckets = term_buckets(spark, terms, config.term_merge_buckets)
+    gstats = global_term_stats(spark, index_dir, cat, terms, buckets)
+    n_all = len(cat.splits())
+    per_req, counted, pruned = [], [], []
+    for req, ast in zip(requests, asts):
+        splits = prune_splits(cat, config, ast, req)
+        n_meta = n_all - len(splits)
+        meta: list[SplitMetadata] = []
+        if mode == "topk" and _metadata_countable(ast, req):
+            meta = [s for s in splits if _split_inside_range(s, req)]
+            splits = [s for s in splits if not _split_inside_range(s, req)]
+        # per-query term-presence pruning — one query's rare term must not
+        # drag every split of the batch into its scorer
+        splits, n_terms = prune_splits_by_terms(index_dir, splits, ast, gstats)
+        per_req.append(splits)
+        counted.append(meta)
+        pruned.append((n_meta, n_terms))
+    return _Plan(
+        cat, config, requests, asts, per_req, counted, pruned,
+        sorted(terms), buckets, gstats,
+    )
+
+
 def _plan_leaf(
     spark: SparkSession,
     index_dir: str,
@@ -158,29 +247,31 @@ def _plan_leaf(
     stream_fields: tuple[str, ...] | None = None,
     stream_scored: bool = False,
 ):
-    """Shared driver-side planning: parse, prune, stats, scorer."""
-    cat, config = open_index(spark, index_dir)
-    ast = parse_query(request.query, config, request.search_fields)
-    _validate_msm(ast, request)
-    ast = expand_prefixes(spark, index_dir, cat, ast)
-    splits = prune_splits(cat, config, ast, request)
-    terms = collect_terms(ast)
-    buckets = term_buckets(spark, terms, config.term_merge_buckets)
-    gstats = global_term_stats(spark, index_dir, cat, terms, buckets)
-    splits, n_term_pruned = prune_splits_by_terms(index_dir, splits, ast, gstats)
-    gstats["splits_pruned_terms"] = n_term_pruned
+    """One request's plan (a batch of one) and its scorer."""
+    plan = _plan_batch(spark, index_dir, [request], mode)
+    [req], [ast], [splits] = plan.reqs, plan.asts, plan.splits
     scorer = make_split_scorer(
-        config,
-        gstats,
+        plan.config,
+        plan.gstats,
         ast,
-        request,
+        req,
         mode,
         index_dir if fetch_in_leaf else None,
         stream_fields=stream_fields,
         stream_scored=stream_scored,
         source_dir=index_dir,  # chunked position payloads resolve their split
     )
-    return cat, config, ast, splits, sorted(terms), buckets, scorer, gstats
+    return plan.cat, plan.config, ast, splits, plan.terms, plan.buckets, scorer, plan.gstats
+
+
+def _leaf_placement(plan: _Plan) -> tuple[list[SplitMetadata], float, bool]:
+    """Where a planned top-k batch's leaf runs: the union of its requests'
+    splits, the estimated decoded rows per split (the per-split work is
+    the SUM over the batch's queries) and whether that runs in-process
+    (_leaf_runs_in_process) — shared by _topk_batch and explain()."""
+    splits = list({s.split_id: s for ss in plan.splits for s in ss}.values())
+    est = _est_split_rows(plan.asts, plan.gstats, len(splits))
+    return splits, est, not splits or _leaf_runs_in_process(len(splits), est)
 
 
 def _leaf_runs_in_process(n_splits: int, est_rows_per_split: float) -> bool:
@@ -228,10 +319,10 @@ def _score_unit(
         return None
 
 
-def _est_split_rows(asts, gstats, n_splits: int) -> float:
-    """Expected decoded posting rows per split — the leaf cost model that
-    picks the task fan-out.  Phrase terms count 3x (their position payloads
-    decode alongside docs+tfs); accepts one AST (explain) or a batch's list."""
+def _est_split_rows(asts: list, gstats, n_splits: int) -> float:
+    """Expected decoded posting rows per split of a batch's queries — the
+    leaf cost model that picks the task fan-out.  Phrase terms count 3x
+    (their position payloads decode alongside docs+tfs)."""
     df_map = gstats["df"]
     total = 0.0
 
@@ -248,7 +339,7 @@ def _est_split_rows(asts, gstats, n_splits: int) -> float:
             for c in (*node.must, *node.should, *node.must_not):
                 walk(c)
 
-    for ast in asts if isinstance(asts, list) else [asts]:
+    for ast in asts:
         walk(ast)
     return total / max(n_splits, 1)
 
@@ -443,30 +534,13 @@ def _checked_request(
     return request
 
 
-class _BatchPlan(NamedTuple):
-    """What a top-k batch planned, for the page attachers (snippets,
-    score_explain) to reuse instead of planning again."""
-
-    asts: list  # per request, the expanded query AST
-    buckets: list[int]  # term buckets of the batch's terms
-    gstats: dict  # global term stats of the batch's terms
-
-
 def _topk_batch(
-    spark: SparkSession,
-    index_dir: str,
-    requests: list[SearchRequest],
-    only_split_ids: set[str] | None = None,
-) -> tuple[IndexConfig, list[tuple[SearchRequest, list[dict], int]], _BatchPlan]:
+    spark: SparkSession, index_dir: str, requests: list[SearchRequest]
+) -> tuple[IndexConfig, list[tuple[SearchRequest, list[dict], int]], _Plan]:
     """The top-k root: Q requests, ONE leaf pass.  search() runs it as a
     batch of one, multi_search() with the whole batch.
 
-    Plan: per request parse, check, time/tag-prune, term-presence-prune
-    and build a scorer; once per batch expand every prefix / fuzzy /
-    wildcard / regex clause (one term-dictionary read) and look up the
-    global term stats of the union of the terms.  ``only_split_ids``
-    restricts the leaf to those splits (the match-all count shortcut has
-    answered the others from metadata).
+    Plan: _plan_batch, then one scorer per request.
 
     Leaf: ONE plain-RDD flatMap job over the _leaf_bins of the union of
     the requests' splits (or the same task body in-process, see
@@ -481,49 +555,36 @@ def _topk_batch(
     count.  Rows come back tagged with the request index.  Each task also
     returns its phrase-path counter deltas (take_phrase_counters).
 
-    Root: per request, sum the per-unit counts, sort the rows (merge_fruits
-    analog, root.rs:170-232) and page; then ONE stored-field fetch for
-    every page of the batch.  Leaves return ids only — fetching their
-    local top-k would read ~splits× more doc rows than the answer needs —
-    except under the 'global_key' tiebreak, which sorts on doc fields and
-    so fetches them in the leaf.  A split that vanishes (concurrent merge
-    + GC, during the leaf or the page fetch) re-plans the whole batch once
+    Root: per request, sum the per-unit counts (plus the hits catalog
+    metadata answered), sort the rows (merge_fruits analog,
+    root.rs:170-232) and page; then ONE stored-field fetch for every page
+    of the batch.  Leaves return ids only — fetching their local top-k
+    would read ~splits× more doc rows than the answer needs — except
+    under the 'global_key' tiebreak, which sorts on doc fields and so
+    fetches them in the leaf.  A split that vanishes (concurrent merge +
+    GC, during the leaf or the page fetch) re-plans the whole batch once
     against the fresh catalog (retry/search.rs analog).
 
     Returns the index config, per request the sort-resolved request, its
     page rows and its exact hit count, and the batch's plan."""
     for attempt in (0, 1):
         try:
-            cat, config = open_index(spark, index_dir)
-            reqs = [_checked_request(r, config, cat) for r in requests]
-            parsed = []
-            for req in reqs:
-                parsed.append(parse_query(req.query, config, req.search_fields))
-                _validate_msm(parsed[-1], req)
-            asts = expand_prefixes(spark, index_dir, cat, parsed)
-            terms: set[tuple[str, str]] = set().union(*map(collect_terms, asts))
-            buckets = term_buckets(spark, terms, config.term_merge_buckets)
-            gstats = global_term_stats(spark, index_dir, cat, terms, buckets)
-            units: dict[str, SplitMetadata] = {}
-            wanted, scorers = [], []
-            for req, ast in zip(reqs, asts):
-                splits = prune_splits(cat, config, ast, req)
-                # per-query term-presence pruning — one query's rare term
-                # must not drag every split of the batch into its scorer
-                splits, _ = prune_splits_by_terms(index_dir, splits, ast, gstats)
-                if only_split_ids is not None:
-                    splits = [s for s in splits if s.split_id in only_split_ids]
-                wanted.append({s.split_id for s in splits})
-                units.update((s.split_id, s) for s in splits)
+            plan = _plan_batch(spark, index_dir, requests, "topk")
+            reqs, asts = plan.reqs, plan.asts
+            scorers = [
                 # index_dir turns on the in-leaf stored-field fetch;
                 # source_dir lets chunked position payloads resolve
-                fetch_dir = index_dir if req.tiebreak == "global_key" else None
-                scorers.append(
-                    make_split_scorer(
-                        config, gstats, ast, req, "topk", fetch_dir, source_dir=index_dir
-                    )
+                make_split_scorer(
+                    plan.config, plan.gstats, ast, req, "topk",
+                    index_dir if req.tiebreak == "global_key" else None,
+                    source_dir=index_dir,
                 )
-            terms_sorted = sorted(terms)
+                for req, ast in zip(reqs, asts)
+            ]
+            # plain locals: the task closure below must not capture `plan`,
+            # which would pickle the whole catalog into every leaf task
+            wanted = [{s.split_id for s in splits} for splits in plan.splits]
+            terms_sorted, buckets = plan.terms, plan.buckets
             need_pos = _contains_phrase(asts)  # column-pruned postings otherwise
 
             def run(it):
@@ -549,10 +610,8 @@ def _topk_batch(
                 if any(delta.values()):
                     yield {"__counters__": delta}
 
-            # per-split work is the SUM over the batch's queries
-            splits = list(units.values())
-            est = _est_split_rows(asts, gstats, max(len(splits), 1))
-            if not splits or _leaf_runs_in_process(len(splits), est):
+            splits, est, in_process = _leaf_placement(plan)
+            if in_process:
                 rows = list(run([(s.split_id, None, None) for s in splits]))
             else:
                 sc = spark.sparkContext
@@ -577,7 +636,7 @@ def _topk_batch(
             if gone:
                 raise SplitVanishedError(f"splits vanished during query: {sorted(gone)}")
             answers = []
-            for req, hit_rows in zip(reqs, rows_of):
+            for req, hit_rows, counted in zip(reqs, rows_of, plan.counted):
                 # keyed per (split, range): sub-split units report
                 # disjoint counts that SUM to the split's exact total
                 per_unit = {(r["split_id"], r["__lo"]): r["split_num_hits"] for r in hit_rows}
@@ -588,7 +647,8 @@ def _topk_batch(
                 hit_rows = [r for r in hit_rows if r["doc_id"] >= 0]
                 hit_rows.sort(key=_sort_key(req))
                 page = hit_rows[req.start_offset : req.start_offset + req.max_hits]
-                answers.append((req, page, int(sum(per_unit.values()))))
+                num_hits = sum(per_unit.values()) + sum(s.num_docs for s in counted)
+                answers.append((req, page, int(num_hits)))
             # ONE grouped stored-field fetch for the batch: queries share
             # splits (and under load, hot docs), so a per-query fetch
             # re-decompresses the same row groups Q times — the measured
@@ -599,7 +659,7 @@ def _topk_batch(
                     by_fields.setdefault(req.stored_fields, []).extend(page)
             for only, union_page in by_fields.items():
                 _fetch_page_fields(index_dir, union_page, only)
-            return config, answers, _BatchPlan(asts, buckets, gstats)
+            return plan.config, answers, plan
         except SplitVanishedError:
             if attempt:
                 raise
@@ -641,25 +701,33 @@ def multi_search(
     ones) and runs every query's scorer against that map — a term several
     queries share decodes once per split.
     Throughput therefore approaches Q/(floor + sum(work)) instead of
-    Q/(Q*floor + sum(work)).  Results are identical to Q independent
-    ``search`` calls (verified by test); the reference has no batched
-    endpoint — this is the Spark-native throughput path."""
+    Q/(Q*floor + sum(work)); search() is a batch of one.  The reference
+    has no batched endpoint — this is the Spark-native throughput path.
+
+    score_explain attaches per request from the batch's own plan; a split
+    that a merge + GC removes between the page read and that attach
+    re-runs the whole batch once against the fresh catalog (the same
+    retry/search.rs protocol _topk_batch applies to its leaf)."""
     t0 = time.monotonic()
-    if any(r.tiebreak == "global_key" for r in requests):
-        raise ValueError("multi_search supports only the 'reference' tiebreak")
-    if any(r.score_explain for r in requests):
-        raise ValueError(
-            "score_explain is not supported in batched search — use search()"
-        )
-    config, answers, plan = _topk_batch(spark, index_dir, requests)
-    return [
-        SearchResponse(
-            num_hits,
-            _page_hits(index_dir, config, req, page, ast),
-            int((time.monotonic() - t0) * 1e6),
-        )
-        for (req, page, num_hits), ast in zip(answers, plan.asts)
-    ]
+    for attempt in (0, 1):
+        config, answers, plan = _topk_batch(spark, index_dir, requests)
+        out = []
+        try:
+            for (req, page, num_hits), ast in zip(answers, plan.asts):
+                # expanded ast: "depl*" highlights and explains as deploy
+                hits = _page_hits(index_dir, config, req, page, ast)
+                if req.score_explain and hits:
+                    _attach_score_explain(
+                        index_dir, config, ast, plan.buckets, plan.gstats, hits
+                    )
+                out.append(
+                    SearchResponse(num_hits, hits, int((time.monotonic() - t0) * 1e6))
+                )
+            return out
+        except SplitVanishedError:
+            if attempt:
+                raise
+    raise AssertionError("unreachable")
 
 
 def _make_leaf_runner(
@@ -824,60 +892,6 @@ def _sort_key(request: SearchRequest):
     return lambda r: (-r["score"], r["split_id"], r["doc_id"])
 
 
-def _search_rows(
-    spark: SparkSession, index_dir: str, request: SearchRequest
-) -> tuple[list[dict], int, _BatchPlan]:
-    """One request's page rows (stored fields fetched), exact hit count
-    and plan: the top-k core as a batch of one, behind the match-all
-    count shortcut.
-
-    Match-all count: every doc in a split counts, so any split FULLY
-    inside the time range (or any split at all when no range is given) is
-    answered from catalog metadata — zero Spark jobs, zero split reads.
-    Only time-range BOUNDARY splits run the leaf (the root-level twin of
-    the reference's whole-segment timestamp skip, filters.rs:64-66).  At
-    10^4 splits / 100 TB a total-count request costs one catalog read.
-    The leaf re-reads the catalog itself, so the catalog state token is
-    taken before the metadata count and re-checked after the leaf: a
-    concurrent merge commit between the two reads would otherwise count a
-    replaced boundary split in neither half."""
-    for attempt in (0, 1):
-        only_split_ids: set[str] | None = None
-        meta_count = 0
-        if request.max_hits == 0 and request.start_offset == 0 and not request.numeric_filters:
-            cat_token = Catalog.state_token(index_dir)
-            cat, config = open_index(spark, index_dir)
-            req = _checked_request(request, config, cat)
-            ast = parse_query(req.query, config, req.search_fields)
-            _validate_msm(ast, req)
-            if isinstance(ast, AllQuery):
-                lo, hi = req.start_timestamp, req.end_timestamp
-
-                def fully_inside(s) -> bool:
-                    if lo is None and hi is None:
-                        return True
-                    if s.ts_min is None or s.ts_max is None:
-                        return False
-                    return (lo is None or s.ts_min >= lo) and (
-                        hi is None or s.ts_max < hi
-                    )
-
-                splits = prune_splits(cat, config, ast, req)
-                meta_count = sum(s.num_docs for s in splits if fully_inside(s))
-                only_split_ids = {s.split_id for s in splits if not fully_inside(s)}
-                if not only_split_ids:
-                    # pure-metadata answer from ONE atomic catalog read
-                    return [], meta_count, _BatchPlan([ast], [], {})
-        _, [(_, page, num_hits)], plan = _topk_batch(
-            spark, index_dir, [request], only_split_ids
-        )
-        if only_split_ids is None or Catalog.state_token(index_dir) == cat_token:
-            return page, meta_count + num_hits, plan
-        if attempt:  # the catalog changed between the count and the leaf
-            raise SplitVanishedError("catalog changed twice during a metadata-count query")
-    raise AssertionError("unreachable")
-
-
 # Driver-side stored-doc rows ("doc" entries of SPLIT_CACHE; the
 # reference's fetch-docs/doc-store cache, quickwit-storage/src/cache +
 # fetch_docs.rs): under load the same hot page docs are re-fetched query
@@ -998,7 +1012,7 @@ def search_df(spark: SparkSession, index_dir: str, request: SearchRequest) -> Da
             "column is int64) — use search()"
         )
     cols, schema = _df_cols_and_schema(config)
-    page, _, _ = _search_rows(spark, index_dir, request)
+    _, [(_, page, _)], _ = _topk_batch(spark, index_dir, [request])
 
     def py(v):
         if isinstance(v, np.ndarray):
@@ -1124,27 +1138,11 @@ def _attach_score_explain(
 
 
 def search(
-    spark: SparkSession, index_dir: str, request: SearchRequest, _retry: bool = False
+    spark: SparkSession, index_dir: str, request: SearchRequest
 ) -> SearchResponse:
     """single_node_search analog (lib.rs:153-198): returns collected hits +
-    the total hit count (collector.rs:180-187)."""
-    t0 = time.monotonic()
-    page, num_hits, plan = _search_rows(spark, index_dir, request)
-    _, config = open_index(spark, index_dir)
-    [ast] = plan.asts  # expanded: "depl*" highlights and explains as deploy
-    out = _page_hits(index_dir, config, resolve_sort(request, config), page, ast)
-    if request.score_explain and out:
-        try:
-            _attach_score_explain(index_dir, config, ast, plan.buckets, plan.gstats, out)
-        except SplitVanishedError:
-            # a merge+GC landed between the page read and the explain
-            # attach: the page's split addresses are stale, so re-run the
-            # WHOLE search once against the fresh catalog (the same
-            # retry/search.rs protocol _topk_batch applies internally)
-            if _retry:
-                raise
-            return search(spark, index_dir, request, _retry=True)
-    return SearchResponse(num_hits, out, int((time.monotonic() - t0) * 1e6))
+    the total hit count (collector.rs:180-187) — a batch of one."""
+    return multi_search(spark, index_dir, [request])[0]
 
 
 def multi_index_search(
@@ -1252,85 +1250,50 @@ def multi_index_search(
     return SearchResponse(total, page, int((time.monotonic() - t0) * 1e6))
 
 
-def _term_bucket_of(field: str, term: str, n_buckets: int) -> int:
-    from ..functions.codec import term_bucket
-
-    return term_bucket(field, term, n_buckets)
-
-
 def explain(spark: SparkSession, index_dir: str, request: SearchRequest) -> dict:
-    """Driver-side query-plan introspection — runs the SAME planning as a
-    real search (parse → prune → stats) but never launches the leaf.
-    Strategy comes from select_strategy, the same function the scorer
-    executes, so the report cannot drift from the actual plan.
+    """Driver-side query-plan introspection — a plan-only run of search():
+    the SAME planner (_plan_batch: check, parse, prune, stats, metadata
+    count) and the same leaf placement (_leaf_placement), but no scorer
+    and no leaf.  Strategy comes from select_strategy, the same function
+    the scorer executes, so the report cannot drift from the actual plan;
+    it raises whatever search() would reject.
 
-    Returns which splits survive time/tag pruning, the scoring strategy
-    the leaf would run (metadata-only count / block-max WAND / MaxScore /
-    match-all scan / full boolean eval), per-term global doc_freq, the
-    leaf cost estimate, and whether the leaf runs in-process or as a
-    Spark job — the observability half of the reference's leaf cost model
-    (root.rs:280-301) surfaced to users."""
-    cat, config = open_index(spark, index_dir)
-    request = resolve_sort(request, config)
-    ast = parse_query(request.query, config, request.search_fields)
-    _validate_msm(ast, request)
-    ast = expand_prefixes(spark, index_dir, cat, ast)
-    all_splits = cat.splits()
-    splits = prune_splits(cat, config, ast, request)
-    terms = sorted(collect_terms(ast))
-    buckets = term_buckets(spark, set(terms), config.term_merge_buckets)
-    gstats = global_term_stats(spark, index_dir, cat, set(terms), buckets)
-    n_meta_pruned = len(all_splits) - len(splits)
-    splits, n_term_pruned = prune_splits_by_terms(index_dir, splits, ast, gstats)
-    count_only = request.max_hits == 0 and request.start_offset == 0
-    no_range = request.start_timestamp is None and request.end_timestamp is None
+    Returns which splits the leaf will run (after time/tag/numeric and
+    term-presence pruning; splits a '*' count answers from catalog
+    metadata are counted apart), the scoring strategy (metadata-only
+    count / block-max WAND / MaxScore / match-all scan / full boolean
+    eval), per-term global doc_freq, the leaf cost estimate, and whether
+    the leaf runs in-process or as a Spark job — the observability half
+    of the reference's leaf cost model (root.rs:280-301) surfaced to
+    users."""
+    plan = _plan_batch(spark, index_dir, [request], "topk")
+    [request], [ast], [splits] = plan.reqs, plan.asts, plan.splits
+    [counted], [(n_meta_pruned, n_term_pruned)] = plan.counted, plan.pruned
+    _, est, in_process = _leaf_placement(plan)
     strategy = select_strategy(ast, request)
-    if strategy == "match_all_scan" and count_only and no_range:
-        # the root answers this from catalog metadata before any leaf runs
-        strategy = "match_all_metadata_count"
+    if not splits and _metadata_countable(ast, request):
+        strategy = "match_all_metadata_count"  # the root answers it alone
     # per-split time-filter elision: splits wholly inside the requested
     # range run the pruned strategy instead of full evaluation
     elide = ts_elidable_strategy(ast, request)
-    lo_e, hi_e = request.start_timestamp, request.end_timestamp
     splits_elided = (
-        sum(
-            1
-            for s in splits
-            if s.ts_min is not None
-            and s.ts_max is not None
-            and (lo_e is None or s.ts_min >= lo_e)
-            and (hi_e is None or s.ts_max < hi_e)
-        )
-        if elide is not None
-        else 0
+        sum(_split_inside_range(s, request) for s in splits) if elide is not None else 0
     )
-    est = _est_split_rows(ast, gstats, len(splits))
-    in_process = strategy == "match_all_metadata_count" or _leaf_runs_in_process(
-        len(splits), est
-    )
-    # Phrase observability: probe the FIRST surviving split's posting rows
-    # and report which verification path each phrase term would take there
-    # (index-time bitmap — inline cell or chunk rows — vs position
-    # decode).  One driver-side point read; makes 'hot-term phrases hit
-    # the bitmap path' checkable from explain() instead of inferred from
-    # latency.  Run-time counts come from take_phrase_counters().
+    # Phrase observability: probe the FIRST leaf split's posting rows and
+    # report which verification path each term the leaf reads with
+    # positions would take there (index-time bitmap — inline cell or chunk
+    # rows — vs position decode).  One driver-side point read; makes
+    # 'hot-term phrases hit the bitmap path' checkable from explain()
+    # instead of inferred from latency.  Run-time counts come from
+    # take_phrase_counters().
     phrase_storage = []
-    pterms: set = set()
-
-    def _collect_phrases(node):
-        if isinstance(node, PhraseQuery):
-            pterms.update((node.field, t) for t in node.terms)
-        elif isinstance(node, BoolQuery):
-            for c in (*node.must, *node.should, *node.must_not):
-                _collect_phrases(c)
-
-    _collect_phrases(ast)
-    if pterms and splits:
+    if _contains_phrase(ast) and splits:
         sid = splits[0].split_id
+        pterms = sorted(collect_terms(ast))
         recs = _read_split_postings(
-            index_dir, sid, sorted(pterms), buckets, need_positions=True
+            index_dir, sid, pterms, plan.buckets, need_positions=True
         )
-        for f_, t_ in sorted(pterms):
+        for f_, t_ in pterms:
             r = recs.get((f_, t_))
             if r is None:
                 path, n_chunks = "absent", 0
@@ -1349,34 +1312,34 @@ def explain(spark: SparkSession, index_dir: str, request: SearchRequest) -> dict
                 {"field": f_, "term": t_, "path": path,
                  "bm_chunks": n_chunks, "probe_split": sid}
             )
+    gstats = plan.gstats
     return {
         "query": request.query,
         "ast": repr(ast),
         "strategy": strategy,
         "ts_elided_strategy": elide,
         "splits_ts_elided": splits_elided,
-        "splits_total": len(all_splits),
+        "splits_total": len(plan.cat.splits()),
         "splits_after_pruning": len(splits),
-        "splits_pruned": len(all_splits) - len(splits),
+        "splits_pruned": n_meta_pruned + n_term_pruned,
         # metadata pruning (time/tags/numeric) vs term-presence pruning
         # (per-split Bloom probes) broken out — the observability hook for
         # 'a rare-term query schedules O(matching splits) tasks'
         "splits_pruned_meta": n_meta_pruned,
         "splits_pruned_terms": n_term_pruned,
+        "splits_metadata_counted": len(counted),
         "phrase_term_storage": phrase_storage,
         "terms": [
             {
                 "field": f,
                 "term": t,
                 "doc_freq": int(gstats["df"].get((f, t), 0)),
-                "bucket": _term_bucket_of(f, t, config.term_merge_buckets),
+                "bucket": term_bucket(f, t, plan.config.term_merge_buckets),
             }
-            for f, t in terms
+            for f, t in plan.terms
         ],
         "num_docs_total": int(gstats["num_docs"]),
         "est_rows_per_split": round(est, 1),
         "leaf": "in_process" if in_process else "spark_job",
         "sort_by_field": request.sort_by_field,
     }
-
-

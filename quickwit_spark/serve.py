@@ -22,7 +22,7 @@ Endpoints (same shapes as docs/reference/rest-api.md):
 * ``POST /api/v1/{index_id}/search/batch`` — body ``{"queries": [{...
   search params per query...}]}`` → ``{"responses": [...]}``.  A query's
   keys are the GET names with JSON values (``numericFilter`` a list);
-  explain, format, scoreExplain, agg* and collapse are 400s.  Q queries
+  explain, format, agg* and collapse are 400s.  Q queries
   in ONE Spark leaf job (multi_search; no reference analog — the
   amortized-job-floor throughput path, ~2.6x at Q=8).
 

@@ -8,6 +8,7 @@ deterministic pytest."""
 
 import random
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -121,6 +122,9 @@ def test_search_during_concurrent_build_merge_gc(spark, tmp_path_factory):
     batches = [generate_transcripts(n_conversations=12, seed=40 + i) for i in range(3)]
     for i, b in enumerate(batches):
         b["conv_id"] = b["conv_id"] + f"-c{i}"
+        # each batch a time period of its own, so a window can hold whole
+        # splits and cut through others
+        b["ts"] = b["ts"] + pd.Timedelta(days=400 * i)
 
     # exact "the" count after each publish state (cumulative batches)
     def count_the(pdfs):
@@ -128,14 +132,23 @@ def test_search_during_concurrent_build_merge_gc(spark, tmp_path_factory):
 
     valid = {0} | {count_the(batches[: i + 1]) for i in range(3)}
     # match-all totals per published state (the metadata-count fast path
-    # races merges too: its catalog snapshot + state-token check must
-    # never produce a half-state count)
+    # races merges too: its one catalog snapshot must never produce a
+    # half-state count)
     valid_all = {0} | {sum(len(b) for b in batches[: i + 1]) for i in range(3)}
+    # a windowed '*' count: batch 0 lies before the window, batch 1 inside
+    # it (metadata answers its splits) and the window ends mid batch 2
+    # (its splits, and merged splits, run the leaf)
+    epochs = [b["ts"].astype("datetime64[s]").astype("int64") for b in batches]
+    w_lo, w_hi = int(epochs[1].min()), int(epochs[2].median())
+    in_window = [int(((e >= w_lo) & (e < w_hi)).sum()) for e in epochs]
+    valid_window = {0} | {sum(in_window[: i + 1]) for i in range(3)}
+    window = SearchRequest("*", max_hits=0, start_timestamp=w_lo, end_timestamp=w_hi)
 
     build_index(spark, spark.createDataFrame(batches[0]), cfg, idx, build_id="c0", n_splits=4)
     errors: list = []
     observed: set = set()
     observed_all: set = set()
+    observed_window: set = set()
     stop = threading.Event()
 
     def searcher():
@@ -152,10 +165,16 @@ def test_search_during_concurrent_build_merge_gc(spark, tmp_path_factory):
             except Exception as e:  # noqa: BLE001
                 errors.append(repr(e))
 
-    t = threading.Thread(target=searcher)
-    t2 = threading.Thread(target=counter)
-    t.start()
-    t2.start()
+    def window_counter():
+        while not stop.is_set():
+            try:
+                observed_window.add(search(spark, idx, window).num_hits)
+            except Exception as e:  # noqa: BLE001
+                errors.append(repr(e))
+
+    threads = [threading.Thread(target=f) for f in (searcher, counter, window_counter)]
+    for th in threads:
+        th.start()
     try:
         for i in (1, 2):
             build_index(
@@ -166,12 +185,18 @@ def test_search_during_concurrent_build_merge_gc(spark, tmp_path_factory):
             garbage_collect(idx)
     finally:
         stop.set()
-        t.join(60)
-        t2.join(60)
+        for th in threads:
+            th.join(60)
 
+    assert not any(th.is_alive() for th in threads)
     assert not errors, errors[:3]
     assert observed and observed <= valid, (sorted(observed), sorted(valid))
     assert observed_all and observed_all <= valid_all, (
         sorted(observed_all),
         sorted(valid_all),
     )
+    assert observed_window and observed_window <= valid_window, (
+        sorted(observed_window),
+        sorted(valid_window),
+    )
+    assert 0 < in_window[1] and 0 < in_window[2] < len(batches[2])

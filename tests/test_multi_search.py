@@ -43,14 +43,53 @@ def test_multi_search_matches_individual(spark, built):
         ] == [(h["split_id"], h["doc_id"], h["score"], h["text"]) for h in want.hits], req.query
 
 
-def test_multi_search_rejects_global_key(spark, built):
-    index_dir, _, _ = built
-    with pytest.raises(ValueError, match="tiebreak"):
-        multi_search(spark, index_dir, [SearchRequest("a b", tiebreak="global_key")])
-
-
 def _hit_keys(resp):
     return [(h["split_id"], h["doc_id"], h["score"], h["sort_value"], h["text"]) for h in resp.hits]
+
+
+@pytest.mark.parametrize("max_splits", ["0", "1000"])
+def test_multi_search_global_key_matches_individual(spark, built, monkeypatch, max_splits):
+    """A batch may carry what search() takes alone — 'global_key'
+    tiebreaks (mixed with 'reference' ones), score_explain, and '*'
+    counts with and without a range or a numeric filter — and each answer
+    equals its own search(), under the Spark-job and the in-process leaf."""
+    from quickwit_spark.index.catalog import Catalog
+
+    index_dir, _, _ = built
+    monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", max_splits)
+    monkeypatch.setenv("QW_DRIVER_LEAF_MAX_ROWS", "1e12")
+    splits = sorted(Catalog(index_dir).splits(), key=lambda s: s.ts_max)
+    ts_lo = min(s.ts_min for s in splits)
+    batch = [
+        SearchRequest("*", max_hits=15, tiebreak="global_key"),
+        SearchRequest("the", max_hits=20, tiebreak="global_key"),
+        SearchRequest("error OR deploy", max_hits=10, start_offset=5, tiebreak="global_key"),
+        SearchRequest('"the error"', tiebreak="global_key"),
+        SearchRequest("deploy", max_hits=5),
+        SearchRequest("deploy failure", max_hits=6, score_explain=True),
+        SearchRequest("deplo* OR error", score_explain=True, tiebreak="global_key"),
+        SearchRequest('"the error"', max_hits=4, score_explain=True),
+        SearchRequest("*", max_hits=0),
+        # ends at a split's ts_max: that split and the later ones straddle
+        SearchRequest("*", max_hits=0, start_timestamp=ts_lo, end_timestamp=splits[0].ts_max),
+        SearchRequest("*", max_hits=0, numeric_filters=(("turn_idx", 0, 3),)),
+    ]
+    batched = multi_search(spark, index_dir, batch)
+    for req, got in zip(batch, batched):
+        want = search(spark, index_dir, req)
+        assert got.num_hits == want.num_hits, req
+        assert _hit_keys(got) == _hit_keys(want), req
+        assert [(h["conv_id"], h["turn_idx"]) for h in got.hits] == [
+            (h["conv_id"], h["turn_idx"]) for h in want.hits
+        ], req
+        if req.score_explain:
+            assert got.hits and [h["score_detail"] for h in got.hits] == [
+                h["score_detail"] for h in want.hits
+            ], req
+            for h in got.hits:
+                assert h["score_detail"]["score"] == h["score"], req  # bit-exact
+    assert all(r.num_hits > 0 for r in batched[-3:])
+    assert batched[-3].num_hits > batched[-2].num_hits
 
 
 def test_mixed_batch_matches_individual(spark, built):

@@ -73,6 +73,27 @@ def test_bitmap_refuses_large_positions():
     assert encode_position_bitmaps(encode_positions(ps, tfs), tfs) is None
 
 
+def test_bitmap_width_check_skips_the_decode(monkeypatch):
+    """A positions payload packed at width >= 8 holds a delta >= 128, so
+    its bitmaps are refused from the header, before any decode; below
+    width 8 the decoded running positions still decide."""
+    from quickwit_spark.functions import codec
+
+    wide = encode_positions(np.array([3, 140, 5], np.uint32), np.array([2, 1]))
+    # doc 0 packs deltas 100 and 100 (width 7) but runs to position 200
+    narrow_tfs = np.array([2, 1])
+    narrow = encode_positions(np.array([100, 200, 5], np.uint32), narrow_tfs)
+    assert wide[4] == 8 and narrow[4] == 7
+
+    def boom(*a, **k):
+        raise AssertionError("decoded a payload the header rules out")
+
+    with monkeypatch.context() as m:
+        m.setattr(codec, "decode_positions", boom)
+        assert encode_position_bitmaps(wide, np.array([2, 1])) is None
+    assert encode_position_bitmaps(narrow, narrow_tfs) is None
+
+
 @pytest.fixture(scope="module")
 def twin(spark, tmp_path_factory, request):
     base = tmp_path_factory.mktemp("posbm")

@@ -771,19 +771,31 @@ def test_match_all_count_is_metadata_only(spark, built, monkeypatch):
     """'*' count with no time range is answered from catalog num_docs —
     the leaf must NOT run (at 10^4 splits a total count costs one catalog
     read); with a range, only boundary splits run the leaf and the total
-    still matches the oracle."""
+    still matches the oracle.  The in-process leaf gate is opened wide, so
+    any leaf unit would run through root._score_unit here; Spark jobs show
+    as new job ids on the status tracker."""
     import quickwit_spark.search.executor as ex
 
     index_dir, oracle, docs = built
-    real_leaf = ex._topk_batch
+    monkeypatch.setenv("QW_DRIVER_LEAF_MAX_SPLITS", "1000")
+    monkeypatch.setenv("QW_DRIVER_LEAF_MAX_ROWS", "1e12")
+    units = []
+    score_unit = ex.root._score_unit
 
-    def boom(*a, **k):
-        raise AssertionError("leaf ran for a metadata-answerable count")
+    def counting_unit(*a, **k):
+        units.append(a[1])
+        return score_unit(*a, **k)
 
-    monkeypatch.setattr(ex.root, "_topk_batch", boom)
+    monkeypatch.setattr(ex.root, "_score_unit", counting_unit)
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = max(tracker.getJobIdsForGroup(), default=-1)
     resp = ex.search(spark, index_dir, SearchRequest("*", max_hits=0))
     assert resp.num_hits == len(docs) and resp.hits == []
-    monkeypatch.setattr(ex.root, "_topk_batch", real_leaf)
+    assert units == []
+    assert max(tracker.getJobIdsForGroup(), default=-1) == jobs_before
+    # the hook sees the leaf whenever one runs
+    ex.search(spark, index_dir, SearchRequest("*", max_hits=1))
+    assert units
 
     # a range that slices through split boundaries: metadata + boundary leaf
     ts0 = 1767225600 + 13 * 86400

@@ -126,7 +126,7 @@ def test_batch_unknown_key_is_400_naming_it(server):
     st, body = _batch(server, [{"query": "deploy"}, {"query": "error", "maxhits": 3}])
     assert st == 400 and "maxhits" in body["error"]
     # what multi_search cannot honour is a 400 too, not dropped
-    for extra in ({"scoreExplain": True}, {"aggTermsField": "role"}, {"format": "json"}):
+    for extra in ({"aggTermsField": "role"}, {"format": "json"}):
         st, body = _batch(server, [{"query": "deploy", **extra}])
         assert st == 400 and next(iter(extra)) in body["error"], extra
 
@@ -148,6 +148,26 @@ def test_batch_numeric_filter_list_and_snippets_equal_get(server):
     assert all("<b>" in h["snippets"]["text"] for h in resp["hits"])
     st, body = _batch(server, [{"query": "deploy", "numericFilter": "turn_idx:2..5"}])
     assert st == 400 and "numericFilter" in body["error"]
+
+
+def test_batch_score_explain_equals_get(server):
+    st, got = _get(
+        f"{server}/api/v1/conv/search?query=deploy%20failure&maxHits=4"
+        "&scoreExplain=true&format=json"
+    )
+    assert st == 200, got
+    st, batch = _batch(
+        server,
+        [{"query": "deploy failure", "maxHits": 4, "scoreExplain": True},
+         {"query": "error", "maxHits": 2}],
+    )
+    assert st == 200, batch
+    resp = batch["responses"][0]
+    assert resp["numHits"] == got["numHits"] and resp["hits"] == got["hits"]
+    assert resp["hits"] and all(
+        h["score_detail"]["score"] == h["score"] for h in resp["hits"]
+    )
+    assert all("score_detail" not in h for h in batch["responses"][1]["hits"])
 
 
 def test_explain_with_collapse_is_400(server):

@@ -25,7 +25,7 @@ from quickwit_spark.index import hotcache
 from quickwit_spark.index.builder import _paths
 from quickwit_spark.search import root, split_io
 from quickwit_spark.search.cache import SPLIT_CACHE, SplitCache
-from quickwit_spark.search.executor import search
+from quickwit_spark.search.executor import multi_search, search
 from quickwit_spark.search.request import SearchRequest
 
 CFG = transcripts_config(split_num_docs_target=600, segment_num_docs_target=128)
@@ -213,8 +213,11 @@ def small_index(spark, tmp_path_factory):
 )
 def test_search_plans_once_for_its_attachers(spark, small_index, monkeypatch, extra):
     """Snippets and score_explain reuse the core's expanded AST and global
-    stats: one warm search() makes 1 parse, 1 expansion, 1 stats call."""
+    stats: one warm search() makes 1 parse, 1 expansion, 1 stats call, and
+    a 2-request multi_search() 1 parse per request, 1 expansion and 1
+    stats call."""
     req = SearchRequest("depl* failure", max_hits=5, **extra)
+    other = SearchRequest("erro* OR timeout", max_hits=4, **extra)
     warm = search(spark, small_index, req)
     assert warm.hits
     calls = {"parse_query": 0, "expand_prefixes": 0, "global_term_stats": 0}
@@ -233,3 +236,8 @@ def test_search_plans_once_for_its_attachers(spark, small_index, monkeypatch, ex
     assert all(key in h for h in resp.hits)
     if "score_explain" in extra:
         assert all(h["score_detail"]["score"] == h["score"] for h in resp.hits)
+    calls.update(dict.fromkeys(calls, 0))
+    batched = multi_search(spark, small_index, [req, other])
+    assert calls == {"parse_query": 2, "expand_prefixes": 1, "global_term_stats": 1}
+    assert batched[0].hits == warm.hits and batched[1].hits
+    assert all(key in h for r in batched for h in r.hits)
